@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is package-private; the traced run needs it drained
+  * before it reads the job ledger. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
