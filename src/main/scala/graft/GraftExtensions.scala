@@ -8,8 +8,8 @@ import graft.functions.{DotExpr, SqDistExpr}
 
 /** SQL-surface registration: exposes the engine's codegen distance
   * kernels to `spark.sql(...)` users as `graft_sqdist`, `graft_dot`,
-  * `graft_cosine_distance`. Wire with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `graft_cosine_distance`. Wire with the session builder's
+  * `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftExtensions {

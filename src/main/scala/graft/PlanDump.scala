@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Committed plan evidence: dump the FORMATTED physical plan of the
   * headline lanes to PLANS.md with a note on what each plan must show
   * (the .explain discipline the brief asks for, made reviewable). The
@@ -124,16 +122,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tiny-SF planner would broadcast every dimension; disable so the
-      // scale-relevant join shapes (bucket reuse, salted SMJ) are shown
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
+    val spark = Sessions.local(8)
+    // tiny-SF planner would broadcast every dimension; disable so the
+    // scale-relevant join shapes (bucket reuse, salted SMJ) are shown
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the headline lanes\n\n"

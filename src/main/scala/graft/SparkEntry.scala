@@ -4,8 +4,9 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Rotate.mix64
 import graft.functions.VectorOps._
-import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest}
+import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest, Overlap}
 import graft.operators.{Dedup, Dsir, Exhaustive, LateInteraction, Retrieval, Scaling, TextOps}
 import graft.streaming.Streaming
 
@@ -14,7 +15,7 @@ import graft.streaming.Streaming
   * Every deterministic query here has a DuckDB-equivalent in
   * [[oracleSql]] (the three trained/approximate ANN entries — hnsw_knn,
   * lsh_knn, ivf_kmeans — are rows-only by design, with ScalaTest
-  * recall/shape gates and 1M-smoke evidence instead); numeric
+  * recall/shape gates instead); numeric
   * columns are computed in double precision with identical element order
   * on both engines (bit-identical results) or as fixed-point BIGINT
   * (exact, order-independent sums), so the driver's hash compare is
@@ -32,7 +33,9 @@ object SparkEntry {
     * (session, path): this is metadata caching only (what a metastore
     * table provides) — the frame is lazy, every action still scans the
     * parquet files, and no computed result is held. Keyed weakly by
-    * session so test-suite sessions release their entries. */
+    * session, but each cached frame holds its session, so entries live
+    * until the JVM exits; a session must therefore not see an input
+    * directory rewritten after its first read. */
   private val tblCache = new java.util.WeakHashMap[
     SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]()
 
@@ -70,36 +73,6 @@ object SparkEntry {
       rm(p.toFile)
     }))
     p.toString
-  }
-
-  /** Run independent build/save/load blocks concurrently from driver
-    * threads (optimization guide §2.6 — actions are only sequential
-    * because driver code calls them sequentially; overlapped, one
-    * block's jobs back-fill the executor slots another's serial driver
-    * steps leave idle). Bodies hold blocking Spark actions, so they are
-    * wrapped in `scala.concurrent.blocking` — the shared fork-join pool
-    * then spawns replacement workers instead of starving when blocks
-    * outnumber pool threads (low-core sessions, nested overlaps).
-    * Results are identical to sequential execution by construction:
-    * callers only overlap blocks with disjoint artifacts/catalog names. */
-  private def overlap2[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(blocking(a))
-    val fb = Future(blocking(b))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-  }
-
-  private def overlap3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(blocking(a))
-    val fb = Future(blocking(b))
-    val fc = Future(blocking(c))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
   }
 
   /** The events contract is an epoch-NANOS long `ts` axis. The driver's
@@ -282,12 +255,6 @@ object SparkEntry {
     // photo-like texture: 10 deterministic ±110 bumps per image (pHash
     // needs mid-frequency content — smooth polynomial fields project
     // onto so few DCT modes that distinct images collide)
-    def mix64(x0: Long): Long = {
-      var x = x0
-      x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-      x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-      x ^ (x >>> 31)
-    }
     def photo(i: Int)(x: Int, y: Int): Int = {
       var g = 128
       var b = 0
@@ -329,12 +296,6 @@ object SparkEntry {
     * over these is exact across JVMs, so the oracle pins the values. */
   private[graft] def audioFixtureRows(): Seq[(Long, Array[Byte])] = {
     import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    def mix64(x0: Long): Long = {
-      var x = x0
-      x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-      x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-      x ^ (x >>> 31)
-    }
     val rate = 8320 // 65 windows × 128 samples
     def wav(seed: Long, vol: Double, nudge: Boolean): Array[Byte] = {
       val pcm = new Array[Byte](rate * 2)
@@ -406,12 +367,6 @@ object SparkEntry {
     * JVMs, so the oracle replays the whole pair join over them. */
   private[graft] def audioShiftFixtureRows(): Seq[(Long, Array[Byte])] = {
     import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    def mix64(x0: Long): Long = {
-      var x = x0
-      x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-      x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-      x ^ (x >>> 31)
-    }
     val rate = 8000
     // `skip` trims the head of the UN-shifted signal: sample i of the
     // output is sample i+skip of the seed's infinite envelope, so a
@@ -3630,7 +3585,7 @@ object SparkEntry {
       val nCells = 8
       // token-frame save and tier build+save are independent consumers
       // of the checkpointed frame — overlap them (guide §2.6)
-      val (_, built) = overlap2(
+      val (_, built) = Overlap.par2(
         LateInteraction.saveTokens(dToks0, tmp), {
           val b = LateInteraction.buildTokenIvf(dToks0, "doc_id",
             "tok_idx", "vec",
@@ -3768,7 +3723,7 @@ object SparkEntry {
       val nCells = 8
       // token-frame save and tier build+compress+save are independent
       // consumers of the checkpointed frame — overlap them (guide §2.6)
-      val (_, built) = overlap2(
+      val (_, built) = Overlap.par2(
         LateInteraction.saveTokens(dToks0, tmp), {
           val b = LateInteraction.buildTokenIvf(dToks0, "doc_id",
             "tok_idx", "vec",
@@ -3957,7 +3912,7 @@ object SparkEntry {
       // the two shard builds are independent (both read the
       // checkpointed token frame) — overlap them (guide §2.6); the
       // merge consumes the same two models either way
-      val (lo, hi) = overlap2(
+      val (lo, hi) = Overlap.par2(
         LateInteraction.buildTokenIvf(
           dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
           params),
@@ -4105,7 +4060,7 @@ object SparkEntry {
         .select(col("doc_id").as("qid"), col("text").as("qtext"))
       // the two tier build+save+load blocks are independent — overlap
       // them from driver threads (guide §2.6); same artifacts, same fuse
-      val (lex, vec) = overlap2({
+      val (lex, vec) = Overlap.par2({
         val bPath = scratchDir("hyb_bm25")
         val built = Retrieval.buildIndex(docs, "doc_id", "text")
         built.saveBucketed("hybrid_loaded_postings", bPath, numBuckets = 4)
@@ -4154,7 +4109,7 @@ object SparkEntry {
       // others' serial steps leave idle (optimization guide §2.6
       // "overlap independent jobs"). Results identical: the fused
       // frame reads the same three artifacts either way.
-      val (lex, vec, ms) = overlap3({
+      val (lex, vec, ms) = Overlap.par3({
         // tier 1: lexical — bucketed postings through the catalog
         val bPath = scratchDir("trio_bm25")
         val built = Retrieval.buildIndex(docs, "doc_id", "text")
@@ -4186,7 +4141,7 @@ object SparkEntry {
         val nCells = 8
         // the token-frame save and the tier build are themselves
         // independent consumers of the checkpointed frame — overlap
-        val (_, builtTier) = overlap2(
+        val (_, builtTier) = Overlap.par2(
           LateInteraction.saveTokens(dToks0, tPath), {
             val bt = LateInteraction.buildTokenIvf(dToks0, "doc_id",
               "tok_idx", "vec",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     // the driver always runs with two args = the full suite
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // TopKAggExpr buffers are O(k) primitives: keep millions of
-      // per-task top-k groups hash-aggregated, never sort-fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      // the events table carries TIMESTAMP(NANOS) parquet, which Spark 4
-      // otherwise refuses to read; ns-long + integer math is also the
-      // oracle-portable representation (see streaming.Streaming)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

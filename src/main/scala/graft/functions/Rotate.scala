@@ -36,6 +36,17 @@ object Rotate {
     GraftShims.column(RotateExpr(GraftShims.expression(vec)))
   }
 
+  /** SplitMix64 finalizer (Stafford mix13): the engine's one
+    * deterministic 64-bit mixer. LSHForest sample choice, PQ training
+    * samples and the synthetic fixtures all seed from it, so the
+    * oracle hashes depend on its exact bits. */
+  @inline def mix64(x0: Long): Long = {
+    var x = x0
+    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
+    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
+    x ^ (x >>> 31)
+  }
+
   @volatile private var signCache: Array[Boolean] = Array.empty
 
   /** +1 sign for index i iff the first hex char of md5(i.toString) is

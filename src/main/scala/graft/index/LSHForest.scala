@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Rotate.mix64
 import graft.functions.VectorOps._
 
 /** Random-hyperplane forest — the Spark re-expression of
@@ -448,15 +449,6 @@ object LSHForest {
         (a._2 ++ b._2).sortBy(t => (t._1, t._2)).take(2)))
       .collect()
       .toMap
-  }
-
-  /** Stafford mix13 finalizer — the deterministic stand-in for the
-    * reference's unseeded thread_rng sample choice (lsh.rs:64). */
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
   }
 
   /** The level-synchronous split loop shared by [[build]] and

@@ -19,18 +19,37 @@ object Overlap {
   import scala.concurrent.{Await, Future, blocking}
   import scala.concurrent.ExecutionContext.Implicits.global
   import scala.concurrent.duration.Duration
+  import scala.util.Try
 
   def par2[A, B](a: => A, b: => B): (A, B) = {
     val fa = Future(blocking(a))
     val fb = Future(blocking(b))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val (ra, rb) = (await(fa), await(fb))
+    rethrowFirst(ra, rb)
+    (ra.get, rb.get)
   }
 
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     val fa = Future(blocking(a))
     val fb = Future(blocking(b))
     val fc = Future(blocking(c))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
+    val (ra, rb, rc) = (await(fa), await(fb), await(fc))
+    rethrowFirst(ra, rb, rc)
+    (ra.get, rb.get, rc.get)
   }
+
+  private def await[A](f: Future[A]): Try[A] =
+    Await.ready(f, Duration.Inf).value.get
+
+  /** A failed block must not leave its siblings running detached (the
+    * other half of a failed save still writing into the same
+    * directory): every block is awaited first, then the first failure
+    * in argument order is rethrown with the later ones suppressed. */
+  private def rethrowFirst(rs: Try[_]*): Unit =
+    rs.flatMap(_.failed.toOption) match {
+      case first +: rest =>
+        rest.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
 }

@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Rotate.mix64
+
 /** Product quantization — the corpus-scale memory answer the reference
   * (all-f32-in-RAM, vers/src/indexes/base.rs:15-26) has no room for: at
   * 100 TB the vectors themselves are the bottleneck, and PQ stores each
@@ -229,13 +231,6 @@ object PQ {
       graft.functions.Rotate.rotate(col(vecCol).cast("array<float>"))
         .cast("array<float>")
     else col(vecCol).cast("array<float>")
-
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
 
   /** sqdist of v[off, off+dsub) to each centroid; argmin, ties → lowest
     * index (the oracle's ORDER BY distance, cid tie-break). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -263,17 +263,8 @@ object LateInteraction {
     // The stage-1 candidate materialization and the query-side stats
     // pass are independent — overlap them (guide §2.6).
     val (cand, qStats) = graft.index.Overlap.par2(
-      cand0.localCheckpoint(true),
-      q.groupBy(col("qid")).agg(count(lit(1)).as("__nt"),
-        first(size(col("qvec"))).as("__w")).collect())
-    // a malformed saved token frame can carry a null qvec — degrade
-    // its width to the nominal budget row instead of an opaque driver
-    // NPE out of getInt on the null aggregate
-    val widths = qStats.iterator.filterNot(_.isNullAt(2)).map(_.getInt(2))
-    val qvecFloats =
-      if (qStats.isEmpty || widths.isEmpty)
-        graft.index.Batches.NominalRowFloats
-      else 2L * widths.max
+      cand0.localCheckpoint(true), queryStats(q))
+    val qvecFloats = probeRowFloats(qStats)
     val ntByQid = qStats.iterator
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // TWO overlapped passes over the checkpointed candidates (both
@@ -302,6 +293,25 @@ object LateInteraction {
         q.filter(col("qid") >= lo && col("qid") <= hi), d, k, qvecFloats,
         probeRows(g))
     }.reduce(_.unionByName(_))
+  }
+
+  /** Per-qid (qid, token count, qvec width) rows of a query-token
+    * frame — one serving-sized pass. */
+  private[graft] def queryStats(q: DataFrame): Array[Row] =
+    q.groupBy(col("qid")).agg(count(lit(1)).as("__nt"),
+      first(size(col("qvec"))).as("__w")).collect()
+
+  /** Broadcast floats per probe row: 2 per element of the widest
+    * (array<double>) qvec. A malformed saved token frame can carry
+    * null qvecs, whose width is null — or -1 under
+    * `spark.sql.legacy.sizeOfNull` with ANSI off — so only positive
+    * widths count, and a frame without one degrades to the nominal
+    * budget row instead of a non-positive budget input. */
+  private[graft] def probeRowFloats(qStats: Array[Row]): Long = {
+    val widths = qStats.iterator.filterNot(_.isNullAt(2)).map(_.getInt(2))
+      .filter(_ > 0)
+    if (widths.isEmpty) graft.index.Batches.NominalRowFloats
+    else 2L * widths.max
   }
 
   /** The scan-prune id set of a candidate frame: distinct doc ids up

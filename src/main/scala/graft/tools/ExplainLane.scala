@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named bench lanes to files — the
   * optimization-round plan evidence (plans/rNN/<lane>_{before,after}.txt).
   *
@@ -11,16 +9,7 @@ object ExplainLane {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, laneCsv) = args.take(4)
     val lanes = laneCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (lane <- lanes) {
       val fn = graft.SparkEntry.queries.find(_._1 == lane)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -25,16 +24,7 @@ object LaneProfile {
     val sfDir = args(0)
     val lanes = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     spark.range(1 << 16).selectExpr("sum(id * id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.sql("CREATE TABLE IF NOT EXISTS bench_warmup_tbl(id BIGINT) USING parquet")

@@ -80,6 +80,28 @@ class LateInteractionSpec extends SparkSpec {
     assert(got.head.getAs[Long]("score_q") == 4000000L) // 2 × (2·1e6)
   }
 
+  test("probe-row width: 2 floats per qvec element; an all-null qvec frame takes the nominal row, also under legacy sizeOfNull") {
+    assert(LateInteraction.probeRowFloats(LateInteraction.queryStats(
+      qToks.withColumnRenamed("vec", "qvec"))) == 16L)
+    val nullQ = qTokRows.map { case (q, t, _) => (q, t, null: Array[Double]) }
+      .toDF("qid", "tok_idx", "qvec")
+    def check(): Unit = {
+      assert(LateInteraction.probeRowFloats(LateInteraction.queryStats(nullQ))
+        == graft.index.Batches.NominalRowFloats)
+      assert(LateInteraction.maxSimShortlisted(nullQ, "qid", "tok_idx", "qvec",
+        dToks, "doc_id", "vec", k = 2, m = 4).count() == 0)
+    }
+    check()
+    val legacy = Seq("spark.sql.ansi.enabled" -> "false",
+      "spark.sql.legacy.sizeOfNull" -> "true")
+    legacy.foreach { case (key, v) => spark.conf.set(key, v) }
+    try {
+      // size(null) is -1 here, not null: the width guard must still hold
+      assert(nullQ.select(size(col("qvec"))).head().getInt(0) == -1)
+      check()
+    } finally legacy.foreach { case (key, _) => spark.conf.unset(key) }
+  }
+
   test("saveTokens/loadTokens round-trip serves the identical MaxSim") {
     def asRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(row => (row.getAs[Long]("qid"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Rotate.mix64
 import graft.index.{Opq, PQ}
 
 /** OPQ trained rotation (index/Opq): the Procrustes alternation must
@@ -12,12 +13,6 @@ import graft.index.{Opq, PQ}
 class OpqSpec extends SparkSpec {
   import spark.implicits._
 
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
   private def unif(h: Long): Double =
     (h >>> 11).toDouble / (1L << 53).toDouble - 0.5
 

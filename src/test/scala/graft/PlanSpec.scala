@@ -13,6 +13,30 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf001).queryExecution.executedPlan.toString
 
+  test("one session contract: builders only in Sessions; the suite session carries it") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"not run from the repo root: ${root.toAbsolutePath}")
+    val builder = "SparkSession" + ".builder"
+    val files = Files.walk(root)
+    val offenders =
+      try files.iterator.asScala
+        .filter(f => f.toString.endsWith(".scala") &&
+          f.getFileName.toString != "Sessions.scala")
+        .filter(f => Files.readString(f).contains(builder))
+        .map(root.relativize(_: Path).toString).toList
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"session builder outside Sessions.scala: ${offenders.mkString(", ")}")
+
+    val conf = SparkSpec.session.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "4194304")
+    assert(conf.get("spark.sql.shuffle.partitions") == "8")
+  }
+
   test("knn join broadcasts the QUERY side, never the corpus") {
     val p = plan("knn_exhaustive")
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(500))

@@ -11,19 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // TopKAggExpr buffers are O(k) primitives: keep millions of
-      // per-task top-k groups hash-aggregated, never sort-fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[8], not the entry points' core count: the plan shapes
+  // PlanSpec pins depend on eight shuffle partitions
+  lazy val session: SparkSession = Sessions.local(8)
 }
