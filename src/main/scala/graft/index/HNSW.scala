@@ -207,7 +207,7 @@ object HNSW {
       *
       * Scale envelope: the add batch is collected and broadcast (same
       * O(batch × dim × 4B) driver budget as [[searchMany]]) — sized for
-      * streaming micro-batches (Streaming.ingestIntoIVF-style), not bulk
+      * streaming micro-batches (Streaming.foldBatches), not bulk
       * loads. For a corpus-sized ingest, rebuild with [[HNSW.build]],
       * which routes rows to shards via a repartition, never the driver. */
     def add(rows: DataFrame, idCol: String, vecCol: String): Model = {

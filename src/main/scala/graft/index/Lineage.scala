@@ -7,7 +7,7 @@ import org.apache.spark.sql.Dataset
   * Every add unions one batch into the model's big-state DataFrame
   * (frozen-parameter assign/encode — the Index::add semantics of
   * vers/src/indexes/base.rs:28). Called once that is free; called per
-  * microbatch by the streaming ingest twins (Streaming.ingestInto*) it
+  * microbatch by the streaming ingests (Streaming.foldBatches) it
   * stacks one union node on the logical plan per batch FOREVER — a day
   * of 10-second microbatches is ~8,600 stacked unions, and analysis
   * time + driver memory grow per batch until the stream falls over

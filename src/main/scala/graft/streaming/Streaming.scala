@@ -3,16 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+
+import java.util.concurrent.atomic.AtomicReference
 
 /** Structured-Streaming operators. The reference's only online mutation is
   * `Index::add` (base.rs:28, SURVEY §2.2/§3.3); its Spark-native analogue
   * is a streaming ingest that appends to the embeddings table and patches
-  * the index via `foreachBatch`. Beyond that we add the event-time
-  * operators a training-data pipeline needs (windowed aggregation,
-  * gap sessionization), written so the SAME transformation serves batch
-  * DataFrames (→ DuckDB-oracle-checkable) and streaming ones (with
-  * watermarks).
+  * the index once per microbatch ([[Streaming.foldBatches]]). Beyond
+  * that we add the event-time operators a training-data pipeline needs
+  * (windowed aggregation, gap sessionization), written so the SAME
+  * transformation serves batch DataFrames (→ DuckDB-oracle-checkable)
+  * and streaming ones (with watermarks).
   */
 object Streaming {
 
@@ -125,6 +127,41 @@ object Streaming {
     stream.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  /** The one streaming driver: folds each non-empty microbatch of
+    * `stream` into `state` with `step` and returns the running query;
+    * read the evolving state from `state`. Every stateful ingest below
+    * runs through it, and an index ingest or takedown stream is one call:
+    *
+    * {{{
+    * Streaming.foldBatches(vecStream, state)(_.add(_, "id", "vector"))
+    * Streaming.foldBatches(idStream, state)(_.remove(_, "id"))
+    * }}}
+    *
+    * Contract:
+    *  - the batch sink is the sole writer (the stream engine serializes
+    *    microbatches), so a plain get/set is race-free — and unlike
+    *    `updateAndGet` it can never re-invoke `step`, which launches
+    *    Spark jobs and must run exactly once per batch;
+    *  - empty batches are skipped: `step` never sees an empty frame;
+    *  - a `step` that throws fails the query and leaves `state` at the
+    *    previous batch's value (the set happens only after `step`
+    *    returns);
+    *  - the batch is readable only inside its own call, so a frame the
+    *    new state keeps that is derived from it must be materialized
+    *    (`localCheckpoint(true)`) there, or a later evaluation re-scans
+    *    a source that has moved on;
+    *  - a deployment running both an ingest and a takedown against one
+    *    state must serialize them onto one stream: two writers would
+    *    race the read-modify-write. */
+  def foldBatches[S](stream: DataFrame, state: AtomicReference[S])
+                    (step: (S, DataFrame) => S): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) state.set(step(state.get(), batch))
+      }
+      .start()
+
   /** State of the streaming near-dup admission filter
     * ([[ingestDedupMinhash]]): `admitted` accumulates the surviving
     * rows; `bands` accumulates EVERY band-bucket key seen so far —
@@ -153,43 +190,35 @@ object Streaming {
   def ingestDedupMinhash(stream: DataFrame, idCol: String, textCol: String,
                          state: java.util.concurrent.atomic.AtomicReference[DedupIngestState],
                          numHashes: Int = 12, bandSize: Int = 2)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          // materialize the signature stage once — it feeds the state
-          // semi-join, the intra-batch self-join, AND the new state
-          val b = graft.operators.Dedup
-            .minhashBands(batch, idCol, textCol, numHashes, bandSize)
-            .localCheckpoint(true)
-          val dupVsState = b.join(st.bands, Seq("band", "key"), "left_semi")
-            .select(col("id"))
-          val dupIntra = b.as("l").join(b.as("r"),
-              col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-                col("l.id") < col("r.id"))
-            .select(col("r.id").as("id"))
-          val losers = dupVsState.unionByName(dupIntra).distinct()
-            .withColumnRenamed("id", idCol)
-          // materialize the increment like `b` above: each admitted
-          // batch joins against the batch bands AND the state bands, so
-          // un-checkpointed it would stack a ~45-node join subtree per
-          // union — bounded by the cadence, but ~10× heavier per batch
-          // than the index twins' narrow assign/encode increments
-          val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          // single-writer foreachBatch: see ingestIntoIVF. Both state
-          // frames compact on the shared cadence.
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (bands, _) = graft.index.Lineage.compact(
-            st.bands.unionByName(b), st.addsSinceCompact)
-          state.set(DedupIngestState(admitted, bands, n))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      // materialize the signature stage once — it feeds the state
+      // semi-join, the intra-batch self-join, AND the new state
+      val b = graft.operators.Dedup
+        .minhashBands(batch, idCol, textCol, numHashes, bandSize)
+        .localCheckpoint(true)
+      val dupVsState = b.join(st.bands, Seq("band", "key"), "left_semi")
+        .select(col("id"))
+      val dupIntra = b.as("l").join(b.as("r"),
+          col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
+            col("l.id") < col("r.id"))
+        .select(col("r.id").as("id"))
+      val losers = dupVsState.unionByName(dupIntra).distinct()
+        .withColumnRenamed("id", idCol)
+      // materialize the increment like `b` above: each admitted
+      // batch joins against the batch bands AND the state bands, so
+      // un-checkpointed it would stack a ~45-node join subtree per
+      // union — bounded by the cadence, but ~10× heavier per batch
+      // than the index twins' narrow assign/encode increments
+      val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      // both state frames compact on the shared cadence
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (bands, _) = graft.index.Lineage.compact(
+        st.bands.unionByName(b), st.addsSinceCompact)
+      DedupIngestState(admitted, bands, n)
+    }
 
   /** Persist / restore EVERY long-running ingest state — restart
     * durability, the streaming analogue of the index tiers' save/load
@@ -325,42 +354,34 @@ object Streaming {
                      centroids: Array[Array[Float]], maxCosDist: Double,
                      state: java.util.concurrent.atomic.AtomicReference[SemdedupIngestState],
                      marginSq: Double = 1.5)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val b = graft.index.IVFFlat.assignMulti(batch, idCol, vecCol,
-              centroids, marginSq)
-            .drop("cells")
-            .localCheckpoint(true)
-          val cosDist = (a: org.apache.spark.sql.Column,
-                         c: org.apache.spark.sql.Column) =>
-            graft.functions.VectorOps.cosineDistance(a, c)
-          val dupVsState = b.as("n").join(st.seen.as("s"),
-              col("n.cluster") === col("s.cluster") &&
-                cosDist(col("n.vector"), col("s.vector")) < maxCosDist)
-            .select(col("n.id").as("id"))
-          val dupIntra = b.as("l").join(b.as("r"),
-              col("l.cluster") === col("r.cluster") &&
-                col("l.id") < col("r.id") &&
-                cosDist(col("l.vector"), col("r.vector")) < maxCosDist)
-            .select(col("r.id").as("id"))
-          val losers = dupVsState.unionByName(dupIntra).distinct()
-            .withColumnRenamed("id", idCol)
-          val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          // single-writer foreachBatch: see ingestIntoIVF
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (seen, _) = graft.index.Lineage.compact(
-            st.seen.unionByName(b), st.addsSinceCompact)
-          state.set(SemdedupIngestState(admitted, seen, n))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val b = graft.index.IVFFlat.assignMulti(batch, idCol, vecCol,
+          centroids, marginSq)
+        .drop("cells")
+        .localCheckpoint(true)
+      val cosDist = (a: org.apache.spark.sql.Column,
+                     c: org.apache.spark.sql.Column) =>
+        graft.functions.VectorOps.cosineDistance(a, c)
+      val dupVsState = b.as("n").join(st.seen.as("s"),
+          col("n.cluster") === col("s.cluster") &&
+            cosDist(col("n.vector"), col("s.vector")) < maxCosDist)
+        .select(col("n.id").as("id"))
+      val dupIntra = b.as("l").join(b.as("r"),
+          col("l.cluster") === col("r.cluster") &&
+            col("l.id") < col("r.id") &&
+            cosDist(col("l.vector"), col("r.vector")) < maxCosDist)
+        .select(col("r.id").as("id"))
+      val losers = dupVsState.unionByName(dupIntra).distinct()
+        .withColumnRenamed("id", idCol)
+      val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (seen, _) = graft.index.Lineage.compact(
+        st.seen.unionByName(b), st.addsSinceCompact)
+      SemdedupIngestState(admitted, seen, n)
+    }
 
   /** State of the streaming per-source admission cap
     * ([[ingestSourceCap]]): `admitted` accumulates surviving rows;
@@ -385,35 +406,29 @@ object Streaming {
   def ingestSourceCap(stream: DataFrame, idCol: String, srcCol: String,
                       cap: Int,
                       state: java.util.concurrent.atomic.AtomicReference[SourceCapState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(cap > 0, s"ingestSourceCap: cap must be positive, got $cap")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(srcCol)).orderBy(col(idCol).asc)
-          val admittedBatch = batch
-            .withColumn("_rk", row_number().over(w))
-            .join(broadcast(st.counts.withColumnRenamed("src", srcCol)),
-              Seq(srcCol), "left")
-            .filter(col("_rk") + coalesce(col("n"), lit(0L)) <= cap)
-            .drop("_rk", "n")
-            .localCheckpoint(true)
-          val batchCounts = admittedBatch
-            .groupBy(col(srcCol).cast("string").as("src"))
-            .agg(count(lit(1)).as("n"))
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (counts, _) = graft.index.Lineage.compact(
-            st.counts.unionByName(batchCounts)
-              .groupBy("src").agg(sum("n").as("n")),
-            st.addsSinceCompact)
-          state.set(SourceCapState(admitted, counts, n))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(srcCol)).orderBy(col(idCol).asc)
+      val admittedBatch = batch
+        .withColumn("_rk", row_number().over(w))
+        .join(broadcast(st.counts.withColumnRenamed("src", srcCol)),
+          Seq(srcCol), "left")
+        .filter(col("_rk") + coalesce(col("n"), lit(0L)) <= cap)
+        .drop("_rk", "n")
+        .localCheckpoint(true)
+      val batchCounts = admittedBatch
+        .groupBy(col(srcCol).cast("string").as("src"))
+        .agg(count(lit(1)).as("n"))
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (counts, _) = graft.index.Lineage.compact(
+        st.counts.unionByName(batchCounts)
+          .groupBy("src").agg(sum("n").as("n")),
+        st.addsSinceCompact)
+      SourceCapState(admitted, counts, n)
+    }
   }
 
   /** State of the streaming curation chain ([[ingestCurate]]):
@@ -442,95 +457,46 @@ object Streaming {
   def ingestCurate(stream: DataFrame, idCol: String, srcCol: String,
                    textCol: String, cap: Int,
                    state: java.util.concurrent.atomic.AtomicReference[CurateIngestState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(cap > 0, s"ingestCurate: cap must be positive, got $cap")
     import graft.operators.TextOps
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val inputCols = batch.columns.map(col)
-          // gates + digest, evaluated once (regex-heavy)
-          val gated = batch
-            .filter(TextOps.langId(col(textCol)) =!= "und" &&
-              TextOps.qualityScore(col(textCol)) >= lit(0.5))
-            .withColumn("norm_h", md5(TextOps.normalizeText(col(textCol))))
-            .localCheckpoint(true)
-          val wd = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("norm_h")).orderBy(col(idCol).asc)
-          val deduped = gated
-            .join(broadcast(st.digests), Seq("norm_h"), "left_anti")
-            .withColumn("_first", row_number().over(wd))
-            .filter(col("_first") === 1).drop("_first")
-          val wc = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(srcCol)).orderBy(col(idCol).asc)
-          val admittedBatch = deduped
-            .withColumn("_rk", row_number().over(wc))
-            .join(broadcast(st.counts.withColumnRenamed("src", srcCol)),
-              Seq(srcCol), "left")
-            .filter(col("_rk") + coalesce(col("n"), lit(0L)) <= cap)
-            .select(inputCols: _*)
-            .localCheckpoint(true)
-          val batchCounts = admittedBatch
-            .groupBy(col(srcCol).cast("string").as("src"))
-            .agg(count(lit(1)).as("n"))
-          // single-writer foreachBatch: see ingestIntoIVF
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (digests, _) = graft.index.Lineage.compact(
-            st.digests.unionByName(gated.select(col("norm_h"))).distinct(),
-            st.addsSinceCompact)
-          val (counts, _) = graft.index.Lineage.compact(
-            st.counts.unionByName(batchCounts)
-              .groupBy("src").agg(sum("n").as("n")),
-            st.addsSinceCompact)
-          state.set(CurateIngestState(admitted, digests, counts, n))
-        }
-      }
-      .start()
-  }
-
-  /** Streaming index ingest — the `Index::add` analogue: each microbatch
-    * of (id, vector) rows is routed into the live IVFFlat model (frozen
-    * centroids, ivfflat.rs:200-213 semantics). Returns the query handle;
-    * read the evolving model from `state`. Long-lived streams are safe:
-    * the add paths compact their union lineage every
-    * [[graft.index.Lineage.CompactEvery]] batches, so the logical plan
-    * (and per-batch analysis cost) stays bounded over unbounded
-    * microbatch counts. */
-  def ingestIntoIVF(stream: DataFrame, idCol: String, vecCol: String,
-                    state: java.util.concurrent.atomic.AtomicReference[graft.index.IVFFlat.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // foreachBatch is the sole writer (microbatches are serialized by
-          // the stream engine), so a plain get/set is race-free — and unlike
-          // updateAndGet it can never re-invoke add(), which launches Spark
-          // jobs and must run exactly once per batch
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
-  }
-
-  /** HNSW twin of [[ingestIntoIVF]]: each microbatch routes to its
-    * shards by id hash and inserts preserving per-shard sequential
-    * semantics (HNSW.Model.add); only touched shards re-serialize. */
-  def ingestIntoHNSW(stream: DataFrame, idCol: String, vecCol: String,
-                     state: java.util.concurrent.atomic.AtomicReference[graft.index.HNSW.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val inputCols = batch.columns.map(col)
+      // gates + digest, evaluated once (regex-heavy)
+      val gated = batch
+        .filter(TextOps.langId(col(textCol)) =!= "und" &&
+          TextOps.qualityScore(col(textCol)) >= lit(0.5))
+        .withColumn("norm_h", md5(TextOps.normalizeText(col(textCol))))
+        .localCheckpoint(true)
+      val wd = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("norm_h")).orderBy(col(idCol).asc)
+      val deduped = gated
+        .join(broadcast(st.digests), Seq("norm_h"), "left_anti")
+        .withColumn("_first", row_number().over(wd))
+        .filter(col("_first") === 1).drop("_first")
+      val wc = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(srcCol)).orderBy(col(idCol).asc)
+      val admittedBatch = deduped
+        .withColumn("_rk", row_number().over(wc))
+        .join(broadcast(st.counts.withColumnRenamed("src", srcCol)),
+          Seq(srcCol), "left")
+        .filter(col("_rk") + coalesce(col("n"), lit(0L)) <= cap)
+        .select(inputCols: _*)
+        .localCheckpoint(true)
+      val batchCounts = admittedBatch
+        .groupBy(col(srcCol).cast("string").as("src"))
+        .agg(count(lit(1)).as("n"))
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (digests, _) = graft.index.Lineage.compact(
+        st.digests.unionByName(gated.select(col("norm_h"))).distinct(),
+        st.addsSinceCompact)
+      val (counts, _) = graft.index.Lineage.compact(
+        st.counts.unionByName(batchCounts)
+          .groupBy("src").agg(sum("n").as("n")),
+        st.addsSinceCompact)
+      CurateIngestState(admitted, digests, counts, n)
+    }
   }
 
   /** Accumulator state for [[ingestIntoHNSWSideMerge]]: the serving
@@ -541,7 +507,8 @@ object Streaming {
                                 batches: Int)
 
   /** HNSW ingest via SIDE-BUILD + periodic [[graft.index.HNSW.Model.merge]]
-    * — the compaction-shaped alternative to [[ingestIntoHNSW]]: add()
+    * — the compaction-shaped alternative to folding
+    * [[graft.index.HNSW.Model.add]] through [[foldBatches]]: add()
     * deserializes + re-serializes every touched shard blob EVERY
     * microbatch (O(shard) work for O(batch) rows), while this twin only
     * buffers rows per batch and, every `mergeEvery` batches, builds a
@@ -555,144 +522,39 @@ object Streaming {
   def ingestIntoHNSWSideMerge(stream: DataFrame, idCol: String, vecCol: String,
                               state: java.util.concurrent.atomic.AtomicReference[HnswSideMergeState],
                               mergeEvery: Int = 8, shardRows: Int = 30000)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(mergeEvery > 0 && shardRows > 0)
     // side builds are unrouted, and merge's routed/unrouted fallback
     // would silently drop a routed main's routers on the first cadence
-    // — refuse up front; routed models ingest via ingestIntoHNSW
+    // — refuse up front; routed models fold HNSW.Model.add instead
     require(state.get().main.routers.isEmpty,
       "ingestIntoHNSWSideMerge on a ROUTED model would drop its routers " +
         "at the first merge (side builds are unrouted) — use " +
-        "ingestIntoHNSW, or rebuild routed on a maintenance cadence")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val s = state.get()
-          val rows = batch.select(col(idCol).cast("long").as("id"),
-            col(vecCol).cast("array<float>").as("vector"))
-          // eager checkpoint: the buffer must not re-read source batches
-          val pend = s.pending.map(_.unionByName(rows)).getOrElse(rows)
-            .localCheckpoint(true)
-          if (s.batches + 1 >= mergeEvery) {
-            val n = pend.count()
-            val shards = math.max(1, math.ceil(n.toDouble / shardRows).toInt)
-            val side = graft.index.HNSW.build(pend, "id", "vector",
-              s.main.params, numShards = shards)
-            val merged = s.main.merge(side)
-            // eager checkpoint per cadence: an uncompacted merge chain
-            // stacks one union node per cycle forever — the exact
-            // per-microbatch lineage blowup HNSW.add checkpoints
-            // against (see its comment and Lineage.scala)
-            state.set(HnswSideMergeState(
-              merged.copy(shards = merged.shards.localCheckpoint(true)),
-              None, 0))
-          } else {
-            state.set(s.copy(pending = Some(pend), batches = s.batches + 1))
-          }
-        }
+        "foldBatches with HNSW.Model.add, or rebuild routed on a " +
+        "maintenance cadence")
+    foldBatches(stream, state) { (s, batch) =>
+      val rows = batch.select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<float>").as("vector"))
+      // eager checkpoint: the buffer must not re-read source batches
+      val pend = s.pending.map(_.unionByName(rows)).getOrElse(rows)
+        .localCheckpoint(true)
+      if (s.batches + 1 >= mergeEvery) {
+        val n = pend.count()
+        val shards = math.max(1, math.ceil(n.toDouble / shardRows).toInt)
+        val side = graft.index.HNSW.build(pend, "id", "vector",
+          s.main.params, numShards = shards)
+        val merged = s.main.merge(side)
+        // eager checkpoint per cadence: an uncompacted merge chain
+        // stacks one union node per cycle forever — the exact
+        // per-microbatch lineage blowup HNSW.add checkpoints
+        // against (see its comment and Lineage.scala)
+        HnswSideMergeState(
+          merged.copy(shards = merged.shards.localCheckpoint(true)),
+          None, 0)
+      } else {
+        s.copy(pending = Some(pend), batches = s.batches + 1)
       }
-      .start()
-  }
-
-  /** LSH-forest twin of [[ingestIntoIVF]]: each microbatch descends the
-    * frozen planes (LSHForest.Model.add); once a leaf crosses the
-    * compaction watermark the add itself re-splits it
-    * (Params.compactFactor), so a long-running ingest keeps the leaf
-    * invariant without an external maintenance job. */
-  def ingestIntoLSH(stream: DataFrame, idCol: String, vecCol: String,
-                    state: java.util.concurrent.atomic.AtomicReference[graft.index.LSHForest.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
-  }
-
-  /** PQ twin of [[ingestIntoIVF]]: each microbatch encodes against the
-    * FROZEN codebooks (PQ.Model.add) and unions the codes — codebooks
-    * retrain only in the offline maintenance job. */
-  def ingestIntoPQ(stream: DataFrame, idCol: String, vecCol: String,
-                   state: java.util.concurrent.atomic.AtomicReference[graft.index.PQ.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
-  }
-
-  /** Takedown stream — the removal counterpart of the ingest twins,
-    * generic over the model type: each microbatch of ids is applied
-    * via the index's `remove` (anti-join for the row-state indexes,
-    * tombstones for HNSW — see [[graft.index.IVFFlat.Model.remove]]).
-    * Same single-writer foreachBatch contract as ingest; a deployment
-    * running BOTH an ingest and a removal stream against one index
-    * must serialize them onto one stream (two writers would race the
-    * read-modify-write).
-    *
-    * {{{
-    * Streaming.ingestRemovals(idStream, state,
-    *   (m: IVFFlat.Model, b) => m.remove(b, "vec_id"))
-    * }}}
-    */
-  def ingestRemovals[M](stream: DataFrame, state: java.util.concurrent.atomic.AtomicReference[M],
-                        remove: (M, DataFrame) => M)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(remove(state.get(), batch))
-        }
-      }
-      .start()
-  }
-
-  /** IVF-PQ twin of [[ingestIntoIVF]]: one fused narrow pass per
-    * microbatch routes each row to its frozen coarse cell and encodes it
-    * against the frozen codebooks (IVFPQ.Model.add). */
-  def ingestIntoIVFPQ(stream: DataFrame, idCol: String, vecCol: String,
-                      state: java.util.concurrent.atomic.AtomicReference[graft.index.IVFPQ.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
-  }
-
-  /** SQ8 twin of [[ingestIntoIVF]]: each microbatch is assigned to its
-    * frozen coarse cell and quantized to packed codes in one narrow
-    * pass (SQ8.Model.add) — completing the streaming matrix over all
-    * six index types. */
-  def ingestIntoSQ8(stream: DataFrame, idCol: String, vecCol: String,
-                    state: java.util.concurrent.atomic.AtomicReference[graft.index.SQ8.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
+    }
   }
 
   /** Streaming sketch maintenance — every sketch in
@@ -706,56 +568,35 @@ object Streaming {
     * DuckDB-gated batch semantics carry over to the stream for free. */
   def ingestHll(stream: DataFrame, valueCol: String, p: Int,
                 state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.Sketches.hllRegisters(batch, valueCol, p)
-          val merged = state.get().unionByName(part)
-            .groupBy("bucket").agg(max("rho").as("rho"))
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Sketches.hllRegisters(batch, valueCol, p)
+      val merged = st.unionByName(part)
+        .groupBy("bucket").agg(max("rho").as("rho"))
+      merged.localCheckpoint(true)
+    }
 
   /** Bloom twin of [[ingestHll]]: word-level bit_or merge. */
   def ingestBloom(stream: DataFrame, valueCol: String, logm: Int, k: Int,
                   state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.Sketches.bloomBuild(batch, valueCol, logm, k)
-          val merged = state.get().unionByName(part)
-            .groupBy("word").agg(expr("bit_or(bits)").as("bits"))
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Sketches.bloomBuild(batch, valueCol, logm, k)
+      val merged = st.unionByName(part)
+        .groupBy("word").agg(expr("bit_or(bits)").as("bits"))
+      merged.localCheckpoint(true)
+    }
 
   /** CMS twin of [[ingestHll]]: counter-level sum merge. */
   def ingestCms(stream: DataFrame, valueCol: String, logw: Int, depth: Int,
                 state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.Sketches.cmsBuild(batch, valueCol, logw, depth)
-          val merged = state.get().unionByName(part)
-            .groupBy("row", "col").agg(sum("cnt").as("cnt"))
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Sketches.cmsBuild(batch, valueCol, logw, depth)
+      val merged = st.unionByName(part)
+        .groupBy("row", "col").agg(sum("cnt").as("cnt"))
+      merged.localCheckpoint(true)
+    }
 
   /** KMV twin of [[ingestHll]]: bottom-R monoid merge — union the
     * standing sketch with the batch's bottom-R, collapse duplicate
@@ -764,21 +605,14 @@ object Streaming {
     * over the same rows (stream ≡ batch, pinned in StreamingSpec). */
   def ingestKmv(stream: DataFrame, valueCol: String, r: Int,
                 state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.Sketches.kmvSketch(batch, valueCol, r)
-          val merged = state.get().unionByName(part)
-            .dropDuplicates("h")
-            .orderBy(org.apache.spark.sql.functions.col("h")).limit(r)
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Sketches.kmvSketch(batch, valueCol, r)
+      val merged = st.unionByName(part)
+        .dropDuplicates("h")
+        .orderBy(org.apache.spark.sql.functions.col("h")).limit(r)
+      merged.localCheckpoint(true)
+    }
 
   /** Streaming DSIR target-model ingest: the state is the target
     * corpus's (bucket, ct) totals — a ≤ m-row MONOID (per-key sums),
@@ -790,21 +624,14 @@ object Streaming {
     * [[graft.operators.Dsir.weightsAgainst]]. */
   def ingestDsirTarget(stream: DataFrame, textCol: String, m: Int,
                        state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.Dsir.bucketTotals(batch, textCol, m)
-          val merged = state.get().unionByName(part)
-            .groupBy("bucket")
-            .agg(org.apache.spark.sql.functions.sum("ct").as("ct"))
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Dsir.bucketTotals(batch, textCol, m)
+      val merged = st.unionByName(part)
+        .groupBy("bucket")
+        .agg(org.apache.spark.sql.functions.sum("ct").as("ct"))
+      merged.localCheckpoint(true)
+    }
 
   /** State of [[scoreDsirStream]]: the accumulated scored rows
     * (lineage-compacted every 32 batches like the other accumulating
@@ -821,23 +648,15 @@ object Streaming {
   def scoreDsirStream(stream: DataFrame, idCol: String, textCol: String,
                       lr: DataFrame, m: Int,
                       state: java.util.concurrent.atomic.AtomicReference[DsirScoreState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val scored = graft.operators.Dsir
-            .weightsAgainst(batch, idCol, textCol, lr, m)
-            .localCheckpoint(true)
-          val st = state.get()
-          val (merged, n) = graft.index.Lineage.compact(
-            st.scored.unionByName(scored), st.addsSinceCompact)
-          state.set(DsirScoreState(merged, n))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val scored = graft.operators.Dsir
+        .weightsAgainst(batch, idCol, textCol, lr, m)
+        .localCheckpoint(true)
+      val (merged, n) = graft.index.Lineage.compact(
+        st.scored.unionByName(scored), st.addsSinceCompact)
+      DsirScoreState(merged, n)
+    }
 
   /** State of [[ingestBm25Postings]]: the standing (doc_id, term, tf)
     * posting frame — an index-sized frame (like the ANN ingest
@@ -858,24 +677,14 @@ object Streaming {
     * always consistent with the standing state). */
   def ingestBm25Postings(stream: DataFrame, idCol: String, textCol: String,
                          state: java.util.concurrent.atomic.AtomicReference[Bm25IngestState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF. The partial
-          // materializes inside its batch (streaming sources are only
-          // readable within the batch that delivered them).
-          val part = graft.operators.Retrieval
-            .postingsOf(batch, idCol, textCol).localCheckpoint(true)
-          val st = state.get()
-          val (merged, n) = graft.index.Lineage.compact(
-            st.postings.unionByName(part), st.addsSinceCompact)
-          state.set(Bm25IngestState(merged, n))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.Retrieval
+        .postingsOf(batch, idCol, textCol).localCheckpoint(true)
+      val (merged, n) = graft.index.Lineage.compact(
+        st.postings.unionByName(part), st.addsSinceCompact)
+      Bm25IngestState(merged, n)
+    }
 
   /** State of [[ingestIntoMaxSim]]: the standing (doc_id, tok_idx,
     * vec) token-embedding frame — the multi-vector tier's index
@@ -899,30 +708,20 @@ object Streaming {
   def ingestIntoMaxSim(stream: DataFrame, idCol: String, textCol: String,
                        state: java.util.concurrent.atomic.AtomicReference[MaxSimIngestState],
                        dim: Int = 16)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF. The partial
-          // materializes inside its batch (streaming sources are only
-          // readable within the batch that delivered them).
-          val part = graft.operators.LateInteraction
-            .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
-          val st = state.get()
-          val (merged, n) = graft.index.Lineage.compact(
-            graft.operators.LateInteraction.addTokens(st.tokens, part),
-            st.addsSinceCompact)
-          state.set(MaxSimIngestState(merged, n))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.LateInteraction
+        .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
+      val (merged, n) = graft.index.Lineage.compact(
+        graft.operators.LateInteraction.addTokens(st.tokens, part),
+        st.addsSinceCompact)
+      MaxSimIngestState(merged, n)
+    }
 
   /** ANN-tier twin of [[ingestIntoMaxSim]] — streaming ingest into a
     * LIVE token IVF tier: each microbatch embeds its documents and
     * [[graft.operators.LateInteraction.TokenIvf.add]]s the token rows
-    * under the tier's frozen centroids (the [[ingestIntoIVF]]
+    * under the tier's frozen centroids (the IVFFlat.Model.add
     * discipline on packed token ids; lineage compacts inside add).
     * Build the seed tier with an explicit `maxNormBound` (the model's
     * norm ceiling — 1.0 for L2-normalized production tokens) so
@@ -939,20 +738,12 @@ object Streaming {
   def ingestIntoTokenIvf(stream: DataFrame, idCol: String, textCol: String,
                          state: java.util.concurrent.atomic.AtomicReference[graft.operators.LateInteraction.TokenIvf],
                          dim: Int = 16, trustedBound: Boolean = false)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.LateInteraction
-            .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
-          state.set(state.get().add(part, "doc_id", "tok_idx", "vec",
-            trustedBound))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.LateInteraction
+        .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
+      st.add(part, "doc_id", "tok_idx", "vec", trustedBound)
+    }
 
   /** PQ-tier twin of [[ingestIntoTokenIvf]] — streaming ingest into a
     * LIVE residual-PQ token tier: each microbatch embeds its documents
@@ -967,20 +758,12 @@ object Streaming {
   def ingestIntoTokenPq(stream: DataFrame, idCol: String, textCol: String,
                         state: java.util.concurrent.atomic.AtomicReference[graft.operators.LateInteraction.TokenPq],
                         dim: Int = 16, trustedBound: Boolean = false)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = graft.operators.LateInteraction
-            .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
-          state.set(state.get().add(part, "doc_id", "tok_idx", "vec",
-            trustedBound))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = graft.operators.LateInteraction
+        .tokenVectors(batch, idCol, textCol, dim).localCheckpoint(true)
+      st.add(part, "doc_id", "tok_idx", "vec", trustedBound)
+    }
 
   /** Priority-sampling twin of [[ingestHll]] — a weighted sample of
     * exactly k rows maintained over an unbounded stream: the whole
@@ -998,25 +781,18 @@ object Streaming {
                            weightCol: String, k: Int,
                            salt: String = "wsample",
                            state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = batch
-            .select(col(idCol), col(weightCol))
-            .withColumn("__priority",
-              graft.operators.Splits.priorityOf(idCol, weightCol, salt))
-          val merged = state.get().unionByName(part)
-            .dropDuplicates(idCol)
-            .orderBy(col("__priority").desc, col(idCol))
-            .limit(k + 1)
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = batch
+        .select(col(idCol), col(weightCol))
+        .withColumn("__priority",
+          graft.operators.Splits.priorityOf(idCol, weightCol, salt))
+      val merged = st.unionByName(part)
+        .dropDuplicates(idCol)
+        .orderBy(col("__priority").desc, col(idCol))
+        .limit(k + 1)
+      merged.localCheckpoint(true)
+    }
 
   /** Read-out face of [[ingestSampleWeighted]]: the final k-row sample
     * + estimator from the live (or [[DedupStateIO.loadSketch]]-
@@ -1036,29 +812,22 @@ object Streaming {
                                    weightCol: String, groupCol: String,
                                    k: Int, salt: String = "wsample",
                                    state: java.util.concurrent.atomic.AtomicReference[DataFrame])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          val part = batch
-            .select(col(idCol), col(weightCol), col(groupCol))
-            .withColumn("__priority",
-              graft.operators.Splits.priorityOf(idCol, weightCol, salt))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(groupCol))
-            .orderBy(col("__priority").desc, col(idCol))
-          val merged = state.get().unionByName(part)
-            .dropDuplicates(idCol)
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") <= k + 1)
-            .drop("__rn")
-          state.set(merged.localCheckpoint(true))
-        }
-      }
-      .start()
-  }
+  : StreamingQuery =
+    foldBatches(stream, state) { (st, batch) =>
+      val part = batch
+        .select(col(idCol), col(weightCol), col(groupCol))
+        .withColumn("__priority",
+          graft.operators.Splits.priorityOf(idCol, weightCol, salt))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(groupCol))
+        .orderBy(col("__priority").desc, col(idCol))
+      val merged = st.unionByName(part)
+        .dropDuplicates(idCol)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= k + 1)
+        .drop("__rn")
+      merged.localCheckpoint(true)
+    }
 
   /** Read-out face of [[ingestSampleWeightedPerGroup]]: priorities are
     * content-addressed, so the batch operator run ON THE STATE is the
@@ -1068,24 +837,6 @@ object Streaming {
                                k: Int, salt: String = "wsample"): DataFrame =
     graft.operators.Splits.sampleWeightedPerGroup(
       state.drop("__priority"), idCol, weightCol, groupCol, k, salt)
-
-  /** BQ twin of [[ingestIntoIVF]]: each microbatch is assigned to its
-    * frozen coarse cell and sign-packed to 1-bit codes in one narrow
-    * pass (BQ.Model.add) — the streaming matrix now covers all seven
-    * index types. */
-  def ingestIntoBQ(stream: DataFrame, idCol: String, vecCol: String,
-                   state: java.util.concurrent.atomic.AtomicReference[graft.index.BQ.Model])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // single-writer foreachBatch: see ingestIntoIVF
-          state.set(state.get().add(batch, idCol, vecCol))
-        }
-      }
-      .start()
-  }
 
   /** PII scrub at ingest — [[graft.operators.Pii.redact]] as a
     * STATELESS streaming transform: no state store, no watermark, the
@@ -1183,49 +934,43 @@ object Streaming {
                          state: java.util.concurrent.atomic.AtomicReference[PackIngestState],
                          cuts: Seq[(String, Double)] = Seq(
                            ("train", 0.8), ("val", 0.9), ("test", 1.0)))
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(budget > 0, s"ingestPackSubwords: budget must be positive")
     require(shards > 0, s"ingestPackSubwords: shards must be positive")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val counted = graft.operators.Unigram
-            .subwordCounts(batch, idCol, textCol, pieces)
-            .withColumnRenamed("id", idCol)
-          val withSplit = graft.operators.Splits.assign(counted, idCol, cuts)
-            .withColumn("shard",
-              pmod(col(idCol).cast("long"), lit(shards.toLong)))
-            .withColumn("n_tokens", col("n_subwords"))
-          val lane = org.apache.spark.sql.expressions.Window
-            .partitionBy("split", "shard").orderBy(col(idCol))
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-          val packedBatch = withSplit
-            .withColumn("__bprior",
-              coalesce(sum(col("n_tokens")).over(lane), lit(0L)))
-            .join(broadcast(st.totals), Seq("split", "shard"), "left")
-            .withColumn("prior", col("__bprior") + coalesce(col("tok"), lit(0L)))
-            .withColumn("bin", (col("prior") / lit(budget.toLong)).cast("long"))
-            .select(col(idCol), col("split"), col("shard"), col("n_tokens"),
-              col("bin"))
-            .localCheckpoint(true)
-          // derive totals from the CHECKPOINTED packed frame: a lazy
-          // aggregate over the raw batch would re-scan the source on a
-          // later evaluation, when it holds more rows (the foreachBatch
-          // re-evaluation trap every state frame here guards against)
-          val batchTotals = packedBatch.groupBy("split", "shard")
-            .agg(sum("n_tokens").as("tok"))
-          val (packed, n) = graft.index.Lineage.compact(
-            st.packed.unionByName(packedBatch), st.addsSinceCompact)
-          val (totals, _) = graft.index.Lineage.compact(
-            st.totals.unionByName(batchTotals)
-              .groupBy("split", "shard").agg(sum("tok").as("tok")),
-            st.addsSinceCompact)
-          state.set(PackIngestState(packed, totals, n))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val counted = graft.operators.Unigram
+        .subwordCounts(batch, idCol, textCol, pieces)
+        .withColumnRenamed("id", idCol)
+      val withSplit = graft.operators.Splits.assign(counted, idCol, cuts)
+        .withColumn("shard",
+          pmod(col(idCol).cast("long"), lit(shards.toLong)))
+        .withColumn("n_tokens", col("n_subwords"))
+      val lane = org.apache.spark.sql.expressions.Window
+        .partitionBy("split", "shard").orderBy(col(idCol))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      val packedBatch = withSplit
+        .withColumn("__bprior",
+          coalesce(sum(col("n_tokens")).over(lane), lit(0L)))
+        .join(broadcast(st.totals), Seq("split", "shard"), "left")
+        .withColumn("prior", col("__bprior") + coalesce(col("tok"), lit(0L)))
+        .withColumn("bin", (col("prior") / lit(budget.toLong)).cast("long"))
+        .select(col(idCol), col("split"), col("shard"), col("n_tokens"),
+          col("bin"))
+        .localCheckpoint(true)
+      // derive totals from the CHECKPOINTED packed frame: a lazy
+      // aggregate over the raw batch would re-scan the source on a
+      // later evaluation, when it holds more rows (the microbatch
+      // re-evaluation trap every state frame here guards against)
+      val batchTotals = packedBatch.groupBy("split", "shard")
+        .agg(sum("n_tokens").as("tok"))
+      val (packed, n) = graft.index.Lineage.compact(
+        st.packed.unionByName(packedBatch), st.addsSinceCompact)
+      val (totals, _) = graft.index.Lineage.compact(
+        st.totals.unionByName(batchTotals)
+          .groupBy("split", "shard").agg(sum("tok").as("tok")),
+        st.addsSinceCompact)
+      PackIngestState(packed, totals, n)
+    }
   }
 
   /** State of [[ingestDedupFingerprint]]: `admitted` accumulates
@@ -1253,33 +998,27 @@ object Streaming {
                              fingerprint: DataFrame => DataFrame,
                              maxHamming: Int,
                              state: java.util.concurrent.atomic.AtomicReference[FingerprintIngestState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"ingestDedupFingerprint: maxHamming in [0,64), got $maxHamming")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val bfp = fingerprint(batch).localCheckpoint(true) // (id, sim)
-          val dupVsState = graft.operators.Dedup
-            .crossHammingPairs(bfp, st.fps, maxHamming, bits = 64)
-            .select(col("id_a").as("id"))
-          val dupIntra = graft.operators.Dedup
-            .simhashPairsOf(bfp, maxHamming, bits = 64)
-            .select(col("doc_b").as("id"))
-          val losers = dupVsState.unionByName(dupIntra).distinct()
-            .withColumnRenamed("id", idCol)
-          val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (fps, _) = graft.index.Lineage.compact(
-            st.fps.unionByName(bfp), st.addsSinceCompact)
-          state.set(FingerprintIngestState(admitted, fps, n))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val bfp = fingerprint(batch).localCheckpoint(true) // (id, sim)
+      val dupVsState = graft.operators.Dedup
+        .crossHammingPairs(bfp, st.fps, maxHamming, bits = 64)
+        .select(col("id_a").as("id"))
+      val dupIntra = graft.operators.Dedup
+        .simhashPairsOf(bfp, maxHamming, bits = 64)
+        .select(col("doc_b").as("id"))
+      val losers = dupVsState.unionByName(dupIntra).distinct()
+        .withColumnRenamed("id", idCol)
+      val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (fps, _) = graft.index.Lineage.compact(
+        st.fps.unionByName(bfp), st.addsSinceCompact)
+      FingerprintIngestState(admitted, fps, n)
+    }
   }
 
   /** State of [[ingestDedupAudioBlocks]]: `admitted` accumulates
@@ -1309,35 +1048,28 @@ object Streaming {
                              state: java.util.concurrent.atomic.AtomicReference[AudioBlockIngestState],
                              frameSec: Double = 0.25, hopSec: Double = 0.0625,
                              minMatches: Int = 4, dfCap: Int = 64)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(minMatches >= 1,
       s"ingestDedupAudioBlocks: minMatches >= 1, got $minMatches")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val bblk = graft.operators.Multimodal
-            .audioBlockFingerprints(batch, idCol, contentCol, frameSec, hopSec)
-            .localCheckpoint(true)
-          val dupVsState = graft.operators.Dedup
-            .audioBlockHitsVs(bblk, st.blocks, minMatches, dfCap)
-          val dupIntra = graft.operators.Dedup
-            .audioBlockPairsOf(bblk, minMatches, dfCap)
-            .select(col("doc_b").as("id"))
-          val losers = dupVsState.unionByName(dupIntra).distinct()
-            .withColumnRenamed("id", idCol)
-          val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          // single-writer foreachBatch: see ingestIntoIVF
-          val (admitted, n) = graft.index.Lineage.compact(
-            st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
-          val (blocks, _) = graft.index.Lineage.compact(
-            st.blocks.unionByName(bblk), st.addsSinceCompact)
-          state.set(AudioBlockIngestState(admitted, blocks, n))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val bblk = graft.operators.Multimodal
+        .audioBlockFingerprints(batch, idCol, contentCol, frameSec, hopSec)
+        .localCheckpoint(true)
+      val dupVsState = graft.operators.Dedup
+        .audioBlockHitsVs(bblk, st.blocks, minMatches, dfCap)
+      val dupIntra = graft.operators.Dedup
+        .audioBlockPairsOf(bblk, minMatches, dfCap)
+        .select(col("doc_b").as("id"))
+      val losers = dupVsState.unionByName(dupIntra).distinct()
+        .withColumnRenamed("id", idCol)
+      val admittedBatch = batch.join(losers, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val (admitted, n) = graft.index.Lineage.compact(
+        st.admitted.unionByName(admittedBatch), st.addsSinceCompact)
+      val (blocks, _) = graft.index.Lineage.compact(
+        st.blocks.unionByName(bblk), st.addsSinceCompact)
+      AudioBlockIngestState(admitted, blocks, n)
+    }
   }
 
   /** Span-level decontamination at ingest — contam_scrub_spans'
@@ -1395,30 +1127,27 @@ object Streaming {
   def ingestDecontam(stream: DataFrame, idCol: String, textCol: String,
                      benchGrams: DataFrame, n: Int, threshold: Double,
                      state: java.util.concurrent.atomic.AtomicReference[DecontamIngestState])
-  : org.apache.spark.sql.streaming.StreamingQuery = {
+  : StreamingQuery = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"ingestDecontam: threshold in (0, 1], got $threshold")
     val frozenGrams = benchGrams.localCheckpoint(true)
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val inputCols = batch.columns.map(col)
-          val scored = graft.operators.Decontam.ngramOverlapAgainstGrams(
-            batch, idCol, textCol, frozenGrams, n)
-          val clean = batch.join(
-            scored.filter(col("overlap") < threshold).select(col(idCol)),
-            Seq(idCol), "left_semi").select(inputCols: _*)
-          val nBatch = batch.count()
-          val nClean = clean.count()
-          // single-writer foreachBatch: see ingestIntoIVF
-          val (admitted, adds) = graft.index.Lineage.compact(
-            st.admitted.unionByName(clean), st.addsSinceCompact)
-          state.set(DecontamIngestState(admitted,
-            st.dropped + (nBatch - nClean), adds))
-        }
-      }
-      .start()
+    foldBatches(stream, state) { (st, batch) =>
+      val inputCols = batch.columns.map(col)
+      val scored = graft.operators.Decontam.ngramOverlapAgainstGrams(
+        batch, idCol, textCol, frozenGrams, n)
+      // materialized like every sibling's admitted batch: lazy, the
+      // count below and each later read of `admitted` would re-run the
+      // gram-overlap join until the next compaction
+      val clean = batch.join(
+        scored.filter(col("overlap") < threshold).select(col(idCol)),
+        Seq(idCol), "left_semi").select(inputCols: _*)
+        .localCheckpoint(true)
+      val nBatch = batch.count()
+      val nClean = clean.count()
+      val (admitted, adds) = graft.index.Lineage.compact(
+        st.admitted.unionByName(clean), st.addsSinceCompact)
+      DecontamIngestState(admitted,
+        st.dropped + (nBatch - nClean), adds)
+    }
   }
 }

@@ -37,6 +37,30 @@ class PlanSpec extends SparkSpec {
     assert(conf.get("spark.sql.shuffle.partitions") == "8")
   }
 
+  test("one streaming driver: foreachBatch only inside Streaming.foldBatches") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"not run from the repo root: ${root.toAbsolutePath}")
+    val sink = "foreachBatch"
+    val files = Files.walk(root)
+    val hits =
+      try files.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(f => sink.r.findAllMatchIn(Files.readString(f))
+          .map(m => (root.relativize(f: Path).toString, m.start)))
+        .toList
+      finally files.close()
+    assert(hits.map(_._1) == List("graft/streaming/Streaming.scala"),
+      s"$sink outside Streaming.foldBatches")
+    val (file, at) = hits.head
+    val src = Files.readString(root.resolve(file))
+    val start = src.indexOf("def foldBatches[")
+    val next = src.indexOf("\n  def ", start + 1)
+    assert(start >= 0 && start < at && (next < 0 || at < next),
+      s"the one $sink call is not inside foldBatches")
+  }
+
   test("knn join broadcasts the QUERY side, never the corpus") {
     val p = plan("knn_exhaustive")
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(500))

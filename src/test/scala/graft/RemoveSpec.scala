@@ -88,9 +88,8 @@ class RemoveSpec extends SparkSpec {
       graft.index.IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5))
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[Long]
-    val q = graft.streaming.Streaming.ingestRemovals(
-      mem.toDF().toDF("vec_id"), state,
-      (m: graft.index.IVFFlat.Model, b) => m.remove(b, "vec_id"))
+    val q = graft.streaming.Streaming.foldBatches(
+      mem.toDF().toDF("vec_id"), state)(_.remove(_, "vec_id"))
     mem.addData(42L)
     q.processAllAvailable()
     mem.addData(7L, 13L) // second microbatch stacks on the first

@@ -105,6 +105,46 @@ class StreamingSpec extends SparkSpec {
     assert(got.filter(_._1 == 2L) == Set((2L, 1L, 1L, 10000L, 10000L)))
   }
 
+  test("foldBatches: one step per non-empty batch; a failing step leaves the state as it was") {
+    implicit val sqlCtx = spark.sqlContext
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val state = new java.util.concurrent.atomic.AtomicReference(0L)
+    val mem = MemoryStream[Long]
+    val q = Streaming.foldBatches(mem.toDF(), state) { (acc, batch) =>
+      calls.incrementAndGet()
+      acc + batch.count()
+    }
+    // three non-empty batches with an empty trigger between them
+    Seq(Seq(1L, 2L), Seq.empty[Long], Seq(3L), Seq.empty[Long], Seq(4L, 5L))
+      .foreach { b => mem.addData(b); q.processAllAvailable() }
+    q.stop()
+    // five triggers ran (batch ids 0..4), the step saw only the three
+    // non-empty ones
+    assert(q.lastProgress.batchId == 4L)
+    assert(calls.get() == 3)
+    assert(state.get() == 5L)
+
+    // a step that throws on the second batch fails the query and never
+    // sets a partial state: the value after batch 1 stays
+    val failCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failState = new java.util.concurrent.atomic.AtomicReference(0L)
+    val failMem = MemoryStream[Long]
+    val failQ = Streaming.foldBatches(failMem.toDF(), failState) { (acc, batch) =>
+      if (failCalls.incrementAndGet() == 2) throw new IllegalStateException("step failed")
+      acc + batch.count()
+    }
+    failMem.addData(7L, 8L)
+    failQ.processAllAvailable()
+    assert(failState.get() == 2L)
+    failMem.addData(9L)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      failQ.processAllAvailable()
+    }
+    failQ.stop()
+    assert(failCalls.get() == 2)
+    assert(failState.get() == 2L)
+  }
+
   test("streaming ingest patches the HNSW index (Index::add analogue)") {
     implicit val sqlCtx = spark.sqlContext
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -114,8 +154,8 @@ class StreamingSpec extends SparkSpec {
         efSearch = 64, m = 16), numShards = 4)
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoHNSW(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 42)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -179,8 +219,8 @@ class StreamingSpec extends SparkSpec {
       graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 64))
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoLSH(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 55)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -200,8 +240,8 @@ class StreamingSpec extends SparkSpec {
       IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5))
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoIVF(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 77)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -220,8 +260,8 @@ class StreamingSpec extends SparkSpec {
       IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5))
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoIVF(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" >= 400)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].collect()
@@ -530,8 +570,8 @@ class StreamingSpec extends SparkSpec {
       emb.filter($"vec_id" =!= 42), "vec_id", "embedding", cbs, params)
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoPQ(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 42)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -557,8 +597,8 @@ class StreamingSpec extends SparkSpec {
       emb.filter($"vec_id" =!= 42), "vec_id", "embedding", cents, sizes, cbs, params)
     val state = new java.util.concurrent.atomic.AtomicReference(model)
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoIVFPQ(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 42)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -587,8 +627,8 @@ class StreamingSpec extends SparkSpec {
     val state = new java.util.concurrent.atomic.AtomicReference(
       graft.index.SQ8.compress(ivf))
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoSQ8(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 42)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -683,8 +723,8 @@ class StreamingSpec extends SparkSpec {
     val state = new java.util.concurrent.atomic.AtomicReference(
       graft.index.BQ.compress(ivf))
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.ingestIntoBQ(
-      mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", state)
+    val q = Streaming.foldBatches(
+      mem.toDF().toDF("vec_id", "embedding"), state)(_.add(_, "vec_id", "embedding"))
     val held = emb.filter($"vec_id" === 42)
       .select($"vec_id", $"embedding".cast("array<float>"))
       .as[(Long, Array[Float])].head()
@@ -1642,8 +1682,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streamed takedowns + TokenIvf.rebalance: stream == batch, sizes recount, probe-all exact") {
     // the takedown-heavy ingest story: 30% of the corpus leaves across
-    // removal microbatches (Streaming.ingestRemovals on the live token
-    // tier), then the periodic repair job rebalances — the remedy
+    // removal microbatches (Streaming.foldBatches of remove on the live
+    // token tier), then the periodic repair job rebalances — the remedy
     // remove's frozen-size drift prescribes — and the repaired tier
     // must serve the SURVIVORS exactly like a batch-built pipeline
     implicit val sqlCtx = spark.sqlContext
@@ -1659,9 +1699,8 @@ class StreamingSpec extends SparkSpec {
     val gone = (0L until 100L).filter(_ % 10 < 3)
     val st = new java.util.concurrent.atomic.AtomicReference(tier)
     val mem = MemoryStream[Long]
-    val q = Streaming.ingestRemovals[LateInteraction.TokenIvf](
-      mem.toDF().toDF("doc_id"), st,
-      (t, b) => t.remove(b, "doc_id"))
+    val q = Streaming.foldBatches(mem.toDF().toDF("doc_id"), st)(
+      _.remove(_, "doc_id"))
     gone.grouped(10).foreach { b => mem.addData(b); q.processAllAvailable() }
     q.stop()
     // stream ≡ batch: the live tier holds exactly the one-shot batch
