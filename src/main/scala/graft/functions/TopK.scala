@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -154,5 +154,23 @@ object TopK {
     GraftShims.column(TopKAggExpr(
       GraftShims.expression(dist.cast("double")),
       GraftShims.expression(id.cast("long")), k).toAggregateExpression())
+  }
+
+  /** The per-query cut of every batch kNN path: (qid, id, distance)
+    * candidates → the k nearest per qid, as (qid, id, distance) rows.
+    * Partial-aggregating: each task ships at most k rows per query it
+    * touched, so the only shuffle is k-bounded, never candidate-count
+    * sized (a 10M-row probe measured ~580 MB through the old
+    * whole-candidate groupByKey drain). Candidate ids must be unique per
+    * query — true for disjoint probed cells and single corpus scans —
+    * and ties break by id exactly like `Exhaustive.topKDedup`. */
+  def perQuery(scored: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, explode}
+    scored
+      .groupBy(col("qid"))
+      .agg(topK(col("distance"), col("id"), k).as("nn"))
+      .select(col("qid"), explode(col("nn")).as("nn"))
+      .select(col("qid"), col("nn.id").as("id"),
+        col("nn.distance").as("distance"))
   }
 }

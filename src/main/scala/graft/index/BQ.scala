@@ -1,8 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.BqMath
+import graft.functions.{BqMath, TopK}
 
 /** BQ — IVF over 1-bit sign codes: the far end of the compression
   * curve that [[SQ8]] starts. Same coarse quantizer and adaptive
@@ -118,8 +118,7 @@ object BQ {
       * [[requireSymmetricComparable]]). */
     def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
       requireSymmetricComparable()
-      require(query.length == centroids(0).length,
-        s"BQ query dim ${query.length} != index dim ${centroids(0).length}")
+      Cells.requireDim("BQ", query, centroids)
       val probed = probeSet(query, k, minProbe)
       val qBits =
         if (rotated) BqMath.packBitsD(codeFrame(query.map(_.toDouble)))
@@ -131,11 +130,6 @@ object BQ {
         .orderBy(col("distance"), col("id")).limit(k)
     }
 
-    /** Shared probe scaffold: (qid, qvec, cluster, qc2) rows, queries
-      * broadcast, codes never shuffle. `qvec` is double-widened, and
-      * under residual coding it is the PER-CELL residual q − centroid
-      * with `qc2` = ‖q − centroid‖² — each probe row carries the query
-      * frame its cell was coded in (qc2 is 0 when not residual). */
     /** Broadcast-budget gate for the entry points that BROADCAST their
       * probe frame: nprobe probe copies per query, each carrying the
       * double-widened qvec at the code frame's (possibly FWHT-padded)
@@ -148,54 +142,47 @@ object BQ {
       Batches.boundedCheckScaled(queries, what,
         nprobe.toLong * 2L * codeDim)
 
+    /** The probe frame ([[Cells.probes]]) with BQ's extra column:
+      * (qid, qvec, cluster, qc2) rows. `qvec` is double-widened, and
+      * under residual coding it is the PER-CELL residual q − centroid
+      * with `qc2` = ‖q − centroid‖² — each probe row carries the query
+      * frame its cell was coded in (qc2 is 0 when not residual). */
     private def probeFrame(queries: DataFrame, qIdCol: String, qVecCol: String,
                            k: Int, nprobe: Int): DataFrame = {
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast(
-        (centroids, clusterSizes, residual, rotated))
-      import spark.implicits._
-      queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val (cents, sizes, res, rot) = bc.value
-          // dim guard: BqMath's kernels score the shorter prefix on a
-          // byte-length mismatch (documented there) — fail loudly here
-          // instead of returning a plausible partial score
-          require(qvec.length == cents(0).length,
-            s"BQ query dim ${qvec.length} != index dim ${cents(0).length}")
-          IVFFlat.probeOrder(cents, sizes, qvec, k, nprobe).map { c =>
-            if (res) {
-              // qc2 = ‖q−c‖² BEFORE rotation (the pinned side of the
-              // estimate; rotation preserves it in real arithmetic)
-              val qd = residualOf(qvec, cents(c))
-              var s = 0.0; var i = 0
-              while (i < qd.length) { s += qd(i) * qd(i); i += 1 }
-              (qid, if (rot) graft.functions.Rotate.rotateD(qd) else qd, c, s)
-            } else {
-              val a = new Array[Double](qvec.length)
-              var i = 0
-              while (i < qvec.length) { a(i) = qvec(i).toDouble; i += 1 }
-              (qid, if (rot) graft.functions.Rotate.rotateD(a) else a, c, 0.0)
-            }
-          }
+      val res = residual
+      val frame: Array[Double] => Array[Double] =
+        if (rotated) graft.functions.Rotate.rotateD else identity
+      Cells.probes("BQ", queries, qIdCol, qVecCol, centroids, clusterSizes,
+          k, nprobe, Seq("qid", "qvec", "cluster", "qc2")) { (cents, qid, q) =>
+        if (res) c => {
+          // qc2 = ‖q−c‖² BEFORE rotation (the pinned side of the
+          // estimate; rotation preserves it in real arithmetic)
+          val qd = residualOf(q, cents(c))
+          var s = 0.0; var i = 0
+          while (i < qd.length) { s += qd(i) * qd(i); i += 1 }
+          (qid, frame(qd), c, s)
+        } else {
+          val qf = frame(q.map(_.toDouble))
+          c => (qid, qf, c, 0.0)
         }
-        .toDF("qid", "qvec", "cluster", "qc2")
+      }
     }
 
-    // partial-aggregating top-k: k rows per query per task cross the
-    // shuffle, never the scored candidates (the 10M smoke measured
-    // 580 MB through the old whole-candidate groupByKey drain; probed
-    // cells are disjoint ⇒ unique ids per query, and TopKAggExpr's
-    // (distance, id) order matches topKDedup's exactly)
-    private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
-      scored
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
+    /** The asymmetric score over a probe-joined code row. Plain coding:
+      * −Σ qᵢ·sign(vᵢ) (smaller = more aligned; only comparable within
+      * one coding frame). Residual coding: a true squared-distance
+      * ESTIMATE, comparable across cells —
+      *   ‖q−c‖² − (2/√d)·‖v−c‖·⟨q−c, sign(v−c)⟩ + ‖v−c‖²,
+      * i.e. r ≈ ‖r‖·sign(r)/√d substituted into ‖(q−c) − r‖². The
+      * sign-vector estimate lives in the CODE frame, so d is the
+      * (padded) bit width, not the input dim. */
+    private def asymScore: Column =
+      if (residual) {
+        val inv = 2.0 / math.sqrt(codeDim.toDouble)
+        col("qc2") -
+          BqMath.asymDot(col("codes"), col("qvec")) * col("rnorm") * lit(inv) +
+          col("rnorm") * col("rnorm")
+      } else lit(0.0d) - BqMath.asymDot(col("codes"), col("qvec"))
 
     /** Symmetric batch search: the query is sign-quantized in the scan
       * projection and distance is XOR+popcount over packed bytes —
@@ -206,7 +193,7 @@ object BQ {
       requireSymmetricComparable()
       gateProbeBroadcast(queries, "BQ.searchMany probe frame", nprobe)
       val probes = probeFrame(queries, qIdCol, qVecCol, k, nprobe)
-      topKPerQuery(
+      TopK.perQuery(
         codes.join(broadcast(probes), Seq("cluster"))
           .select(col("qid"), col("id"),
             BqMath.hammingDist(col("codes"), BqMath.packSignBits(col("qvec")))
@@ -214,28 +201,16 @@ object BQ {
         k)
     }
 
-    /** Asymmetric batch search. Plain coding: distance =
-      * −Σ qᵢ·sign(vᵢ) (smaller = more aligned; only comparable within
-      * one coding frame). Residual coding: a true squared-distance
-      * ESTIMATE, comparable across cells —
-      *   ‖q−c‖² − (2/√d)·‖v−c‖·⟨q−c, sign(v−c)⟩ + ‖v−c‖²,
-      * i.e. r ≈ ‖r‖·sign(r)/√d substituted into ‖(q−c) − r‖². */
+    /** Asymmetric batch search: distance = [[asymScore]] (the −q·sign
+      * alignment, or the cross-cell squared-distance estimate under
+      * residual coding). */
     def searchManyAsym(queries: DataFrame, qIdCol: String, qVecCol: String,
                        k: Int, nprobe: Int = 2): DataFrame = {
       gateProbeBroadcast(queries, "BQ.searchManyAsym probe frame", nprobe)
       val probes = probeFrame(queries, qIdCol, qVecCol, k, nprobe)
-      val scored = codes.join(broadcast(probes), Seq("cluster"))
-      val dist =
-        if (residual) {
-          // the sign-vector estimate r ≈ ‖r‖·sign(rot r)/√d lives in the
-          // CODE frame — d is the (padded) bit width, not the input dim
-          val inv = 2.0 / math.sqrt(codeDim.toDouble)
-          col("qc2") -
-            BqMath.asymDot(col("codes"), col("qvec")) * col("rnorm") * lit(inv) +
-            col("rnorm") * col("rnorm")
-        } else lit(0.0d) - BqMath.asymDot(col("codes"), col("qvec"))
-      topKPerQuery(
-        scored.select(col("qid"), col("id"), dist.as("distance")),
+      TopK.perQuery(
+        codes.join(broadcast(probes), Seq("cluster"))
+          .select(col("qid"), col("id"), asymScore.as("distance")),
         k)
     }
 
@@ -260,20 +235,10 @@ object BQ {
           "BQ.knnJoinAsym probe frame (broadcastProbes=true)", nprobe)
       val probes0 = probeFrame(queries, qIdCol, qVecCol, k, nprobe)
       val probes = if (broadcastProbes) broadcast(probes0) else probes0
-      val scored = codes.join(probes, Seq("cluster"))
-      val dist =
-        if (residual) {
-          val inv = 2.0 / math.sqrt(codeDim.toDouble)
-          col("qc2") -
-            BqMath.asymDot(col("codes"), col("qvec")) * col("rnorm") * lit(inv) +
-            col("rnorm") * col("rnorm")
-        } else lit(0.0d) - BqMath.asymDot(col("codes"), col("qvec"))
-      scored.select(col("qid"), col("id"), dist.as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
+      TopK.perQuery(
+        codes.join(probes, Seq("cluster"))
+          .select(col("qid"), col("id"), asymScore.as("distance")),
+        k)
     }
 
     /** Two-stage corpus-scale retrieval: bit shortlist
@@ -305,15 +270,12 @@ object BQ {
       val q = if (broadcastShortlist) broadcast(q0) else q0
       val c = corpus.select(col(cIdCol).cast("long").as("id"),
         col(cVecCol).cast("array<float>").as("cvec"))
-      c.join(shortlist, Seq("id")).join(q, Seq("qid"))
-        .select(col("qid"), col("id"),
-          graft.functions.VectorOps.sqDist(col("cvec"), col("qvec"))
-            .as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
+      TopK.perQuery(
+        c.join(shortlist, Seq("id")).join(q, Seq("qid"))
+          .select(col("qid"), col("id"),
+            graft.functions.VectorOps.sqDist(col("cvec"), col("qvec"))
+              .as("distance")),
+        k)
     }
 
     /** Bit shortlist (factor×k, asymmetric score) + exact float re-rank
@@ -332,20 +294,9 @@ object BQ {
       Batches.boundedCheckScaled(queries,
         "BQ.searchManyRefined shortlist probe",
         k.toLong * factor * centroids(0).length)
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val shortlist = searchManyAsym(queries, qIdCol, qVecCol, k * factor, nprobe)
-        .select(col("qid"), col("id"))
-      val q = queries.select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<float>").as("qvec"))
-      val c = corpus.select(col(cIdCol).cast("long").as("id"),
-        col(cVecCol).cast("array<float>").as("cvec"))
-      topKPerQuery(
-        c.join(broadcast(shortlist.join(broadcast(q), "qid")), Seq("id"))
-          .select(col("qid"), col("id"),
-            graft.functions.VectorOps.sqDist(col("cvec"), col("qvec"))
-              .as("distance")),
-        k)
+      graft.operators.Exhaustive.rerank(
+        searchManyAsym(queries, qIdCol, qVecCol, k * factor, nprobe),
+        queries, qIdCol, qVecCol, corpus, cIdCol, cVecCol, k)
     }
 
     /** Radius (range) search with exact re-rank — the 100-TB
@@ -380,16 +331,8 @@ object BQ {
       // probe gate on the query batch is the enforceable contract.)
       gateProbeBroadcast(queries, "BQ.rangeSearchRefined probe frame", nprobe)
       val probes = probeFrame(queries, qIdCol, qVecCol, 1, nprobe)
-      val scored = codes.join(broadcast(probes), Seq("cluster"))
-      val est =
-        if (residual) {
-          val inv = 2.0 / math.sqrt(codeDim.toDouble)
-          col("qc2") -
-            BqMath.asymDot(col("codes"), col("qvec")) * col("rnorm") * lit(inv) +
-            col("rnorm") * col("rnorm")
-        } else lit(0.0d) - BqMath.asymDot(col("codes"), col("qvec"))
-      val shortlist = scored
-        .select(col("qid"), col("id"), est.as("est"))
+      val shortlist = codes.join(broadcast(probes), Seq("cluster"))
+        .select(col("qid"), col("id"), asymScore.as("est"))
         .filter(col("est") <= lit(slack))
         .select(col("qid"), col("id"))
       val q = queries.select(col(qIdCol).cast("long").as("qid"),
@@ -418,10 +361,7 @@ object BQ {
 
     /** Takedown by id — broadcast anti-join, codes never shuffle. */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        codes.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(codes, ids, idCol, addsSinceCompact)
       copy(codes = df, addsSinceCompact = n)
     }
 
@@ -446,15 +386,12 @@ object BQ {
       * probe), centroids + params as [[SQ8.Model.save]]. */
     def save(dir: String): Unit = {
       val spark = codes.sparkSession
-      import spark.implicits._
       // disjoint files — overlap the code-table write with the 1-task
       // centroid sidecar write (guide §2.6, Overlap scaladoc)
       Overlap.par2(
         codes.write.mode("overwrite").partitionBy("cluster")
           .parquet(s"$dir/codes"),
-        centroids.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-          .toDF("cluster", "vector")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))
+        Cells.saveCentroids(spark, dir, centroids))
       ParamsIO.write(spark, dir,
         s"""{"k":${params.k},"numAttempts":${params.numAttempts},"maxIterations":${params.maxIterations},"seed":${params.seed},"tol":${params.tol},"residual":${if (residual) 1 else 0},"rotated":${if (rotated) 1 else 0},"sizes":${ParamsIO.longsJson(clusterSizes)}}""")
     }
@@ -502,23 +439,14 @@ object BQ {
     val params = IVFFlat.Params(intOf("k").toInt, intOf("numAttempts").toInt,
       intOf("maxIterations").toInt, intOf("seed"),
       ParamsIO.dbl(json, "tol", 1e-6))
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("vector").toArray)
+    val cents = Cells.loadCentroids(spark, dir)
     val isResidual = ParamsIO.dbl(json, "residual", 0.0) != 0.0
     val raw = spark.read.parquet(s"$dir/codes")
     val base = Seq(col("id"), col("codes"),
       col("cluster").cast("int").as("cluster"))
     val codes = raw.select(
       (if (isResidual) base :+ col("rnorm") else base): _*)
-    // sidecar sizes skip the recount job (see IVFFlat.load)
-    val sizes = ParamsIO.longs(json, "sizes").getOrElse {
-      val s = new Array[Long](params.k)
-      codes.groupBy("cluster").count().collect()
-        .foreach(r => s(r.getInt(0)) = r.getLong(1))
-      s
-    }
-    Model(params, cents, sizes, codes, residual = isResidual,
+    Model(params, cents, Cells.sizesOr(json, params.k, codes), codes, residual = isResidual,
       rotated = ParamsIO.dbl(json, "rotated", 0.0) != 0.0)
   }
 }

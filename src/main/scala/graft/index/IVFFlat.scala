@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopK
 import graft.functions.VectorOps._
 
 /** IVFFlat index — k-means partitioning + cluster-probed search, the Spark
@@ -60,8 +61,17 @@ object IVFFlat {
     /** Probe-set for one query: nearest clusters (by sqdist of centroid)
       * until their cumulative size covers `k` — the adaptive nprobe of
       * ivfflat.rs:168-195 — never fewer than `minProbe`. */
-    def probeSet(query: Array[Float], k: Int, minProbe: Int = 1): Seq[Int] =
+    def probeSet(query: Array[Float], k: Int, minProbe: Int = 1): Seq[Int] = {
+      Cells.requireDim("IVFFlat", query, centroids)
       IVFFlat.probeOrder(centroids, clusterSizes, query, k, minProbe)
+    }
+
+    /** The (qid, qvec, cluster) probe frame ([[Cells.probes]]): IVFFlat
+      * scores the raw float query in every cell. */
+    private def probes(queries: DataFrame, qIdCol: String, qVecCol: String,
+                       k: Int, nprobe: Int): DataFrame =
+      Cells.probes("IVFFlat", queries, qIdCol, qVecCol, centroids,
+        clusterSizes, k, nprobe)((_, qid, q) => c => (qid, q, c))
 
     /** Single-query search: partition-pruned scan of probed clusters →
       * exact distance → TakeOrderedAndProject. */
@@ -73,61 +83,18 @@ object IVFFlat {
     }
 
     /** Batch search: assign each query its probe clusters (broadcast
-      * centroids, narrow), explode, equi-join on `cluster` against the
-      * indexed corpus (shuffles only probed candidates, never the full
-      * corpus), exact re-rank, per-query top-k.
-      *
-      * Scan pruning for SMALL batches (the online-serving case): the
-      * probe frame is broadcast-sized by contract, so its distinct
-      * cells are collectable; when the batch probes fewer than all
-      * cells, the cell set rides the corpus scan as a `cluster`
-      * membership filter — partition pruning on [[save]]'s
-      * partitionBy(cluster) layout, min/max batch skipping on cached
-      * frames — so a 10-query batch against a 10^10-row corpus reads
-      * the probed fraction, not every cell. Pure pruning: the
-      * equi-join below enforces the same equality, results are
-      * identical (spec-gated); wide batches that touch every cell
-      * skip the filter (zero overhead). */
+      * centroids, narrow), equi-join on `cluster` against the
+      * cell-pruned indexed corpus ([[Cells.pruned]] — shuffles only
+      * probed candidates, never the full corpus), exact distance
+      * codegen-narrow, per-query top-k ([[TopK.perQuery]]). */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
-                   k: Int, nprobe: Int = 2): DataFrame = {
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast((centroids, clusterSizes))
-      import spark.implicits._
-      val probes = queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          IVFFlat.probeOrder(cents, sizes, qvec, k, nprobe)
-            .map(c => (qid, qvec, c))
-        }
-        .toDF("qid", "qvec", "cluster")
-        // feeds the cell-collect probe AND the join — compute once
-        .localCheckpoint(true)
-      val cells = probes.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0))
-      val scanned =
-        if (cells.length < centroids.length)
-          indexed.filter(col("cluster").isin(cells.toSeq: _*))
-        else indexed
-      // distance computed codegen-narrow, then per-query top-k via the
-      // PARTIAL-aggregating heap expression: each task ships at most k
-      // rows per query it touched, so the only shuffle is k-bounded —
-      // never candidate-count-sized (the 10M smoke measured 579 MB of
-      // (qid,id,distance) triples through the old whole-candidate
-      // groupByKey drain). Probed clusters are disjoint, so ids are
-      // unique per query and no dedup is needed; TopKAggExpr's
-      // (distance, id) order matches topKDedup's exactly.
-      scanned.join(broadcast(probes), Seq("cluster"))
-        .select(col("qid"), col("id"),
-          sqDist(col("vector"), col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
-    }
+                   k: Int, nprobe: Int = 2): DataFrame =
+      TopK.perQuery(
+        Cells.pruned(indexed, probes(queries, qIdCol, qVecCol, k, nprobe),
+            centroids.length)
+          .select(col("qid"), col("id"),
+            sqDist(col("vector"), col("qvec")).as("distance")),
+        k)
 
     /** Radius (range) search on the index tier — the FAISS
       * IndexIVF.range_search counterpart: probe each query's `nprobe`
@@ -140,35 +107,12 @@ object IVFFlat {
       * inside the scan stage, so the only rows that move ARE results
       * — result size is data-dependent, write it out at scale. */
     def rangeSearchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
-                        radius: Double, nprobe: Int = 2): DataFrame = {
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast((centroids, clusterSizes))
-      import spark.implicits._
-      // k = 1: the adaptive cumulative-size widening is a top-k
-      // concept; range search probes exactly the nprobe nearest cells
-      val probes = queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          IVFFlat.probeOrder(cents, sizes, qvec, 1, nprobe)
-            .map(c => (qid, qvec, c))
-        }
-        .toDF("qid", "qvec", "cluster")
-        .localCheckpoint(true)
-      // small-batch scan pruning (the searchMany idiom) — pure pruning
-      val cells = probes.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0))
-      val scanned =
-        if (cells.length < centroids.length)
-          indexed.filter(col("cluster").isin(cells.toSeq: _*))
-        else indexed
-      scanned.join(broadcast(probes), Seq("cluster"))
+                        radius: Double, nprobe: Int = 2): DataFrame =
+      Cells.pruned(indexed, probes(queries, qIdCol, qVecCol, 1, nprobe),
+          centroids.length)
         .select(col("qid"), col("id"),
           sqDist(col("vector"), col("qvec")).as("distance"))
         .filter(col("distance") <= lit(radius))
-    }
 
     /** Corpus-scale batch kNN — [[searchMany]]'s shuffle-path twin for
       * query sides too big to broadcast (the kNN-GRAPH primitive:
@@ -209,30 +153,12 @@ object IVFFlat {
       * edges absent. The parameter default stays 2 (the cheap
       * exploratory setting the pinned lanes gate). */
     def knnJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-                k: Int, nprobe: Int = 2): DataFrame = {
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast((centroids, clusterSizes))
-      import spark.implicits._
-      val probes = queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          val (cents, sizes) = bc.value
-          it.flatMap { case (qid, qvec) =>
-            IVFFlat.probeOrder(cents, sizes, qvec, k, nprobe)
-              .map(c => (qid, qvec, c)) }
-        }
-        .toDF("qid", "qvec", "cluster")
-      indexed.join(probes, Seq("cluster"))
-        .select(col("qid"), col("id"),
-          sqDist(col("vector"), col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
-    }
+                k: Int, nprobe: Int = 2): DataFrame =
+      TopK.perQuery(
+        indexed.join(probes(queries, qIdCol, qVecCol, k, nprobe), Seq("cluster"))
+          .select(col("qid"), col("id"),
+            sqDist(col("vector"), col("qvec")).as("distance")),
+        k)
 
     /** Incremental add: assign against frozen centroids, union. Caller ids
       * are honoured (fix of the ivfflat.rs:209 id-shadowing quirk).
@@ -255,10 +181,7 @@ object IVFFlat {
       * tier should pass an explicit nprobe/minProbe or [[rebalance]].
       * Repeated removes compact lineage on the shared cadence. */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        indexed.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(indexed, ids, idCol, addsSinceCompact)
       copy(indexed = df, addsSinceCompact = n)
     }
 
@@ -283,9 +206,7 @@ object IVFFlat {
           addsSinceCompact = n)
       } else {
         val reassigned = assign(other.indexed, "id", "vector", centroids)
-        val extra = new Array[Long](clusterSizes.length)
-        reassigned.groupBy("cluster").count().collect()
-          .foreach(r => extra(r.getInt(0)) = r.getLong(1))
+        val extra = Cells.sizes(reassigned, clusterSizes.length)
         val (df, n) = Lineage.compact(
           indexed.unionByName(reassigned), addsSinceCompact)
         copy(indexed = df,
@@ -355,10 +276,7 @@ object IVFFlat {
         if (prevCkpt != null) graft.index.Residency.cool(prevCkpt)
         prevCkpt = df
       }
-      val sizes = new Array[Long](params.k)
-      df.groupBy("cluster").count().collect()
-        .foreach(r => sizes(r.getInt(0)) = r.getLong(1))
-      Model(params, cents, sizes, df)
+      Model(params, cents, Cells.sizes(df, params.k), df)
     }
 
     /** Hot-cell splitting — the serve-side skew lever. Real token/
@@ -487,10 +405,8 @@ object IVFFlat {
           (id, v, nc)
         }
         .toDF("id", "vector", "cluster")
-      val sizes = new Array[Long](offsets.last)
-      newIndexed.groupBy("cluster").count().collect()
-        .foreach(r => sizes(r.getInt(0)) = r.getLong(1))
-      Model(params.copy(k = offsets.last), newCents, sizes, newIndexed)
+      Model(params.copy(k = offsets.last), newCents,
+        Cells.sizes(newIndexed, offsets.last), newIndexed)
     }
 
     /** Persist: corpus partitioned by cluster (→ partition pruning on
@@ -498,15 +414,12 @@ object IVFFlat {
       * of base.rs:31-58). */
     def save(dir: String): Unit = {
       val spark = indexed.sparkSession
-      import spark.implicits._
       // disjoint files — overlap the corpus write with the 1-task
       // centroid sidecar write (guide §2.6, Overlap scaladoc)
       Overlap.par2(
         indexed.write.mode("overwrite").partitionBy("cluster")
           .parquet(s"$dir/indexed"),
-        centroids.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-          .toDF("cluster", "vector")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))
+        Cells.saveCentroids(spark, dir, centroids))
       ParamsIO.write(spark, dir,
         s"""{"k":${params.k},"numAttempts":${params.numAttempts},"maxIterations":${params.maxIterations},"seed":${params.seed},"tol":${params.tol},"sizes":${ParamsIO.longsJson(clusterSizes)}}""")
     }
@@ -656,9 +569,7 @@ object IVFFlat {
     val centroids = best.clusterCenters.map(_.toArray.map(_.toFloat))
     val indexed = assign(feats.drop("features"), "id", "vector", centroids)
       .cache()
-    val sizes = new Array[Long](params.k)
-    indexed.groupBy("cluster").count().collect()
-      .foreach(r => sizes(r.getInt(0)) = r.getLong(1))
+    val sizes = Cells.sizes(indexed, params.k)
     feats.unpersist()
     Model(params, centroids, sizes, indexed)
   }
@@ -670,19 +581,9 @@ object IVFFlat {
     val params = Params(intOf("k").toInt, intOf("numAttempts").toInt,
       intOf("maxIterations").toInt, intOf("seed"),
       ParamsIO.dbl(json, "tol", 1e-6))
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("vector").toArray)
     val indexed = spark.read.parquet(s"$dir/indexed")
       .select(col("id"), col("vector"), col("cluster").cast("int").as("cluster"))
-    // sizes ride in the sidecar (save writes them): no full-corpus
-    // recount job at load. Fall back to the count for pre-field dirs.
-    val sizes = ParamsIO.longs(json, "sizes").getOrElse {
-      val s = new Array[Long](params.k)
-      indexed.groupBy("cluster").count().collect()
-        .foreach(r => s(r.getInt(0)) = r.getLong(1))
-      s
-    }
-    Model(params, cents, sizes, indexed)
+    Model(params, Cells.loadCentroids(spark, dir),
+      Cells.sizesOr(json, params.k, indexed), indexed)
   }
 }

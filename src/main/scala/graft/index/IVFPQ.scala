@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopK
+
 /** IVF-PQ composed index — the reference's adaptive cell-probing idea
   * (vers/src/indexes/ivfflat.rs:153-198) composed with product
   * quantization: queries route to their nearest coarse cells and the
@@ -48,78 +50,48 @@ object IVFPQ {
                    codes: DataFrame /* id: long, cluster: int, code: binary(m) */,
                    addsSinceCompact: Int = 0) {
 
+    /** The probe frame ([[Cells.probes]]): the query is
+      * RESIDUAL-SHIFTED by each probed cell's centroid when the codes
+      * are residual-encoded, so the scan needs no centroid access. The
+      * frame rides an executor broadcast, so the serving-budget contract
+      * applies, scaled by its true fan-out (nprobe shifted query copies
+      * per row) so the accepted batch size implies a bounded broadcast. */
+    private def probes(queries: DataFrame, qIdCol: String, qVecCol: String,
+                       k: Int, nprobe: Int, what: String): DataFrame = {
+      Batches.boundedCheckScaled(queries, what, nprobe.toLong * dim)
+      val res = residual
+      Cells.probes("IVFPQ", queries, qIdCol, qVecCol, coarse, clusterSizes,
+          k, nprobe) { (cents, qid, q) => c =>
+        val qv = if (res) {
+          val cv = cents(c)
+          Array.tabulate(q.length)(i => q(i) - cv(i))
+        } else q
+        (qid, qv, c)
+      }
+    }
+
     /** Probed-cell ADC batch top-k. Probe widening is the shared
       * [[IVFFlat.probeOrder]] (adaptive, ivfflat.rs:168-195 semantics),
       * so the coarse routing agrees bitwise with IVFFlat search.
       *
-      * The SQ8.searchMany serving shape: one narrow flatMap turns the
-      * query batch into a probe frame of (qid, query-vector, cluster)
-      * rows — the query RESIDUAL-SHIFTED by each probed cell's
-      * centroid when the codes are residual-encoded, so the scan
-      * needs no centroid access — which broadcasts into the
-      * cluster-equi-join against the (statically cell-pruned) code
-      * scan; [[graft.functions.PqAdcExpr]] scores each m-byte code
-      * in-register inside whole-stage codegen (bit-identical to the
-      * former LUT path — same double folds, same order), and the
-      * partial-aggregating TopKAggExpr cut moves only ≤ k triples per
-      * (partition, query). Queries ride the serving-sized broadcast
-      * (nprobe × dim floats per query); codes and corpus vectors
-      * never shuffle (plan-gated in PlanSpec). */
+      * The SQ8.searchMany serving shape: the probe frame broadcasts
+      * into the cluster-equi-join against the cell-pruned code scan
+      * ([[Cells.pruned]]); [[graft.functions.PqAdcExpr]] scores each
+      * m-byte code in-register inside whole-stage codegen
+      * (bit-identical to the former LUT path — same double folds, same
+      * order), and the [[TopK.perQuery]] cut moves only ≤ k triples
+      * per (partition, query). Codes and corpus vectors never shuffle
+      * (plan-gated in PlanSpec). */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
-                   k: Int, nprobe: Int = 2): DataFrame = {
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val res = residual
-      val kk = k
-      val np = nprobe
-      // the probe frame stays distributed but rides an executor
-      // broadcast — the serving-budget contract still applies, scaled
-      // by the frame's true fan-out (nprobe shifted query copies per
-      // row) so the accepted batch size implies a bounded broadcast
-      Batches.boundedCheckScaled(queries, "IVFPQ.searchMany query",
-        np.toLong * dim)
-      val bcState = spark.sparkContext.broadcast((coarse, clusterSizes))
-      val probes = queries
-        .select(col(qIdCol).cast("long"),
-                col(qVecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bcState.value
-          require(qvec.length == cents(0).length,
-            s"IVFPQ query dim ${qvec.length} != index dim ${cents(0).length}")
-          IVFFlat.probeOrder(cents, sizes, qvec, kk, np).map { c =>
-            val qv = if (res) {
-              val cv = cents(c)
-              Array.tabulate(qvec.length)(i => qvec(i) - cv(i))
-            } else qvec
-            (qid, qv, c)
-          }
-        }
-        .toDF("qid", "qvec", "cluster")
-        // feeds the cell-collect AND the probe join — compute once
-        .localCheckpoint(true)
-      // probed cells are knowable driver-side (serving-sized frame), so
-      // the probed-cluster union prunes STATICALLY: on a
-      // cluster-partitioned codes table (the save() layout) this is
-      // partition pruning at scan planning time. Skipped when the probe
-      // set approaches all cells (the In list would grow without buying
-      // pruning).
-      val cells = probes.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0))
-      val pruned =
-        if (cells.length < coarse.length)
-          codes.filter(col("cluster").isin(cells.toSeq: _*))
-        else codes
-      pruned.join(broadcast(probes), Seq("cluster"))
-        .select(col("qid"), col("id"),
-          graft.functions.PqMath.adcDist(col("code"), col("qvec"),
-            codebooks).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
-    }
+                   k: Int, nprobe: Int = 2): DataFrame =
+      TopK.perQuery(
+        Cells.pruned(codes,
+            probes(queries, qIdCol, qVecCol, k, nprobe, "IVFPQ.searchMany query"),
+            coarse.length)
+          .select(col("qid"), col("id"),
+            graft.functions.PqMath.adcDist(col("code"), col("qvec"),
+              codebooks).as("distance")),
+        k)
 
     /** Radius (range) search on the composed index — the FAISS
       * IndexIVFPQ.range_search shape re-expressed for Spark, completing
@@ -142,40 +114,9 @@ object IVFPQ {
                            corpus: DataFrame, cIdCol: String, cVecCol: String,
                            slack: Double = Double.PositiveInfinity,
                            nprobe: Int = 2): DataFrame = {
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val res = residual
-      val np = nprobe
-      Batches.boundedCheckScaled(queries, "IVFPQ.rangeSearchRefined query",
-        np.toLong * dim)
-      val bcState = spark.sparkContext.broadcast((coarse, clusterSizes))
-      // k = 1: range search probes exactly the nprobe nearest cells
-      // (adaptive cumulative-size widening is a top-k concept)
-      val probes = queries
-        .select(col(qIdCol).cast("long"),
-                col(qVecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bcState.value
-          require(qvec.length == cents(0).length,
-            s"IVFPQ query dim ${qvec.length} != index dim ${cents(0).length}")
-          IVFFlat.probeOrder(cents, sizes, qvec, 1, np).map { c =>
-            val qv = if (res) {
-              val cv = cents(c)
-              Array.tabulate(qvec.length)(i => qvec(i) - cv(i))
-            } else qvec
-            (qid, qv, c)
-          }
-        }
-        .toDF("qid", "qvec", "cluster")
-        .localCheckpoint(true)
-      val cells = probes.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0))
-      val pruned =
-        if (cells.length < coarse.length)
-          codes.filter(col("cluster").isin(cells.toSeq: _*))
-        else codes
-      val shortlist = pruned.join(broadcast(probes), Seq("cluster"))
+      val shortlist = Cells.pruned(codes,
+          probes(queries, qIdCol, qVecCol, 1, nprobe, "IVFPQ.rangeSearchRefined query"),
+          coarse.length)
         .select(col("qid"), col("id"),
           graft.functions.PqMath.adcDist(col("code"), col("qvec"),
             codebooks).as("adc"))
@@ -204,24 +145,10 @@ object IVFPQ {
     def searchManyRefined(queries: DataFrame, qIdCol: String, qVecCol: String,
                           k: Int, factor: Int, nprobe: Int,
                           corpus: DataFrame, cIdCol: String, cVecCol: String)
-    : DataFrame = {
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val shortlist = searchMany(queries, qIdCol, qVecCol, k * factor, nprobe)
-        .select(col("qid"), col("id"))
-      val q = queries.select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<float>").as("qvec"))
-      val c = corpus.select(col(cIdCol).cast("long").as("id"),
-        col(cVecCol).cast("array<float>").as("cvec"))
-      c.join(broadcast(shortlist.join(broadcast(q), "qid")), Seq("id"))
-        .select(col("qid"), col("id"),
-          graft.functions.VectorOps.sqDist(col("cvec"), col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
-    }
+    : DataFrame =
+      graft.operators.Exhaustive.rerank(
+        searchMany(queries, qIdCol, qVecCol, k * factor, nprobe),
+        queries, qIdCol, qVecCol, corpus, cIdCol, cVecCol, k)
 
     /** Incremental add — Index::add for the composed index: one fused
       * narrow pass assigns each new row to its frozen coarse cell and
@@ -244,10 +171,7 @@ object IVFPQ {
       * the adaptive probe set (cumulative-k fills sooner) — serve with
       * an explicit nprobe or rebuild after large takedowns. */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        codes.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(codes, ids, idCol, addsSinceCompact)
       copy(codes = df, addsSinceCompact = n)
     }
 
@@ -281,9 +205,7 @@ object IVFPQ {
       Overlap.par3(
         codes.write.mode("overwrite").partitionBy("cluster")
           .parquet(s"$dir/codes"),
-        coarse.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-          .toDF("cluster", "vector")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
+        Cells.saveCentroids(spark, dir, coarse),
         codebooks.zipWithIndex.flatMap { case (cb, s) =>
           cb.zipWithIndex.map { case (cv, j) => (s, j, cv) }
         }.toSeq.toDF("s", "j", "centroid")
@@ -397,9 +319,7 @@ object IVFPQ {
       num("iterations").toInt, num("seed"))
     // two independent tiny sidecar collects — overlap (guide §2.6)
     val (cents, cbRows) = Overlap.par2(
-      spark.read.parquet(s"$dir/centroids")
-        .orderBy("cluster").collect()
-        .map(_.getAs[scala.collection.Seq[Float]]("vector").toArray),
+      Cells.loadCentroids(spark, dir),
       spark.read.parquet(s"$dir/codebooks").collect())
     val byS = cbRows.groupBy(_.getInt(0))
     val cbs = (0 until pqParams.m).map { s =>
@@ -408,14 +328,7 @@ object IVFPQ {
     }.toArray
     val codes = spark.read.parquet(s"$dir/codes")
       .select(col("id"), col("cluster").cast("int").as("cluster"), col("code"))
-    // sidecar sizes skip the recount job (see IVFFlat.load)
-    val sizes = ParamsIO.longs(json, "sizes").getOrElse {
-      val s = new Array[Long](num("numCells").toInt)
-      codes.groupBy("cluster").count().collect()
-        .foreach(r => s(r.getInt(0)) = r.getLong(1))
-      s
-    }
-    Model(cents, sizes, pqParams, num("dim").toInt,
+    Model(cents, Cells.sizesOr(json, num("numCells").toInt, codes), pqParams, num("dim").toInt,
       num("residual") == 1L, cbs, codes)
   }
 }

@@ -297,10 +297,7 @@ object LSHForest {
       * (compaction fires earlier than needed; backtracking widens
       * probes, never narrows); [[rebuildLeaves]] refreshes them. */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        indexed.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(indexed, ids, idCol, addsSinceCompact)
       copy(indexed = df, addsSinceCompact = n)
     }
 

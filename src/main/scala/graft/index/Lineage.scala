@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Lineage compaction for the incremental `Model.add` paths.
   *
@@ -43,4 +44,12 @@ private[graft] object Lineage {
   def compact[T](ds: Dataset[T], addsSinceCompact: Int): (Dataset[T], Int) =
     if (addsSinceCompact + 1 >= CompactEvery) (ds.localCheckpoint(true), 0)
     else (ds, addsSinceCompact + 1)
+
+  /** Takedown on the same cadence: `ds` minus the rows whose `id` is in
+    * `ids(idCol)`. The ids frame is takedown-sized, so it broadcasts
+    * into the anti-join and `ds` never shuffles. */
+  def without(ds: DataFrame, ids: DataFrame, idCol: String,
+              addsSinceCompact: Int): (DataFrame, Int) =
+    compact(ds.join(broadcast(ids.select(col(idCol).cast("long").as("id"))),
+      Seq("id"), "left_anti"), addsSinceCompact)
 }

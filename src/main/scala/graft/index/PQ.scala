@@ -108,16 +108,13 @@ object PQ {
         math.min(math.max(1, qChunk), qRows.length).toLong, dim.toLong)
       val chunkResults = qRows.grouped(math.max(1, qChunk)).map { qChunkRows =>
         val qDf = spark.createDataset(qChunkRows.toSeq).toDF("qid", "qvec")
-        codes.select(col("id"), col("code"))
-          .crossJoin(broadcast(qDf))
-          .select(col("qid"), col("id"),
-            graft.functions.PqMath.adcDist(col("code"), col("qvec"),
-              codebooks).as("distance"))
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-          .select(col("qid"), explode(col("nn")).as("nn"))
-          .select(col("qid"), col("nn.id").as("id"),
-            col("nn.distance").as("distance"))
+        graft.functions.TopK.perQuery(
+          codes.select(col("id"), col("code"))
+            .crossJoin(broadcast(qDf))
+            .select(col("qid"), col("id"),
+              graft.functions.PqMath.adcDist(col("code"), col("qvec"),
+                codebooks).as("distance")),
+          k)
       }.toSeq
       chunkResults.reduce(_.unionByName(_))
     }
@@ -138,10 +135,7 @@ object PQ {
     /** Takedown twin of [[IVFFlat.Model.remove]]: anti-join the codes
       * on id (codes never shuffle; the ids frame broadcasts). */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        codes.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(codes, ids, idCol, addsSinceCompact)
       copy(codes = df, addsSinceCompact = n)
     }
 
@@ -167,24 +161,10 @@ object PQ {
     def searchManyRefined(queries: DataFrame, qIdCol: String, qVecCol: String,
                           k: Int, factor: Int,
                           corpus: DataFrame, cIdCol: String, cVecCol: String)
-    : DataFrame = {
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val shortlist = searchMany(queries, qIdCol, qVecCol, k * factor)
-        .select(col("qid"), col("id"))
-      val q = queries.select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<float>").as("qvec"))
-      val c = corpus.select(col(cIdCol).cast("long").as("id"),
-        col(cVecCol).cast("array<float>").as("cvec"))
-      c.join(broadcast(shortlist.join(broadcast(q), "qid")), Seq("id"))
-        .select(col("qid"), col("id"),
-          graft.functions.VectorOps.sqDist(col("cvec"), col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
-    }
+    : DataFrame =
+      graft.operators.Exhaustive.rerank(
+        searchMany(queries, qIdCol, qVecCol, k * factor),
+        queries, qIdCol, qVecCol, corpus, cIdCol, cVecCol, k)
 
     def save(dir: String): Unit = {
       val spark = codes.sparkSession

@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{Quant, Sq8Math}
+import graft.functions.{Quant, Sq8Math, TopK}
 
 /** SQ8 — IVF over per-vector affine int8 codes: the storage-scale
   * serving tier. Same coarse quantizer and adaptive probing as
@@ -78,8 +78,7 @@ object SQ8 {
     /** Single-query search: partition-pruned scan of probed cells →
       * fused SQ8 distance → TakeOrderedAndProject. */
     def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
-      require(query.length == centroids(0).length,
-        s"SQ8 query dim ${query.length} != index dim ${centroids(0).length}")
+      Cells.requireDim("SQ8", query, centroids)
       val probed = probeSet(query, k, minProbe)
       codes.filter(col("cluster").isin(probed: _*))
         .select(col("id"),
@@ -88,9 +87,6 @@ object SQ8 {
         .orderBy(col("distance"), col("id")).limit(k)
     }
 
-    /** Batch search — [[IVFFlat.Model.searchMany]]'s plan shape (probes
-      * broadcast, codes never shuffle, per-query bounded heap after the
-      * distance map), with the fused SQ8 kernel as the distance. */
     /** Broadcast floats per QUERY row of the probe frame: nprobe
       * probe copies, each carrying the query at its code-frame width
       * (float at raw dim unrotated; double at the FWHT-padded dim
@@ -100,73 +96,42 @@ object SQ8 {
         nprobe.toLong * 2L * graft.functions.Rotate.padLenOf(centroids(0).length)
       else nprobe.toLong * centroids(0).length
 
+    /** The probe frame ([[Cells.probes]]): probe in the original frame,
+      * carry the code-frame query. The kernel widens each element to
+      * double in-register, so the NON-rotated probe row keeps the query
+      * FLOAT — bit-identical distances at half the broadcast/build-row
+      * width (the probe row is re-read once per joined code row, so its
+      * width is hot-loop memory traffic, not just broadcast size).
+      * Rotation happens in double (rotateD is the exact frame the codes
+      * were quantized in), so the rotated probe row stays
+      * double-widened. */
+    private def probes(queries: DataFrame, qIdCol: String, qVecCol: String,
+                       k: Int, nprobe: Int): DataFrame =
+      if (rotated)
+        Cells.probes("SQ8", queries, qIdCol, qVecCol, centroids, clusterSizes,
+            k, nprobe) { (_, qid, q) =>
+          val qf = graft.functions.Rotate.rotateD(q.map(_.toDouble))
+          c => (qid, qf, c)
+        }
+      else
+        Cells.probes("SQ8", queries, qIdCol, qVecCol, centroids, clusterSizes,
+          k, nprobe)((_, qid, q) => c => (qid, q, c))
+
+    /** Batch search — [[IVFFlat.Model.searchMany]]'s plan shape (probes
+      * broadcast, small batches cell-pruned, codes never shuffle,
+      * per-query bounded heap after the distance map), with the fused
+      * SQ8 kernel as the distance. */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
                    k: Int, nprobe: Int = 2): DataFrame = {
       Batches.boundedCheckScaled(queries, "SQ8.searchMany probe frame",
         probeRowFloats(nprobe))
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast((centroids, clusterSizes))
-      import spark.implicits._
-      val rot = rotated
-      // probe in the original frame; carry the code-frame query. The
-      // kernel widens each element to double in-register, so the
-      // NON-rotated probe row keeps the query FLOAT — bit-identical
-      // distances at half the broadcast/build-row width (the probe row
-      // is re-read once per joined code row, so its width is hot-loop
-      // memory traffic, not just broadcast size). Rotation happens in
-      // double (rotateD is the exact frame the codes were quantized
-      // in), so the rotated probe row must stay double-widened.
-      val qBase = queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-      val probes = (if (rot) {
-        qBase.flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          // dim guard: the byte kernels score the shorter prefix on a
-          // mismatch (see BqMath caveat) — fail loudly instead
-          require(qvec.length == cents(0).length,
-            s"SQ8 query dim ${qvec.length} != index dim ${cents(0).length}")
-          val qd = new Array[Double](qvec.length)
-          var i = 0
-          while (i < qvec.length) { qd(i) = qvec(i).toDouble; i += 1 }
-          val qf = graft.functions.Rotate.rotateD(qd)
-          IVFFlat.probeOrder(cents, sizes, qvec, k, nprobe)
-            .map(c => (qid, qf, c))
-        }.toDF("qid", "qvec", "cluster")
-      } else {
-        qBase.flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          require(qvec.length == cents(0).length,
-            s"SQ8 query dim ${qvec.length} != index dim ${cents(0).length}")
-          IVFFlat.probeOrder(cents, sizes, qvec, k, nprobe)
-            .map(c => (qid, qvec, c))
-        }.toDF("qid", "qvec", "cluster")
-      })
-        // feeds the cell-collect probe AND the join — compute once
-        .localCheckpoint(true)
-      // small-batch scan pruning (the IVFFlat.searchMany idiom): a
-      // batch that probes fewer than all cells pushes its cell set
-      // onto the code scan — partition pruning / batch skipping;
-      // pure pruning, the equi-join enforces the same equality
-      val cells = probes.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0))
-      val scanned =
-        if (cells.length < centroids.length)
-          codes.filter(col("cluster").isin(cells.toSeq: _*))
-        else codes
-      // partial-aggregating top-k: k rows per query per task cross the
-      // shuffle, never the probed-cell candidates (disjoint cells ⇒
-      // unique ids; TopKAggExpr's (distance, id) order ≡ topKDedup's)
-      scanned.join(broadcast(probes), Seq("cluster"))
-        .select(col("qid"), col("id"),
-          Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
-            col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
+      TopK.perQuery(
+        Cells.pruned(codes, probes(queries, qIdCol, qVecCol, k, nprobe),
+            centroids.length)
+          .select(col("qid"), col("id"),
+            Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
+              col("qvec")).as("distance")),
+        k)
     }
 
     /** Radius (range) search on the SQ8 tier — the FAISS
@@ -186,40 +151,8 @@ object SQ8 {
                         radius: Double, nprobe: Int = 2): DataFrame = {
       Batches.boundedCheckScaled(queries, "SQ8.rangeSearchMany probe frame",
         probeRowFloats(nprobe))
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast((centroids, clusterSizes))
-      import spark.implicits._
-      val rot = rotated
-      // k = 1: adaptive cumulative-size widening is a top-k concept;
-      // range search probes exactly the nprobe nearest cells. Probe-row
-      // width discipline as in [[searchMany]]: float query unless the
-      // codes are rotated (rotation is exact only in double).
-      val qBase = queries
-        .select(col(qIdCol).cast("long").as("qid"),
-                col(qVecCol).cast("array<float>").as("qvec"))
-        .as[(Long, Array[Float])]
-      val probes = (if (rot) {
-        qBase.flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          require(qvec.length == cents(0).length,
-            s"SQ8 query dim ${qvec.length} != index dim ${cents(0).length}")
-          val qd = new Array[Double](qvec.length)
-          var i = 0
-          while (i < qvec.length) { qd(i) = qvec(i).toDouble; i += 1 }
-          val qf = graft.functions.Rotate.rotateD(qd)
-          IVFFlat.probeOrder(cents, sizes, qvec, 1, nprobe)
-            .map(c => (qid, qf, c))
-        }.toDF("qid", "qvec", "cluster")
-      } else {
-        qBase.flatMap { case (qid, qvec) =>
-          val (cents, sizes) = bc.value
-          require(qvec.length == cents(0).length,
-            s"SQ8 query dim ${qvec.length} != index dim ${cents(0).length}")
-          IVFFlat.probeOrder(cents, sizes, qvec, 1, nprobe)
-            .map(c => (qid, qvec, c))
-        }.toDF("qid", "qvec", "cluster")
-      })
-      codes.join(broadcast(probes), Seq("cluster"))
+      codes.join(broadcast(probes(queries, qIdCol, qVecCol, 1, nprobe)),
+          Seq("cluster"))
         .select(col("qid"), col("id"),
           Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
             col("qvec")).as("distance"))
@@ -243,22 +176,9 @@ object SQ8 {
       Batches.boundedCheckScaled(queries,
         "SQ8.searchManyRefined shortlist probe",
         k.toLong * factor * centroids(0).length)
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val shortlist = searchMany(queries, qIdCol, qVecCol, k * factor, nprobe)
-        .select(col("qid"), col("id"))
-      val q = queries.select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<float>").as("qvec"))
-      val c = corpus.select(col(cIdCol).cast("long").as("id"),
-        col(cVecCol).cast("array<float>").as("cvec"))
-      c.join(broadcast(shortlist.join(broadcast(q), "qid")), Seq("id"))
-        .select(col("qid"), col("id"),
-          graft.functions.VectorOps.sqDist(col("cvec"), col("qvec")).as("distance"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-        .select(col("qid"), explode(col("nn")).as("nn"))
-        .select(col("qid"), col("nn.id").as("id"),
-          col("nn.distance").as("distance"))
+      graft.operators.Exhaustive.rerank(
+        searchMany(queries, qIdCol, qVecCol, k * factor, nprobe),
+        queries, qIdCol, qVecCol, corpus, cIdCol, cVecCol, k)
     }
 
     /** Incremental add: assign against frozen centroids, compress the
@@ -272,10 +192,7 @@ object SQ8 {
 
     /** Takedown by id — broadcast anti-join, codes never shuffle. */
     def remove(ids: DataFrame, idCol: String): Model = {
-      val del = ids.select(col(idCol).cast("long").as("id"))
-      val (df, n) = Lineage.compact(
-        codes.join(broadcast(del), Seq("id"), "left_anti"),
-        addsSinceCompact)
+      val (df, n) = Lineage.without(codes, ids, idCol, addsSinceCompact)
       copy(codes = df, addsSinceCompact = n)
     }
 
@@ -301,15 +218,12 @@ object SQ8 {
       * probe), centroids + params like [[IVFFlat.Model.save]]. */
     def save(dir: String): Unit = {
       val spark = codes.sparkSession
-      import spark.implicits._
       // disjoint files — overlap the code-table write with the 1-task
       // centroid sidecar write (guide §2.6, Overlap scaladoc)
       Overlap.par2(
         codes.write.mode("overwrite").partitionBy("cluster")
           .parquet(s"$dir/codes"),
-        centroids.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-          .toDF("cluster", "vector")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"))
+        Cells.saveCentroids(spark, dir, centroids))
       ParamsIO.write(spark, dir,
         s"""{"k":${params.k},"numAttempts":${params.numAttempts},"maxIterations":${params.maxIterations},"seed":${params.seed},"tol":${params.tol},"rotated":${if (rotated) 1 else 0},"sizes":${ParamsIO.longsJson(clusterSizes)}}""")
     }
@@ -338,20 +252,11 @@ object SQ8 {
     val params = IVFFlat.Params(intOf("k").toInt, intOf("numAttempts").toInt,
       intOf("maxIterations").toInt, intOf("seed"),
       ParamsIO.dbl(json, "tol", 1e-6))
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("vector").toArray)
+    val cents = Cells.loadCentroids(spark, dir)
     val codes = spark.read.parquet(s"$dir/codes")
       .select(col("id"), col("lo"), col("scale"), col("codes"),
         col("cluster").cast("int").as("cluster"))
-    // sidecar sizes skip the recount job (see IVFFlat.load)
-    val sizes = ParamsIO.longs(json, "sizes").getOrElse {
-      val s = new Array[Long](params.k)
-      codes.groupBy("cluster").count().collect()
-        .foreach(r => s(r.getInt(0)) = r.getLong(1))
-      s
-    }
-    Model(params, cents, sizes, codes,
+    Model(params, cents, Cells.sizesOr(json, params.k, codes), codes,
       rotated = ParamsIO.dbl(json, "rotated", 0.0) != 0.0)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopK
 import graft.functions.VectorOps._
 
 /** Brute-force exact top-k nearest-neighbour search — the reference's
@@ -112,14 +113,32 @@ object Exhaustive {
     val q = broadcast(queries.select(col(qIdCol).cast("long").as("qid"),
       col(qVecCol).as("qvec")))
     val c = corpus.select(col(cIdCol).cast("long").as("id"), col(cVecCol).as("cvec"))
-    c.join(q)
-      .select(col("qid"), col("id"),
-        distance(metric)(col("cvec"), col("qvec")).as("distance"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-      .select(col("qid"), explode(col("nn")).as("nn"))
-      .select(col("qid"), col("nn.id").as("id"),
-        col("nn.distance").as("distance"))
+    TopK.perQuery(
+      c.join(q).select(col("qid"), col("id"),
+        distance(metric)(col("cvec"), col("qvec")).as("distance")),
+      k)
+  }
+
+  /** Exact squared-L2 re-rank of a (qid, id, …) shortlist against the
+    * full-precision corpus — the second stage of the quantized tiers'
+    * `searchManyRefined` ([[graft.index.PQ]], [[graft.index.SQ8]],
+    * [[graft.index.IVFPQ]], [[graft.index.BQ]]). The shortlist joins
+    * its (broadcast) queries and broadcasts onto the corpus scan, so
+    * the corpus never shuffles and only shortlist × queries rows are
+    * scored; the caller gates the broadcast size. With the shortlist ⊇
+    * corpus this equals float exhaustive [[knnJoin]] exactly. */
+  def rerank(shortlist: DataFrame, queries: DataFrame, qIdCol: String,
+             qVecCol: String, corpus: DataFrame, cIdCol: String,
+             cVecCol: String, k: Int): DataFrame = {
+    val q = queries.select(col(qIdCol).cast("long").as("qid"),
+      col(qVecCol).cast("array<float>").as("qvec"))
+    val c = corpus.select(col(cIdCol).cast("long").as("id"),
+      col(cVecCol).cast("array<float>").as("cvec"))
+    val pairs = shortlist.select(col("qid"), col("id")).join(broadcast(q), "qid")
+    TopK.perQuery(
+      c.join(broadcast(pairs), Seq("id"))
+        .select(col("qid"), col("id"), sqDist(col("cvec"), col("qvec")).as("distance")),
+      k)
   }
 
   /** Matryoshka (prefix-dimension) kNN: shortlist on the first
@@ -157,15 +176,12 @@ object Exhaustive {
       col(qVecCol).as("qvec")))
     val c = corpusFull.select(col(cIdCol).cast("long").as("id"),
       col(cVecCol).as("cvec"))
-    broadcast(shortlist).join(c, Seq("id"))
-      .join(q, Seq("qid"))
-      .select(col("qid"), col("id"),
-        distance(metric)(col("cvec"), col("qvec")).as("distance"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopK.topK(col("distance"), col("id"), k).as("nn"))
-      .select(col("qid"), explode(col("nn")).as("nn"))
-      .select(col("qid"), col("nn.id").as("id"),
-        col("nn.distance").as("distance"))
+    TopK.perQuery(
+      broadcast(shortlist).join(c, Seq("id"))
+        .join(q, Seq("qid"))
+        .select(col("qid"), col("id"),
+          distance(metric)(col("cvec"), col("qvec")).as("distance")),
+      k)
   }
 
   /** Exact radius (range) search: EVERY corpus point within `radius`

@@ -102,6 +102,32 @@ class IVFFlatSpec extends SparkSpec {
     assert(res.head.getAs[Long]("id") == 7L && dists.head == 0.0)
   }
 
+  test("wrong-dimension queries are refused by every entry point, naming both dims") {
+    import spark.implicits._
+    val dim = model.centroids(0).length
+    val base = emb.filter(col("vec_id") === 3)
+      .select(col("embedding").cast("array<float>"))
+      .head().getAs[scala.collection.Seq[Float]](0).toArray
+    val entryPoints: Seq[(String, Array[Float] => Unit)] = Seq(
+      "search" -> (q => model.search(q, 5).collect()),
+      "searchMany" -> (q => model.searchMany(Seq((0L, q)).toDF("qid", "qvec"),
+        "qid", "qvec", 5).collect()),
+      "rangeSearchMany" -> (q => model.rangeSearchMany(
+        Seq((0L, q)).toDF("qid", "qvec"), "qid", "qvec", 1.0).collect()),
+      "knnJoin" -> (q => model.knnJoin(Seq((0L, q)).toDF("qid", "qvec"),
+        "qid", "qvec", 5).collect()))
+    for ((name, run) <- entryPoints; q <- Seq(base :+ 0.5f, base.init)) {
+      // a longer query used to score a prefix, a shorter one failed
+      // inside a task with an index error: both must be refused
+      val e = intercept[Throwable](run(q))
+      val iae = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+        .collectFirst { case x: IllegalArgumentException => x }
+      assert(iae.exists(x => x.getMessage.contains(s"dim ${q.length}") &&
+          x.getMessage.contains(s"dim $dim")),
+        s"$name with a ${q.length}-dim query on a $dim-dim index: $e")
+    }
+  }
+
   test("save/load round-trip: reloaded search equals pre-save search (utils.rs:140-148 shape)") {
     val dir = java.nio.file.Files.createTempDirectory("ivf").toString
     model.save(dir)

@@ -61,6 +61,41 @@ class PlanSpec extends SparkSpec {
       s"the one $sink call is not inside foldBatches")
   }
 
+  test("one probed-cell core: per-query cut, cell prune and centroid sidecar live once") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"not run from the repo root: ${root.toAbsolutePath}")
+    val files = Files.walk(root)
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => root.relativize(f: Path).toString -> Files.readString(f)).toMap
+      finally files.close()
+    // (needle, the one file that may hold it, the def it must sit in;
+    // "" = anywhere in that file)
+    val owners = Seq(
+      ("topK(col(\"distance\")", "graft/functions/TopK.scala", "perQuery"),
+      ("isin(cells", "graft/index/Cells.scala", "pruned"),
+      ("s\"$dir/centroids\"", "graft/index/Cells.scala", ""))
+    for ((needle, owner, inDef) <- owners) {
+      val hits = for {
+        (file, src) <- sources.toList
+        at <- Iterator.iterate(src.indexOf(needle))(i => src.indexOf(needle, i + 1))
+          .takeWhile(_ >= 0)
+      } yield (file, at)
+      assert(hits.nonEmpty, s"$needle is gone from $owner")
+      val stray = hits.filterNot { case (file, at) =>
+        file == owner && (inDef.isEmpty || {
+          val src = sources(file)
+          val start = src.indexOf(s"def $inDef(")
+          val next = src.indexOf("\n  def ", start + 1)
+          start >= 0 && start < at && (next < 0 || at < next)
+        })
+      }.map(_._1).distinct
+      assert(stray.isEmpty, s"$needle outside $owner $inDef")
+    }
+  }
+
   test("knn join broadcasts the QUERY side, never the corpus") {
     val p = plan("knn_exhaustive")
     assert(p.contains("BroadcastNestedLoopJoin"), p.take(500))
