@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Rotate.mix64
 import graft.functions.VectorOps._
-import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest, Overlap}
+import graft.index.{HNSW, HNSWGraph, IVFFlat, IVFPQ, LSHForest, Overlap, PQ}
 import graft.operators.{Dedup, Dsir, Exhaustive, LateInteraction, Retrieval, Scaling, TextOps}
 import graft.streaming.Streaming
 
@@ -91,12 +91,45 @@ object SparkEntry {
       case None => df
     }
 
+  /** The pinned fixtures' one collect: `vec` of the rows whose `idCol`
+    * lies in [from, until), in id order, as float arrays. */
+  private def pinnedRows(df: DataFrame, idCol: String, until: Int,
+                         vec: Column, from: Int = 0): Array[Array[Float]] = {
+    val id = col(idCol)
+    df.filter(if (from == 0) id < until else id >= from && id < until)
+      .orderBy(id).select(vec).collect()
+      .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
+  }
+
   /** Deterministic pseudo-centroids for SQL-checkable IVFFlat queries:
     * the embedding vectors with vec_id < 8, cluster id = vec_id. */
   private[graft] def fixedCentroids(emb: DataFrame): Array[Array[Float]] =
-    emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<float>")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
+    pinnedRows(emb, "vec_id", 8, col("embedding").cast("array<float>"))
+
+  /** Pinned IVF model for the SQL-checkable IVF-family lanes: `corpus`
+    * assigned to `cents` (collected once per lane: [[fixedCentroids]]
+    * or another pinned grid), every cell size pinned at Long.MaxValue so the adaptive probe
+    * never stops early — searches probe exactly `nprobe` cells, and
+    * nprobe = cents.length is the exhaustive oracle. Lanes pass the
+    * corpus they index (`emb`, a filtered half, `Scaling.widen(emb)`). */
+  private[graft] def pinnedIvf(corpus: DataFrame,
+                               cents: Array[Array[Float]]): IVFFlat.Model =
+    IVFFlat.Model(IVFFlat.Params(cents.length), cents,
+      Array.fill(cents.length)(Long.MaxValue),
+      IVFFlat.assign(corpus, "vec_id", "embedding", cents))
+
+  /** [[pinnedIvf]]'s cells and sizes with PQ codes (m = 4, k = 16)
+    * against the pinned codebooks `cbs` ([[fixedCodebooks]]), residual
+    * when `residual`. IVFPQ.build assigns and encodes `corpus` in one
+    * fused pass, so the IVF model's lazy assign frame never runs (it
+    * costs one small centroid broadcast). */
+  private[graft] def pinnedIvfpq(corpus: DataFrame, cents: Array[Array[Float]],
+                                 cbs: Array[Array[Array[Float]]],
+                                 residual: Boolean = false): IVFPQ.Model = {
+    val ivf = pinnedIvf(corpus, cents)
+    IVFPQ.build(corpus, "vec_id", "embedding", ivf.centroids,
+      ivf.clusterSizes, cbs, PQ.Params(m = 4, k = 16), residual)
+  }
 
   /** Degenerate-exact HNSW config for the hnsw_*_exact lanes: one shard
     * + efSearch far above any verify-scale corpus (the layer-0 beam's
@@ -107,35 +140,89 @@ object SparkEntry {
     HNSWGraph.Params(numLayers = 6, efConstruction = 100,
       efSearch = 1 << 17, m = 16)
 
+  /** Degenerate-exact LSH forest for the lsh_*_exact lanes: one tree
+    * whose root is the only leaf (maxNodeSize ≥ n), so search is
+    * exhaustive (LSHForestSpec). dedupExact off: the SQL oracle keeps
+    * duplicate vectors, so the build must too. */
+  private[graft] val lshExactParams =
+    LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue,
+      dedupExact = false)
+
+  /** Params of the three rows-only ANN lanes, shared with their
+    * [[benchPhases]] twins. */
+  private[graft] val hnswKnnParams =
+    HNSWGraph.Params(numLayers = 6, efConstruction = 100, efSearch = 64, m = 16)
+  private[graft] val lshKnnParams = LSHForest.Params(numTrees = 8, maxNodeSize = 64)
+  private[graft] val ivfKmeansParams =
+    IVFFlat.Params(k = 8, numAttempts = 2, maxIterations = 10)
+
   /** Pinned PQ codebooks for SQL-checkable queries: subspace s's
     * centroids are the s-th slices of the embeddings with vec_id < 16
     * (code value = source vec_id — the oracle's join key). */
-  private[graft] def fixedCodebooks(emb: DataFrame, m: Int): Array[Array[Array[Float]]] = {
-    val base = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<float>")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-    // the pq_* oracle SQL (pqSliceSqSql / pqAssignCtesSql) hardcodes
-    // dim=64 slice bounds — fail loudly here rather than hash-mismatch
-    // confusingly if the test corpus dim ever changes
-    require(base(0).length == 64,
-      s"pq_* oracle SQL assumes dim=64, corpus has dim=${base(0).length}")
-    val dsub = base(0).length / m
-    Array.tabulate(m)(s => base.map(_.slice(s * dsub, (s + 1) * dsub)))
-  }
+  private[graft] def fixedCodebooks(emb: DataFrame, m: Int): Array[Array[Array[Float]]] =
+    pinnedCodebooks(emb, m, col("embedding").cast("array<float>"))
 
   /** [[fixedCodebooks]] in the rotated FLOAT frame (pq_rot_fixed):
     * subspace slices of float32(rotate(embedding)) for vec_id < 16 —
     * the same frame [[graft.index.PQ]] encodes rotated corpora in. */
-  private[graft] def fixedCodebooksRot(emb: DataFrame, m: Int): Array[Array[Array[Float]]] = {
-    val base = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
-      .select(graft.functions.Rotate.rotate(col("embedding").cast("array<float>"))
-        .cast("array<float>")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
+  private[graft] def fixedCodebooksRot(emb: DataFrame, m: Int): Array[Array[Array[Float]]] =
+    pinnedCodebooks(emb, m, graft.functions.Rotate.rotate(
+      col("embedding").cast("array<float>")).cast("array<float>"))
+
+  /** The one codebook slicer: subspace s's centroids are the s-th of
+    * `m` slices of `vec` over the rows with `idCol` < 16. */
+  private def pinnedCodebooks(df: DataFrame, m: Int, vec: Column,
+                              idCol: String = "vec_id"): Array[Array[Array[Float]]] = {
+    val base = pinnedRows(df, idCol, 16, vec)
+    // the pq oracle SQL (pqSliceSqSql / pqAssignCtesSql and the rotated
+    // twins) hardcodes dim=64 slice bounds — fail loudly here rather
+    // than hash-mismatch confusingly if the test corpus dim ever changes
     require(base(0).length == 64,
-      s"pq_rot oracle SQL assumes padded dim=64, got dim=${base(0).length}")
+      s"pq oracle SQL assumes dim=64, got dim=${base(0).length}")
     val dsub = base(0).length / m
     Array.tabulate(m)(s => base.map(_.slice(s * dsub, (s + 1) * dsub)))
   }
+
+  /** Query tokens of the MaxSim lanes: docs 0–2 of `docs`, embedded,
+    * doc_id renamed qid. */
+  private[graft] def queryTokens(docs: DataFrame): DataFrame =
+    LateInteraction.tokenVectors(docs.filter(col("doc_id") < 3),
+        "doc_id", "text")
+      .withColumnRenamed("doc_id", "qid")
+
+  /** The bounded MaxSim corpus ([[tokenCorpus]]): `docs`, their token
+    * frame `dToks` and the [[queryTokens]] `qToks`. `m` is the corpus
+    * token count — the shortlist depth that covers every token, which
+    * makes the ANN lanes degenerate-exact; one count job, run where a
+    * lane first reads it. */
+  private[graft] final case class TokenCorpus(docs: DataFrame, dToks: DataFrame,
+                                              qToks: DataFrame) {
+    lazy val m: Int = dToks.count().toInt
+  }
+
+  /** The maxsim_* lanes' fixture: the documents with doc_id < `nDocs`,
+    * their token frame embedded once (localCheckpoint — every lane
+    * reads it from more than one stage: build, save, add and the exact
+    * rescore) and their query tokens. The corpus stays small because
+    * the convergence pin's heap size IS the token count. */
+  private[graft] def tokenCorpus(s: SparkSession, dir: String,
+                                 nDocs: Int = 50): TokenCorpus = {
+    val docs = tbl(s, dir, "documents").filter(col("doc_id") < nDocs)
+    TokenCorpus(docs,
+      LateInteraction.tokenVectors(docs, "doc_id", "text").localCheckpoint(true),
+      queryTokens(docs))
+  }
+
+  /** The token-level IVF tier every maxsim_* ANN lane builds: 8 cells,
+    * one k-means attempt (the lanes probe all cells, so cell quality
+    * never moves a result). */
+  private[graft] val tokenIvfParams =
+    IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5)
+
+  /** BM25 query batch: docs with doc_id < `n`, text as qtext. */
+  private[graft] def textQueries(docs: DataFrame, n: Int): DataFrame =
+    docs.filter(col("doc_id") < n)
+      .select(col("doc_id").as("qid"), col("text").as("qtext"))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -456,6 +543,33 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
+  /** bucket_join_colocated's one-time layout: orders and lineitem, each
+    * written hash-bucketed 8 ways on the order key under `base` as the
+    * catalog tables `to` and `tl` (sources/Bucketed). */
+  private def writeColocated(s: SparkSession, dir: String, base: String,
+                             to: String, tl: String): Unit = {
+    graft.sources.Bucketed.write(
+      tbl(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
+      to, s"$base/orders", numBuckets = 8, bucketCol = "o_orderkey")
+    graft.sources.Bucketed.write(
+      tbl(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
+      tl, s"$base/lineitem", numBuckets = 8, bucketCol = "l_orderkey")
+  }
+
+  /** The join + same-key aggregate over [[writeColocated]]'s tables —
+    * bucket_join_colocated's plan, which its [[benchPhases]] twin times
+    * as the search phase. */
+  private def colocatedJoinAgg(s: SparkSession, to: String, tl: String): DataFrame = {
+    val o = graft.sources.Bucketed.table(s, to)
+    val l = graft.sources.Bucketed.table(s, tl)
+    l.join(o, l("l_orderkey") === o("o_orderkey"))
+      .groupBy(col("l_orderkey"), col("o_orderpriority"))
+      .agg(sum(q(col("l_quantity"), 100.0)).as("sum_qty_c"),
+        sum(q(col("l_extendedprice"), 100.0)).as("sum_price_c"),
+        count(lit(1)).as("n"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H-Q1-shaped pricing summary: grouped sums as fixed-point
     // BIGINT cents (exact, order-independent → hash-stable across
@@ -524,21 +638,8 @@ object SparkEntry {
       val run = java.util.UUID.randomUUID().toString.replace("-", "")
       val base = scratchDir("bucket_join")
       val (to, tl) = (s"graft_bko_$run", s"graft_bkl_$run")
-      graft.sources.Bucketed.write(
-        tbl(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
-        to, s"$base/orders", numBuckets = 8, bucketCol = "o_orderkey")
-      graft.sources.Bucketed.write(
-        tbl(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
-        tl, s"$base/lineitem", numBuckets = 8, bucketCol = "l_orderkey")
-      val o = graft.sources.Bucketed.table(s, to)
-      val l = graft.sources.Bucketed.table(s, tl)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderpriority"))
-        .agg(sum(q(col("l_quantity"), 100.0)).as("sum_qty_c"),
-          sum(q(col("l_extendedprice"), 100.0)).as("sum_price_c"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_orderkey"))
+      writeColocated(s, dir, base, to, tl)
+      colocatedJoinAgg(s, to, tl).orderBy(col("l_orderkey"))
     }),
 
     // Per-supplier top-3 lineitems by extended price — the window top-k
@@ -602,16 +703,11 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val m = graft.operators.Mips.maxNorm(emb, "embedding")
       val aug = graft.operators.Mips.augmentCorpus(emb, "embedding", m)
-      val cents = aug.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-        .select(col("embedding").cast("array<float>")).collect()
-        .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-      val indexed = IVFFlat.assign(aug, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(aug, fixedCentroids(aug))
       val qAug = graft.operators.Mips.augmentQueries(
         emb.filter(col("vec_id") < 5), "embedding")
       val hits = model.searchMany(qAug, "vec_id", "embedding",
-        k = 10, nprobe = cents.length)
+        k = 10, nprobe = model.params.k)
       graft.operators.Mips.withDotDistance(hits,
           emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           emb, "vec_id", "embedding")
@@ -704,10 +800,7 @@ object SparkEntry {
     "sq8_search_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents))
       sq8.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -721,10 +814,7 @@ object SparkEntry {
     "sq8_range_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents))
       sq8.rangeSearchMany(emb.filter(col("vec_id") < 5), "vec_id",
           "embedding", radius = 1.8, nprobe = cents.length)
         .orderBy(col("qid"), col("id"))
@@ -737,10 +827,7 @@ object SparkEntry {
     "bq_range_rerank" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(IVFFlat.Model(
-        IVFFlat.Params(cents.length), cents, sizes,
-        IVFFlat.assign(emb, "vec_id", "embedding", cents)))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       bq.rangeSearchRefined(emb.filter(col("vec_id") < 5), "vec_id",
           "embedding", radius = 1.8, emb, "vec_id", "embedding",
           nprobe = cents.length)
@@ -756,9 +843,7 @@ object SparkEntry {
     "pq_ivf_range_rerank" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val model = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4))
       model.rangeSearchRefined(emb.filter(col("vec_id") < 5), "vec_id",
           "embedding", radius = 1.8, emb, "vec_id", "embedding",
           nprobe = cents.length)
@@ -770,10 +855,7 @@ object SparkEntry {
     "sq8_persist_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents))
       val tmp = scratchDir("sq8_persist")
       sq8.save(tmp)
       val re = graft.index.SQ8.load(s, tmp)
@@ -790,10 +872,8 @@ object SparkEntry {
     "sq8_merge_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      def half(cond: org.apache.spark.sql.Column) = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes,
-          IVFFlat.assign(emb.filter(cond), "vec_id", "embedding", cents)))
+      def half(cond: Column) =
+        graft.index.SQ8.compress(pinnedIvf(emb.filter(cond), cents))
       half(col("vec_id") % 2 === 0).merge(half(col("vec_id") % 2 === 1))
         .searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
@@ -806,10 +886,7 @@ object SparkEntry {
     "sq8_rerank_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents))
       sq8.searchManyRefined(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, factor = 1000, emb, "vec_id", "embedding",
           nprobe = cents.length)
@@ -825,10 +902,7 @@ object SparkEntry {
     "bq_hamming_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       bq.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -839,10 +913,7 @@ object SparkEntry {
     "bq_asym_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       bq.searchManyAsym(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -855,11 +926,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
       // |corpus|² self-kNN over codes — widen like ivf_knn_join_all
-      val indexed = graft.index.IVFFlat.assign(Scaling.widen(emb),
-        "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(Scaling.widen(emb), cents))
       bq.knnJoinAsym(emb, "vec_id", "embedding", k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -870,10 +937,7 @@ object SparkEntry {
     "bq_knn_join_rerank" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       bq.knnJoinRefined(emb.filter(col("vec_id") < 50), "vec_id", "embedding",
           k = 10, factor = 50, emb, "vec_id", "embedding",
           nprobe = cents.length)
@@ -886,10 +950,8 @@ object SparkEntry {
     "bq_merge_asym_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      def half(cond: org.apache.spark.sql.Column) = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes,
-          IVFFlat.assign(emb.filter(cond), "vec_id", "embedding", cents)))
+      def half(cond: Column) =
+        graft.index.BQ.compress(pinnedIvf(emb.filter(cond), cents))
       half(col("vec_id") % 2 === 0).merge(half(col("vec_id") % 2 === 1))
         .searchManyAsym(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
@@ -905,10 +967,7 @@ object SparkEntry {
     "bq_res_asym_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compressResidual(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compressResidual(pinnedIvf(emb, cents))
       bq.searchManyAsym(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -920,10 +979,7 @@ object SparkEntry {
     "bq_rerank_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       bq.searchManyRefined(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, factor = 1000, emb, "vec_id", "embedding",
           nprobe = cents.length)
@@ -935,10 +991,7 @@ object SparkEntry {
     "bq_persist_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       val tmp = scratchDir("bq_persist")
       bq.save(tmp)
       val re = graft.index.BQ.load(s, tmp)
@@ -956,11 +1009,7 @@ object SparkEntry {
     "bq_rot_asym_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed),
-        rotated = true)
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents), rotated = true)
       bq.searchManyAsym(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -974,11 +1023,7 @@ object SparkEntry {
     "sq8_rot_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed),
-        rotated = true)
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents), rotated = true)
       val tmp = scratchDir("sq8_rot")
       sq8.save(tmp)
       val re = graft.index.SQ8.load(s, tmp)
@@ -1013,12 +1058,9 @@ object SparkEntry {
       val r = graft.index.Opq.pythagoreanR(64)
       val rotated = graft.index.Opq.rotateFrame(emb, "vec_id", "embedding", r)
         .localCheckpoint(true)
-      val base16 = rotated.filter(col("id") < 16).orderBy(col("id"))
-        .select(col("vector")).collect()
-        .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-      val cbs = Array.tabulate(4)(sub => base16.map(_.slice(sub * 16, (sub + 1) * 16)))
       val model = graft.index.PQ.withCodebooks(rotated, "id", "vector",
-        cbs, graft.index.PQ.Params(m = 4, k = 16))
+        pinnedCodebooks(rotated, 4, col("vector"), idCol = "id"),
+        graft.index.PQ.Params(m = 4, k = 16))
       model.searchMany(rotated.filter(col("id") < 5), "id", "vector", 10)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -1032,11 +1074,8 @@ object SparkEntry {
       val r = graft.index.Opq.pythagoreanR(64)
       val rotated0 = graft.index.Opq.rotateFrame(emb, "vec_id", "embedding", r)
         .localCheckpoint(true)
-      val base16 = rotated0.filter(col("id") < 16).orderBy(col("id"))
-        .select(col("vector")).collect()
-        .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-      val cbs = Array.tabulate(4)(sub => base16.map(_.slice(sub * 16, (sub + 1) * 16)))
-      val trained = graft.index.Opq.Trained(r, cbs,
+      val trained = graft.index.Opq.Trained(r,
+        pinnedCodebooks(rotated0, 4, col("vector"), idCol = "id"),
         graft.index.PQ.Params(m = 4, k = 16))
       val tmp = scratchDir("opq_persist")
       graft.index.Opq.save(trained, s, tmp)
@@ -1190,9 +1229,7 @@ object SparkEntry {
     "ivf_remove_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
         .remove(emb.filter(col("vec_id") % 9 === 3), "vec_id")
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
@@ -1207,9 +1244,7 @@ object SparkEntry {
     "pq_ivf_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val model = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4))
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1224,10 +1259,8 @@ object SparkEntry {
     "pq_ivf_add_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = graft.index.IVFPQ.build(
-          emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding",
-          cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val model = pinnedIvfpq(emb.filter(col("vec_id") % 7 =!= 0), cents,
+          fixedCodebooks(emb, 4))
         .add(emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
@@ -1244,10 +1277,7 @@ object SparkEntry {
     "pq_ivf_res_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16),
-        residual = true)
+      val model = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4), residual = true)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1259,9 +1289,7 @@ object SparkEntry {
     "pq_ivf_rerank_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val model = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4))
       model.searchManyRefined(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, factor = 50, nprobe = cents.length,
           emb, "vec_id", "embedding")
@@ -1274,15 +1302,9 @@ object SparkEntry {
     "pq_ivf_merge_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
       val cbs = fixedCodebooks(emb, 4)
-      val p = graft.index.PQ.Params(m = 4, k = 16)
-      val a = graft.index.IVFPQ.build(
-        emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding",
-        cents, sizes, cbs, p)
-      val b = graft.index.IVFPQ.build(
-        emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding",
-        cents, sizes, cbs, p)
+      val a = pinnedIvfpq(emb.filter(col("vec_id") % 7 =!= 0), cents, cbs)
+      val b = pinnedIvfpq(emb.filter(col("vec_id") % 7 === 0), cents, cbs)
       a.merge(b)
         .searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
@@ -1297,9 +1319,7 @@ object SparkEntry {
     "pq_ivf_persist_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val model = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4))
       val tmp = scratchDir("pq_ivf_persist")
       model.save(tmp)
       graft.index.IVFPQ.load(s, tmp)
@@ -1314,9 +1334,7 @@ object SparkEntry {
     "ivf_search_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1330,10 +1348,7 @@ object SparkEntry {
     "ivf_search_filtered" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(
-        emb.filter(col("label") === 2), "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb.filter(col("label") === 2), cents)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1346,10 +1361,7 @@ object SparkEntry {
     "ivf_add_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(
-        emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb.filter(col("vec_id") % 7 =!= 0), cents)
         .add(emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 2)
@@ -1366,15 +1378,11 @@ object SparkEntry {
     "ivf_merge_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val a = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes,
-        IVFFlat.assign(emb.filter(col("vec_id") % 7 =!= 0),
-          "vec_id", "embedding", cents))
+      val a = pinnedIvf(emb.filter(col("vec_id") % 7 =!= 0), cents)
       // the other job clustered under its own grid (vectors 8..15) —
       // bitwise-different centroids force the re-assign branch
-      val bCents = emb.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-        .orderBy(col("vec_id")).select(col("embedding").cast("array<float>"))
-        .collect().map(_.getAs[scala.collection.Seq[Float]](0).toArray)
+      val bCents = pinnedRows(emb, "vec_id", 16,
+        col("embedding").cast("array<float>"), from = 8)
       val b = IVFFlat.Model(IVFFlat.Params(bCents.length), bCents,
         new Array[Long](bCents.length),
         IVFFlat.assign(emb.filter(col("vec_id") % 7 === 0),
@@ -1393,17 +1401,10 @@ object SparkEntry {
     "ivf_merge_union_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val a = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes,
-        IVFFlat.assign(emb.filter(col("vec_id") % 7 =!= 0),
-          "vec_id", "embedding", cents))
-      val bCents = emb.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-        .orderBy(col("vec_id")).select(col("embedding").cast("array<float>"))
-        .collect().map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-      val b = IVFFlat.Model(IVFFlat.Params(bCents.length), bCents,
-        Array.fill(bCents.length)(Long.MaxValue),
-        IVFFlat.assign(emb.filter(col("vec_id") % 7 === 0),
-          "vec_id", "embedding", bCents))
+      val a = pinnedIvf(emb.filter(col("vec_id") % 7 =!= 0), cents)
+      val bCents = pinnedRows(emb, "vec_id", 16,
+        col("embedding").cast("array<float>"), from = 8)
+      val b = pinnedIvf(emb.filter(col("vec_id") % 7 === 0), bCents)
       val m = a.mergeGridUnion(b)
       m.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = m.params.k)
@@ -1422,10 +1423,8 @@ object SparkEntry {
     "ivf_persist_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
       val tmp = scratchDir("ivf_persist")
-      IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed).save(tmp)
+      pinnedIvf(emb, cents).save(tmp)
       val re = IVFFlat.load(s, tmp)
       re.copy(clusterSizes = re.clusterSizes.map(_ => Long.MaxValue))
         .searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -1473,9 +1472,7 @@ object SparkEntry {
     "ivf_range_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
       model.rangeSearchMany(emb.filter(col("vec_id") < 5), "vec_id",
           "embedding", radius = 1.8, nprobe = cents.length)
         .orderBy(col("qid"), col("id"))
@@ -1484,9 +1481,7 @@ object SparkEntry {
     "ivf_search_all" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1523,10 +1518,7 @@ object SparkEntry {
       val cents = fixedCentroids(emb)
       // self-kNN scores |corpus|² pairs in the scan stage: widen the
       // one-split bench scan so the fused sqDist kernel uses every core
-      val indexed = IVFFlat.assign(Scaling.widen(emb), "vec_id",
-        "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(Scaling.widen(emb), cents)
       model.knnJoin(emb, "vec_id", "embedding", k = 10, nprobe = cents.length)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -1540,10 +1532,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
       // |corpus|² self-kNN first pass — widen like ivf_knn_join_all
-      val indexed = IVFFlat.assign(Scaling.widen(emb), "vec_id",
-        "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(Scaling.widen(emb), cents)
       graft.operators.KnnGraph.hardNegatives(
           model.knnJoin(emb, "vec_id", "embedding", k = 10,
             nprobe = cents.length),
@@ -1558,9 +1547,7 @@ object SparkEntry {
     "ivf_knn_join_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue) // force nprobe exactly
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
       model.knnJoin(emb, "vec_id", "embedding", k = 10, nprobe = 2)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -1624,8 +1611,7 @@ object SparkEntry {
     // has no oracle; correctness is gated in IVFFlatSpec).
     "ivf_kmeans" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val model = IVFFlat.build(emb, "vec_id", "embedding",
-        IVFFlat.Params(k = 8, numAttempts = 2, maxIterations = 10))
+      val model = IVFFlat.build(emb, "vec_id", "embedding", ivfKmeansParams)
       model.indexed.groupBy(col("cluster")).count().orderBy(col("cluster"))
     }),
 
@@ -1659,10 +1645,7 @@ object SparkEntry {
     "ivf_rebalance_fixed" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val cents0 = fixedCentroids(emb)
-      val sizes = Array.fill(cents0.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents0.length), cents0, sizes,
-        IVFFlat.assign(emb, "vec_id", "embedding", cents0))
-      val removed = model.remove(
+      val removed = pinnedIvf(emb, cents0).remove(
         emb.filter(pmod(col("vec_id"), lit(7)) === 0), "vec_id")
       IVFFlat.assign(removed.indexed, "id", "vector",
           quantLloydCentroids(removed.indexed, cents0.length, cents0(0).length))
@@ -1693,8 +1676,7 @@ object SparkEntry {
     // the degenerate-forest==exhaustive equivalence are in LSHForestSpec.
     "lsh_knn" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val model = LSHForest.build(emb, "vec_id", "embedding",
-        LSHForest.Params(numTrees = 8, maxNodeSize = 64))
+      val model = LSHForest.build(emb, "vec_id", "embedding", lshKnnParams)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -1708,9 +1690,7 @@ object SparkEntry {
     // build must too (equivalence unconditional, no corpus precondition).
     "lsh_knn_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val model = LSHForest.build(emb, "vec_id", "embedding",
-        LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue,
-          dedupExact = false))
+      val model = LSHForest.build(emb, "vec_id", "embedding", lshExactParams)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .orderBy(col("qid"), col("distance"), col("id"))
     }),
@@ -1721,9 +1701,7 @@ object SparkEntry {
     // the whole save→load→search lifecycle hash-for-hash.
     "lsh_persist_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val model = LSHForest.build(emb, "vec_id", "embedding",
-        LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue,
-          dedupExact = false))
+      val model = LSHForest.build(emb, "vec_id", "embedding", lshExactParams)
       val tmp = scratchDir("lsh_persist")
       model.save(tmp)
       LSHForest.load(s, tmp)
@@ -1741,8 +1719,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val model = LSHForest.build(
           emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding",
-          LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue,
-            dedupExact = false))
+          lshExactParams)
         .add(emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding")
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1754,12 +1731,10 @@ object SparkEntry {
     // over the whole corpus — the knn oracle gates merge hash-for-hash.
     "lsh_merge_exact" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val p = LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue,
-        dedupExact = false)
       val a = LSHForest.build(
-        emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding", p)
+        emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding", lshExactParams)
       val b = LSHForest.build(
-        emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding", p)
+        emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding", lshExactParams)
       a.merge(b)
         .searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -1770,8 +1745,7 @@ object SparkEntry {
     // check; recall vs the exhaustive oracle is gated in HNSWSpec.
     "hnsw_knn" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
-      val model = HNSW.build(emb, "vec_id", "embedding",
-        HNSWGraph.Params(numLayers = 6, efConstruction = 100, efSearch = 64, m = 16),
+      val model = HNSW.build(emb, "vec_id", "embedding", hnswKnnParams,
         numShards = 8)
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .orderBy(col("qid"), col("distance"), col("id"))
@@ -2063,10 +2037,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val cents = fixedCentroids(emb)
       // |corpus|² self-kNN first pass — widen like ivf_knn_join_all
-      val indexed = IVFFlat.assign(Scaling.widen(emb), "vec_id",
-        "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(Scaling.widen(emb), cents)
       graft.operators.KnnGraph.clusters(
           model.knnJoin(emb, "vec_id", "embedding", k = 5,
             nprobe = cents.length))
@@ -2640,9 +2611,7 @@ object SparkEntry {
     // trick applied to dedup.
     "dedup_embed_lsh" -> ((s, dir) =>
       Dedup.embeddingPairsViaLSH(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", maxCosDist = 0.7,
-        params = graft.index.LSHForest.Params(numTrees = 1,
-          maxNodeSize = Int.MaxValue, dedupExact = false))
+        "embedding", maxCosDist = 0.7, params = lshExactParams)
         .orderBy(col("id_a"), col("id_b"))),
 
     // Multimodal binary-column plumbing: documents as utf-8 BLOBs with
@@ -3358,8 +3327,7 @@ object SparkEntry {
     // join), never |docs| × |queries|.
     "bm25_topk" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       Retrieval.bm25TopK(docs, "doc_id", "text", qs, "qid", "qtext", k = 10)
         .orderBy(col("qid"), col("rank"))
     }),
@@ -3370,8 +3338,7 @@ object SparkEntry {
     // two-pass pipeline oracle-exact.
     "bm25_rm3" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       Retrieval.buildIndex(docs, "doc_id", "text")
         .searchExpanded(qs, "qid", "qtext", k = 10, fbDocs = 3, fbTerms = 5)
         .orderBy(col("qid"), col("rank"))
@@ -3383,8 +3350,7 @@ object SparkEntry {
     // its own oracle contract (a capped term contributes 0).
     "bm25_dfcap" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       Retrieval.buildIndex(docs, "doc_id", "text")
         .searchTopK(qs, "qid", "qtext", k = 10, maxDf = Some(390L))
         .orderBy(col("qid"), col("rank"))
@@ -3396,8 +3362,7 @@ object SparkEntry {
     // the plain bm25_topk SQL.
     "bm25_add" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       Retrieval.buildIndex(docs.filter(col("doc_id") < 250), "doc_id", "text")
         .add(docs.filter(col("doc_id") >= 250), "doc_id", "text")
         .searchTopK(qs, "qid", "qtext", k = 10)
@@ -3409,8 +3374,7 @@ object SparkEntry {
     // chain over the shrunken corpus.
     "bm25_remove" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       Retrieval.buildIndex(docs, "doc_id", "text")
         .remove(docs.filter(col("doc_id") >= 250).select("doc_id"), "doc_id")
         .searchTopK(qs, "qid", "qtext", k = 10)
@@ -3422,8 +3386,7 @@ object SparkEntry {
     // layout at warehouse scale; identical ranking, same oracle.
     "bm25_bucketed" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       val path = scratchDir("bm25_bkt")
       Retrieval.buildIndex(docs, "doc_id", "text")
         .saveBucketed("bm25_lane_postings", path, numBuckets = 4)
@@ -3438,8 +3401,7 @@ object SparkEntry {
     // time; oracle = the bm25_topk SQL verbatim.
     "bm25_persist" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       val tmp = scratchDir("bm25_persist")
       Retrieval.buildIndex(docs, "doc_id", "text").save(tmp)
       Retrieval.loadIndex(s, tmp).searchTopK(qs, "qid", "qtext", k = 10)
@@ -3494,9 +3456,7 @@ object SparkEntry {
       // (one parquet split would otherwise run it single-task)
       val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text",
         wide = true)
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val qToks = queryTokens(docs)
       LateInteraction.maxSim(qToks, "qid", "tok_idx", "vec",
           dToks, "doc_id", "vec", k = 10)
         .orderBy(col("qid"), col("rank"))
@@ -3511,15 +3471,9 @@ object SparkEntry {
     // must run on a bounded corpus (serving uses small m — the recall
     // lever; the full-corpus exhaustive face is maxsim_exact's lane).
     "maxsim_shortlisted" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds shortlist + rescore — embed once
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      LateInteraction.maxSimShortlisted(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", k = 10, m = m)
+      val t = tokenCorpus(s, dir)
+      LateInteraction.maxSimShortlisted(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", k = 10, m = t.m)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3537,9 +3491,7 @@ object SparkEntry {
         LateInteraction.tokenVectors(docs, "doc_id", "text",
           wide = true).localCheckpoint(true), tmp)
       val dToks = LateInteraction.loadTokens(s, tmp)
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val qToks = queryTokens(docs)
       LateInteraction.maxSim(qToks, "qid", "tok_idx", "vec",
           dToks, "doc_id", "vec", k = 10)
         .orderBy(col("qid"), col("rank"))
@@ -3556,18 +3508,12 @@ object SparkEntry {
     // construction, so the lane pins on 50 docs like maxsim_
     // shortlisted; serving uses small m/nprobe — the recall levers).
     "maxsim_ivf" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + rescore — embed once
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val nCells = 8
-      val idx = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-        "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val idx = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+        "vec", tokenIvfParams)
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3578,30 +3524,23 @@ object SparkEntry {
     // tokens — nothing recomputed at serve time. Degenerate config ⇒
     // the same bounded-corpus exhaustive replay.
     "maxsim_loaded" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
+      val t = tokenCorpus(s, dir)
       val tmp = scratchDir("maxsim_loaded")
-      val dToks0 = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds save + build — embed once
-      val nCells = 8
       // token-frame save and tier build+save are independent consumers
       // of the checkpointed frame — overlap them (guide §2.6)
       val (_, built) = Overlap.par2(
-        LateInteraction.saveTokens(dToks0, tmp), {
-          val b = LateInteraction.buildTokenIvf(dToks0, "doc_id",
-            "tok_idx", "vec",
-            IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+        LateInteraction.saveTokens(t.dToks, tmp), {
+          val b = LateInteraction.buildTokenIvf(t.dToks, "doc_id",
+            "tok_idx", "vec", tokenIvfParams)
           b.save(s"$tmp/tivf")
           b
         })
       built.ivf.indexed.unpersist()
       val dToks = LateInteraction.loadTokens(s, tmp)
       val idx = LateInteraction.loadTokenIvf(s, s"$tmp/tivf")
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
       val m = dToks.count().toInt
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells,
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k,
           cap = 50)
         .orderBy(col("qid"), col("rank"))
     }),
@@ -3615,18 +3554,12 @@ object SparkEntry {
     // PIPELINE (finite cap exercises it) — ≡ maxsim_exact on the
     // bounded corpus, same replay.
     "maxsim_pruned" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + rescore — embed once
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val nCells = 8
-      val idx = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-        "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells,
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val idx = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+        "vec", tokenIvfParams)
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k,
           cap = 50)
         .orderBy(col("qid"), col("rank"))
     }),
@@ -3635,19 +3568,13 @@ object SparkEntry {
     // residency — ColBERTv2's compression motivation), stage 2 exact
     // on the full-precision token frame. Same degenerate-exact gate.
     "maxsim_sq8" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true)
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val nCells = 8
-      val idx = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-          "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val idx = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+          "vec", tokenIvfParams)
         .compress()
-      LateInteraction.maxSimSq8(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimSq8(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3661,23 +3588,17 @@ object SparkEntry {
     // cover every doc and stage 2 IS the exhaustive face — same
     // bounded-corpus replay.
     "maxsim_pq" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true)
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val nCells = 8
-      val ivf = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-        "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val ivf = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+        "vec", tokenIvfParams)
       // augmented dim 17 zero-pads to 20 (compressPq's padding
       // contract) → m = 4 subspaces of 5 dims: 4 B/token codes
       val idx = ivf.compressPq(graft.index.PQ.Params(m = 4, k = 16,
         iterations = 4, seed = 7L))
       ivf.ivf.indexed.unpersist()
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3690,21 +3611,16 @@ object SparkEntry {
     // compressed tier serves at probe-all + m = corpus tokens, where
     // stage 2's exact rescore makes the lane ≡ the exhaustive oracle.
     "maxsim_split_pq" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true)
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val ivf = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-        "vec", IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5))
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val ivf = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+        "vec", tokenIvfParams)
       val split = ivf.splitHotCells(maxCellFactor = 0.5, iterations = 2)
       val idx = split.compressPq(graft.index.PQ.Params(m = 4, k = 16,
         iterations = 4, seed = 7L))
       ivf.ivf.indexed.unpersist()
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m,
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m,
           nprobe = split.ivf.centroids.length)
         .orderBy(col("qid"), col("rank"))
     }),
@@ -3716,18 +3632,14 @@ object SparkEntry {
     // codes, exact rescore on the loaded tokens. Degenerate config ⇒
     // the bounded-corpus exhaustive replay.
     "maxsim_pq_loaded" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
+      val t = tokenCorpus(s, dir)
       val tmp = scratchDir("maxsim_pq_loaded")
-      val dToks0 = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds save + build — embed once
-      val nCells = 8
       // token-frame save and tier build+compress+save are independent
       // consumers of the checkpointed frame — overlap them (guide §2.6)
       val (_, built) = Overlap.par2(
-        LateInteraction.saveTokens(dToks0, tmp), {
-          val b = LateInteraction.buildTokenIvf(dToks0, "doc_id",
-            "tok_idx", "vec",
-            IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+        LateInteraction.saveTokens(t.dToks, tmp), {
+          val b = LateInteraction.buildTokenIvf(t.dToks, "doc_id",
+            "tok_idx", "vec", tokenIvfParams)
           b.compressPq(graft.index.PQ.Params(m = 4, k = 16,
             iterations = 4, seed = 7L)).save(s"$tmp/tpq")
           b
@@ -3735,12 +3647,9 @@ object SparkEntry {
       built.ivf.indexed.unpersist()
       val dToks = LateInteraction.loadTokens(s, tmp)
       val idx = LateInteraction.loadTokenPq(s, s"$tmp/tpq")
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
       val m = dToks.count().toInt
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3751,29 +3660,22 @@ object SparkEntry {
     // covers everything, so the grown tier replays the bounded
     // exhaustive oracle.
     "maxsim_pq_add" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + add + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val t = tokenCorpus(s, dir)
       // one pass over the checkpointed tokens for BOTH serve-time
       // constants (corpus token count + norm ceiling) — was two actions
-      val mb = dToks.agg(count(lit(1)),
+      val mb = t.dToks.agg(count(lit(1)),
         max(sqrt(dot(col("vec"), col("vec"))))).head()
       val (m, bound) = (mb.getLong(0).toInt, mb.getDouble(1))
-      val nCells = 8
       val half = LateInteraction.buildTokenIvf(
-        dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
-        IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5),
-        maxNormBound = bound)
+        t.dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
+        tokenIvfParams, maxNormBound = bound)
       val idx = half.compressPq(graft.index.PQ.Params(m = 4, k = 16,
           iterations = 4, seed = 7L))
-        .add(dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx",
+        .add(t.dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx",
           "vec")
       half.ivf.indexed.unpersist()
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3783,25 +3685,18 @@ object SparkEntry {
     // trimmed tier at probe-all over the kept token frame replays the
     // 50-doc exhaustive oracle.
     "maxsim_pq_remove" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 60)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val nCells = 8
-      val built = LateInteraction.buildTokenIvf(dToks, "doc_id",
-        "tok_idx", "vec",
-        IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+      val t = tokenCorpus(s, dir, nDocs = 60)
+      val built = LateInteraction.buildTokenIvf(t.dToks, "doc_id",
+        "tok_idx", "vec", tokenIvfParams)
       val idx = built.compressPq(graft.index.PQ.Params(m = 4, k = 16,
           iterations = 4, seed = 7L))
-        .remove(docs.filter(col("doc_id") >= 50).select(col("doc_id")),
+        .remove(t.docs.filter(col("doc_id") >= 50).select(col("doc_id")),
           "doc_id")
       built.ivf.indexed.unpersist()
-      val kept = dToks.filter(col("doc_id") < 50)
+      val kept = t.dToks.filter(col("doc_id") < 50)
       val m = kept.count().toInt
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3812,25 +3707,18 @@ object SparkEntry {
     // Probe-all + m = corpus tokens covers everything, so the grown
     // tier replays the bounded-corpus exhaustive oracle.
     "maxsim_ivf_add" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + add + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val t = tokenCorpus(s, dir)
       // one pass over the checkpointed tokens for BOTH serve-time
       // constants (corpus token count + norm ceiling) — was two actions
-      val mb = dToks.agg(count(lit(1)),
+      val mb = t.dToks.agg(count(lit(1)),
         max(sqrt(dot(col("vec"), col("vec"))))).head()
       val (m, bound) = (mb.getLong(0).toInt, mb.getDouble(1))
-      val nCells = 8
       val idx = LateInteraction.buildTokenIvf(
-          dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
-          IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5),
-          maxNormBound = bound)
-        .add(dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx", "vec")
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+          t.dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
+          tokenIvfParams, maxNormBound = bound)
+        .add(t.dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx", "vec")
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3842,21 +3730,15 @@ object SparkEntry {
     // trimmed tier at probe-all over the kept token frame replays the
     // 50-doc exhaustive oracle.
     "maxsim_ivf_remove" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 60)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val nCells = 8
-      val idx = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-          "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
-        .remove(docs.filter(col("doc_id") >= 50).select(col("doc_id")),
+      val t = tokenCorpus(s, dir, nDocs = 60)
+      val idx = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+          "vec", tokenIvfParams)
+        .remove(t.docs.filter(col("doc_id") >= 50).select(col("doc_id")),
           "doc_id")
-      val kept = dToks.filter(col("doc_id") < 50)
+      val kept = t.dToks.filter(col("doc_id") < 50)
       val m = kept.count().toInt
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3870,22 +3752,16 @@ object SparkEntry {
     // repaired tier replays the same 50-doc exhaustive oracle; the
     // recall-at-fixed-nprobe recovery is the LateInteractionSpec gate.
     "maxsim_ivf_rebalance" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 60)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds build + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val nCells = 8
-      val idx = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-          "vec", IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
-        .remove(docs.filter(col("doc_id") >= 50).select(col("doc_id")),
+      val t = tokenCorpus(s, dir, nDocs = 60)
+      val idx = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+          "vec", tokenIvfParams)
+        .remove(t.docs.filter(col("doc_id") >= 50).select(col("doc_id")),
           "doc_id")
         .rebalance(iterations = 2)
-      val kept = dToks.filter(col("doc_id") < 50)
+      val kept = t.dToks.filter(col("doc_id") < 50)
       val m = kept.count().toInt
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          kept, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3899,29 +3775,21 @@ object SparkEntry {
     // over the merged tier ⇒ ≡ one build over the union ⇒ the
     // bounded-corpus exhaustive replay.
     "maxsim_ivf_merge" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true) // feeds both builds + rescore
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      val m = dToks.count().toInt
-      val nCells = 8
-      val params = IVFFlat.Params(k = nCells, numAttempts = 1,
-        maxIterations = 5)
+      val t = tokenCorpus(s, dir)
+      val m = t.m
       // the two shard builds are independent (both read the
       // checkpointed token frame) — overlap them (guide §2.6); the
       // merge consumes the same two models either way
       val (lo, hi) = Overlap.par2(
         LateInteraction.buildTokenIvf(
-          dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
-          params),
+          t.dToks.filter(col("doc_id") < 25), "doc_id", "tok_idx", "vec",
+          tokenIvfParams),
         LateInteraction.buildTokenIvf(
-          dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx", "vec",
-          params))
+          t.dToks.filter(col("doc_id") >= 25), "doc_id", "tok_idx", "vec",
+          tokenIvfParams))
       val idx = lo.merge(hi)
-      LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = nCells)
+      LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -3939,9 +3807,7 @@ object SparkEntry {
         LateInteraction.tokenVectors(
           docs.filter(col("doc_id") >= 25 && col("doc_id") < 50),
           "doc_id", "text"))
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val qToks = queryTokens(docs)
       LateInteraction.maxSim(qToks, "qid", "tok_idx", "vec",
           toks, "doc_id", "vec", k = 10)
         .orderBy(col("qid"), col("rank"))
@@ -3958,9 +3824,7 @@ object SparkEntry {
           docs.filter(col("doc_id") < 60), "doc_id", "text"),
         docs.filter(col("doc_id") >= 50 && col("doc_id") < 60)
           .select(col("doc_id")), "doc_id")
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val qToks = queryTokens(docs)
       LateInteraction.maxSim(qToks, "qid", "tok_idx", "vec",
           toks, "doc_id", "vec", k = 10)
         .orderBy(col("qid"), col("rank"))
@@ -3973,8 +3837,7 @@ object SparkEntry {
     "rrf_hybrid" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val emb = tbl(s, dir, "embeddings")
-      val qs = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 3)
       Retrieval.hybridSearch(docs, "doc_id", "text",
           emb, "vec_id", "embedding", qs, "qid", "qtext",
           emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 10)
@@ -3989,15 +3852,12 @@ object SparkEntry {
     // fusion itself is candidate-list-sized (rrfFuse's contract).
     "hybrid_maxsim" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
-      val qs = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 3)
       val lex = Retrieval.bm25TopK(docs, "doc_id", "text", qs, "qid",
           "qtext", k = 10)
         .select(col("qid"), col("doc_id").as("id"), col("rank"))
       val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
+      val qToks = queryTokens(docs)
       val ms = LateInteraction.maxSim(qToks, "qid", "tok_idx", "vec",
           dToks, "doc_id", "vec", k = 10)
         .select(col("qid"), col("doc_id").as("id"), col("rank"))
@@ -4026,15 +3886,12 @@ object SparkEntry {
     "hybrid_ivf" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val emb = tbl(s, dir, "embeddings")
-      val qs = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 3)
       val lex = Retrieval.bm25TopK(docs, "doc_id", "text", qs, "qid",
           "qtext", k = 10)
         .select(col("qid"), col("doc_id").as("id"), col("rank"))
       val cents = fixedCentroids(emb)
-      val indexed = IVFFlat.assign(emb, "vec_id", "embedding", cents)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val model = IVFFlat.Model(IVFFlat.Params(cents.length), cents, sizes, indexed)
+      val model = pinnedIvf(emb, cents)
       val wv = Window.partitionBy(col("qid"))
         .orderBy(col("distance").asc, col("id").asc)
       val vec = model.searchMany(emb.filter(col("vec_id") < 3), "vec_id",
@@ -4056,8 +3913,7 @@ object SparkEntry {
     "hybrid_loaded" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
       val emb = tbl(s, dir, "embeddings")
-      val qs = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 3)
       // the two tier build+save+load blocks are independent — overlap
       // them from driver threads (guide §2.6); same artifacts, same fuse
       val (lex, vec) = Overlap.par2({
@@ -4071,9 +3927,7 @@ object SparkEntry {
       }, {
         val cents = fixedCentroids(emb)
         val iPath = scratchDir("hyb_ivf")
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents,
-            Array.fill(cents.length)(Long.MaxValue),
-            IVFFlat.assign(emb, "vec_id", "embedding", cents)).save(iPath)
+        pinnedIvf(emb, cents).save(iPath)
         val model = IVFFlat.load(s, iPath)
         val wv = Window.partitionBy(col("qid"))
           .orderBy(col("distance").asc, col("id").asc)
@@ -4101,8 +3955,7 @@ object SparkEntry {
     "hybrid_trio" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
       val emb = tbl(s, dir, "embeddings")
-      val qs = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 3)
       // The three tier builds are INDEPENDENT (disjoint artifacts,
       // disjoint catalog names) — submit them from driver threads so
       // each tier's build/save jobs back-fill the executor slots the
@@ -4122,9 +3975,7 @@ object SparkEntry {
         // tier 2: dense — saved IVF index, probe-all ⇒ exact top-10
         val cents = fixedCentroids(emb)
         val iPath = scratchDir("trio_ivf")
-        IVFFlat.Model(IVFFlat.Params(cents.length), cents,
-            Array.fill(cents.length)(Long.MaxValue),
-            IVFFlat.assign(emb, "vec_id", "embedding", cents)).save(iPath)
+        pinnedIvf(emb, cents).save(iPath)
         val wv = Window.partitionBy(col("qid"))
           .orderBy(col("distance").asc, col("id").asc)
         IVFFlat.load(s, iPath)
@@ -4136,29 +3987,23 @@ object SparkEntry {
         // tier 3: late interaction — saved token frame + saved TokenIvf,
         // probe-all + m = corpus tokens ⇒ exact MaxSim top-10
         val tPath = scratchDir("trio_tok")
-        val dToks0 = LateInteraction.tokenVectors(docs, "doc_id", "text")
-          .localCheckpoint(true) // feeds save + build — embed once
-        val nCells = 8
+        val t = tokenCorpus(s, dir)
         // the token-frame save and the tier build are themselves
         // independent consumers of the checkpointed frame — overlap
         val (_, builtTier) = Overlap.par2(
-          LateInteraction.saveTokens(dToks0, tPath), {
-            val bt = LateInteraction.buildTokenIvf(dToks0, "doc_id",
-              "tok_idx", "vec",
-              IVFFlat.Params(k = nCells, numAttempts = 1, maxIterations = 5))
+          LateInteraction.saveTokens(t.dToks, tPath), {
+            val bt = LateInteraction.buildTokenIvf(t.dToks, "doc_id",
+              "tok_idx", "vec", tokenIvfParams)
             bt.save(s"$tPath/tivf")
             bt
           })
         builtTier.ivf.indexed.unpersist()
         val dToks = LateInteraction.loadTokens(s, tPath)
-        val qToks = LateInteraction.tokenVectors(
-            docs.filter(col("doc_id") < 3), "doc_id", "text")
-          .withColumnRenamed("doc_id", "qid")
         val mTok = dToks.count().toInt
-        LateInteraction.maxSimIvf(qToks, "qid", "tok_idx", "vec",
+        LateInteraction.maxSimIvf(t.qToks, "qid", "tok_idx", "vec",
             dToks, "doc_id", "vec",
             LateInteraction.loadTokenIvf(s, s"$tPath/tivf"),
-            k = 10, m = mTok, nprobe = nCells)
+            k = 10, m = mTok, nprobe = tokenIvfParams.k)
           .select(col("qid"), col("doc_id").as("id"), col("rank"))
       })
       val w = Window.partitionBy(col("qid"))
@@ -4175,8 +4020,7 @@ object SparkEntry {
     // (BucketedSpec/PlanSpec gate the plan shape).
     "bm25_bucketed_add" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val qs = textQueries(docs, 5)
       val p1 = scratchDir("bkt_add1")
       val half = Retrieval.buildIndex(docs.filter(col("doc_id") < 250),
         "doc_id", "text")
@@ -4223,29 +4067,16 @@ object SparkEntry {
       val base = scratchDir("bucket_ph")
       val (to, tl) = (s"graft_bpo_$run", s"graft_bpl_$run")
       val t0 = System.nanoTime()
-      graft.sources.Bucketed.write(
-        tbl(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
-        to, s"$base/orders", numBuckets = 8, bucketCol = "o_orderkey")
-      graft.sources.Bucketed.write(
-        tbl(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
-        tl, s"$base/lineitem", numBuckets = 8, bucketCol = "l_orderkey")
+      writeColocated(s, dir, base, to, tl)
       val t1 = System.nanoTime()
-      val o = graft.sources.Bucketed.table(s, to)
-      val l = graft.sources.Bucketed.table(s, tl)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderpriority"))
-        .agg(sum(q(col("l_quantity"), 100.0)).as("sum_qty_c"),
-          count(lit(1)).as("n"))
-        .count()
+      colocatedJoinAgg(s, to, tl).count()
       val t2 = System.nanoTime()
       ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
     }),
     "hnsw_knn" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
-      val model = HNSW.build(emb, "vec_id", "embedding",
-        HNSWGraph.Params(numLayers = 6, efConstruction = 100, efSearch = 64, m = 16),
+      val model = HNSW.build(emb, "vec_id", "embedding", hnswKnnParams,
         numShards = 8)
       val t1 = System.nanoTime()
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
@@ -4258,23 +4089,18 @@ object SparkEntry {
     // the lane is build-dominated (the one-time cost a deployment
     // amortizes over every query batch)
     "maxsim_pq" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 50)
       val t0 = System.nanoTime()
-      val dToks = LateInteraction.tokenVectors(docs, "doc_id", "text")
-        .localCheckpoint(true)
-      val m = dToks.count().toInt
-      val ivf = LateInteraction.buildTokenIvf(dToks, "doc_id", "tok_idx",
-        "vec", IVFFlat.Params(k = 8, numAttempts = 1, maxIterations = 5))
+      val t = tokenCorpus(s, dir)
+      val m = t.m
+      val ivf = LateInteraction.buildTokenIvf(t.dToks, "doc_id", "tok_idx",
+        "vec", tokenIvfParams)
       val idx = ivf.compressPq(graft.index.PQ.Params(m = 4, k = 16,
         iterations = 4, seed = 7L))
       idx.pq.codes.count()
       ivf.ivf.indexed.unpersist()
       val t1 = System.nanoTime()
-      val qToks = LateInteraction.tokenVectors(
-          docs.filter(col("doc_id") < 3), "doc_id", "text")
-        .withColumnRenamed("doc_id", "qid")
-      LateInteraction.maxSimPq(qToks, "qid", "tok_idx", "vec",
-          dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = 8)
+      LateInteraction.maxSimPq(t.qToks, "qid", "tok_idx", "vec",
+          t.dToks, "doc_id", "vec", idx, k = 10, m = m, nprobe = tokenIvfParams.k)
         .count()
       val t2 = System.nanoTime()
       ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
@@ -4282,8 +4108,7 @@ object SparkEntry {
     "lsh_knn" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
-      val model = LSHForest.build(emb, "vec_id", "embedding",
-        LSHForest.Params(numTrees = 8, maxNodeSize = 64))
+      val model = LSHForest.build(emb, "vec_id", "embedding", lshKnnParams)
       val t1 = System.nanoTime()
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
         .count()
@@ -4293,8 +4118,7 @@ object SparkEntry {
     "ivf_kmeans" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
-      val model = IVFFlat.build(emb, "vec_id", "embedding",
-        IVFFlat.Params(k = 8, numAttempts = 2, maxIterations = 10))
+      val model = IVFFlat.build(emb, "vec_id", "embedding", ivfKmeansParams)
       val t1 = System.nanoTime()
       model.indexed.groupBy(col("cluster")).count().count()
       val t2 = System.nanoTime()
@@ -4304,9 +4128,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val built = graft.index.IVFPQ.build(emb, "vec_id", "embedding",
-        cents, sizes, fixedCodebooks(emb, 4), graft.index.PQ.Params(m = 4, k = 16))
+      val built = pinnedIvfpq(emb, cents, fixedCodebooks(emb, 4))
       // build() is lazy by design (train() checkpoints); force the codes
       // here so the phase boundary is honest
       val model = built.copy(codes = built.codes.localCheckpoint(true))
@@ -4321,10 +4143,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val sq8 = graft.index.SQ8.compress(IVFFlat.Model(
-        IVFFlat.Params(cents.length), cents, sizes,
-        graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)))
+      val sq8 = graft.index.SQ8.compress(pinnedIvf(emb, cents))
       val model = sq8.copy(codes = sq8.codes.localCheckpoint(true))
       val t1 = System.nanoTime()
       model.searchMany(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -4339,10 +4158,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val t0 = System.nanoTime()
       val cents = fixedCentroids(emb)
-      val sizes = Array.fill(cents.length)(Long.MaxValue)
-      val bq = graft.index.BQ.compress(IVFFlat.Model(
-        IVFFlat.Params(cents.length), cents, sizes,
-        graft.index.IVFFlat.assign(emb, "vec_id", "embedding", cents)))
+      val bq = graft.index.BQ.compress(pinnedIvf(emb, cents))
       val model = bq.copy(codes = bq.codes.localCheckpoint(true))
       val t1 = System.nanoTime()
       model.searchManyAsym(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -4356,7 +4172,7 @@ object SparkEntry {
     // inverted-index pair join — separates the narrow fingerprint scan
     // from the join cost the dfCap bounds.
     "dedup_winnow" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Scaling.widen(tbl(s, dir, "documents")) // as the lane
       val t0 = System.nanoTime()
       val ex = Dedup.winnowPostings(docs, "doc_id", "text").persist()
       ex.count()

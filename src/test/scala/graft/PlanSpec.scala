@@ -76,7 +76,13 @@ class PlanSpec extends SparkSpec {
     val owners = Seq(
       ("topK(col(\"distance\")", "graft/functions/TopK.scala", "perQuery"),
       ("isin(cells", "graft/index/Cells.scala", "pruned"),
-      ("s\"$dir/centroids\"", "graft/index/Cells.scala", ""))
+      ("s\"$dir/centroids\"", "graft/index/Cells.scala", ""),
+      // the lane file's fixtures: one pinned-size IVF model, one query-token frame
+      ("Array.fill(cents.length)(Long.MaxValue)", "graft/SparkEntry.scala", "pinnedIvf"),
+      ("withColumnRenamed(\"doc_id\", \"qid\")", "graft/SparkEntry.scala", "queryTokens"))
+    // a def ends where the next member of its object starts, whatever
+    // its modifiers (`def`, `private[graft] def`, `val`, ...)
+    val member = """\n  (?:(?:private|protected)(?:\[\w+\])? )?(?:final )?(?:case )?(?:lazy )?(?:def|val|class|object) """.r
     for ((needle, owner, inDef) <- owners) {
       val hits = for {
         (file, src) <- sources.toList
@@ -88,7 +94,8 @@ class PlanSpec extends SparkSpec {
         file == owner && (inDef.isEmpty || {
           val src = sources(file)
           val start = src.indexOf(s"def $inDef(")
-          val next = src.indexOf("\n  def ", start + 1)
+          val next = member.findFirstMatchIn(src.substring(start + 1))
+            .fold(-1)(_.start + start + 1)
           start >= 0 && start < at && (next < 0 || at < next)
         })
       }.map(_._1).distinct
