@@ -32,21 +32,31 @@ object SparkEntry {
     * ~fixed overhead × 227 lanes. Memoize the ANALYZED RELATION per
     * (session, path): this is metadata caching only (what a metastore
     * table provides) — the frame is lazy, every action still scans the
-    * parquet files, and no computed result is held. Keyed weakly by
-    * session, but each cached frame holds its session, so entries live
-    * until the JVM exits; a session must therefore not see an input
-    * directory rewritten after its first read. */
-  private val tblCache = new java.util.WeakHashMap[
-    SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]()
+    * parquet files, and no computed result is held. Each cached frame
+    * holds its session, so an entry is released explicitly: the listener
+    * registered with the entry drops it when the session's application
+    * ends (`spark.stop()`). */
+  private val tblCache = scala.collection.mutable.HashMap.empty[
+    SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+  /** Whether `s` holds a [[tbl]] cache entry. */
+  private[graft] def tblCached(s: SparkSession): Boolean =
+    tblCache.synchronized(tblCache.contains(s))
+
+  /** Input tables are immutable for the life of a session: the memoized
+    * relation keeps the file listing of its first read, so a session
+    * must not see an input directory rewritten after that read. */
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = tblCache.synchronized {
-      var m = tblCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        tblCache.put(s, m)
-      }
-      m
+      tblCache.getOrElseUpdate(s, {
+        s.sparkContext.addSparkListener(
+          new org.apache.spark.scheduler.SparkListener {
+            override def onApplicationEnd(
+                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+              tblCache.synchronized(tblCache.remove(s)): Unit
+          })
+        scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+      })
     }
     perSession.getOrElseUpdate(s"$dir/$name.parquet", {
       val df = s.read.parquet(s"$dir/$name.parquet")

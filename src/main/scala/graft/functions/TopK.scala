@@ -173,4 +173,14 @@ object TopK {
       .select(col("qid"), col("nn.id").as("id"),
         col("nn.distance").as("distance"))
   }
+
+  /** The single-query cut every tier's `search` ends in: (id, distance)
+    * candidates → the k nearest, ascending by (distance, id). Plans as
+    * `TakeOrderedAndProject` — a bounded heap per partition, merged on
+    * the driver — so the search is one job with no exchange at any
+    * scale. `idCol` names the id column when it is not `id`. */
+  def one(scored: DataFrame, k: Int, idCol: String = "id"): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    scored.orderBy(col("distance"), col(idCol)).limit(k)
+  }
 }

@@ -65,6 +65,17 @@ object VectorOps {
         (x, m) => (x.cast("double") / m).cast("float")))
   }
 
+  /** Driver-side twin of [[normalizeF]] for one query vector,
+    * bit-identical to it: Σ x² folded in double from 0.0, `sqrt`, the
+    * same 1e-6 guard, then each element divided in double and narrowed
+    * back to float. */
+  def normalizeLocal(v: Array[Float]): Array[Float] = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
+    val mag = math.sqrt(s)
+    if (mag < 1e-6) v else v.map(x => (x.toDouble / mag).toFloat)
+  }
+
   /** Cosine *distance* 1 − a·b for pre-normalized inputs — the reference's
     * `cosine_similarity(…, normalized=true)` despite its name
     * (base.rs:128-156; the misnomer is documented at base.rs:153-155).

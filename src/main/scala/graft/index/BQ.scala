@@ -123,11 +123,12 @@ object BQ {
       val qBits =
         if (rotated) BqMath.packBitsD(codeFrame(query.map(_.toDouble)))
         else BqMath.packBits(query)
-      codes.filter(col("cluster").isin(probed: _*))
-        .select(col("id"),
-          BqMath.hammingDist(col("codes"), lit(qBits))
-            .cast("double").as("distance"))
-        .orderBy(col("distance"), col("id")).limit(k)
+      TopK.one(
+        codes.filter(col("cluster").isin(probed: _*))
+          .select(col("id"),
+            BqMath.hammingDist(col("codes"), lit(qBits))
+              .cast("double").as("distance")),
+        k)
     }
 
     /** Broadcast-budget gate for the entry points that BROADCAST their

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps.normalizeF
+import graft.functions.TopK
+import graft.functions.VectorOps.{normalizeF, normalizeLocal}
 
 /** Sharded HNSW as a Spark operator (SURVEY §2.6, §7 "hard parts").
   *
@@ -168,20 +169,9 @@ object HNSW {
         }
         if (mine.isEmpty) Iterator.empty
         else {
-          val g = deserialize(s.blob)
-          val dead = bcRemoved.value
-          // soft-delete over-fetch bounded PER SHARD: only this shard's
-          // own tombstones can displace live candidates here, so
-          // k + |dead ∩ shard| suffices to hold ≥ k live ids — a shard
-          // with no tombstoned ids pays no over-fetch at all (the
-          // count is one O(shard) pass next to the O(shard) deserialize)
-          val deadHere = if (dead.isEmpty) 0 else g.ids.count(dead.contains)
-          val kk = k + deadHere
+          val knn = liveKnn(deserialize(s.blob), bcRemoved.value, k)
           mine.iterator.flatMap { case (qid, qv) =>
-            g.searchKnn(qv, kk).iterator
-              .filterNot { case (id, _) => dead.contains(id) }
-              .take(k)
-              .map { case (id, d) => (qid, id, d) }
+            knn(qv).map { case (id, d) => (qid, id, d) }
           }
         }
       }
@@ -193,11 +183,23 @@ object HNSW {
         .toDF("qid", "id", "distance")
     }
 
+    /** Single-query top-k in one job with no exchange: the query is
+      * normalized on the driver ([[normalizeLocal]], bit-identical to the
+      * ingest's `normalizeF`), every shard beam-searches its own graph
+      * with the same tombstone over-fetch as [[searchMany]] and emits at
+      * most k (id, distance) rows, and [[TopK.one]] cuts the union.
+      * Shards partition the corpus, so no id repeats across shards and
+      * no dedup is needed: the rows equal the one-row `searchMany`'s.
+      * Routed models fan out to every shard here (`probeShards = 0`). */
     def search(query: Array[Float], k: Int): DataFrame = {
       val spark = shards.sparkSession
       import spark.implicits._
-      searchMany(Seq((0L, query)).toDF("qid", "qvec"), "qid", "qvec", k)
-        .drop("qid")
+      val qv = normalizeLocal(query)
+      val dead = removed // a local: the closure must not capture the Model
+      TopK.one(
+        shards.flatMap(s => liveKnn(deserialize(s.blob), dead, k)(qv))
+          .toDF("id", "distance"),
+        k)
     }
 
     /** Incremental add: route each new row to a shard (id hash — or its
@@ -313,6 +315,20 @@ object HNSW {
 
     /** Release the shard blobs' storage ([[Residency.cool]]). */
     def cool(): Unit = Residency.cool(shards)
+  }
+
+  /** One shard's live top-k, the per-shard search shared by
+    * [[Model.search]] and [[Model.searchMany]]. Soft-delete over-fetch
+    * is bounded PER SHARD: only this shard's own tombstones can displace
+    * live candidates here, so k + |dead ∩ shard| results hold ≥ k live
+    * ids — a shard with no tombstoned ids pays no over-fetch at all (the
+    * count is one O(shard) pass next to the O(shard) deserialize). */
+  private def liveKnn(g: HNSWGraph, dead: Set[Long],
+                      k: Int): Array[Float] => Iterator[(Long, Double)] = {
+    val kk = k + (if (dead.isEmpty) 0 else g.ids.count(dead.contains))
+    qv => g.searchKnn(qv, kk).iterator
+      .filterNot { case (id, _) => dead.contains(id) }
+      .take(k)
   }
 
   private[graft] def serialize(g: HNSWGraph): Array[Byte] = {

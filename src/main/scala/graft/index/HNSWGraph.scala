@@ -181,6 +181,10 @@ class HNSWGraph(val params: HNSWGraph.Params) extends Serializable {
     * candidates → k closest ascending. */
   def searchKnn(q: Array[Float], k: Int): Seq[(Long, Double)] = {
     if (entryPoint < 0) return Seq.empty
+    // dist loops over the node's length: a short query would throw
+    // mid-search and a long one would be scored on a prefix
+    require(q.length == vecs(entryPoint).length,
+      s"HNSW query dim ${q.length} != index dim ${vecs(entryPoint).length}")
     var ep = entryPoint
     var layer = levels(entryPoint)
     while (layer > 0) {

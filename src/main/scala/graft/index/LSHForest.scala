@@ -41,9 +41,11 @@ import graft.functions.VectorOps._
   * query's leaf; the reference backtracks into siblings until n candidates
   * — we compute the equivalent closed-form: walk up from the leaf until
   * the subtree holds ≥ n rows, then take every leaf under that prefix.
-  * Candidates = ONE equi-join of the (tree, path)-exploded corpus against
-  * the broadcast probe set, union across trees implicit, dedup by id
-  * (lsh.rs:266-272), exact re-rank, top-k.
+  * Batch candidates = ONE equi-join of the (tree, path)-exploded corpus
+  * against the broadcast probe set, union across trees implicit, dedup
+  * by id (lsh.rs:266-272), exact re-rank, top-k. A single query skips
+  * the join: one `paths` predicate keeps the union, then the exact
+  * re-rank and the one-query top-k cut.
   */
 object LSHForest {
 
@@ -226,12 +228,21 @@ object LSHForest {
         .toDF("qid", "id", "distance")
     }
 
-    /** Single-query search. */
+    /** Single-query top-k in one job with no exchange: each tree's
+      * probed leaves are computed on the driver (the same
+      * [[probeLeaves]] as [[searchMany]]), one predicate over `paths`
+      * keeps the rows whose leaf is probed in ANY tree — the cross-tree
+      * union, each id once, so no dedup — and
+      * [[graft.operators.Exhaustive.topK]] re-ranks them exactly against
+      * the literal query. Same candidates and distances as the one-row
+      * `searchMany`, so the same rows. */
     def search(query: Array[Float], k: Int): DataFrame = {
-      val spark = indexed.sparkSession
-      import spark.implicits._
-      searchMany(Seq((0L, query)).toDF("qid", "qvec"), "qid", "qvec", k)
-        .drop("qid")
+      val probed = trees.zipWithIndex.map { case (t, ti) =>
+        col("paths").getItem(ti)
+          .isin(probeLeaves(t, query, k.toLong, params.probes): _*)
+      }.reduce(_ || _)
+      graft.operators.Exhaustive.topK(indexed.filter(probed), "id", "vector",
+        typedlit(query), k)
     }
 
     /** Incremental add: descend existing planes for each new row (planes

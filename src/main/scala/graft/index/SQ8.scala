@@ -80,11 +80,12 @@ object SQ8 {
     def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
       Cells.requireDim("SQ8", query, centroids)
       val probed = probeSet(query, k, minProbe)
-      codes.filter(col("cluster").isin(probed: _*))
-        .select(col("id"),
-          Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
-            typedlit(codeFrameQ(query))).as("distance"))
-        .orderBy(col("distance"), col("id")).limit(k)
+      TopK.one(
+        codes.filter(col("cluster").isin(probed: _*))
+          .select(col("id"),
+            Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
+              typedlit(codeFrameQ(query))).as("distance")),
+        k)
     }
 
     /** Broadcast floats per QUERY row of the probe frame: nprobe

@@ -288,8 +288,7 @@ object Dedup {
     * self-join (posting-list sized) + one anti-join on id. */
   def prefixKeepFirst(docs: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 12, bandSize: Int = 2): DataFrame = {
-    val bands = minhashBands(docs, idCol, textCol, numHashes, bandSize)
-      .persist()
+    val bands = filled(minhashBands(docs, idCol, textCol, numHashes, bandSize))
     val out = prefixKeepFirstOf(docs, idCol, bands)
       .localCheckpoint(true)
     bands.unpersist()
@@ -309,14 +308,26 @@ object Dedup {
       .select(col(idCol))
   }
 
+  /** `df` persisted and filled by one eager pass, for a checkpointed
+    * pair plan that reads it from several branches: the checkpoint
+    * action submits those branches' stages as concurrent jobs, and on an
+    * unfilled cache they all miss at once — one computes each partition
+    * while the rest hold task slots blocked on the block lock (r15
+    * profile: 8 concurrent single-task jobs; the log shows `Block rdd_…
+    * already exists`). The caller unpersists after its checkpoint. */
+  private def filled(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.count()
+    p
+  }
+
   /** Near-dup candidate pairs via MinHash banding: docs sharing at least
     * one of numHashes/bandSize band buckets, with the shared-band count.
-    * The bands frame is persisted so the self-join evaluates the
+    * The bands frame is [[filled]] so the self-join evaluates the
     * signature pipeline once. */
   def minhashBandPairs(docs: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 12, bandSize: Int = 2): DataFrame = {
-    val bands = minhashBands(docs, idCol, textCol, numHashes, bandSize)
-      .persist()
+    val bands = filled(minhashBands(docs, idCol, textCol, numHashes, bandSize))
     val out = minhashPairsOf(bands)
       .localCheckpoint(true) // materialize the (small) pairs …
     bands.unpersist()        // … then release the signature frame
@@ -394,14 +405,7 @@ object Dedup {
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   threshold: Double = 0.5, k: Int = 5, w: Int = 4,
                   dfCap: Int = 64): DataFrame = {
-    val ex = winnowPostings(docs, idCol, textCol, k, w).persist()
-    // eager-materialize before the fan-out: the pair plan references
-    // the posting frame several times (df cap, sizes, intersections)
-    // and the checkpoint action submits those stages as concurrent
-    // jobs that would all hit the unfilled cache at once — one
-    // computes while the rest hold task slots blocked on the
-    // cache-manager lock (r15 profile: 8 concurrent single-task jobs)
-    ex.count()
+    val ex = filled(winnowPostings(docs, idCol, textCol, k, w))
     val out = jaccardPairsOf(capPostings(ex, dfCap), threshold)
       .localCheckpoint(true)
     ex.unpersist()
@@ -499,7 +503,7 @@ object Dedup {
     require(bits == 16 || bits == 64, s"bits must be 16 or 64, got $bits")
     val spark = docs.sparkSession
     import spark.implicits._
-    val fp = docs
+    val fp = filled(docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
@@ -511,8 +515,7 @@ object Dedup {
           (id, sim)
         }
       }
-      .toDF("id", "sim")
-      .persist()
+      .toDF("id", "sim"))
     val out = simhashPairsOf(fp, maxHamming, bits).localCheckpoint(true)
     fp.unpersist()
     out

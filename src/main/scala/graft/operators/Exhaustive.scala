@@ -12,7 +12,7 @@ import graft.functions.VectorOps._
   *
   * Two shapes:
   *  - [[topK]]: one query vector (a driver-side literal) against the corpus →
-  *    `orderBy(dist).limit(k)`, which Catalyst executes as
+  *    [[graft.functions.TopK.one]], which Catalyst executes as
   *    `TakeOrderedAndProject` — a per-partition bounded heap + driver merge,
   *    no full sort, no shuffle of the corpus. This is exactly the
   *    reference's bounded-heap top-k, distributed.
@@ -45,10 +45,10 @@ object Exhaustive {
     * (e.g. `typedLit(vec)`). Result: (idCol, distance) ascending. */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            query: Column, k: Int, metric: String = "sqdist"): DataFrame =
-    corpus
-      .select(col(idCol), distance(metric)(col(vecCol), query).as("distance"))
-      .orderBy(col("distance").asc, col(idCol).asc)
-      .limit(k)
+    TopK.one(
+      corpus.select(col(idCol),
+        distance(metric)(col(vecCol), query).as("distance")),
+      k, idCol)
 
   /** Bounded top-k with dedup-by-id over (id, distance) candidates —
     * the executor-local merge kernel shared by the index searches

@@ -351,8 +351,4 @@ class BQSpec extends SparkSpec {
     assert(df.select(BqMath.hammingDist(BqMath.packSignBits(col("v64")),
       BqMath.packSignBits(col("v64")))).head().getInt(0) == 0)
   }
-
-  private def hasMsg(t: Throwable, needle: String): Boolean =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
-      .exists(e => e.getMessage != null && e.getMessage.contains(needle))
 }

@@ -220,4 +220,22 @@ class HNSWSpec extends SparkSpec {
     assert(hit.getLong(1) == 42L)
     assert(math.abs(hit.getDouble(2)) < 1e-6)
   }
+
+  test("wrong-dimension queries fail loudly on search and searchMany") {
+    import spark.implicits._
+    val q = emb.filter(col("vec_id") === 3)
+      .select(col("embedding").cast("array<float>")).head()
+      .getAs[scala.collection.Seq[Float]](0).toArray
+    // short: dist would index past the query; long: dist would score a
+    // prefix and return wrong neighbours without a word
+    for (bad <- Seq(q.take(q.length - 1), q :+ 0.5f)) {
+      val one = intercept[Throwable](model.search(bad, 5).collect())
+      assert(hasMsg(one, s"HNSW query dim ${bad.length} != index dim ${q.length}"),
+        s"search: $one")
+      val many = intercept[Throwable](
+        model.searchMany(Seq((0L, bad)).toDF("qid", "qvec"), "qid", "qvec", 5).collect())
+      assert(hasMsg(many, s"HNSW query dim ${bad.length} != index dim ${q.length}"),
+        s"searchMany: $many")
+    }
+  }
 }

@@ -223,4 +223,21 @@ class LSHForestSpec extends SparkSpec {
     assert(hit.getAs[Long]("id") == 700123L)
     assert(hit.getAs[Double]("distance") == 0.0)
   }
+
+  test("wrong-dimension queries fail loudly on search and searchMany") {
+    import spark.implicits._
+    val q = emb.filter(col("vec_id") === 3)
+      .select(col("embedding").cast("array<float>")).head()
+      .getAs[scala.collection.Seq[Float]](0).toArray
+    assert(model.trees.forall(_.planes.nonEmpty))
+    for (bad <- Seq(q.take(q.length - 1), q :+ 0.5f)) {
+      val one = intercept[Throwable](model.search(bad, 5).collect())
+      assert(hasMsg(one, s"LSH plane dim ${q.length} != vector dim ${bad.length}"),
+        s"search: $one")
+      val many = intercept[Throwable](
+        model.searchMany(Seq((0L, bad)).toDF("qid", "qvec"), "qid", "qvec", 5).collect())
+      assert(hasMsg(many, s"LSH plane dim ${q.length} != vector dim ${bad.length}"),
+        s"searchMany: $many")
+    }
+  }
 }

@@ -189,6 +189,23 @@ class PlanSpec extends SparkSpec {
         df.queryExecution.executedPlan.toString.take(1200))
   }
 
+  test("single-query search on every tier: TakeOrderedAndProject, no Exchange") {
+    val emb = SearchOne.emb(spark, sf0001)
+    val q = SearchOne.queries(emb, 1).head
+    for ((name, search) <- SearchOne.tiers(emb)) {
+      val df = search(q)
+      df.collect()
+      val nodes = flatten(df.queryExecution.executedPlan)
+      val shown = df.queryExecution.executedPlan.toString.take(1200)
+      assert(nodes.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec]),
+        s"$name search must end in TakeOrderedAndProject:\n$shown")
+      assert(!nodes.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+        s"$name search plans an Exchange:\n$shown")
+    }
+  }
+
   test("LSH searchMany: exactly one row shuffle, probe side broadcast") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val model = graft.index.LSHForest.build(emb, "vec_id", "embedding",

@@ -33,6 +33,26 @@ class VectorOpsSpec extends SparkSpec {
     assert(tiny.getAs[scala.collection.Seq[Float]](1) .toSeq == Seq(1e-8f, 1e-8f)) // unchanged
   }
 
+  test("property: normalizeLocal is bit-identical to normalizeF (seeded random)") {
+    val rnd = new scala.util.Random(0x0e11L)
+    val random = Seq.fill(300) {
+      val d = 1 + rnd.nextInt(160)
+      val scale = math.pow(10.0, rnd.nextInt(13) - 6).toFloat // 1e-6 .. 1e6
+      Array.fill(d)((rnd.nextGaussian() * scale).toFloat)
+    }
+    // the zero vector, one below the 1e-6 guard, one just above it,
+    // and the empty vector all take the guard's branch or its edge
+    val edges = Seq(Array.fill(8)(0f), Array(3e-7f, 4e-7f),
+      Array(6e-7f, 8e-7f), Array.empty[Float])
+    val vs = random ++ edges
+    val viaSpark = vs.zipWithIndex.toDF("v", "i")
+      .select($"i", normalizeF($"v")).collect()
+      .sortBy(_.getInt(0)).map(_.getAs[scala.collection.Seq[Float]](1).toArray)
+    def bits(a: Array[Float]) = a.map(java.lang.Float.floatToRawIntBits).toSeq
+    for ((v, i) <- vs.zipWithIndex)
+      assert(bits(normalizeLocal(v)) == bits(viaSpark(i)), s"vector $i (dim ${v.length})")
+  }
+
   test("cosineDistance on normalized vectors = 1 - dot; self distance ~ 0") {
     val v = Array(0.6f, 0.8f)
     val df = one((v, v))
