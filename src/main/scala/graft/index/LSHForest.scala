@@ -471,8 +471,9 @@ object LSHForest {
     * depth — on deep trees (clustered data drives depth toward
     * maxDepth) stringifying those nested plans alone OOMed an 8 GB
     * driver. Checkpointing truncates lineage so every level plans
-    * against a flat scan; superseded level blocks are reclaimed by the
-    * ContextCleaner once the loop drops their references. */
+    * against a flat scan; each superseded level is released
+    * ([[Residency.cool]]) as soon as the next one is filled, so a build
+    * holds one level, not as many as GC timing leaves behind. */
   private def refine(
       ds0: org.apache.spark.sql.Dataset[(Long, Array[Float], Array[String])],
       planes: Array[scala.collection.mutable.Map[String, (Array[Double], Double)]],
@@ -505,6 +506,7 @@ object LSHForest {
           Array.tabulate(planes.length)(ti =>
             newPlanes.collect { case ((`ti`, p), pl) => p -> pl }.toMap)
         val bcPlanes = spark.sparkContext.broadcast(planesByTree)
+        val prev = ds
         ds = ds.map { case (id, v, paths) =>
           val pl = bcPlanes.value
           var ti = 0
@@ -519,6 +521,7 @@ object LSHForest {
           }
           (id, v, out)
         }.localCheckpoint(true)
+        Residency.cool(prev)
         newPlanes.foreach { case ((ti, p), pl) => planes(ti)(p) = pl }
       }
       level += 1

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.VectorOps._
 import graft.operators.TextOps._
@@ -44,48 +45,121 @@ object Dedup {
     * component label; keep-first = keep rows where id == comp
     * ([[keepFirstByPairs]]).
     *
-    * Min-label propagation with POINTER HALVING: each round first
-    * pushes labels one hop along edges, then shortcuts every node's
-    * label to its label's label (comp := label(comp) — valid because a
-    * label is always itself a node id, and labels only decrease). The
-    * shortcut compounds, so a diameter-d chain converges in O(log d)
-    * rounds instead of d — the property that matters when the pair
-    * graph has long chains (boilerplate families, embedding-space
-    * filaments), at the cost of one extra label-table self-join per
-    * round (label tables are pair-graph-sized, never corpus-sized).
-    * Per round: two equi-joins + one partial-aggregated groupBy, and
-    * the label state localCheckpoints so the plan stays O(1) deep at
-    * any round count (the [[graft.index.Lineage]] discipline).
-    * `maxRounds` bounds pathological graphs; labels only ever
-    * decrease, so the changed-count convergence test is exact.
+    * Size gate: the (src, dst) pairs are persisted and counted once,
+    * which fills the cache and sizes the graph ([[finishesOnDriver]]).
+    * A graph within both Spark's broadcast budget
+    * (`pairs × 16 B ≤ spark.sql.autoBroadcastJoinThreshold`; `-1`
+    * disables it) and the fixed [[maxDriverPairs]] cap is collected and
+    * finished by one union-find on the driver ([[componentsOnDriver]]),
+    * exact at any graph depth: 2 jobs on a local input, against 1 + 2
+    * per round for the loop. A larger graph runs min-label propagation
+    * distributed ([[componentsByRounds]]), and `maxRounds` bounds only
+    * that loop.
     *
-    * Action layout (r15 optimization): ONE localCheckpoint per round —
-    * the whole round (hop, min-combine, halving, changed-vs-previous
-    * flag) materializes as a single action, and the convergence count
-    * then reads the checkpointed blocks instead of re-running joins.
-    * The earlier layout (checkpoint `hopped`, then a separate
-    * count-with-join, then the un-checkpointed halving re-executing
-    * inside BOTH next-round consumers) executed the halving self-join
-    * up to three times per round and paid 2 actions + a join-bearing
-    * count; the self-join's shuffle now computes once (identical
-    * subtrees share one exchange via ReuseExchange, and the round
-    * state it builds on is a checkpoint, O(1) deep). Identical math,
-    * same fixed point, gated by the unchanged component-lane hashes. */
+    * Nodes and nulls, on both paths: every non-null endpoint is a
+    * node, and only such ids are output. A pair with a null endpoint
+    * joins nothing, so its non-null partner is at least a singleton;
+    * a self-loop (a, a) makes `a` a singleton. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  maxRounds: Int = 50): DataFrame = {
-    val e = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
+    val (edges, n) = filledCounted(pairs.select(col(aCol).cast("long").as("src"),
+      col(bCol).cast("long").as("dst")))
+    val budget = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val labels =
+      if (finishesOnDriver(n, budget)) componentsOnDriver(edges)
+      else componentsByRounds(edges, maxRounds)
+    edges.unpersist()
+    labels
+  }
+
+  /** Pair count above which [[components]] never collects the graph,
+    * whatever the broadcast budget (the default 10 MiB budget admits
+    * the same 655,360 pairs). The cap bounds driver memory, not time:
+    * the driver finish beat the loop at every size timed (the
+    * test-scope `graft.ComponentsGateTiming`, local[4] on a 4-vCPU VM:
+    * 2.6 s against 32 s at 650k pairs in 16-id blocks, 5.3 s against
+    * 64 s at 1.3M). At its peak the driver holds the collected and
+    * sorted id arrays (≤ 40 B per pair) and, while the local frame is
+    * built, one external and one internal row per node (≤ 2 nodes per
+    * pair); the finished frame kept ~55 B per node (36 MB at 650k
+    * pairs). */
+  private[graft] val maxDriverPairs: Long = 655360L
+
+  /** Whether [[components]] finishes a graph of `pairs` pairs on the
+    * driver under a broadcast budget of `budget` bytes. */
+  private[graft] def finishesOnDriver(pairs: Long, budget: Long): Boolean =
+    budget >= 0 && pairs <= math.min(budget / 16, maxDriverPairs)
+
+  /** The driver finish of [[components]]: collect the (filled) edges as
+    * primitive arrays, sort the distinct ids into a `long[]` and run
+    * union-find over their indices (union by the smaller root, path
+    * halving). Ids are sorted, so the smaller root index is the smaller
+    * id and every root is its component's minimum. */
+  private[graft] def componentsOnDriver(edges: DataFrame): DataFrame = {
+    // per partition: both-present pairs flattened, and the lone
+    // non-null endpoint of every pair with a null side
+    val packed = edges.rdd.mapPartitions { rows =>
+      val both = new scala.collection.mutable.ArrayBuilder.ofLong
+      val lone = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r =>
+        if (r.isNullAt(0)) { if (!r.isNullAt(1)) lone += r.getLong(1) }
+        else if (r.isNullAt(1)) lone += r.getLong(0)
+        else { both += r.getLong(0); both += r.getLong(1) }
+      }
+      Iterator.single((both.result(), lone.result()))
+    }.collect()
+    val ends = packed.flatMap(_._1)
+    val all = ends ++ packed.flatMap(_._2)
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.foreach(id => if (n == 0 || all(n - 1) != id) { all(n) = id; n += 1 })
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.range(0, ids.length)
+    def root(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < ends.length) {
+      val a = root(java.util.Arrays.binarySearch(ids, ends(i)))
+      val b = root(java.util.Arrays.binarySearch(ids, ends(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    val rows = new java.util.ArrayList[Row](ids.length)
+    ids.indices.foreach(j => rows.add(Row(ids(j), ids(root(j)))))
+    edges.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType), StructField("comp", LongType))))
+  }
+
+  /** The distributed finish of [[components]] for graphs above the
+    * broadcast budget: min-label propagation with POINTER HALVING. Each
+    * round first pushes labels one hop along edges, then shortcuts
+    * every node's label to its label's label (comp := label(comp) —
+    * valid because a label is always itself a node id, and labels only
+    * decrease). The shortcut compounds, so a diameter-d chain converges
+    * in O(log d) rounds instead of d. Per round: two equi-joins + one
+    * partial-aggregated groupBy, materialized by ONE localCheckpoint
+    * that also carries the changed-vs-previous flag the convergence
+    * count reads (the r15 layout); the superseded round state is
+    * released as soon as its successor is filled. Labels only ever
+    * decrease, so the changed-count convergence test is exact; but a
+    * graph not converged within `maxRounds` returns its last labels,
+    * which need not be minima (uniform random graphs of 50k pairs and
+    * more needed over 50 rounds in `graft.ComponentsGateTiming`). */
+  private[graft] def componentsByRounds(e: DataFrame, maxRounds: Int): DataFrame = {
     val edges = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
     // seed with the first hop: comp₀ = min(id, min neighbor). This IS
     // what round 1 of the loop would compute from identity labels
     // (prop carries neighbor ids), for one groupBy over the edge list
     // instead of a join + union + groupBy — every graph converges one
     // round earlier to the same fixed point (min reachable id).
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
+    var state = edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
       .select(col("src").as("id"),
         least(col("src"), col("__mn")).as("comp"))
       .localCheckpoint(true)
+    var labels = state
     var round = 0
     var changed = 1L
     while (changed > 0 && round < maxRounds) {
@@ -108,11 +182,12 @@ object Dedup {
         .select(col("id"), col("comp"),
           (col("comp") < col("__prev")).as("__chg"))
         .localCheckpoint(true)
+      graft.index.Residency.cool(state)
+      state = next
       changed = next.filter(col("__chg")).count()
       labels = next.select(col("id"), col("comp"))
       round += 1
     }
-    edges.unpersist()
     labels
   }
 
@@ -315,10 +390,14 @@ object Dedup {
     * while the rest hold task slots blocked on the block lock (r15
     * profile: 8 concurrent single-task jobs; the log shows `Block rdd_…
     * already exists`). The caller unpersists after its checkpoint. */
-  private def filled(df: DataFrame): DataFrame = {
+  private def filled(df: DataFrame): DataFrame = filledCounted(df)._1
+
+  /** [[filled]], with the row count its fill pass reads. An RDD count:
+    * the frame's own `count()` adds an aggregate exchange, which under
+    * AQE is a separate fill job and a shuffle job. */
+  private def filledCounted(df: DataFrame): (DataFrame, Long) = {
     val p = df.persist()
-    p.count()
-    p
+    (p, p.rdd.count())
   }
 
   /** Near-dup candidate pairs via MinHash banding: docs sharing at least

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * appear in everyone's list without reciprocating — drop out), and
   * clusters are the connected components of what remains. Everything
   * here is a narrow reshape + one count aggregate over the graph rows
-  * (corpus-linear: ≤ n·k rows in, ≤ n·k/2 out), then the
-  * [[Dedup.components]] min-label propagation. */
+  * (corpus-linear: ≤ n·k rows in, ≤ n·k/2 out), then
+  * [[Dedup.components]] (a driver union-find when the mutual edges fit
+  * the broadcast budget, min-label propagation otherwise). */
 object KnnGraph {
 
   /** Hard-negative mining over the kNN graph — the contrastive-

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextHashFast, TextOps}
@@ -15,7 +16,11 @@ class DedupSpec extends SparkSpec {
     // self-join fans it out, so concurrent branch jobs never race on an
     // unfilled cache and the job count is the same run after run (a
     // first, uncounted run pays the one-time input-table read)
-    for (lane <- Seq("dedup_simhash", "dedup_minhash", "dedup_prefix_keepfirst")) {
+    // pipeline_dedup and knn_graph_clusters end in Dedup.components,
+    // whose driver finish replaced the propagation rounds that made
+    // their job counts vary
+    for (lane <- Seq("dedup_simhash", "dedup_minhash", "dedup_prefix_keepfirst",
+        "pipeline_dedup", "knn_graph_clusters")) {
       def run(): Unit = SparkEntry.queries(lane)(spark, sf0001).count(): Unit
       run()
       val runs = Seq.fill(2)(jobsOf(run()))
@@ -196,20 +201,122 @@ class DedupSpec extends SparkSpec {
     assert(jac.isEmpty, "symmetric Jaccard must miss the partial copy")
   }
 
+  private val budgetKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `body` under a scoped broadcast budget (`-1` forces the
+    * distributed loop of [[Dedup.components]]). */
+  private def withBudget[T](budget: String)(body: => T): T = {
+    val old = spark.conf.getOption(budgetKey)
+    spark.conf.set(budgetKey, budget)
+    try body finally old.fold(spark.conf.unset(budgetKey))(spark.conf.set(budgetKey, _))
+  }
+
+  /** `body` on the driver finish (the session's default budget) and on
+    * the distributed loop, labelled by path. */
+  private def onBothPaths[T](body: => T): Seq[(String, T)] =
+    Seq("driver" -> body, "loop" -> withBudget("-1")(body))
+
+  /** The (id, comp) rows as a map, after checking that no id repeats
+    * (a map alone would hide a duplicate row). */
+  private def labels(df: DataFrame): Map[Long, Long] = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+    val m = rows.toMap
+    assert(rows.length == m.size, s"${rows.length} rows for ${m.size} ids")
+    m
+  }
+
   test("components: chains collapse to min id; keep-first drops exactly the losers") {
     // 1-2-3-4 is a 3-hop chain (forces multi-round propagation, given
     // in reversed edge order), 10-11 a pair, 20-21-22 a triangle-free vee
     val pairs = Seq((3L, 4L), (2L, 3L), (1L, 2L), (10L, 11L),
       (20L, 21L), (21L, 22L)).toDF("a", "b")
-    val got = Dedup.components(pairs, "a", "b").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
     val docs = (1L to 25L).toDF("id")
-    val kept = Dedup.keepFirstByPairs(docs, "id", pairs, "a", "b")
-      .collect().map(_.getLong(0)).toSet
-    // survivors: component minima (1, 10, 20) plus every unpaired id
-    assert(kept == (1L to 25L).toSet -- Set(2L, 3L, 4L, 11L, 21L, 22L))
+    for ((path, (got, kept)) <- onBothPaths {
+        (labels(Dedup.components(pairs, "a", "b")),
+          Dedup.keepFirstByPairs(docs, "id", pairs, "a", "b")
+            .collect().map(_.getLong(0)).toSet)
+      }) {
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L), path)
+      // survivors: component minima (1, 10, 20) plus every unpaired id
+      assert(kept == (1L to 25L).toSet -- Set(2L, 3L, 4L, 11L, 21L, 22L), path)
+    }
+  }
+
+  test("components: a null endpoint joins nothing, its partner and a self-loop stay singletons") {
+    val pairs = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
+      (Some(7L), Some(7L)), (None, None)).toDF("a", "b")
+    for ((path, got) <- onBothPaths(labels(Dedup.components(pairs, "a", "b"))))
+      assert(got == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 7L -> 7L), path)
+  }
+
+  test("components property: driver finish == loop == plain union-find on seeded graphs") {
+    // plain-Scala reference: union-find over a boxed map, min id as root
+    def reference(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val r = new scala.util.Random(seed)
+      val base = r.nextInt(2000) - 1000L
+      def id(span: Int) = base + r.nextInt(span)
+      val parts = Seq.fill(1 + r.nextInt(4))(r.nextInt(5) match {
+        case 0 => // a reversed chain: one hop per round without halving
+          val o = id(200)
+          (1 + r.nextInt(40) to 1 by -1).map(i => (o + i, o + i - 1))
+        case 1 => // a star around one hub
+          val hub = id(200)
+          Seq.fill(1 + r.nextInt(10))(hub -> id(200))
+        case 2 => // random pairs, some repeated and some reversed
+          val ps = Seq.fill(r.nextInt(15))((id(60), id(60)))
+          ps ++ ps.take(3) ++ ps.take(3).map(_.swap)
+        case 3 => Seq.fill(1 + r.nextInt(3)) { val a = id(200); (a, a) }
+        case _ => // isolated pairs, apart from everything else
+          Seq.fill(1 + r.nextInt(3)) { val a = id(500) + 3000; (a, a + 1000) }
+      }).flatten
+      r.shuffle(parts)
+    }
+    for (seed <- 1 to 50) {
+      val g = graph(seed)
+      val pairs = g.toDF("a", "b")
+      val want = reference(g)
+      for ((path, got) <- onBothPaths(labels(Dedup.components(pairs, "a", "b"))))
+        assert(got == want, s"seed $seed, $path path, pairs $g")
+    }
+  }
+
+  test("components: a raised broadcast budget still takes the loop above the driver cap") {
+    val cap = Dedup.maxDriverPairs
+    val gb = 1L << 30
+    assert(Dedup.finishesOnDriver(cap, gb))
+    assert(!Dedup.finishesOnDriver(cap + 1, gb))
+    assert(Dedup.finishesOnDriver(655360L, 10L << 20))
+    assert(!Dedup.finishesOnDriver(655361L, 10L << 20))
+    assert(!Dedup.finishesOnDriver(1L, -1L))
+    assert(Dedup.finishesOnDriver(0L, 0L))
+  }
+
+  test("components on a small graph launches at most 2 jobs") {
+    val pairs = Seq((3L, 4L), (2L, 3L), (1L, 2L), (10L, 11L)).toDF("a", "b")
+    val jobs = jobsOf(Dedup.components(pairs, "a", "b").collect(): Unit)
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("loop-path components keeps only the returned round state resident") {
+    val pairs = (0 until 299).map(i => (i.toLong, i + 1L)).toDF("a", "b")
+    withBudget("-1") {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val comps = Dedup.components(pairs, "a", "b")
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size == 1, s"persistent RDDs added: $added")
+      assert(comps.count() == 300)
+    }
   }
 
   test("embeddingPairs finds planted near-identical vector and nothing closer") {
@@ -411,11 +518,14 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // a single long chain: one-hop propagation needs 299 rounds and
     // would silently mislabel under maxRounds = 50; halving needs ~log
+    // (the driver finish is exact at any depth; the loop is the path
+    // maxRounds bounds)
     val pairs = (0 until 299).map(i => (i.toLong, i + 1L)).toDF("a", "b")
-    val comps = graft.operators.Dedup.components(pairs, "a", "b")
-      .as[(Long, Long)].collect()
-    assert(comps.length == 300)
-    assert(comps.forall(_._2 == 0L), comps.filter(_._2 != 0L).take(5).mkString(","))
+    for ((path, comps) <- onBothPaths(Dedup.components(pairs, "a", "b")
+        .as[(Long, Long)].collect())) {
+      assert(comps.length == 300, path)
+      assert(comps.forall(_._2 == 0L), s"$path: " + comps.filter(_._2 != 0L).take(5).mkString(","))
+    }
   }
 
   test("editVerifyPairs confirms close candidates, rejects band collisions") {

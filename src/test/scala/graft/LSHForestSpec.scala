@@ -38,6 +38,18 @@ class LSHForestSpec extends SparkSpec {
     }
   }
 
+  test("build keeps only the returned level resident") {
+    emb.count() // the input's own cache is not the build's
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val m = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 4, maxNodeSize = 32))
+    assert(m.trees.exists(_.planes.nonEmpty), "the build never split a level")
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persistent RDDs added: $added")
+    assert(m.indexed.count() == emb.count())
+  }
+
   test("self-query: every query finds itself at distance 0") {
     val queries = emb.filter(col("vec_id") < 20)
     val got = model.searchMany(queries, "vec_id", "embedding", k = 1)

@@ -77,6 +77,8 @@ class PlanSpec extends SparkSpec {
       ("topK(col(\"distance\")", "graft/functions/TopK.scala", "perQuery"),
       ("isin(cells", "graft/index/Cells.scala", "pruned"),
       ("s\"$dir/centroids\"", "graft/index/Cells.scala", ""),
+      // the one union-find: the driver finish of Dedup.components
+      ("parent(parent(", "graft/operators/Dedup.scala", "componentsOnDriver"),
       // the lane file's fixtures: one pinned-size IVF model, one query-token frame
       ("Array.fill(cents.length)(Long.MaxValue)", "graft/SparkEntry.scala", "pinnedIvf"),
       ("withColumnRenamed(\"doc_id\", \"qid\")", "graft/SparkEntry.scala", "queryTokens"))
