@@ -124,7 +124,7 @@ object BQ {
         if (rotated) BqMath.packBitsD(codeFrame(query.map(_.toDouble)))
         else BqMath.packBits(query)
       TopK.one(
-        codes.filter(col("cluster").isin(probed: _*))
+        codes.filter(Cells.inCells(probed))
           .select(col("id"),
             BqMath.hammingDist(col("codes"), lit(qBits))
               .cast("double").as("distance")),

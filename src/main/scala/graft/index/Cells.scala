@@ -2,7 +2,7 @@ package graft.index
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The probed-cell core shared by the IVF family ([[IVFFlat]], [[SQ8]],
@@ -58,23 +58,33 @@ private[graft] object Cells {
     require(q.length == centroids(0).length,
       s"$tier query dim ${q.length} != index dim ${centroids(0).length}")
 
+  /** Rows whose `cluster` is one of `cells` — the one cell-membership
+    * predicate of the IVF family. `array_contains` over a typed array
+    * literal: whole-stage codegen binds the array as one reference
+    * object, so the generated class is the same whatever cells are
+    * probed and a new probe set compiles nothing (`isin` inlines each
+    * int literal into the generated source, one fresh class per probe
+    * set). Parquet partition pruning on the partitionBy(cluster) save
+    * layout still applies: the predicate lands under `PartitionFilters`. */
+  def inCells(cells: Seq[Int]): Column =
+    array_contains(typedlit(cells), col("cluster"))
+
   /** Candidate rows of a serving batch: `table` joined on `cluster` to
     * the broadcast probe frame. The probe frame is broadcast-sized by
     * contract, and it feeds both the cell collect and the join, so it is
     * computed once (checkpointed). When the batch probes fewer than all
-    * `numCells` cells, the cell set rides the table scan as a `cluster`
-    * membership filter — partition pruning on the partitionBy(cluster)
-    * save layout, min/max batch skipping on cached frames — so a
-    * 10-query batch against a huge corpus reads the probed fraction,
-    * not every cell. Pure pruning: the equi-join enforces the same
-    * equality, so results are identical; batches that touch every cell
-    * skip the filter. */
+    * `numCells` cells, the cell set rides the table scan as an
+    * [[inCells]] filter — partition pruning on the partitionBy(cluster)
+    * save layout — so a 10-query batch against a huge saved corpus
+    * reads the probed fraction, not every cell. Pure pruning: the
+    * equi-join enforces the same equality, so results are identical;
+    * batches that touch every cell skip the filter. */
   def pruned(table: DataFrame, probes: DataFrame, numCells: Int): DataFrame = {
     val frame = probes.localCheckpoint(true)
     val cells = frame.select(col("cluster")).distinct()
       .collect().map(_.getInt(0))
     val scanned =
-      if (cells.length < numCells) table.filter(col("cluster").isin(cells.toSeq: _*))
+      if (cells.length < numCells) table.filter(inCells(cells.toSeq))
       else table
     scanned.join(broadcast(frame), Seq("cluster"))
   }

@@ -2,9 +2,11 @@ package graft.index
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TopK
 import graft.functions.VectorOps.{normalizeF, normalizeLocal}
@@ -61,6 +63,27 @@ object HNSW {
     private def cellMap(cells: Int): Array[Array[Int]] =
       cellShards.getOrElse(Array.tabulate(cells)(Array(_)))
 
+    /** The shard graphs decoded: one (shard, graph) per blob. [[warm]]
+      * keeps it resident (MEMORY_ONLY, deserialized objects), so a warm
+      * model's searches traverse graphs decoded once instead of
+      * Java-deserializing every blob per call; [[cool]] releases it.
+      * Searches only read the graphs (each `searchKnn` owns its visited
+      * set and heaps), and [[add]], [[rebuild]] and [[save]] work on the
+      * blobs, so a cached graph is never mutated. Per Model instance:
+      * a model that `add`, `remove`, `merge` or `rebuild` returns is cold
+      * until it is warmed. */
+    @transient private[graft] lazy val graphs: RDD[(Int, HNSWGraph)] =
+      decoded(shards.rdd)
+
+    /** The graphs of the shards `keep` admits: the resident decoded copy
+      * once [[warm]] has filled it, otherwise decoded from the blobs on
+      * this call — after the shard test, so a cold routed search
+      * decodes only the shards it probes. */
+    private def graphsOf(keep: Int => Boolean): RDD[(Int, HNSWGraph)] =
+      if (graphs.getStorageLevel != StorageLevel.NONE)
+        graphs.filter { case (sh, _) => keep(sh) }
+      else decoded(shards.rdd.filter(s => keep(s.shard)))
+
     /** Takedown — graph-index soft delete: removed ids stay in the
       * shard graphs as traversal waypoints but can never be RETURNED.
       * Each shard over-fetches k + |its own tombstones| candidates
@@ -113,13 +136,14 @@ object HNSW {
     }
 
     /** Batch top-k: broadcast queries, search shards locally, global
-      * per-query top-k merge. `probeShards = 0` (default) fans every
-      * query out to every shard — exact same candidates as a monolithic
-      * graph, the oracle config. With a ROUTED model ([[buildRouted]])
-      * and 0 < probeShards < numShards, each query is sent only to its
-      * probeShards nearest router cells (driver-side routing — the
-      * routers are driver state exactly like IVF centroids), cutting
-      * per-query cost from O(P × ef) to O(probeShards × ef).
+      * per-query top-k cut ([[TopK.perQuery]]). `probeShards = 0`
+      * (default) fans every query out to every shard — exact same
+      * candidates as a monolithic graph, the oracle config. With a
+      * ROUTED model ([[buildRouted]]) and 0 < probeShards < numShards,
+      * each query is sent only to its probeShards nearest router cells
+      * (driver-side routing — the routers are driver state exactly like
+      * IVF centroids), cutting per-query cost from O(P × ef) to
+      * O(probeShards × ef).
       *
       * Scale envelope: the query batch is collected and broadcast —
       * driver + executor memory is O(nQueries × dim × 4B), i.e. ~0.5 GB
@@ -155,32 +179,26 @@ object HNSW {
       val bcQ = spark.sparkContext.broadcast(qRows)
       val bcRoute = spark.sparkContext.broadcast(route)
       val bcRemoved = spark.sparkContext.broadcast(removed)
-      // per-shard k results shuffle as (qid, id, distance) triples; the
-      // global per-query merge is one bounded-heap pass (shards partition
-      // the corpus, so ids are distinct across shards). A shard with NO
-      // routed query never deserializes its graph — that skip is where
-      // routing pays at scale: blob deserialization dominates the
-      // per-shard cost (a 30k × 128f graph is ~16 MB), so small batches
-      // over thousands of shards touch probeShards×batch graphs, not P.
-      shards.flatMap { s =>
-        val r = bcRoute.value
-        val mine = bcQ.value.filter { case (qid, _) =>
-          r.forall(_(qid).contains(s.shard))
-        }
-        if (mine.isEmpty) Iterator.empty
-        else {
-          val knn = liveKnn(deserialize(s.blob), bcRemoved.value, k)
-          mine.iterator.flatMap { case (qid, qv) =>
-            knn(qv).map { case (id, d) => (qid, id, d) }
-          }
-        }
-      }
-        .groupByKey(_._1)
-        .flatMapGroups { (qid, it) =>
-          graft.operators.Exhaustive.topKDedup(it.map(t => (t._2, t._3)), k)
-            .map { case (id, d) => (qid, id, d) }
-        }
-        .toDF("qid", "id", "distance")
+      // each shard emits at most k (qid, id, distance) rows per query it
+      // serves, and TopK.perQuery cuts them: shards partition the
+      // corpus, so ids are unique per query. A shard with NO routed
+      // query is filtered out before its graph is touched — on a cold
+      // model it is never decoded, which is where routing pays at
+      // scale: blob deserialization dominates the per-shard cost (a
+      // 30k × 128f graph is ~16 MB), so small batches over thousands of
+      // shards decode probeShards×batch graphs, not P.
+      val probed = route.map(_.valuesIterator.flatten.toSet)
+      TopK.perQuery(
+        graphsOf(sh => probed.forall(_.contains(sh))).flatMap { case (sh, g) =>
+          val r = bcRoute.value
+          val knn = liveKnn(g, bcRemoved.value, k)
+          bcQ.value.iterator
+            .filter { case (qid, _) => r.forall(_(qid).contains(sh)) }
+            .flatMap { case (qid, qv) =>
+              knn(qv).map { case (id, d) => (qid, id, d) }
+            }
+        }.toDF("qid", "id", "distance"),
+        k)
     }
 
     /** Single-query top-k in one job with no exchange: the query is
@@ -190,14 +208,16 @@ object HNSW {
       * most k (id, distance) rows, and [[TopK.one]] cuts the union.
       * Shards partition the corpus, so no id repeats across shards and
       * no dedup is needed: the rows equal the one-row `searchMany`'s.
-      * Routed models fan out to every shard here (`probeShards = 0`). */
+      * Routed models fan out to every shard here (`probeShards = 0`).
+      * After [[warm]] the shards search their resident decoded graphs,
+      * so the call decodes nothing. */
     def search(query: Array[Float], k: Int): DataFrame = {
       val spark = shards.sparkSession
       import spark.implicits._
       val qv = normalizeLocal(query)
       val dead = removed // a local: the closure must not capture the Model
       TopK.one(
-        shards.flatMap(s => liveKnn(deserialize(s.blob), dead, k)(qv))
+        graphsOf(_ => true).flatMap { case (_, g) => liveKnn(g, dead, k)(qv) }
           .toDF("id", "distance"),
         k)
     }
@@ -309,12 +329,23 @@ object HNSW {
         s"""{"numLayers":${p.numLayers},"efConstruction":${p.efConstruction},"efSearch":${p.efSearch},"m":${p.m},"seed":${p.seed},"numShards":$numShards,"routed":${if (routers.isDefined) 1 else 0},"tombstones":${if (removed.nonEmpty) 1 else 0}}""")
     }
 
-    /** Pre-pay serving residency over the shard blobs
-      * ([[Residency.warm]] — see [[IVFFlat.Model.warm]]). */
-    def warm(): Model = { Residency.warm(shards); this }
+    /** Pre-pay serving residency: the shard blobs ([[Residency.warm]] —
+      * see [[IVFFlat.Model.warm]]) and the decoded graphs every search
+      * then reads, filled by one pass. Idempotent. */
+    def warm(): Model = {
+      Residency.warm(shards)
+      if (graphs.getStorageLevel == StorageLevel.NONE)
+        graphs.persist(StorageLevel.MEMORY_ONLY)
+      graphs.count()
+      this
+    }
 
-    /** Release the shard blobs' storage ([[Residency.cool]]). */
-    def cool(): Unit = Residency.cool(shards)
+    /** Release the decoded graphs and the shard blobs' storage
+      * ([[Residency.cool]]); searches decode per call again. */
+    def cool(): Unit = {
+      graphs.unpersist(blocking = true)
+      Residency.cool(shards)
+    }
   }
 
   /** One shard's live top-k, the per-shard search shared by
@@ -322,14 +353,21 @@ object HNSW {
     * is bounded PER SHARD: only this shard's own tombstones can displace
     * live candidates here, so k + |dead ∩ shard| results hold ≥ k live
     * ids — a shard with no tombstoned ids pays no over-fetch at all (the
-    * count is one O(shard) pass next to the O(shard) deserialize). */
+    * count is one O(shard) pass over the graph's ids). An id re-added
+    * after its removal holds two nodes in its shard; only the nearer
+    * one is emitted, so a shard never repeats an id. */
   private def liveKnn(g: HNSWGraph, dead: Set[Long],
                       k: Int): Array[Float] => Iterator[(Long, Double)] = {
     val kk = k + (if (dead.isEmpty) 0 else g.ids.count(dead.contains))
     qv => g.searchKnn(qv, kk).iterator
       .filterNot { case (id, _) => dead.contains(id) }
+      .distinctBy(_._1)
       .take(k)
   }
+
+  /** Each shard blob decoded into its graph. */
+  private def decoded(blobs: RDD[ShardBlob]): RDD[(Int, HNSWGraph)] =
+    blobs.map(s => (s.shard, deserialize(s.blob)))
 
   private[graft] def serialize(g: HNSWGraph): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

@@ -78,7 +78,7 @@ object IVFFlat {
     def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
       val probed = probeSet(query, k, minProbe)
       graft.operators.Exhaustive.topK(
-        indexed.filter(col("cluster").isin(probed: _*)),
+        indexed.filter(Cells.inCells(probed)),
         "id", "vector", typedlit(query), k)
     }
 
@@ -333,7 +333,7 @@ object IVFFlat {
       // seeded id-hash init: the splits(c) sample rows of each hot cell
       // (serving-sized collect — Σ splits rows, never the corpus)
       val hotRows = indexed
-        .filter(col("cluster").isin(hot.toSeq: _*))
+        .filter(Cells.inCells(hot.toSeq))
       val initRows = hotRows
         .withColumn("_rk", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("cluster"))

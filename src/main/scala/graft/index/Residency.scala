@@ -1,6 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Serving-residency control — the engine face for the block-residency
@@ -32,16 +35,28 @@ import org.apache.spark.storage.StorageLevel
   *
   * Only the frame passed in is touched: a derived frame's unpersist
   * never reaches blocks owned by other tiers (the checkpoint handle is
-  * used only when the frame's analyzed plan is itself the RDD leaf). */
+  * used only when the frame's analyzed plan is the RDD leaf itself, or
+  * a rename of all its columns in order — `checkpointed.toDF(names…)`,
+  * which holds exactly the checkpoint's rows). */
 object Residency {
 
   /** The frame's OWN materialized RDD, when the frame is exactly a
-    * checkpoint/RDD-backed plan (what `localCheckpoint(true)` returns).
-    * Derived plans return None — their leaves belong to other owners. */
+    * checkpoint/RDD-backed plan (what `localCheckpoint(true)` returns),
+    * possibly under a column rename. Derived plans return None — their
+    * leaves belong to other owners. */
   private def ownRdd(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
+      case r: LogicalRDD => Some(r.rdd)
+      case Project(cols, r: LogicalRDD) if renames(cols, r.output) => Some(r.rdd)
       case _ => None
+    }
+
+  /** True iff `cols` are `out` in order, each bare or under an alias. */
+  private def renames(cols: Seq[NamedExpression], out: Seq[Attribute]): Boolean =
+    cols.length == out.length && cols.zip(out).forall {
+      case (a: Attribute, o) => a.exprId == o.exprId
+      case (Alias(a: Attribute, _), o) => a.exprId == o.exprId
+      case _ => false
     }
 
   /** Persist (if nothing holds blocks for the frame yet) and touch

@@ -81,7 +81,7 @@ object SQ8 {
       Cells.requireDim("SQ8", query, centroids)
       val probed = probeSet(query, k, minProbe)
       TopK.one(
-        codes.filter(col("cluster").isin(probed: _*))
+        codes.filter(Cells.inCells(probed))
           .select(col("id"),
             Sq8Math.sq8Dist(col("codes"), col("lo"), col("scale"),
               typedlit(codeFrameQ(query))).as("distance")),

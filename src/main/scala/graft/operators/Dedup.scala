@@ -53,8 +53,9 @@ object Dedup {
     * finished by one union-find on the driver ([[componentsOnDriver]]),
     * exact at any graph depth: 2 jobs on a local input, against 1 + 2
     * per round for the loop. A larger graph runs min-label propagation
-    * distributed ([[componentsByRounds]]), and `maxRounds` bounds only
-    * that loop.
+    * distributed ([[componentsByRounds]]); `maxRounds` bounds only that
+    * loop, which throws IllegalStateException on a graph it has not
+    * converged on within that many rounds.
     *
     * Nodes and nulls, on both paths: every non-null endpoint is a
     * node, and only such ids are output. A pair with a null endpoint
@@ -65,11 +66,10 @@ object Dedup {
     val (edges, n) = filledCounted(pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst")))
     val budget = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val labels =
+    try {
       if (finishesOnDriver(n, budget)) componentsOnDriver(edges)
       else componentsByRounds(edges, maxRounds)
-    edges.unpersist()
-    labels
+    } finally edges.unpersist()
   }
 
   /** Pair count above which [[components]] never collects the graph,
@@ -144,10 +144,11 @@ object Dedup {
     * that also carries the changed-vs-previous flag the convergence
     * count reads (the r15 layout); the superseded round state is
     * released as soon as its successor is filled. Labels only ever
-    * decrease, so the changed-count convergence test is exact; but a
-    * graph not converged within `maxRounds` returns its last labels,
-    * which need not be minima (uniform random graphs of 50k pairs and
-    * more needed over 50 rounds in `graft.ComponentsGateTiming`). */
+    * decrease, so the changed-count convergence test is exact. A graph
+    * still changing after `maxRounds` rounds throws
+    * IllegalStateException instead of returning labels that need not
+    * be minima (uniform random graphs of 50k pairs and more needed
+    * over 50 rounds in `graft.ComponentsGateTiming`). */
   private[graft] def componentsByRounds(e: DataFrame, maxRounds: Int): DataFrame = {
     val edges = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     // seed with the first hop: comp₀ = min(id, min neighbor). This IS
@@ -187,6 +188,11 @@ object Dedup {
       changed = next.filter(col("__chg")).count()
       labels = next.select(col("id"), col("comp"))
       round += 1
+    }
+    if (changed > 0) {
+      graft.index.Residency.cool(state)
+      throw new IllegalStateException(s"components did not converge: " +
+        s"labels still changed after $round rounds (maxRounds = $maxRounds)")
     }
     labels
   }
@@ -435,7 +441,7 @@ object Dedup {
     * pairs. 0 = uncapped (the oracle configuration). */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.5, dfCap: Int = 0): DataFrame = {
-    val exAll = shinglePostings(docs, idCol, textCol).persist()
+    val exAll = filled(shinglePostings(docs, idCol, textCol))
     val out = jaccardPairsOf(capPostings(exAll, dfCap), threshold)
       .localCheckpoint(true)
     exAll.unpersist()
@@ -451,7 +457,7 @@ object Dedup {
     * as [[jaccardPairs]]. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double = 0.8, dfCap: Int = 0): DataFrame = {
-    val exAll = shinglePostings(docs, idCol, textCol).persist()
+    val exAll = filled(shinglePostings(docs, idCol, textCol))
     val out = containmentPairsOf(capPostings(exAll, dfCap), threshold)
       .localCheckpoint(true)
     exAll.unpersist()
@@ -814,10 +820,9 @@ object Dedup {
                              graft.index.LSHForest.Params(numTrees = 8, maxNodeSize = 64))
   : DataFrame = {
     val model = graft.index.LSHForest.build(emb, idCol, vecCol, params)
-    val idx = model.indexed
+    val idx = filled(model.indexed
       .select(col("id"), col("vector"),
-        posexplode(col("paths")).as(Seq("tree", "path")))
-      .persist()
+        posexplode(col("paths")).as(Seq("tree", "path"))))
     val out = embeddingPairsOf(idx, maxCosDist).localCheckpoint(true)
     idx.unpersist()
     out
@@ -919,7 +924,7 @@ object Dedup {
   def repeatedSpans(docs: DataFrame, idCol: String, textCol: String,
                     n: Int = 5, minDf: Int = 2): DataFrame = {
     require(n >= 2 && n <= 32, s"n=$n out of range [2,32]")
-    val grams = gramPositions(docs, idCol, textCol, n).persist()
+    val grams = filled(gramPositions(docs, idCol, textCol, n))
     val shared = grams.groupBy("gram_h")
       .agg(countDistinct(col("id")).as("df"))
       .filter(col("df") >= minDf)

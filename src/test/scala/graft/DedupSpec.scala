@@ -20,6 +20,7 @@ class DedupSpec extends SparkSpec {
     // whose driver finish replaced the propagation rounds that made
     // their job counts vary
     for (lane <- Seq("dedup_simhash", "dedup_minhash", "dedup_prefix_keepfirst",
+        "dedup_jaccard", "dedup_containment", "dedup_embed_lsh", "dedup_spans",
         "pipeline_dedup", "knn_graph_clusters")) {
       def run(): Unit = SparkEntry.queries(lane)(spark, sf0001).count(): Unit
       run()
@@ -526,6 +527,20 @@ class DedupSpec extends SparkSpec {
       assert(comps.length == 300, path)
       assert(comps.forall(_._2 == 0L), s"$path: " + comps.filter(_._2 != 0L).take(5).mkString(","))
     }
+  }
+
+  test("loop-path components fails loudly when maxRounds is too small, converges with enough") {
+    // a reversed 300-node chain: the loop needs several rounds even with
+    // pointer halving, so 2 rounds cannot converge
+    val pairs = (299 until 0 by -1).map(i => (i.toLong, i - 1L)).toDF("a", "b")
+    val want = labels(Dedup.components(pairs, "a", "b")) // driver finish
+    withBudget("-1") {
+      val e = intercept[IllegalStateException](Dedup.components(pairs, "a", "b", maxRounds = 2))
+      assert(e.getMessage.contains("after 2 rounds") && e.getMessage.contains("maxRounds = 2"),
+        e.getMessage)
+      assert(labels(Dedup.components(pairs, "a", "b", maxRounds = 50)) == want)
+    }
+    assert(want.size == 300 && want.values.forall(_ == 0L))
   }
 
   test("editVerifyPairs confirms close candidates, rejects band collisions") {

@@ -75,7 +75,8 @@ class PlanSpec extends SparkSpec {
     // "" = anywhere in that file)
     val owners = Seq(
       ("topK(col(\"distance\")", "graft/functions/TopK.scala", "perQuery"),
-      ("isin(cells", "graft/index/Cells.scala", "pruned"),
+      // the one cell-membership predicate (codegen-stable, see inCells)
+      ("array_contains(", "graft/index/Cells.scala", "inCells"),
       ("s\"$dir/centroids\"", "graft/index/Cells.scala", ""),
       // the one union-find: the driver finish of Dedup.components
       ("parent(parent(", "graft/operators/Dedup.scala", "componentsOnDriver"),
@@ -103,6 +104,12 @@ class PlanSpec extends SparkSpec {
       }.map(_._1).distinct
       assert(stray.isEmpty, s"$needle outside $owner $inDef")
     }
+    // no cell filter inlines its probe set as `isin` literals
+    val inlined = sources.collect {
+      case (file, src) if file.startsWith("graft/index/") &&
+        src.contains("isin(probed") => file
+    }
+    assert(inlined.isEmpty, s"isin(probed in ${inlined.mkString(", ")}")
   }
 
   test("knn join broadcasts the QUERY side, never the corpus") {
@@ -534,8 +541,8 @@ class PlanSpec extends SparkSpec {
     }
     val codeScan = scans.filter(_.contains("PartitionFilters"))
     assert(codeScan.exists(s =>
-        s.matches("(?s).*PartitionFilters: \\[[^\\]]*cluster[^\\]]*(IN|INSET|in)[^\\]]*\\].*")),
-      "probed-cluster In filter must reach PartitionFilters:\n" +
+        s.matches("(?s).*PartitionFilters: \\[[^\n]*array_contains\\(\\[[\\d,]+\\], cluster#\\d+\\).*")),
+      "probed-cluster filter (Cells.inCells) must reach PartitionFilters:\n" +
         codeScan.mkString("\n---\n").take(1200))
   }
 

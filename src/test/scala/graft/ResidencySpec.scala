@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
+
 import graft.index.Residency
 import graft.operators.{LateInteraction, Retrieval}
 
@@ -108,6 +111,7 @@ class ResidencySpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == hExpect)
     hnsw.cool()
     assert(!Residency.isResident(hnsw.shards))
+    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
     val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
       graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
     val lExpect = lsh.searchMany(q, "vec_id", "embedding", 3)
@@ -117,6 +121,55 @@ class ResidencySpec extends SparkSpec {
     assert(lsh.searchMany(q, "vec_id", "embedding", 3)
       .collect().map(_.toSeq).toSet == lExpect)
     lsh.cool()
+    assert(!Residency.isResident(lsh.indexed))
+  }
+
+  /** Every RDD the plan of `df` reads, through all dependencies. */
+  private def lineage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    def walk(r: RDD[_]): Set[Int] = r.dependencies.map(d => walk(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
+    walk(df.queryExecution.toRdd)
+  }
+
+  test("HNSW warm keeps the decoded shard graphs resident and searches read them") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 64)
+    val hnsw = graft.index.HNSW.build(emb, "vec_id", "embedding",
+      graft.index.HNSWGraph.Params(numLayers = 4, efConstruction = 32,
+        efSearch = 32, m = 8), numShards = 2)
+    val q = Array.fill(emb.first().getAs[scala.collection.Seq[Float]]("embedding").length)(0.1f)
+    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
+    assert(!lineage(hnsw.search(q, 3)).contains(hnsw.graphs.id),
+      "a cold search decodes the blobs on the call")
+    hnsw.warm()
+    assert(hnsw.graphs.getStorageLevel == StorageLevel.MEMORY_ONLY)
+    val sc = spark.sparkContext
+    assert(sc.getRDDStorageInfo.exists(i => i.id == hnsw.graphs.id && i.numCachedPartitions > 0),
+      "warm fills the decoded graphs")
+    assert(lineage(hnsw.search(q, 3)).contains(hnsw.graphs.id))
+    val qs = emb.filter(col("vec_id") < 5)
+    assert(lineage(hnsw.searchMany(qs, "vec_id", "embedding", 3)).contains(hnsw.graphs.id))
+    val before = sc.getPersistentRDDs.keySet
+    hnsw.warm() // idempotent: nothing new is persisted
+    assert(sc.getPersistentRDDs.keySet == before)
+    hnsw.cool()
+    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
+    assert(!Residency.isResident(hnsw.shards))
+  }
+
+  test("LSHForest build holds one checkpoint: warm adds no copy, cool releases it") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 64)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
+      graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
+    val built = sc.getPersistentRDDs.keySet -- before
+    assert(built.size == 1, s"persistent RDDs added by the build: $built")
+    assert(Residency.isResident(lsh.indexed), "the build's checkpoint is the indexed frame")
+    lsh.warm()
+    assert(sc.getPersistentRDDs.keySet -- before == built, "warm added a second copy")
+    lsh.cool()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "cool left the checkpoint resident")
     assert(!Residency.isResident(lsh.indexed))
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{BQ, HNSW, HNSWGraph, LSHForest, SQ8}
+import graft.index.{BQ, HNSW, HNSWGraph, IVFFlat, LSHForest, SQ8}
 
 /** The five tiers with a single-query `search`, each as (name, search
   * at k = 10), over the sf0.001 embeddings. Shared by the plan-shape
@@ -90,6 +90,97 @@ class SearchOneSpec extends SparkSpec {
     val gone = dead.removed
     assert(qs.forall(q => dead.search(q, K).collect()
       .forall(r => !gone.contains(r.getAs[Long]("id")))))
+  }
+
+  /** The per-query merge `searchMany` used before [[graft.functions.TopK.perQuery]]
+    * (per-shard top-k, then `Exhaustive.topKDedup`), run on the driver
+    * over the decoded blobs: each probed shard's k + |own tombstones|
+    * nearest, removed ids dropped, k kept; rows (qid, id, distance). */
+  private def mergedOnDriver(m: HNSW.Model, batch: Seq[Array[Float]],
+                             probeShards: Int): Seq[(Long, Long, Double)] = {
+    val graphs = m.shards.collect().map(s => s.shard -> HNSW.deserialize(s.blob))
+    batch.zipWithIndex.flatMap { case (q, qi) =>
+      val qv = graft.functions.VectorOps.normalizeLocal(q)
+      val probed: Int => Boolean = m.routers
+        .filter(c => probeShards > 0 && probeShards < c.length)
+        .fold[Int => Boolean](_ => true) { cents =>
+          val cells = m.cellShards.getOrElse(Array.tabulate(cents.length)(Array(_)))
+          cents.indices.sortBy(c => IVFFlat.sqDistLocal(cents(c), qv))
+            .take(probeShards).flatMap(c => cells(c)).toSet
+        }
+      val cands = graphs.iterator.filter(t => probed(t._1)).flatMap { case (_, g) =>
+        val kk = K + g.ids.count(m.removed.contains)
+        g.searchKnn(qv, kk).iterator.filterNot(t => m.removed.contains(t._1)).take(K)
+      }
+      graft.operators.Exhaustive.topKDedup(cands, K)
+        .map { case (id, d) => (qi.toLong, id, d) }.toSeq
+    }
+  }
+
+  private def batchRows(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
+      r.getAs[Double]("distance"))).toSeq.sortBy(t => (t._1, t._3, t._2))
+
+  test("HNSW searchMany == the per-shard topKDedup merge, cold and warm: plain, tombstoned, routed") {
+    import spark.implicits._
+    val params = HNSWGraph.Params(efConstruction = 40, m = 8)
+    val plain = HNSW.build(emb, "vec_id", "embedding", params, numShards = 4)
+    val dead = plain.remove(emb.filter(col("vec_id") % 7 === 0), "vec_id")
+    val routed = HNSW.buildRouted(emb, "vec_id", "embedding", params,
+      numShards = 4, routerIterations = 3)
+    val batch = qs.zipWithIndex.map { case (q, i) => (i.toLong, q) }.toDF("qid", "qvec")
+    for ((what, m, probe) <- Seq(("plain", plain, 0), ("tombstoned", dead, 0),
+        ("routed", routed, 0), ("routed probeShards = 2", routed, 2))) {
+      val want = mergedOnDriver(m, qs, probe)
+      assert(want.size == qs.size * K, s"$what: reference holds ${want.size} rows")
+      val cold = batchRows(m.searchMany(batch, "qid", "qvec", K, probe))
+      assert(cold == want, s"HNSW $what, cold:\n got  $cold\n want $want")
+      val coldOne = qs.map(q => m.search(q, K).collect().toSeq)
+      m.warm()
+      try {
+        assert(batchRows(m.searchMany(batch, "qid", "qvec", K, probe)) == want,
+          s"HNSW $what, warm")
+        assert(qs.map(q => m.search(q, K).collect().toSeq) == coldOne,
+          s"HNSW $what: warm search rows differ from cold")
+      } finally m.cool()
+    }
+  }
+
+  test("IVF-family search compiles the same code whatever cells it probes") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+    val (sq8, bq) = (SQ8.compress(ivf), BQ.compress(ivf))
+    val tiers = Seq[(String, Array[Float] => DataFrame)](
+      "IVFFlat" -> (q => ivf.search(q, K, 2)),
+      "SQ8" -> (q => sq8.search(q, K, 2)),
+      "BQ" -> (q => bq.search(q, K, 2)))
+    val cands = SearchOne.queries(emb, 64)
+    val a = cands.head
+    val b = cands.find(q => ivf.probeSet(q, K, 2).toSet != ivf.probeSet(a, K, 2).toSet)
+      .getOrElse(fail("no two queries with different probe sets"))
+    // generated source per whole-stage subtree, expression ids masked
+    def code(df: DataFrame): Seq[String] =
+      codegenStringSeq(df.queryExecution.executedPlan)
+        .map(_._2.replaceAll("#\\d+", "#"))
+    for ((name, search) <- tiers) {
+      val (ca, cb) = (code(search(a)), code(search(b)))
+      assert(ca.nonEmpty, s"$name: no whole-stage codegen in the search plan")
+      assert(ca == cb, s"$name: generated code depends on the probe set")
+    }
+  }
+
+  test("a saved-then-loaded IVFFlat search prunes cells as parquet partition filters") {
+    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+    val dir = java.nio.file.Files.createTempDirectory("ivf_cells").toString
+    ivf.save(dir)
+    val loaded = IVFFlat.load(spark, dir)
+    for (q <- SearchOne.queries(emb, 3)) {
+      val df = loaded.search(q, K, 2)
+      val plan = df.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*array_contains\\(".r.findFirstIn(plan).isDefined,
+        plan)
+      assert(df.collect().toSeq == ivf.search(q, K, 2).collect().toSeq)
+    }
   }
 
   test("LSHForest search == one-row searchMany: 3 trees, 3 probes") {
