@@ -6,21 +6,27 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Bounded max-heap of the k smallest (distance, id) pairs — primitive
   * arrays, no boxing, heap-ordered on (distance, id) so ties break by
-  * id exactly like [[graft.operators.Exhaustive.topKDedup]]. The
-  * aggregation buffer of [[TopKAggExpr]]. */
+  * id exactly like [[graft.operators.Exhaustive.topKDedup]]. Distances
+  * compare as Spark SQL sorts doubles (`SQLOrderingUtil.compareDoubles`:
+  * NaN after every number, NaN equal to NaN, −0.0 equal to 0.0), so
+  * every cut through this buffer keeps the rows `orderBy(distance, id)`
+  * keeps ([[TopK.one]]). The aggregation buffer of [[TopKAggExpr]] and
+  * the per-task buffer of [[graft.index.Serve.topK]]. */
 final class TopKBuf(val k: Int) {
   val ds = new Array[Double](k)
   val ids = new Array[Long](k)
   var size = 0
 
   // (d1,i1) strictly worse (further) than (d2,i2)
-  @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-    d1 > d2 || (d1 == d2 && i1 > i2)
+  @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(d1, d2)
+    c > 0 || (c == 0 && i1 > i2)
+  }
 
   @inline private def swap(a: Int, b: Int): Unit = {
     val td = ds(a); ds(a) = ds(b); ds(b) = td

@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.TopK
 import graft.functions.VectorOps.{normalizeF, normalizeLocal}
@@ -72,17 +72,18 @@ object HNSW {
       * blobs, so a cached graph is never mutated. Per Model instance:
       * a model that `add`, `remove`, `merge` or `rebuild` returns is cold
       * until it is warmed. */
-    @transient private[graft] lazy val graphs: RDD[(Int, HNSWGraph)] =
-      decoded(shards.rdd)
+    @transient private[graft] lazy val graphs =
+      new Serve.Resident(() => decoded(shards.rdd))
 
     /** The graphs of the shards `keep` admits: the resident decoded copy
       * once [[warm]] has filled it, otherwise decoded from the blobs on
       * this call — after the shard test, so a cold routed search
       * decodes only the shards it probes. */
     private def graphsOf(keep: Int => Boolean): RDD[(Int, HNSWGraph)] =
-      if (graphs.getStorageLevel != StorageLevel.NONE)
-        graphs.filter { case (sh, _) => keep(sh) }
-      else decoded(shards.rdd.filter(s => keep(s.shard)))
+      graphs.get match {
+        case Some(g) => g.filter { case (sh, _) => keep(sh) }
+        case None => decoded(shards.rdd.filter(s => keep(s.shard)))
+      }
 
     /** Takedown — graph-index soft delete: removed ids stay in the
       * shard graphs as traversal waypoints but can never be RETURNED.
@@ -201,25 +202,27 @@ object HNSW {
         k)
     }
 
-    /** Single-query top-k in one job with no exchange: the query is
-      * normalized on the driver ([[normalizeLocal]], bit-identical to the
-      * ingest's `normalizeF`), every shard beam-searches its own graph
-      * with the same tombstone over-fetch as [[searchMany]] and emits at
-      * most k (id, distance) rows, and [[TopK.one]] cuts the union.
-      * Shards partition the corpus, so no id repeats across shards and
-      * no dedup is needed: the rows equal the one-row `searchMany`'s.
-      * Routed models fan out to every shard here (`probeShards = 0`).
-      * After [[warm]] the shards search their resident decoded graphs,
-      * so the call decodes nothing. */
+    /** Single-query top-k in one RDD job with no exchange and no
+      * Catalyst planning ([[Serve.topK]]): the query is normalized on the
+      * driver ([[normalizeLocal]], bit-identical to the ingest's
+      * `normalizeF`), every shard beam-searches its own graph with the
+      * same tombstone over-fetch as [[searchMany]] into its task's top-k,
+      * and the driver merges them in (distance, id) order. Shards
+      * partition the corpus, so no id repeats across shards and no dedup
+      * is needed: the rows equal the one-row `searchMany`'s. Routed
+      * models fan out to every shard here (`probeShards = 0`). After
+      * [[warm]] the shards search their resident decoded graphs, so the
+      * call decodes nothing. The job runs inside the call; the returned
+      * local frame collects without one. */
     def search(query: Array[Float], k: Int): DataFrame = {
-      val spark = shards.sparkSession
-      import spark.implicits._
       val qv = normalizeLocal(query)
       val dead = removed // a local: the closure must not capture the Model
-      TopK.one(
-        graphsOf(_ => true).flatMap { case (_, g) => liveKnn(g, dead, k)(qv) }
-          .toDF("id", "distance"),
-        k)
+      val g = graphsOf(_ => true)
+      Serve.topK(g, g.partitions.indices, k, Scored) { (it, buf) =>
+        it.foreach { case (_, graph) =>
+          liveKnn(graph, dead, k)(qv).foreach { case (id, d) => buf.insert(d, id) }
+        }
+      }
     }
 
     /** Incremental add: route each new row to a shard (id hash — or its
@@ -334,19 +337,23 @@ object HNSW {
       * then reads, filled by one pass. Idempotent. */
     def warm(): Model = {
       Residency.warm(shards)
-      if (graphs.getStorageLevel == StorageLevel.NONE)
-        graphs.persist(StorageLevel.MEMORY_ONLY)
-      graphs.count()
+      graphs.warm()
       this
     }
 
     /** Release the decoded graphs and the shard blobs' storage
-      * ([[Residency.cool]]); searches decode per call again. */
+      * ([[Residency.cool]]); searches decode per call again. Launches no
+      * job. */
     def cool(): Unit = {
-      graphs.unpersist(blocking = true)
+      graphs.cool()
       Residency.cool(shards)
     }
   }
+
+  /** The (id, distance) schema [[Model.search]] returns. */
+  private val Scored = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("distance", DoubleType, nullable = false)))
 
   /** One shard's live top-k, the per-shard search shared by
     * [[Model.search]] and [[Model.searchMany]]. Soft-delete over-fetch

@@ -22,7 +22,10 @@ import graft.functions.VectorOps._
   *    partitioned by it; a probe is then a filter on the partition column →
   *    Spark partition pruning reads only the probed clusters. This replaces
   *    the reference's in-memory inverted lists (ivfflat.rs:122-130) with a
-  *    storage layout — the only structure that survives 100 TB.
+  *    storage layout — the only structure that survives 100 TB. A warmed
+  *    model additionally keeps each partition's rows packed and resident
+  *    (cell, id, vector; [[Model.warm]]), which is the in-memory list
+  *    shape again, one record per partition and no shuffle at warm.
   *  - Assignment: broadcast centroids + a narrow per-row argmin (no
   *    crossJoin blowup, no shuffle) — exactly the reference's rayon
   *    par_iter assignment (ivfflat.rs:29-46) in Spark's execution model.
@@ -32,7 +35,10 @@ import graft.functions.VectorOps._
   *    sizes), then exact re-rank within probed clusters only. Deviation
   *    (documented): we return the global top-k over the probed set, not
   *    the reference's per-cluster-precedence fill — strictly better
-  *    recall, same cost.
+  *    recall, same cost. A warm single `search` is one RDD job over the
+  *    packed rows plus a driver-side merge ([[Serve.topK]]), with no
+  *    per-call Catalyst planning; a cold one plans the partition-pruned
+  *    scan and ends in TakeOrderedAndProject. Batch searches always plan.
   *  - `add`: assign new rows against frozen centroids (centroids never
   *    retrained, matching ivfflat.rs:200-213) — but we honour the caller's
   *    id rather than shadowing it (ivfflat.rs:209 quirk, fixed per SURVEY
@@ -73,13 +79,34 @@ object IVFFlat {
       Cells.probes("IVFFlat", queries, qIdCol, qVecCol, centroids,
         clusterSizes, k, nprobe)((_, qid, q) => c => (qid, q, c))
 
-    /** Single-query search: partition-pruned scan of probed clusters →
-      * exact distance → TakeOrderedAndProject. */
-    def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
-      val probed = probeSet(query, k, minProbe)
+    /** The packed rows a warm model serves from ([[warm]], [[cool]]). */
+    @transient private[graft] lazy val serving =
+      new Serve.Resident(() => IVFFlat.packCells(indexed))
+
+    /** The schema of the cold search plan, which the warm path returns
+      * too: analyzed once per model, never per call. */
+    @transient private lazy val scoredSchema =
+      coldTopK(Seq.empty, Array.emptyFloatArray, 1).schema
+
+    private def coldTopK(probed: Seq[Int], query: Array[Float], k: Int): DataFrame =
       graft.operators.Exhaustive.topK(
         indexed.filter(Cells.inCells(probed)),
         "id", "vector", typedlit(query), k)
+
+    /** Single-query search over the probed cells. A warm model runs one
+      * RDD job over its resident packed rows, scoring only the rows of
+      * probed cells, and merges the per-task top-k on the driver
+      * ([[Serve.topK]]). A cold one plans a partition-pruned scan of the
+      * probed cells → exact distance → TakeOrderedAndProject, the only
+      * shape that prunes a loaded tier's parquet partitions without
+      * copying the tier. Both return the same rows and schema. */
+    def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
+      val probed = probeSet(query, k, minProbe)
+      serving.get match {
+        case Some(rows) =>
+          IVFFlat.serveCells(rows, probed, centroids.length, query, k, scoredSchema)
+        case None => coldTopK(probed, query, k)
+      }
     }
 
     /** Batch search: assign each query its probe clusters (broadcast
@@ -429,13 +456,16 @@ object IVFFlat {
       * tier scans parquet) and touch every block, so the FIRST query —
       * after a load, or after a big same-JVM scan spilled the blocks to
       * disk — serves at steady state instead of paying the ~3× re-warm
-      * the 100M smokes measured. Idempotent; returns this model. */
-    def warm(): Model = { Residency.warm(indexed); this }
+      * the 100M smokes measured. Then pack each partition of it into one
+      * resident record ([[packCells]], no shuffle) that [[search]]
+      * serves from. Idempotent; returns this model. */
+    def warm(): Model = { Residency.warm(indexed); serving.warm(); this }
 
-    /** Release the indexed frame's storage ([[Residency.cool]] — the
-      * caveats there: a cache-backed frame recomputes on next use, a
-      * checkpoint-backed one is dead after cooling). */
-    def cool(): Unit = Residency.cool(indexed)
+    /** Release the packed serving rows and the indexed frame's storage
+      * ([[Residency.cool]] — the caveats there: a cache-backed frame
+      * recomputes on next use, a checkpoint-backed one is dead after
+      * cooling). Launches no job. */
+    def cool(): Unit = { serving.cool(); Residency.cool(indexed) }
   }
 
   /** Shared adaptive probe-widening (single-query and batch paths MUST
@@ -451,6 +481,42 @@ object IVFFlat {
       need -= math.min(sizes(c), need) // saturate at 0: no underflow
     }
     out.result()
+  }
+
+  /** One partition of the indexed frame, packed for warm serving: the
+    * cell, id and vector of each row, in row order. */
+  private[graft] final case class CellRows(cells: Array[Int], ids: Array[Long],
+                                           vecs: Array[Array[Float]])
+
+  /** (cluster, id, vector) packed into one [[CellRows]] per partition of
+    * `indexed` — a narrow map, never a shuffle. */
+  private def packCells(indexed: DataFrame): org.apache.spark.rdd.RDD[CellRows] = {
+    import indexed.sparkSession.implicits._
+    indexed.select(col("cluster").cast("int"), col("id").cast("long"),
+        col("vector").cast("array<float>"))
+      .as[(Int, Long, Array[Float])].rdd
+      .mapPartitions { it =>
+        val rows = it.toArray
+        Iterator(CellRows(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
+      }
+  }
+
+  /** Warm search: every packed row whose cell is probed, scored exactly
+    * ([[Serve.sqDist]]), cut to k in one job. */
+  private def serveCells(rows: org.apache.spark.rdd.RDD[CellRows], probed: Seq[Int],
+                         numCells: Int, q: Array[Float], k: Int,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val mask = new Array[Boolean](numCells)
+    probed.foreach(mask(_) = true)
+    Serve.topK(rows, rows.partitions.indices, k, schema) { (it, buf) =>
+      it.foreach { p =>
+        var i = 0
+        while (i < p.ids.length) {
+          if (mask(p.cells(i))) buf.insert(Serve.sqDist(p.vecs(i), q), p.ids(i))
+          i += 1
+        }
+      }
+    }
   }
 
   private[graft] def sqDistLocal(a: Array[Float], b: Array[Float]): Double = {

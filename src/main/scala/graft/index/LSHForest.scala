@@ -45,7 +45,8 @@ import graft.functions.VectorOps._
   * against the broadcast probe set, union across trees implicit, dedup
   * by id (lsh.rs:266-272), exact re-rank, top-k. A single query skips
   * the join: one `paths` predicate keeps the union, then the exact
-  * re-rank and the one-query top-k cut.
+  * re-rank and the one-query top-k cut — or, on a warmed model, one RDD
+  * job over the resident packed rows and a driver-side merge.
   */
 object LSHForest {
 
@@ -228,21 +229,39 @@ object LSHForest {
         .toDF("qid", "id", "distance")
     }
 
-    /** Single-query top-k in one job with no exchange: each tree's
-      * probed leaves are computed on the driver (the same
-      * [[probeLeaves]] as [[searchMany]]), one predicate over `paths`
-      * keeps the rows whose leaf is probed in ANY tree — the cross-tree
-      * union, each id once, so no dedup — and
-      * [[graft.operators.Exhaustive.topK]] re-ranks them exactly against
-      * the literal query. Same candidates and distances as the one-row
-      * `searchMany`, so the same rows. */
-    def search(query: Array[Float], k: Int): DataFrame = {
-      val probed = trees.zipWithIndex.map { case (t, ti) =>
-        col("paths").getItem(ti)
-          .isin(probeLeaves(t, query, k.toLong, params.probes): _*)
-      }.reduce(_ || _)
+    /** The packed rows a warm model serves from ([[warm]], [[cool]]). */
+    @transient private[graft] lazy val serving =
+      new Serve.Resident(() => LSHForest.packPaths(indexed))
+
+    /** The schema of the cold search plan, which the warm path returns
+      * too: analyzed once per model, never per call. */
+    @transient private lazy val scoredSchema =
+      coldTopK(lit(false), Array.emptyFloatArray, 1).schema
+
+    private def coldTopK(probed: Column, query: Array[Float], k: Int): DataFrame =
       graft.operators.Exhaustive.topK(indexed.filter(probed), "id", "vector",
         typedlit(query), k)
+
+    /** Single-query top-k in one job with no exchange: each tree's
+      * probed leaves are computed on the driver (the same
+      * [[probeLeaves]] as [[searchMany]]), and the rows whose leaf is
+      * probed in ANY tree — the cross-tree union, each id once, so no
+      * dedup — are re-ranked exactly against the query. A warm model
+      * scores its resident packed rows in one RDD job and merges the
+      * per-task top-k on the driver ([[Serve.topK]]); a cold one plans
+      * one predicate over `paths` and
+      * [[graft.operators.Exhaustive.topK]]. Same candidates and
+      * distances as the one-row `searchMany`, so the same rows. */
+    def search(query: Array[Float], k: Int): DataFrame = {
+      val leaves = trees.map(t => probeLeaves(t, query, k.toLong, params.probes))
+      serving.get match {
+        case Some(rows) =>
+          LSHForest.servePaths(rows, leaves.map(_.toSet).toArray, query, k, scoredSchema)
+        case None =>
+          coldTopK(leaves.zipWithIndex.map { case (ls, ti) =>
+            col("paths").getItem(ti).isin(ls: _*)
+          }.reduce(_ || _), query, k)
+      }
     }
 
     /** Incremental add: descend existing planes for each new row (planes
@@ -347,12 +366,55 @@ object LSHForest {
     }
 
     /** Pre-pay serving residency over the path-indexed corpus
-      * ([[Residency.warm]] — see [[IVFFlat.Model.warm]]). */
-    def warm(): Model = { Residency.warm(indexed); this }
+      * ([[Residency.warm]] — see [[IVFFlat.Model.warm]]), then pack each
+      * partition into one resident record ([[packPaths]], no shuffle)
+      * that [[search]] serves from. Idempotent. */
+    def warm(): Model = { Residency.warm(indexed); serving.warm(); this }
 
-    /** Release the path-indexed corpus's storage ([[Residency.cool]]). */
-    def cool(): Unit = Residency.cool(indexed)
+    /** Release the packed serving rows and the path-indexed corpus's
+      * storage ([[Residency.cool]]). Launches no job. */
+    def cool(): Unit = { serving.cool(); Residency.cool(indexed) }
   }
+
+  /** One partition of the path-indexed corpus, packed for warm serving:
+    * the id, vector and per-tree leaf paths of each row, in row order. */
+  private[graft] final case class PathRows(ids: Array[Long], vecs: Array[Array[Float]],
+                                           paths: Array[Array[String]])
+
+  /** (id, vector, paths) packed into one [[PathRows]] per partition of
+    * `indexed` — a narrow map, never a shuffle. */
+  private def packPaths(indexed: DataFrame): org.apache.spark.rdd.RDD[PathRows] = {
+    import indexed.sparkSession.implicits._
+    indexed.select(col("id").cast("long"), col("vector").cast("array<float>"),
+        col("paths").cast("array<string>"))
+      .as[(Long, Array[Float], Array[String])].rdd
+      .mapPartitions { it =>
+        val rows = it.toArray
+        Iterator(PathRows(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
+      }
+  }
+
+  /** Warm search: every packed row whose leaf in some tree `ti` is in
+    * `probed(ti)`, scored exactly ([[Serve.sqDist]]), cut to k in one
+    * job. Rows with a null vector are skipped. */
+  private def servePaths(rows: org.apache.spark.rdd.RDD[PathRows],
+                         probed: Array[Set[String]], q: Array[Float], k: Int,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    Serve.topK(rows, rows.partitions.indices, k, schema) { (it, buf) =>
+      it.foreach { p =>
+        var i = 0
+        while (i < p.ids.length) {
+          val paths = p.paths(i)
+          var hit = false; var t = 0
+          while (!hit && t < probed.length) {
+            hit = probed(t).contains(paths(t)); t += 1
+          }
+          if (hit && p.vecs(i) != null)
+            buf.insert(Serve.sqDist(p.vecs(i), q), p.ids(i))
+          i += 1
+        }
+      }
+    }
 
   /** Perpendicular-bisector plane through the midpoint of (a, b)
     * (lsh.rs:72-80): normal = b − a, constant = −normal·midpoint.

@@ -526,8 +526,10 @@ object LateInteraction {
       * ([[graft.index.Residency.warm]]): persist-if-needed + touch every
       * indexed block, so the first query after a load (or after a big
       * same-JVM scan spilled blocks to disk) serves at steady state —
-      * the engine face for the r14 smoke's measurement-order finding. */
-    def warm(): TokenIvf = { ivf.warm(); this }
+      * the engine face for the r14 smoke's measurement-order finding.
+      * Token tiers serve batches only, so no single-search serving copy
+      * is packed ([[graft.index.IVFFlat.Model.warm]] would add one). */
+    def warm(): TokenIvf = { graft.index.Residency.warm(ivf.indexed); this }
 
     /** Release the float tier's storage ([[graft.index.Residency.cool]]
       * — cache-backed frames recompute on next use; checkpoint-backed

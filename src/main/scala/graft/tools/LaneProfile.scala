@@ -16,9 +16,12 @@ import scala.collection.mutable
   * Usage: runMain graft.tools.LaneProfile <sfDir> <lane[,lane...]> [reps]
   */
 object LaneProfile {
+  /** `stages`/`tasks` count every stage of the job, skipped ones
+    * included; `ran` counts the stages it actually submitted, so a job
+    * whose shuffle map stage another job already ran shows ran < stages. */
   private case class JobRec(id: Int, desc: String, start: Long,
                             var end: Long = 0L, var tasks: Int = 0,
-                            var stages: Int = 0)
+                            var stages: Int = 0, var ran: Int = 0)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -32,6 +35,8 @@ object LaneProfile {
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]
     val byId = mutable.HashMap.empty[Int, JobRec]
+    // stage → the latest started job holding it (the one that submits it)
+    val stageJob = mutable.HashMap.empty[Int, JobRec]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
         val desc = Option(js.properties)
@@ -42,6 +47,10 @@ object LaneProfile {
         r.stages = js.stageInfos.size
         r.tasks = js.stageInfos.map(_.numTasks).sum
         jobs += r; byId(js.jobId) = r
+        js.stageIds.foreach(stageJob(_) = r)
+      }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = synchronized {
+        stageJob.get(ss.stageInfo.stageId).foreach(_.ran += 1)
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
         byId.get(je.jobId).foreach(_.end = je.time)
@@ -53,7 +62,7 @@ object LaneProfile {
         .getOrElse(sys.error(s"no lane $lane"))._2
       var last = 0.0
       for (rep <- 1 to reps) {
-        jobs.clear(); byId.clear()
+        jobs.clear(); byId.clear(); stageJob.clear()
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
@@ -71,7 +80,7 @@ object LaneProfile {
             val gap = j.start - prevEnd
             gapTot += math.max(0L, gap)
             val dur = j.end - j.start
-            println(f"  job${j.id}%4d +${(j.start - t0ms)}%6dms gap=${gap}%5dms dur=${dur}%6dms stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
+            println(f"  job${j.id}%4d +${(j.start - t0ms)}%6dms gap=${gap}%5dms dur=${dur}%6dms stages=${j.stages}%2d ran=${j.ran}%2d tasks=${j.tasks}%4d  ${j.desc.take(110)}")
             prevEnd = math.max(prevEnd, j.end)
           }
           val jobTot = jobs.map(j => j.end - j.start).sum

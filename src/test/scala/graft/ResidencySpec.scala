@@ -111,7 +111,7 @@ class ResidencySpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == hExpect)
     hnsw.cool()
     assert(!Residency.isResident(hnsw.shards))
-    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
+    assert(hnsw.graphs.get.isEmpty)
     val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
       graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
     val lExpect = lsh.searchMany(q, "vec_id", "embedding", 3)
@@ -122,6 +122,7 @@ class ResidencySpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == lExpect)
     lsh.cool()
     assert(!Residency.isResident(lsh.indexed))
+    assert(lsh.serving.get.isEmpty)
   }
 
   /** Every RDD the plan of `df` reads, through all dependencies. */
@@ -130,6 +131,10 @@ class ResidencySpec extends SparkSpec {
     walk(df.queryExecution.toRdd)
   }
 
+  /** Every RDD the stages of the jobs `body` launches read. */
+  private def readsOf(body: => Unit): Set[Int] =
+    launchedBy(body).jobs.flatMap(_.stageInfos.flatMap(_.rddInfos.map(_.id))).toSet
+
   test("HNSW warm keeps the decoded shard graphs resident and searches read them") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .filter(col("vec_id") < 64)
@@ -137,22 +142,24 @@ class ResidencySpec extends SparkSpec {
       graft.index.HNSWGraph.Params(numLayers = 4, efConstruction = 32,
         efSearch = 32, m = 8), numShards = 2)
     val q = Array.fill(emb.first().getAs[scala.collection.Seq[Float]]("embedding").length)(0.1f)
-    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
-    assert(!lineage(hnsw.search(q, 3)).contains(hnsw.graphs.id),
-      "a cold search decodes the blobs on the call")
+    assert(hnsw.graphs.get.isEmpty)
+    hnsw.search(q, 3)
+    assert(hnsw.graphs.get.isEmpty, "a cold search decodes the blobs on the call")
     hnsw.warm()
-    assert(hnsw.graphs.getStorageLevel == StorageLevel.MEMORY_ONLY)
+    val graphs = hnsw.graphs.get.getOrElse(fail("warm left no decoded graphs"))
+    assert(graphs.getStorageLevel == StorageLevel.MEMORY_ONLY)
     val sc = spark.sparkContext
-    assert(sc.getRDDStorageInfo.exists(i => i.id == hnsw.graphs.id && i.numCachedPartitions > 0),
+    assert(sc.getRDDStorageInfo.exists(i => i.id == graphs.id && i.numCachedPartitions > 0),
       "warm fills the decoded graphs")
-    assert(lineage(hnsw.search(q, 3)).contains(hnsw.graphs.id))
+    assert(readsOf(hnsw.search(q, 3)).contains(graphs.id))
     val qs = emb.filter(col("vec_id") < 5)
-    assert(lineage(hnsw.searchMany(qs, "vec_id", "embedding", 3)).contains(hnsw.graphs.id))
+    assert(lineage(hnsw.searchMany(qs, "vec_id", "embedding", 3)).contains(graphs.id))
     val before = sc.getPersistentRDDs.keySet
     hnsw.warm() // idempotent: nothing new is persisted
     assert(sc.getPersistentRDDs.keySet == before)
     hnsw.cool()
-    assert(hnsw.graphs.getStorageLevel == StorageLevel.NONE)
+    assert(graphs.getStorageLevel == StorageLevel.NONE)
+    assert(hnsw.graphs.get.isEmpty)
     assert(!Residency.isResident(hnsw.shards))
   }
 
@@ -167,10 +174,68 @@ class ResidencySpec extends SparkSpec {
     assert(built.size == 1, s"persistent RDDs added by the build: $built")
     assert(Residency.isResident(lsh.indexed), "the build's checkpoint is the indexed frame")
     lsh.warm()
-    assert(sc.getPersistentRDDs.keySet -- before == built, "warm added a second copy")
+    val serving = lsh.serving.get.map(_.id).toSet
+    assert(serving.size == 1, "warm packs the serving copy")
+    assert(sc.getPersistentRDDs.keySet -- before == built ++ serving,
+      "warm added a copy of the checkpoint")
+    assert(Residency.isResident(lsh.indexed), "the checkpoint stays the indexed frame")
     lsh.cool()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "cool left the checkpoint resident")
     assert(!Residency.isResident(lsh.indexed))
+  }
+
+  test("IVFFlat and LSHForest warm add one persistent RDD, the serving copy; cool leaves none") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 64)
+    val sc = spark.sparkContext
+    val q = Array.fill(emb.first().getAs[scala.collection.Seq[Float]]("embedding").length)(0.1f)
+    def keys = sc.getPersistentRDDs.keySet
+    // `start`: the persisted RDDs before the model was built
+    def check(name: String, start: scala.collection.Set[Int], warm: => Unit, cool: => Unit,
+              serving: => Option[RDD[_]], search: => Unit): Unit = {
+      val built = keys
+      warm
+      val added = keys -- built
+      assert(added.size == 1 && serving.map(_.id).toSet == added,
+        s"$name warm added $added, serving copy ${serving.map(_.id)}")
+      assert(added.subsetOf(readsOf(search)), s"$name warm search does not read the copy")
+      warm // idempotent
+      assert(keys -- built == added, s"$name: a second warm packed again")
+      cool
+      assert(serving.isEmpty)
+      assert((keys -- start).isEmpty, s"$name cool left ${keys -- start} persisted")
+    }
+    val beforeIvf = keys
+    val ivf = graft.index.IVFFlat.build(emb, "vec_id", "embedding", params)
+    check("IVFFlat", beforeIvf, ivf.warm(), ivf.cool(), ivf.serving.get, ivf.search(q, 3))
+    val beforeLsh = keys
+    val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
+      graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
+    check("LSHForest", beforeLsh, lsh.warm(), lsh.cool(), lsh.serving.get, lsh.search(q, 3))
+  }
+
+  test("cool on a never-warmed model launches no job and builds nothing: IVFFlat, HNSW, LSHForest") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 64)
+    val dir = java.nio.file.Files.createTempDirectory("coolcold").toString
+    graft.index.IVFFlat.build(emb, "vec_id", "embedding", params).save(s"$dir/ivf")
+    graft.index.HNSW.build(emb, "vec_id", "embedding",
+      graft.index.HNSWGraph.Params(efConstruction = 32, m = 8), numShards = 2).save(s"$dir/hnsw")
+    graft.index.LSHForest.build(emb, "vec_id", "embedding",
+      graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16)).save(s"$dir/lsh")
+    val ivf = graft.index.IVFFlat.load(spark, s"$dir/ivf")
+    val hnsw = graft.index.HNSW.load(spark, s"$dir/hnsw")
+    val lsh = graft.index.LSHForest.load(spark, s"$dir/lsh")
+    val sc = spark.sparkContext
+    for ((name, cool, serving) <- Seq[(String, () => Unit, () => Option[RDD[_]])](
+        ("IVFFlat", () => ivf.cool(), () => ivf.serving.get),
+        ("HNSW", () => hnsw.cool(), () => hnsw.graphs.get),
+        ("LSHForest", () => lsh.cool(), () => lsh.serving.get))) {
+      val before = sc.getPersistentRDDs.keySet
+      assert(jobsOf(cool()) == 0, s"$name cool launched a job")
+      assert(sc.getPersistentRDDs.keySet == before, s"$name cool changed the persisted RDDs")
+      assert(serving().isEmpty, s"$name cool built a serving copy")
+    }
   }
 
   test("Bm25Index warm/cool round-trip on a loaded index") {

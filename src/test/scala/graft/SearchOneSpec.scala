@@ -183,6 +183,109 @@ class SearchOneSpec extends SparkSpec {
     }
   }
 
+  /** A search's rows as (id, distance bits): bit-identical distances,
+    * and NaN compares equal to NaN. */
+  private def bits(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getAs[Long]("id"),
+      java.lang.Double.doubleToLongBits(r.getAs[Double]("distance")))).toSeq
+
+  /** Every query searched on the cold model, then on the same model
+    * warmed: the same rows, bit for bit, under the same schema. */
+  private def warmEqualsCold(what: String, queries: Seq[Array[Float]],
+                             warm: () => Unit, cool: () => Unit,
+                             search: Array[Float] => DataFrame): Unit = {
+    val cold = queries.map(search)
+    val coldRows = cold.map(bits)
+    warm()
+    try {
+      for (((q, i), want) <- queries.zipWithIndex.zip(coldRows)) {
+        val got = search(q)
+        assert(got.schema == cold(i).schema,
+          s"$what query $i: warm schema ${got.schema} != cold ${cold(i).schema}")
+        assert(bits(got) == want, s"$what query $i:\n warm ${bits(got)}\n cold $want")
+      }
+    } finally cool()
+  }
+
+  test("warm search == cold search, row for row") {
+    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+    for (minProbe <- Seq(1, 2, ivf.centroids.length))
+      warmEqualsCold(s"IVFFlat minProbe $minProbe", qs, () => ivf.warm(), () => ivf.cool(),
+        ivf.search(_, K, minProbe))
+    val lsh = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 3, maxNodeSize = 32, probes = 3))
+    warmEqualsCold("LSHForest", qs, () => lsh.warm(), () => lsh.cool(), lsh.search(_, K))
+    val params = HNSWGraph.Params(efConstruction = 40, m = 8)
+    val plain = HNSW.build(emb, "vec_id", "embedding", params, numShards = 4)
+    val dead = plain.remove(emb.filter(col("vec_id") % 7 === 0), "vec_id")
+    val routed = HNSW.buildRouted(emb, "vec_id", "embedding", params,
+      numShards = 4, routerIterations = 3)
+    for ((what, m) <- Seq("plain" -> plain, "tombstoned" -> dead, "routed" -> routed)) {
+      warmEqualsCold(s"HNSW $what", qs, () => m.warm(), () => m.cool(), m.search(_, K))
+      // the schema of the plan the serving job replaced
+      import spark.implicits._
+      assert(m.search(qs.head, K).schema == Seq((0L, 0.0)).toDF("id", "distance").schema)
+    }
+  }
+
+  test("warm search: one job with one stage, and its result collects with no job") {
+    val q = SearchOne.queries(emb, 2)(1)
+    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+    val hnsw = HNSW.build(emb, "vec_id", "embedding",
+      HNSWGraph.Params(efConstruction = 40, m = 8), numShards = 4)
+    val lsh = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 2, maxNodeSize = 64, probes = 3))
+    for ((name, warm, cool, search) <- Seq[(String, () => Unit, () => Unit, () => DataFrame)](
+        ("IVFFlat", () => ivf.warm(): Unit, () => ivf.cool(), () => ivf.search(q, K, 2)),
+        ("HNSW", () => hnsw.warm(): Unit, () => hnsw.cool(), () => hnsw.search(q, K)),
+        ("LSHForest", () => lsh.warm(): Unit, () => lsh.cool(), () => lsh.search(q, K)))) {
+      warm()
+      try {
+        var df: DataFrame = null
+        val run = launchedBy { df = search() }
+        assert(run.jobs.size == 1, s"$name warm search launched ${run.jobs.size} jobs")
+        assert(run.stagesRun.size == 1, s"$name warm search ran ${run.stagesRun.size} stages")
+        assert(jobsOf(df.collect(): Unit) == 0, s"$name: collecting the result launched a job")
+        assert(df.collect().length == K)
+      } finally cool()
+    }
+  }
+
+  test("TopK.perQuery orders NaN distances as TopK.one does") {
+    import spark.implicits._
+    import graft.functions.TopK
+    val rows = Seq((1L, Double.NaN), (2L, 0.5), (3L, 0.1), (4L, 0.9), (5L, 0.2))
+    for ((cands, k) <- Seq(rows -> 2, rows -> 1, (rows :+ (0L -> Double.NaN)) -> 6)) {
+      val scored = cands.map { case (id, d) => (0L, id, d) }.toDF("qid", "id", "distance")
+        .repartition(2)
+      val one = bits(TopK.one(scored.drop("qid"), k))
+      val per = bits(TopK.perQuery(scored, k).orderBy("distance", "id"))
+      assert(per == one, s"k = $k:\n perQuery $per\n one      $one")
+    }
+    assert(bits(TopK.perQuery(rows.map { case (id, d) => (0L, id, d) }
+      .toDF("qid", "id", "distance"), 2)) == Seq(3L -> 0.1, 5L -> 0.2)
+      .map { case (id, d) => (id, java.lang.Double.doubleToLongBits(d)) })
+  }
+
+  test("a warm IVFFlat search equals the cold one on a corpus holding a NaN vector") {
+    import spark.implicits._
+    val cents = SparkEntry.fixedCentroids(emb)
+    val dim = cents.head.length
+    val corpus = emb.filter(col("vec_id") < 64)
+      .select(col("vec_id"), col("embedding").cast("array<float>"))
+      .union(Seq((1000L, Array.fill(dim)(Float.NaN))).toDF("vec_id", "embedding"))
+    val ivf = IVFFlat.Model(IVFFlat.Params(cents.length), cents,
+      Array.fill(cents.length)(Long.MaxValue),
+      IVFFlat.assign(corpus, "vec_id", "embedding", cents))
+    val queries = SearchOne.queries(emb, 3).toSeq
+    for (k <- Seq(5, 65)) {
+      warmEqualsCold(s"NaN corpus k = $k", queries, () => ivf.warm(), () => ivf.cool(),
+        ivf.search(_, k, cents.length))
+      val last = ivf.search(queries.head, k, cents.length).collect().last
+      assert((last.getAs[Long]("id") == 1000L) == (k == 65), s"k = $k: NaN row placement")
+    }
+  }
+
   test("LSHForest search == one-row searchMany: 3 trees, 3 probes") {
     val m = LSHForest.build(emb, "vec_id", "embedding",
       LSHForest.Params(numTrees = 3, maxNodeSize = 32, probes = 3))

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,18 +18,28 @@ trait SparkSpec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
       .exists(e => e.getMessage != null && e.getMessage.contains(needle))
 
-  /** Jobs `body` launches. Its jobs carry their own job group; a marker
-    * job in a second group follows, and since the listener bus delivers
-    * in order, the marker's start means every earlier start was seen. */
-  def jobsOf(body: => Unit): Int = {
+  /** Jobs `body` launches. */
+  def jobsOf(body: => Unit): Int = launchedBy(body).jobs.size
+
+  /** What `body` launches: the start events of its jobs, in order (each
+    * lists its stages, skipped ones included, and the RDDs they read),
+    * and the stages it actually ran. Its jobs carry their own job group;
+    * a marker job in a second group follows, and since the listener bus
+    * delivers in order, the marker's start means every earlier event
+    * was seen. */
+  def launchedBy(body: => Unit): SparkSpec.Launched = {
     val sc = spark.sparkContext
     val group = s"jobs-of-${System.nanoTime}"
     val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, StageInfo)]()
+    def groupOf(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
+        groupOf(e.properties).foreach(g => jobs.add(g -> e))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        groupOf(e.properties).foreach(g => ran.add(g -> e.stageInfo))
     }
     sc.addSparkListener(listener)
     try {
@@ -37,10 +47,12 @@ trait SparkSpec extends AnyFunSuite {
       body
       sc.setJobGroup(marker, marker)
       sc.parallelize(Seq(1), 1).count()
+      def markerSeen = jobs.asScala.exists(_._1 == marker)
       val deadline = System.nanoTime + 60L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "marker job never reached the listener")
-      seen.asScala.count(_ == group)
+      while (!markerSeen && System.nanoTime < deadline) Thread.sleep(10)
+      assert(markerSeen, "marker job never reached the listener")
+      SparkSpec.Launched(jobs.asScala.collect { case (`group`, e) => e }.toSeq,
+        ran.asScala.collect { case (`group`, s) => s }.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -49,6 +61,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  final case class Launched(jobs: Seq[SparkListenerJobStart], stagesRun: Seq[StageInfo])
+
   // local[8], not the entry points' core count: the plan shapes
   // PlanSpec pins depend on eight shuffle partitions
   lazy val session: SparkSession = Sessions.local(8)
