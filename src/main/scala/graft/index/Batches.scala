@@ -5,10 +5,12 @@ import org.apache.spark.sql.Dataset
 /** The driver-collect serving budget — enforcement for the documented
   * "queries/adds are the SMALL side" contract of the batch entry points
   * that collect + broadcast their batch (HNSW.searchMany/add,
-  * PQ/IVFPQ.searchMany). Those paths are O(batch × dim × 4 B) on the
-  * driver and every executor; a corpus-sized "batch" silently becomes a
-  * driver OOM hours into a job. This turns the contract into a fast,
-  * actionable failure at submit time instead.
+  * PQ/IVFPQ.searchMany, and the warm IVFFlat/LSHForest.searchMany,
+  * which collect theirs for a one-job scan). Those paths are
+  * O(batch × dim × 4 B) on the driver and every executor; a
+  * corpus-sized "batch" silently becomes a driver OOM hours into a job.
+  * This turns the contract into a fast, actionable failure at submit
+  * time instead.
   *
   * The budget is rows, configurable per session via
   * `graft.serving.maxBatch` (default 2²⁰ ≈ 1M rows ≈ 0.5 GB at 128f).

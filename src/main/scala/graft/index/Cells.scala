@@ -26,7 +26,8 @@ private[graft] object Cells {
     *
     * A query whose dimension differs from the index's fails the task:
     * the distance kernels iterate the shorter prefix, so a mismatched
-    * query would otherwise score a plausible, wrong partial distance. */
+    * query would otherwise score a plausible, wrong partial distance. A
+    * null query vector fails it too, naming the tier and the qid. */
   def probes[R <: Product : TypeTag](tier: String, queries: DataFrame,
                                      qIdCol: String, qVecCol: String,
                                      centroids: Array[Array[Float]],
@@ -43,6 +44,7 @@ private[graft] object Cells {
       .mapPartitions { it =>
         val (cents, sz) = bc.value
         it.flatMap { case (qid, qvec) =>
+          Serve.requireVector(tier, qid, qvec)
           requireDim(tier, qvec, cents)
           val row = frame(cents, qid, qvec)
           IVFFlat.probeOrder(cents, sz, qvec, k, nprobe).map(row)

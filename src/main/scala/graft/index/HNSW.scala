@@ -63,35 +63,40 @@ object HNSW {
     private def cellMap(cells: Int): Array[Array[Int]] =
       cellShards.getOrElse(Array.tabulate(cells)(Array(_)))
 
-    /** The shard graphs decoded: one (shard, graph) per blob. [[warm]]
-      * keeps it resident (MEMORY_ONLY, deserialized objects), so a warm
-      * model's searches traverse graphs decoded once instead of
-      * Java-deserializing every blob per call; [[cool]] releases it.
+    /** The shard graphs decoded: one [[ShardGraph]] per blob, with the
+      * count of its ids this model has removed. [[warm]] keeps it
+      * resident (MEMORY_ONLY, deserialized objects), so a warm model's
+      * searches traverse graphs decoded once instead of
+      * Java-deserializing every blob per call, and count each shard's
+      * tombstones once instead of per call (exact: `removed` is fixed
+      * per Model, and [[remove]] returns a new, cold one); [[cool]]
+      * releases it.
       * Searches only read the graphs (each `searchKnn` owns its visited
       * set and heaps), and [[add]], [[rebuild]] and [[save]] work on the
       * blobs, so a cached graph is never mutated. Per Model instance:
       * a model that `add`, `remove`, `merge` or `rebuild` returns is cold
       * until it is warmed. */
     @transient private[graft] lazy val graphs =
-      new Serve.Resident(() => decoded(shards.rdd))
+      new Serve.Resident(() => decoded(shards.rdd, removed))
 
     /** The graphs of the shards `keep` admits: the resident decoded copy
       * once [[warm]] has filled it, otherwise decoded from the blobs on
       * this call — after the shard test, so a cold routed search
       * decodes only the shards it probes. */
-    private def graphsOf(keep: Int => Boolean): RDD[(Int, HNSWGraph)] =
+    private def graphsOf(keep: Int => Boolean): RDD[ShardGraph] =
       graphs.get match {
-        case Some(g) => g.filter { case (sh, _) => keep(sh) }
-        case None => decoded(shards.rdd.filter(s => keep(s.shard)))
+        case Some(g) => g.filter(s => keep(s.shard))
+        case None => decoded(shards.rdd.filter(s => keep(s.shard)), removed)
       }
 
     /** Takedown — graph-index soft delete: removed ids stay in the
       * shard graphs as traversal waypoints but can never be RETURNED.
       * Each shard over-fetches k + |its own tombstones| candidates
-      * (counted per shard after deserialize, so a shard holding no
-      * tombstoned ids pays nothing), so among them at least k are live
-      * — filtered per-shard top-k is exactly the search over
-      * corpus-minus-removed (the standard HNSW soft-delete contract).
+      * (counted per shard when it is decoded — once at [[warm]] on a
+      * warm model — so a shard holding no tombstoned ids pays nothing),
+      * so among them at least k are live — filtered per-shard top-k is
+      * exactly the search over corpus-minus-removed (the standard HNSW
+      * soft-delete contract).
       * Scale envelope: the tombstone set is driver state sized to the
       * takedown workload (ids only), same budget class as a query
       * batch; per-shard search cost grows with that shard's tombstone
@@ -136,18 +141,28 @@ object HNSW {
       copy(shards = purged.localCheckpoint(true), removed = Set.empty)
     }
 
-    /** Batch top-k: broadcast queries, search shards locally, global
-      * per-query top-k cut ([[TopK.perQuery]]). `probeShards = 0`
-      * (default) fans every query out to every shard — exact same
-      * candidates as a monolithic graph, the oracle config. With a
+    /** Batch top-k: collect the queries, search shards locally, cut the
+      * global top-k per query. `probeShards = 0` (default) fans every
+      * query out to every shard — exact same candidates as a
+      * monolithic graph, the oracle config. With a
       * ROUTED model ([[buildRouted]]) and 0 < probeShards < numShards,
       * each query is sent only to its probeShards nearest router cells
       * (driver-side routing — the routers are driver state exactly like
       * IVF centroids), cutting per-query cost from O(P × ef) to
       * O(probeShards × ef).
       *
-      * Scale envelope: the query batch is collected and broadcast —
-      * driver + executor memory is O(nQueries × dim × 4B), i.e. ~0.5 GB
+      * A warm model ([[warm]]) answers in one RDD job over its resident
+      * decoded graphs ([[Serve.topKMany]]): each shard searches the
+      * queries routed to it, ships ≤ k rows per query, and the driver
+      * merges them — no shuffle and no per-call plan. A cold model, or a
+      * batch whose qids repeat, broadcasts the queries and cuts with
+      * [[TopK.perQuery]]. Both return the same rows under the same
+      * schema. k = 0 returns no rows and runs no job; a null query
+      * vector fails naming the qid.
+      *
+      * Scale envelope: the query batch is collected under the serving
+      * budget ([[Batches]], `graft.serving.maxBatch`) — driver +
+      * executor memory is O(nQueries × dim × 4B), i.e. ~0.5 GB
       * per million 128f queries. That is the right trade as long as the
       * query side is the SMALL side (the serving contract); for a
       * corpus-sized "query" set (join-all-against-all), don't use an
@@ -155,12 +170,11 @@ object HNSW {
       * (Dedup.embeddingPairsViaLSH), which never materializes a side. */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
                    k: Int, probeShards: Int = 0): DataFrame = {
+      if (k == 0) return Serve.noRows
       val spark = queries.sparkSession
       import spark.implicits._
-      val qRows = Batches.bounded(queries
-        .select(col(qIdCol).cast("long"),
-          normalizeF(col(qVecCol).cast("array<float>")))
-        .as[(Long, Array[Float])], "HNSW.searchMany query")
+      val qRows = Serve.batch(queries, qIdCol,
+        normalizeF(col(qVecCol).cast("array<float>")), "HNSW")
       // qid → probed shard set, None = probe all (no routers, or the
       // caller asked for full fan-out). Router order by sqdist of the
       // normalized query ≡ cosine order on the unit sphere. probeShards
@@ -177,29 +191,39 @@ object HNSW {
                 .take(probeShards).iterator.flatMap(c => cm(c)).toSet
             }.toMap
           }
-      val bcQ = spark.sparkContext.broadcast(qRows)
-      val bcRoute = spark.sparkContext.broadcast(route)
-      val bcRemoved = spark.sparkContext.broadcast(removed)
-      // each shard emits at most k (qid, id, distance) rows per query it
-      // serves, and TopK.perQuery cuts them: shards partition the
-      // corpus, so ids are unique per query. A shard with NO routed
-      // query is filtered out before its graph is touched — on a cold
-      // model it is never decoded, which is where routing pays at
-      // scale: blob deserialization dominates the per-shard cost (a
-      // 30k × 128f graph is ~16 MB), so small batches over thousands of
-      // shards decode probeShards×batch graphs, not P.
-      val probed = route.map(_.valuesIterator.flatten.toSet)
-      TopK.perQuery(
-        graphsOf(sh => probed.forall(_.contains(sh))).flatMap { case (sh, g) =>
-          val r = bcRoute.value
-          val knn = liveKnn(g, bcRemoved.value, k)
-          bcQ.value.iterator
-            .filter { case (qid, _) => r.forall(_(qid).contains(sh)) }
-            .flatMap { case (qid, qv) =>
-              knn(qv).map { case (id, d) => (qid, id, d) }
-            }
-        }.toDF("qid", "id", "distance"),
-        k)
+      val dead = removed // a local: closures must not capture the Model
+      graphs.get match {
+        case Some(g) if Serve.distinct(qRows.map(_._1)) =>
+          // shard → the batch positions of the queries routed to it
+          val routed = route.map(r =>
+            qRows.indices.flatMap(q => r(qRows(q)._1).map(_ -> q))
+              .groupMap(_._1)(_._2).map { case (sh, q) => sh -> q.toArray })
+          Serve.topKMany(g, g.partitions.indices, k, qRows.map(_._1))(
+            scoreShards(qRows.map(_._2), routed, dead, k))
+        case _ =>
+          val bcQ = spark.sparkContext.broadcast(qRows)
+          val bcRoute = spark.sparkContext.broadcast(route)
+          // each shard emits at most k (qid, id, distance) rows per query
+          // it serves, and TopK.perQuery cuts them: shards partition the
+          // corpus, so ids are unique per query. A shard with NO routed
+          // query is filtered out before its graph is touched — on a
+          // cold model it is never decoded, which is where routing pays
+          // at scale: blob deserialization dominates the per-shard cost
+          // (a 30k × 128f graph is ~16 MB), so small batches over
+          // thousands of shards decode probeShards×batch graphs, not P.
+          val probed = route.map(_.valuesIterator.flatten.toSet)
+          TopK.perQuery(
+            graphsOf(sh => probed.forall(_.contains(sh))).flatMap { s =>
+              val r = bcRoute.value
+              val knn = liveKnn(s, dead, k)
+              bcQ.value.iterator
+                .filter { case (qid, _) => r.forall(_(qid).contains(s.shard)) }
+                .flatMap { case (qid, qv) =>
+                  knn(qv).map { case (id, d) => (qid, id, d) }
+                }
+            }.toDF("qid", "id", "distance"),
+            k)
+      }
     }
 
     /** Single-query top-k in one RDD job with no exchange and no
@@ -215,14 +239,9 @@ object HNSW {
       * call decodes nothing. The job runs inside the call; the returned
       * local frame collects without one. */
     def search(query: Array[Float], k: Int): DataFrame = {
-      val qv = normalizeLocal(query)
-      val dead = removed // a local: the closure must not capture the Model
       val g = graphsOf(_ => true)
-      Serve.topK(g, g.partitions.indices, k, Scored) { (it, buf) =>
-        it.foreach { case (_, graph) =>
-          liveKnn(graph, dead, k)(qv).foreach { case (id, d) => buf.insert(d, id) }
-        }
-      }
+      Serve.topK(g, g.partitions.indices, k, Scored)(
+        scoreShards(Array(normalizeLocal(query)), None, removed, k))
     }
 
     /** Incremental add: route each new row to a shard (id hash — or its
@@ -355,26 +374,47 @@ object HNSW {
     StructField("id", LongType, nullable = false),
     StructField("distance", DoubleType, nullable = false)))
 
+  /** One decoded shard: its graph and how many of the graph's ids are
+    * tombstoned (`dead`, counted once when the shard is decoded). */
+  private[graft] final case class ShardGraph(shard: Int, graph: HNSWGraph, dead: Int)
+
   /** One shard's live top-k, the per-shard search shared by
     * [[Model.search]] and [[Model.searchMany]]. Soft-delete over-fetch
     * is bounded PER SHARD: only this shard's own tombstones can displace
     * live candidates here, so k + |dead ∩ shard| results hold ≥ k live
-    * ids — a shard with no tombstoned ids pays no over-fetch at all (the
-    * count is one O(shard) pass over the graph's ids). An id re-added
-    * after its removal holds two nodes in its shard; only the nearer
-    * one is emitted, so a shard never repeats an id. */
-  private def liveKnn(g: HNSWGraph, dead: Set[Long],
-                      k: Int): Array[Float] => Iterator[(Long, Double)] = {
-    val kk = k + (if (dead.isEmpty) 0 else g.ids.count(dead.contains))
-    qv => g.searchKnn(qv, kk).iterator
+    * ids — a shard with no tombstoned ids pays no over-fetch at all. An
+    * id re-added after its removal holds two nodes in its shard; only
+    * the nearer one is emitted, so a shard never repeats an id. */
+  private def liveKnn(s: ShardGraph, dead: Set[Long],
+                      k: Int): Array[Float] => Iterator[(Long, Double)] =
+    qv => s.graph.searchKnn(qv, k + s.dead).iterator
       .filterNot { case (id, _) => dead.contains(id) }
       .distinctBy(_._1)
       .take(k)
+
+  /** The serving scan over decoded shards, shared by single and warm
+    * batch search: each shard searches the queries routed to it
+    * (`routed`: shard → batch positions; None = every query) with
+    * [[liveKnn]], and a shard with no routed query is not touched. */
+  private def scoreShards(qs: Array[Array[Float]], routed: Option[Map[Int, Array[Int]]],
+                          dead: Set[Long], k: Int): Serve.Score[ShardGraph] = {
+    val every = qs.indices.toArray
+    (it, bufs) => it.foreach { s =>
+      val mine = routed.fold(every)(_.getOrElse(s.shard, Array.emptyIntArray))
+      if (mine.nonEmpty) {
+        val knn = liveKnn(s, dead, k)
+        mine.foreach(q => knn(qs(q)).foreach { case (id, d) => bufs(q).insert(d, id) })
+      }
+    }
   }
 
-  /** Each shard blob decoded into its graph. */
-  private def decoded(blobs: RDD[ShardBlob]): RDD[(Int, HNSWGraph)] =
-    blobs.map(s => (s.shard, deserialize(s.blob)))
+  /** Each shard blob decoded into its graph, with the count of its ids
+    * in `removed` (one O(shard) pass, none when nothing is removed). */
+  private def decoded(blobs: RDD[ShardBlob], removed: Set[Long]): RDD[ShardGraph] =
+    blobs.map { s =>
+      val g = deserialize(s.blob)
+      ShardGraph(s.shard, g, if (removed.isEmpty) 0 else g.ids.count(removed.contains))
+    }
 
   private[graft] def serialize(g: HNSWGraph): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

@@ -38,7 +38,9 @@ import graft.functions.VectorOps._
   *    recall, same cost. A warm single `search` is one RDD job over the
   *    packed rows plus a driver-side merge ([[Serve.topK]]), with no
   *    per-call Catalyst planning; a cold one plans the partition-pruned
-  *    scan and ends in TakeOrderedAndProject. Batch searches always plan.
+  *    scan and ends in TakeOrderedAndProject. A warm batch search is
+  *    likewise one job over the packed rows with a per-query driver
+  *    merge ([[Serve.topKMany]]); a cold one plans the pruned probe join.
   *  - `add`: assign new rows against frozen centroids (centroids never
   *    retrained, matching ivfflat.rs:200-213) — but we honour the caller's
   *    id rather than shadowing it (ivfflat.rs:209 quirk, fixed per SURVEY
@@ -104,24 +106,45 @@ object IVFFlat {
       val probed = probeSet(query, k, minProbe)
       serving.get match {
         case Some(rows) =>
-          IVFFlat.serveCells(rows, probed, centroids.length, query, k, scoredSchema)
+          Serve.topK(rows, rows.partitions.indices, k, scoredSchema)(
+            IVFFlat.scoreCells(Array(query), Array(probed), centroids.length))
         case None => coldTopK(probed, query, k)
       }
     }
 
-    /** Batch search: assign each query its probe clusters (broadcast
-      * centroids, narrow), equi-join on `cluster` against the
-      * cell-pruned indexed corpus ([[Cells.pruned]] — shuffles only
-      * probed candidates, never the full corpus), exact distance
-      * codegen-narrow, per-query top-k ([[TopK.perQuery]]). */
+    /** Batch search. A warm model ([[warm]]) collects the batch under
+      * the serving budget ([[Batches]], `graft.serving.maxBatch`; the
+      * cold plan broadcasts its probe frame, so the batch is
+      * broadcast-sized either way), computes each query's probe cells
+      * on the driver ([[probeSet]], the order the cold plan computes per
+      * task), and scores its resident packed rows in one RDD job
+      * ([[Serve.topKMany]]): a row is scored only against the queries
+      * that probe its cell, each task ships ≤ k rows per query, and the
+      * driver merges them — no shuffle and no per-call plan. A cold
+      * model, or a batch whose qids repeat, assigns each query its probe
+      * clusters (broadcast centroids, narrow), equi-joins on `cluster`
+      * against the cell-pruned indexed corpus ([[Cells.pruned]] —
+      * shuffles only probed candidates, never the full corpus), exact
+      * distance codegen-narrow, per-query top-k ([[TopK.perQuery]]). Both
+      * return the same rows under the same schema. k = 0 returns no rows
+      * and runs no job; a null query vector fails naming the qid. */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
                    k: Int, nprobe: Int = 2): DataFrame =
-      TopK.perQuery(
-        Cells.pruned(indexed, probes(queries, qIdCol, qVecCol, k, nprobe),
-            centroids.length)
-          .select(col("qid"), col("id"),
-            sqDist(col("vector"), col("qvec")).as("distance")),
-        k)
+      if (k == 0) Serve.noRows
+      else serving.get.map(_ -> Serve.batch(queries, qIdCol,
+          col(qVecCol).cast("array<float>"), "IVFFlat")) match {
+        case Some((rows, batch)) if Serve.distinct(batch.map(_._1)) =>
+          Serve.topKMany(rows, rows.partitions.indices, k, batch.map(_._1))(
+            IVFFlat.scoreCells(batch.map(_._2), batch.map(q => probeSet(q._2, k, nprobe)),
+              centroids.length))
+        case _ =>
+          TopK.perQuery(
+            Cells.pruned(indexed, probes(queries, qIdCol, qVecCol, k, nprobe),
+                centroids.length)
+              .select(col("qid"), col("id"),
+                sqDist(col("vector"), col("qvec")).as("distance")),
+            k)
+      }
 
     /** Radius (range) search on the index tier — the FAISS
       * IndexIVF.range_search counterpart: probe each query's `nprobe`
@@ -501,20 +524,27 @@ object IVFFlat {
       }
   }
 
-  /** Warm search: every packed row whose cell is probed, scored exactly
-    * ([[Serve.sqDist]]), cut to k in one job. */
-  private def serveCells(rows: org.apache.spark.rdd.RDD[CellRows], probed: Seq[Int],
-                         numCells: Int, q: Array[Float], k: Int,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val mask = new Array[Boolean](numCells)
-    probed.foreach(mask(_) = true)
-    Serve.topK(rows, rows.partitions.indices, k, schema) { (it, buf) =>
-      it.foreach { p =>
-        var i = 0
-        while (i < p.ids.length) {
-          if (mask(p.cells(i))) buf.insert(Serve.sqDist(p.vecs(i), q), p.ids(i))
-          i += 1
+  /** The warm scan over packed rows, shared by single and batch
+    * search: each row is scored exactly ([[Serve.sqDist]]) against every
+    * query that probes its cell (`probed(q)` are query q's cells). Rows
+    * with a null vector are skipped, as the cold batch plan's top-k
+    * skips their null distance. */
+  private def scoreCells(qs: Array[Array[Float]], probed: Array[Seq[Int]],
+                         numCells: Int): Serve.Score[CellRows] = {
+    val byCell = Array.fill(numCells)(Array.newBuilder[Int])
+    for (q <- probed.indices; c <- probed(q)) byCell(c) += q
+    val queriesOf = byCell.map(_.result())
+    (it, bufs) => it.foreach { p =>
+      var i = 0
+      while (i < p.ids.length) {
+        val v = p.vecs(i)
+        val mine = queriesOf(p.cells(i))
+        var j = 0
+        while (v != null && j < mine.length) {
+          bufs(mine(j)).insert(Serve.sqDist(v, qs(mine(j))), p.ids(i))
+          j += 1
         }
+        i += 1
       }
     }
   }

@@ -45,8 +45,8 @@ import graft.functions.VectorOps._
   * against the broadcast probe set, union across trees implicit, dedup
   * by id (lsh.rs:266-272), exact re-rank, top-k. A single query skips
   * the join: one `paths` predicate keeps the union, then the exact
-  * re-rank and the one-query top-k cut — or, on a warmed model, one RDD
-  * job over the resident packed rows and a driver-side merge.
+  * re-rank and the one-query top-k cut. On a warmed model both are one
+  * RDD job over the resident packed rows and a driver-side merge.
   */
 object LSHForest {
 
@@ -190,16 +190,41 @@ object LSHForest {
                    indexed: DataFrame /* id, vector, paths: array<string> */,
                    addsSinceCompact: Int = 0) {
 
-    /** Batch top-k: per query per tree, probe leaves; ONE equi-join of
-      * the exploded corpus against the broadcast probes; distances are
-      * computed codegen-narrow BEFORE the only shuffle, which then moves
-      * 16-byte (qid, id, distance) triples — never vectors; per-query
-      * top-k + cross-tree dedup by id (lsh.rs:266-272 DashSet union)
-      * happen in one bounded-heap pass per qid group (duplicates of an
-      * id carry bit-identical distances, so heap-membership dedup is
-      * exact). One shuffle total vs dropDuplicates + window's two. */
+    /** Batch top-k. A warm model ([[warm]]) collects the batch under the
+      * serving budget ([[Batches]], `graft.serving.maxBatch`; the cold
+      * plan broadcasts its probe frame, so the batch is broadcast-sized
+      * either way), runs each tree's [[probeLeaves]] per query on the
+      * driver, and scores its resident packed rows in one RDD job
+      * ([[Serve.topKMany]]): a row is scored once against each query
+      * that probes its leaf in any tree — the cross-tree union the cold
+      * plan's dedup forms — each task ships ≤ k rows per query, and the
+      * driver merges them, with no shuffle and no per-call plan.
+      *
+      * A cold model, or a batch whose qids repeat: per query per tree,
+      * probe leaves; ONE equi-join of the exploded corpus against the
+      * broadcast probes; distances are computed codegen-narrow BEFORE
+      * the only shuffle, which then moves 16-byte (qid, id, distance)
+      * triples — never vectors; per-query top-k + cross-tree dedup by id
+      * (lsh.rs:266-272 DashSet union) happen in one bounded-heap pass
+      * per qid group (duplicates of an id carry bit-identical distances,
+      * so heap-membership dedup is exact). One shuffle total vs
+      * dropDuplicates + window's two. Both paths return the same rows
+      * under the same schema. k = 0 returns no rows and runs no job; a
+      * null query vector fails naming the qid. */
     def searchMany(queries: DataFrame, qIdCol: String, qVecCol: String,
-                   k: Int): DataFrame = {
+                   k: Int): DataFrame =
+      if (k == 0) Serve.noRows
+      else serving.get.map(_ -> Serve.batch(queries, qIdCol,
+          col(qVecCol).cast("array<float>"), "LSHForest")) match {
+        case Some((rows, batch)) if Serve.distinct(batch.map(_._1)) =>
+          Serve.topKMany(rows, rows.partitions.indices, k, batch.map(_._1))(
+            LSHForest.scorePaths(batch.map(_._2),
+              trees.map(t => batch.map(q => probeLeaves(t, q._2, k.toLong, params.probes)))))
+        case _ => coldMany(queries, qIdCol, qVecCol, k)
+      }
+
+    private def coldMany(queries: DataFrame, qIdCol: String, qVecCol: String,
+                         k: Int): DataFrame = {
       val spark = queries.sparkSession
       import spark.implicits._
       val bcTrees = spark.sparkContext.broadcast(trees)
@@ -209,6 +234,7 @@ object LSHForest {
                 col(qVecCol).cast("array<float>").as("qvec"))
         .as[(Long, Array[Float])]
         .flatMap { case (qid, qvec) =>
+          Serve.requireVector("LSHForest", qid, qvec)
           bcTrees.value.iterator.zipWithIndex.flatMap { case (t, ti) =>
             probeLeaves(t, qvec, k.toLong, nProbes)
               .map(p => (qid, qvec, ti, p))
@@ -256,7 +282,8 @@ object LSHForest {
       val leaves = trees.map(t => probeLeaves(t, query, k.toLong, params.probes))
       serving.get match {
         case Some(rows) =>
-          LSHForest.servePaths(rows, leaves.map(_.toSet).toArray, query, k, scoredSchema)
+          Serve.topK(rows, rows.partitions.indices, k, scoredSchema)(
+            LSHForest.scorePaths(Array(query), leaves.map(Array(_))))
         case None =>
           coldTopK(leaves.zipWithIndex.map { case (ls, ti) =>
             col("paths").getItem(ti).isin(ls: _*)
@@ -394,27 +421,47 @@ object LSHForest {
       }
   }
 
-  /** Warm search: every packed row whose leaf in some tree `ti` is in
-    * `probed(ti)`, scored exactly ([[Serve.sqDist]]), cut to k in one
-    * job. Rows with a null vector are skipped. */
-  private def servePaths(rows: org.apache.spark.rdd.RDD[PathRows],
-                         probed: Array[Set[String]], q: Array[Float], k: Int,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    Serve.topK(rows, rows.partitions.indices, k, schema) { (it, buf) =>
+  /** The warm scan over packed rows, shared by single and batch
+    * search: `probed(t)(q)` are query q's probed leaves in tree t, and
+    * each row is scored exactly ([[Serve.sqDist]]) once against every
+    * query that probes its leaf in some tree — the cross-tree union,
+    * each id once per query. Rows with a null vector are skipped. */
+  private def scorePaths(qs: Array[Array[Float]],
+                         probed: IndexedSeq[Array[Seq[String]]]): Serve.Score[PathRows] = {
+    // per tree: leaf → the batch positions of the queries probing it
+    val queriesOf = probed.map { leaves =>
+      leaves.indices.flatMap(q => leaves(q).map(_ -> q))
+        .groupMap(_._1)(_._2).map { case (leaf, q) => leaf -> q.toArray }
+    }.toArray
+    (it, bufs) => {
+      // seen(q) == row: query q already scored this row through an
+      // earlier tree (rows are numbered from 1 within the task)
+      val seen = new Array[Int](qs.length)
+      var row = 0
       it.foreach { p =>
         var i = 0
         while (i < p.ids.length) {
-          val paths = p.paths(i)
-          var hit = false; var t = 0
-          while (!hit && t < probed.length) {
-            hit = probed(t).contains(paths(t)); t += 1
+          row += 1
+          val v = p.vecs(i)
+          var t = 0
+          while (v != null && t < queriesOf.length) {
+            val mine = queriesOf(t).getOrElse(p.paths(i)(t), Array.emptyIntArray)
+            var j = 0
+            while (j < mine.length) {
+              val q = mine(j)
+              if (seen(q) != row) {
+                seen(q) = row
+                bufs(q).insert(Serve.sqDist(v, qs(q)), p.ids(i))
+              }
+              j += 1
+            }
+            t += 1
           }
-          if (hit && p.vecs(i) != null)
-            buf.insert(Serve.sqDist(p.vecs(i), q), p.ids(i))
           i += 1
         }
       }
     }
+  }
 
   /** Perpendicular-bisector plane through the midpoint of (a, b)
     * (lsh.rs:72-80): normal = b − a, constant = −normal·midpoint.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopK
@@ -56,7 +57,10 @@ object Exhaustive {
     * (distance, id); duplicate ids (same candidate reached via several
     * trees/shards, bit-identical distance) are dropped via heap
     * membership — O(k) per candidate, no unbounded seen-set. Output
-    * ascending by (distance, id).
+    * ascending by (distance, id), distances compared as Spark SQL sorts
+    * doubles (NaN after every number, NaN equal to NaN), so the cut is
+    * the one [[graft.functions.TopK.one]] and [[graft.functions.TopKBuf]]
+    * make whatever order the candidates arrive in.
     *
     * k-envelope: state is O(k) and the membership scan makes each group
     * O(candidates × k); callers feed ≤ (partitions|trees|shards) × k
@@ -66,16 +70,16 @@ object Exhaustive {
     * hash set — not worth the allocation below it. */
   def topKDedup(it: Iterator[(Long, Double)], k: Int): Iterator[(Long, Double)] = {
     // max-heap on (distance, id): root = current worst of the kept k
-    val ord = Ordering.by[(Long, Double), (Double, Long)](t => (t._2, t._1))
+    val ord: Ordering[(Long, Double)] = (a, b) => {
+      val c = SQLOrderingUtil.compareDoubles(a._2, b._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
     val heap = new scala.collection.mutable.PriorityQueue[(Long, Double)]()(ord)
-    it.foreach { case cand @ (id, d) =>
+    it.foreach { case cand @ (id, _) =>
       if (heap.size < k) {
         if (!heap.exists(_._1 == id)) heap.enqueue(cand)
-      } else {
-        val (wid, wd) = heap.head
-        if (d < wd || (d == wd && id < wid)) {
-          if (!heap.exists(_._1 == id)) { heap.dequeue(); heap.enqueue(cand) }
-        }
+      } else if (ord.lt(cand, heap.head)) {
+        if (!heap.exists(_._1 == id)) { heap.dequeue(); heap.enqueue(cand) }
       }
     }
     heap.dequeueAll.reverseIterator

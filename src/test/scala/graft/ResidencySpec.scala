@@ -125,12 +125,6 @@ class ResidencySpec extends SparkSpec {
     assert(lsh.serving.get.isEmpty)
   }
 
-  /** Every RDD the plan of `df` reads, through all dependencies. */
-  private def lineage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
-    def walk(r: RDD[_]): Set[Int] = r.dependencies.map(d => walk(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
-    walk(df.queryExecution.toRdd)
-  }
-
   /** Every RDD the stages of the jobs `body` launches read. */
   private def readsOf(body: => Unit): Set[Int] =
     launchedBy(body).jobs.flatMap(_.stageInfos.flatMap(_.rddInfos.map(_.id))).toSet
@@ -153,7 +147,7 @@ class ResidencySpec extends SparkSpec {
       "warm fills the decoded graphs")
     assert(readsOf(hnsw.search(q, 3)).contains(graphs.id))
     val qs = emb.filter(col("vec_id") < 5)
-    assert(lineage(hnsw.searchMany(qs, "vec_id", "embedding", 3)).contains(graphs.id))
+    assert(readsOf(hnsw.searchMany(qs, "vec_id", "embedding", 3)).contains(graphs.id))
     val before = sc.getPersistentRDDs.keySet
     hnsw.warm() // idempotent: nothing new is persisted
     assert(sc.getPersistentRDDs.keySet == before)
@@ -212,6 +206,36 @@ class ResidencySpec extends SparkSpec {
     val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
       graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
     check("LSHForest", beforeLsh, lsh.warm(), lsh.cool(), lsh.serving.get, lsh.search(q, 3))
+  }
+
+  test("a warm searchMany reads the serving copy and persists nothing: IVFFlat, HNSW, LSHForest") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 64)
+    val batch = emb.filter(col("vec_id") < 5).select(col("vec_id").as("qid"),
+      col("embedding").cast("array<float>").as("qvec")).as[(Long, Array[Float])].collect()
+      .toSeq.toDF("qid", "qvec")
+    val ivf = graft.index.IVFFlat.build(emb, "vec_id", "embedding", params)
+    val hnsw = graft.index.HNSW.build(emb, "vec_id", "embedding",
+      graft.index.HNSWGraph.Params(efConstruction = 32, m = 8), numShards = 2)
+    val lsh = graft.index.LSHForest.build(emb, "vec_id", "embedding",
+      graft.index.LSHForest.Params(numTrees = 4, maxNodeSize = 16))
+    val sc = spark.sparkContext
+    for ((name, warm, cool, serving, many) <- Seq[(String, () => Unit, () => Unit,
+        () => Option[RDD[_]], () => Unit)](
+        ("IVFFlat", () => ivf.warm(): Unit, () => ivf.cool(), () => ivf.serving.get,
+          () => ivf.searchMany(batch, "qid", "qvec", 3).collect(): Unit),
+        ("HNSW", () => hnsw.warm(): Unit, () => hnsw.cool(), () => hnsw.graphs.get,
+          () => hnsw.searchMany(batch, "qid", "qvec", 3).collect(): Unit),
+        ("LSHForest", () => lsh.warm(): Unit, () => lsh.cool(), () => lsh.serving.get,
+          () => lsh.searchMany(batch, "qid", "qvec", 3).collect(): Unit))) {
+      warm()
+      try {
+        val copy = serving().getOrElse(fail(s"$name warm packed no serving copy"))
+        val before = sc.getPersistentRDDs.keySet
+        assert(readsOf(many()).contains(copy.id), s"$name warm searchMany does not read the copy")
+        assert(sc.getPersistentRDDs.keySet == before, s"$name warm searchMany persisted an RDD")
+      } finally cool()
+    }
   }
 
   test("cool on a never-warmed model launches no job and builds nothing: IVFFlat, HNSW, LSHForest") {

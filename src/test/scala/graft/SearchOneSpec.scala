@@ -30,6 +30,14 @@ object SearchOne {
       "LSHForest" -> (q => lsh.search(q, K)))
   }
 
+  /** The 8 corpus vectors `vec_id < 8` plus 4 off-corpus ones (the
+    * first four, each nudged per coordinate). */
+  def mixed(emb: DataFrame): Seq[Array[Float]] = {
+    val base = queries(emb, 8).toSeq
+    val r = new scala.util.Random(0x5e1L)
+    base ++ base.take(4).map(_.map(x => x + (r.nextGaussian() * 0.05).toFloat))
+  }
+
   /** Corpus vectors `vec_id < n`, in id order. */
   def queries(emb: DataFrame, n: Int): Array[Array[Float]] =
     emb.filter(col("vec_id") < n).orderBy("vec_id")
@@ -70,12 +78,7 @@ class SearchOneSpec extends SparkSpec {
     }
   }
 
-  /** Corpus vectors plus off-corpus ones (each nudged per coordinate). */
-  private lazy val qs: Seq[Array[Float]] = {
-    val base = SearchOne.queries(emb, 8).toSeq
-    val r = new scala.util.Random(0x5e1L)
-    base ++ base.take(4).map(_.map(x => x + (r.nextGaussian() * 0.05).toFloat))
-  }
+  private lazy val qs = SearchOne.mixed(emb)
 
   test("HNSW search == one-row searchMany: plain, tombstoned and routed") {
     val params = HNSWGraph.Params(efConstruction = 40, m = 8)

@@ -56,6 +56,29 @@ class ServingGuardSpec extends SparkSpec {
       "embedding", 3).count() > 0)
   }
 
+  test("warm IVFFlat and LSHForest searchMany collect their batch under the budget") {
+    val corpus = emb.filter(col("vec_id") < 64)
+    val ivf = IVFFlat.build(corpus, "vec_id", "embedding",
+      IVFFlat.Params(k = 4, numAttempts = 1, maxIterations = 4))
+    val lsh = graft.index.LSHForest.build(corpus, "vec_id", "embedding",
+      graft.index.LSHForest.Params(numTrees = 2, maxNodeSize = 16))
+    val big = emb.filter(col("vec_id") < 32) // 32 > budget of 8
+    for ((label, warm, cool, many) <- Seq[(String, () => Unit, () => Unit, () => Any)](
+        ("ivfflat", () => ivf.warm(): Unit, () => ivf.cool(),
+          () => ivf.searchMany(big, "vec_id", "embedding", 3).collect()),
+        ("lsh", () => lsh.warm(): Unit, () => lsh.cool(),
+          () => lsh.searchMany(big, "vec_id", "embedding", 3).collect()))) {
+      withBudget(8) {
+        many() // cold: the plan broadcasts its probe frame, no collect
+        warm()
+        try {
+          val e = intercept[IllegalArgumentException](many())
+          assert(e.getMessage.contains("serving budget"), s"$label: ${e.getMessage}")
+        } finally cool()
+      }
+    }
+  }
+
   // ---- r15: the remaining probe-frame / shortlist broadcast sites ----
 
   private lazy val ivfTier = IVFFlat.build(emb.filter(col("vec_id") < 64),
