@@ -1136,7 +1136,7 @@ object SparkEntry {
 
     // IVFFlat cluster assignment against FIXED centroids (vectors with
     // vec_id < 8): the argmin-sqdist kernel of ivfflat.rs:29-46, made
-    // SQL-checkable by pinning the centroids (MLlib-built centroids are
+    // SQL-checkable by pinning the centroids (trained centroids are
     // exercised in ScalaTest instead — not SQL-reproducible).
     "ivf_assign" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")
@@ -1616,8 +1616,8 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // Real MLlib-KMeans IVFFlat build: cluster-size histogram (shape
-    // check only — k-means|| init isn't SQL-reproducible, so this entry
+    // Real k-means IVFFlat build: cluster-size histogram (shape
+    // check only — k-means++ init isn't SQL-reproducible, so this entry
     // has no oracle; correctness is gated in IVFFlatSpec).
     "ivf_kmeans" -> ((s, dir) => {
       val emb = tbl(s, dir, "embeddings")

@@ -13,11 +13,17 @@ import graft.functions.VectorOps._
   * re-expression of `vers/src/indexes/ivfflat.rs`.
   *
   * Design for scale (SURVEY §2.4, §4):
-  *  - Build: MLlib `KMeans` (k-means|| init beats the reference's random
-  *    init, ivfflat.rs:18-27 — deviation documented there as a quality bug,
-  *    not a semantic contract). The reference's `num_attempts` restart loop
-  *    keeping the lowest-cost run (ivfflat.rs:102-136) is preserved as a
-  *    driver loop over seeds keeping min `trainingCost`.
+  *  - Build: k-means with D²-weighted seeding (k-means++ or k-means||,
+  *    which beat the reference's random init, ivfflat.rs:18-27 —
+  *    deviation documented there as a quality bug, not a semantic
+  *    contract). The reference's `num_attempts` restart loop keeping the
+  *    lowest-cost run (ivfflat.rs:102-136) is a driver loop over seeds.
+  *    An input under the shared driver gate ([[DriverGate]]) trains in
+  *    memory on the driver, as the reference does (k-means++ and Lloyd's
+  *    in double, no job past the one that collects the rows); a larger
+  *    one, or one with no size estimate, trains with MLlib `KMeans`
+  *    (k-means||). The two give different centroids for the same rows;
+  *    [[build]] has the detail.
   *  - The indexed corpus gains a `cluster` column and is written
   *    partitioned by it; a probe is then a filter on the partition column →
   *    Spark partition pruning reads only the probed clusters. This replaces
@@ -404,16 +410,7 @@ object IVFFlat {
         val means = hotRows
           .select(col("cluster").cast("int"), col("vector").cast("array<float>"))
           .as[(Int, Array[Float])]
-          .map { case (c, v) =>
-            val cents = bcSub.value(c)
-            var best = 0; var bestD = Double.MaxValue; var j = 0
-            while (j < cents.length) {
-              val d = sqDistLocal(cents(j), v)
-              if (d < bestD) { bestD = d; best = j }
-              j += 1
-            }
-            ((c, best), v)
-          }
+          .map { case (c, v) => ((c, nearest(bcSub.value(c), v)), v) }
           .groupByKey(_._1).mapValues(_._2)
           .agg(meanAgg.name("mean"))
           .collect().toMap
@@ -441,18 +438,7 @@ object IVFFlat {
         .map { case (id, v, c) =>
           val off = bcOff.value(c)
           val cents = bcSub.value.getOrElse(c, null)
-          val nc =
-            if (cents == null) off
-            else {
-              var best = 0; var bestD = Double.MaxValue; var j = 0
-              while (j < cents.length) {
-                val d = sqDistLocal(cents(j), v)
-                if (d < bestD) { bestD = d; best = j }
-                j += 1
-              }
-              off + best
-            }
-          (id, v, nc)
+          (id, v, if (cents == null) off else off + nearest(cents, v))
         }
         .toDF("id", "vector", "cluster")
       Model(params.copy(k = offsets.last), newCents,
@@ -564,16 +550,7 @@ object IVFFlat {
     emb.select(col(idCol).cast("long").as("id"),
                col(vecCol).cast("array<float>").as("vector"))
       .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val cents = bc.value
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < cents.length) {
-          val d = sqDistLocal(cents(c), v)
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        (id, v, best)
-      }
+      .map { case (id, v) => (id, v, nearest(bc.value, v)) }
       .toDF("id", "vector", "cluster")
   }
 
@@ -625,8 +602,8 @@ object IVFFlat {
   /** One Lloyd's update step: per-cluster elementwise mean with the
     * reference's empty-cluster→zero-vector rule (ivfflat.rs:47-71),
     * via the [[graft.operators.VectorMean]] aggregator (map-side
-    * partial sums). The production build delegates the full iteration
-    * to MLlib; this exposes the primitive. */
+    * partial sums). The production build runs its own iterations (on
+    * the driver or in MLlib, [[build]]); this exposes the primitive. */
   def updateCentroids(indexed: DataFrame, k: Int, dim: Int): Array[Array[Float]] = {
     val spark = indexed.sparkSession
     import spark.implicits._
@@ -640,34 +617,253 @@ object IVFFlat {
     Array.tabulate(k)(c => means.getOrElse(c, new Array[Float](dim)))
   }
 
-  /** Build via MLlib KMeans with the reference's restart-keep-best loop
-    * (ivfflat.rs:102-136). tol=0 ≈ the bitwise-convergence rule
-    * (ivfflat.rs:84-95). */
+  /** Build: k-means cells, the reference's restart-keep-best loop
+    * (ivfflat.rs:102-136: `numAttempts` runs seeded `seed + attempt`,
+    * the lowest-cost run kept), then the narrow [[assign]] as `indexed`,
+    * cached. tol=0 ≈ the bitwise-convergence rule (ivfflat.rs:84-95).
+    *
+    * Two paths, chosen by the input plan's size estimate (what Spark's
+    * broadcast planning reads; no job) through the shared gate
+    * ([[DriverGate]]: within `spark.sql.autoBroadcastJoinThreshold` and
+    * [[maxDriverBytes]]):
+    *  - DRIVER: one job collects at most [[maxDriverRows]] + 1 (id,
+    *    vector) rows (more falls back to MLlib), sorts them by id, and
+    *    runs k-means++ seeding and Lloyd's in double on the driver
+    *    ([[kMeansOnDriver]]); `clusterSizes` come from [[assign]]'s own
+    *    argmin over the same rows, so they equal the indexed frame's
+    *    counts without a job, and `indexed` fills its cache on first
+    *    use. The centroids depend only on the rows, not on their
+    *    partitioning, and repeat bit for bit.
+    *  - DISTRIBUTED: MLlib `KMeans` (k-means|| init) over a cached
+    *    feature frame, then one count job for `clusterSizes`. An input
+    *    with no size estimate (a frame built from an RDD) always takes it.
+    * The two paths train different centroids from the same rows:
+    * k-means++ is the sequential form of k-means||, and an empty cell
+    * keeps its previous centre on both. Both keep fewer than `k`
+    * centroids when the rows hold fewer distinct vectors, and both
+    * refuse an empty input and a null, non-finite or wrong-dimension
+    * vector with an IllegalArgumentException naming the lowest such id
+    * ([[invalidRow]]; the distributed path names it once MLlib fails). */
   def build(emb: DataFrame, idCol: String, vecCol: String,
             params: Params): Model = {
-    val feats = emb.select(
-        col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vector"))
+    val rows = emb.select(
+      col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<float>").as("vector"))
+    driverRows(rows) match {
+      case Some((ids, vecs)) =>
+        invalidRow(ids, vecs).foreach(m => throw new IllegalArgumentException(m))
+        val centroids = kMeansOnDriver(vecs, params)
+        val sizes = new Array[Long](params.k)
+        vecs.foreach(v => sizes(nearest(centroids, v)) += 1)
+        val indexed = assign(rows, "id", "vector", centroids).cache()
+        // planning the cached scan registers its storage, as the MLlib
+        // path's filled cache is, without a job; it fills on first use
+        indexed.queryExecution.toRdd
+        Model(params, centroids, sizes, indexed)
+      case None => buildDistributed(rows, params)
+    }
+  }
+
+  /** Largest training set [[build]] clusters on the driver: the job
+    * collects one more row than this at most, and Lloyd's costs rows ×
+    * k × dim per iteration on one core. */
+  private[graft] val maxDriverRows: Int = 65536
+
+  /** Cap on the input's size estimate for the driver build, whatever
+    * the broadcast budget (the float payload of [[maxDriverRows]]
+    * 128-dim rows). */
+  private[graft] val maxDriverBytes: Long = 32L << 20
+
+  /** (ids, vectors) sorted by id (ties by vector), when the estimate
+    * passes the gate and the rows fit [[maxDriverRows]]: one job, each
+    * task returning at most `maxDriverRows + 1` rows and the driver
+    * keeping none once the total passes the cap. */
+  private def driverRows(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] = {
+    val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
+    val budget = DriverGate.budget(rows.sparkSession)
+    if (!DriverGate.fits(if (est.isValidLong) est.toLong else Long.MaxValue,
+        budget, maxDriverBytes)) return None
+    val cap = maxDriverRows
+    val rdd = rows.rdd.map { r =>
+      (if (r.isNullAt(0)) null else Long.box(r.getLong(0)),
+        if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    }
+    val parts = new Array[Array[(java.lang.Long, Array[Float])]](rdd.partitions.length)
+    var n = 0L
+    rows.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[(java.lang.Long, Array[Float])]) => it.take(cap + 1).toArray,
+      (i: Int, part: Array[(java.lang.Long, Array[Float])]) => {
+        n += part.length
+        if (n <= cap) parts(i) = part
+      })
+    if (n > cap) None
+    else {
+      val all = parts.flatten.sortWith { (a, b) =>
+        val c = java.lang.Long.compare(a._1, b._1)
+        if (c != 0) c < 0 else java.util.Arrays.compare(a._2, b._2) < 0
+      }
+      Some((all.map(_._1.longValue), all.map(_._2)))
+    }
+  }
+
+  /** The failure message for the lowest id (in `ids` order) whose
+    * vector is null, holds a NaN or infinity, or differs in dimension
+    * from the first row's; for no rows at all, the empty-input one. */
+  private def invalidRow(ids: Array[Long], vecs: Array[Array[Float]]): Option[String] =
+    if (ids.isEmpty) Some("IVFFlat.build has no rows to cluster")
+    else {
+      val dim = Option(vecs(0)).map(_.length).getOrElse(-1)
+      ids.indices.iterator.map { i =>
+        val v = vecs(i)
+        if (v == null) Some(s"IVFFlat.build row ${ids(i)} has a null vector")
+        else if (v.length != dim)
+          Some(s"IVFFlat.build row ${ids(i)} has dim ${v.length} != dim $dim of row ${ids(0)}")
+        else if (v.exists(x => x.isNaN || x.isInfinite))
+          Some(s"IVFFlat.build row ${ids(i)} has a NaN or infinite value")
+        else None
+      }.collectFirst { case Some(m) => m }
+    }
+
+  /** MLlib KMeans with the restart-keep-best loop. When the build fails,
+    * the input is checked for what [[invalidRow]] refuses (failure path
+    * only: two small jobs), so a bad row fails naming its id as it does
+    * on the driver path. */
+  private def buildDistributed(rows: DataFrame, params: Params): Model = {
+    val feats = rows
       .withColumn("features",
         array_to_vector(col("vector").cast("array<double>")))
-      .cache()
-    var best: KMeansModel = null
-    var bestCost = Double.MaxValue
-    for (attempt <- 0 until params.numAttempts) {
-      val km = new KMeans()
-        .setK(params.k).setMaxIter(params.maxIterations)
-        .setTol(params.tol).setSeed(params.seed + attempt)
-        .setFeaturesCol("features")
-      val m = km.fit(feats)
-      val cost = m.summary.trainingCost
-      if (cost < bestCost) { bestCost = cost; best = m }
+    try {
+      // inside the try: over a local relation the optimizer evaluates
+      // the features when the cache is planned
+      feats.cache()
+      var best: KMeansModel = null
+      var bestCost = Double.MaxValue
+      for (attempt <- 0 until params.numAttempts) {
+        val km = new KMeans()
+          .setK(params.k).setMaxIter(params.maxIterations)
+          .setTol(params.tol).setSeed(params.seed + attempt)
+          .setFeaturesCol("features")
+        val m = km.fit(feats)
+        val cost = m.summary.trainingCost
+        if (cost < bestCost) { bestCost = cost; best = m }
+      }
+      val centroids = best.clusterCenters.map(_.toArray.map(_.toFloat))
+      val indexed = assign(feats.drop("features"), "id", "vector", centroids)
+        .cache()
+      Model(params, centroids, Cells.sizes(indexed, params.k), indexed)
+    } catch {
+      case e: Exception =>
+        feats.unpersist() // the check must not read the failed cache
+        invalidRowOf(rows).foreach(m => throw new IllegalArgumentException(m, e))
+        throw e
+    } finally feats.unpersist()
+  }
+
+  /** [[invalidRow]] over a distributed frame: the lowest id's row, then
+    * the lowest id among the rows it would refuse. */
+  private def invalidRowOf(rows: DataFrame): Option[String] =
+    rows.orderBy(col("id"), col("vector")).limit(1).collect().headOption match {
+      case None => invalidRow(Array.empty, Array.empty)
+      case Some(first) =>
+        val dim = if (first.isNullAt(1)) -1 else first.getSeq[Float](1).length
+        val bad = rows.filter(col("vector").isNull ||
+            size(col("vector")) =!= lit(dim) ||
+            exists(col("vector"), x => isnan(x) || x.isin(Float.PositiveInfinity, Float.NegativeInfinity)))
+          .orderBy(col("id"), col("vector")).limit(1).collect()
+        bad.headOption.flatMap { r =>
+          invalidRow(Array(first.getLong(0), r.getLong(0)),
+            Array(Option(first.getSeq[Float](1)).map(_.toArray).orNull,
+              Option(r.getSeq[Float](1)).map(_.toArray).orNull))
+        }
     }
-    val centroids = best.clusterCenters.map(_.toArray.map(_.toFloat))
-    val indexed = assign(feats.drop("features"), "id", "vector", centroids)
-      .cache()
-    val sizes = Cells.sizes(indexed, params.k)
-    feats.unpersist()
-    Model(params, centroids, sizes, indexed)
+
+  /** k-means over `pts` on the driver, in double: per attempt, k-means++
+    * seeding from `seed + attempt` ([[seedPlusPlus]]), then Lloyd's
+    * until every centre moves by at most `tol` or `maxIterations` steps
+    * have run (MLlib's rule); an empty cell keeps its centre. The run
+    * with the lowest cost (the last assignment's Σ squared distance, as
+    * MLlib's `trainingCost`) wins, the earliest on a tie. */
+  private def kMeansOnDriver(pts: Array[Array[Float]],
+                             params: Params): Array[Array[Float]] = {
+    val data = pts.map(_.map(_.toDouble))
+    val dim = data(0).length
+    var best: Array[Array[Double]] = null
+    var bestCost = Double.PositiveInfinity
+    for (attempt <- 0 until params.numAttempts) {
+      val cents = seedPlusPlus(data, params.k, params.seed + attempt)
+      val k = cents.length
+      var cost = 0.0
+      var iter = 0
+      var converged = false
+      while (iter < params.maxIterations && !converged) {
+        val sums = Array.ofDim[Double](k, dim)
+        val counts = new Array[Long](k)
+        cost = 0.0
+        for (p <- data) {
+          var c = 0; var bc = 0; var bd = Double.PositiveInfinity
+          while (c < k) { val d = sqDistD(cents(c), p); if (d < bd) { bd = d; bc = c }; c += 1 }
+          cost += bd
+          counts(bc) += 1
+          val s = sums(bc); var j = 0
+          while (j < dim) { s(j) += p(j); j += 1 }
+        }
+        converged = true
+        for (c <- 0 until k if counts(c) > 0) {
+          val next = sums(c).map(_ / counts(c))
+          if (sqDistD(next, cents(c)) > params.tol * params.tol) converged = false
+          cents(c) = next
+        }
+        iter += 1
+      }
+      if (best == null || cost < bestCost) { best = cents; bestCost = cost }
+    }
+    best.map(_.map(_.toFloat))
+  }
+
+  /** k-means++ seeding: a uniform first centre, then each next centre
+    * drawn with probability ∝ its squared distance to the nearest
+    * chosen one. Stops early once every point coincides with a centre,
+    * so `k` above the number of distinct points yields one centre per
+    * distinct point. */
+  private def seedPlusPlus(data: Array[Array[Double]], k: Int,
+                           seed: Long): Array[Array[Double]] = {
+    val rnd = new java.util.Random(seed)
+    val cents = scala.collection.mutable.ArrayBuffer(data(rnd.nextInt(data.length)))
+    val d2 = data.map(sqDistD(_, cents(0)))
+    var total = d2.sum
+    while (cents.length < k && total > 0) {
+      val r = rnd.nextDouble() * total
+      var i = 0; var acc = 0.0; var pick = -1
+      while (i < data.length && pick < 0) {
+        acc += d2(i)
+        if (acc > r && d2(i) > 0) pick = i
+        i += 1
+      }
+      if (pick < 0) pick = d2.lastIndexWhere(_ > 0)
+      val c = data(pick)
+      cents += c
+      i = 0
+      while (i < data.length) { d2(i) = math.min(d2(i), sqDistD(data(i), c)); i += 1 }
+      total = d2.sum
+    }
+    cents.map(_.clone).toArray
+  }
+
+  private def sqDistD(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** [[assign]]'s argmin: the first centroid at the least [[sqDistLocal]]. */
+  private def nearest(cents: Array[Array[Float]], v: Array[Float]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = sqDistLocal(cents(c), v)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Reload a saved index (base.rs:45-58 mapping). */

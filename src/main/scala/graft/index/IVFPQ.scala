@@ -268,7 +268,7 @@ object IVFPQ {
       residual, codebooks, codesDf)
   }
 
-  /** Full training: coarse cells via [[IVFFlat.build]] (k-means‖ +
+  /** Full training: coarse cells via [[IVFFlat.build]] (k-means +
     * restart-keep-best, ivfflat.rs:102-136), PQ codebooks via Lloyd's —
     * over RESIDUALS when `residual` (the standard IVF-PQ recipe) — then
     * the fused assign+encode pass. */

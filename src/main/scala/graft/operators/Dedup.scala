@@ -47,9 +47,10 @@ object Dedup {
     *
     * Size gate: the (src, dst) pairs are persisted and counted once,
     * which fills the cache and sizes the graph ([[finishesOnDriver]]).
-    * A graph within both Spark's broadcast budget
-    * (`pairs × 16 B ≤ spark.sql.autoBroadcastJoinThreshold`; `-1`
-    * disables it) and the fixed [[maxDriverPairs]] cap is collected and
+    * A graph whose 16 B per pair pass the shared driver gate
+    * ([[graft.index.DriverGate]]: within
+    * `spark.sql.autoBroadcastJoinThreshold`, `-1` disables it, and
+    * within the fixed [[maxDriverPairs]] cap) is collected and
     * finished by one union-find on the driver ([[componentsOnDriver]]),
     * exact at any graph depth: 2 jobs on a local input, against 1 + 2
     * per round for the loop. A larger graph runs min-label propagation
@@ -65,7 +66,7 @@ object Dedup {
                  maxRounds: Int = 50): DataFrame = {
     val (edges, n) = filledCounted(pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst")))
-    val budget = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val budget = graft.index.DriverGate.budget(pairs.sparkSession)
     try {
       if (finishesOnDriver(n, budget)) componentsOnDriver(edges)
       else componentsByRounds(edges, maxRounds)
@@ -86,9 +87,10 @@ object Dedup {
   private[graft] val maxDriverPairs: Long = 655360L
 
   /** Whether [[components]] finishes a graph of `pairs` pairs on the
-    * driver under a broadcast budget of `budget` bytes. */
+    * driver under a broadcast budget of `budget` bytes: 16 B per pair
+    * through [[graft.index.DriverGate]]. */
   private[graft] def finishesOnDriver(pairs: Long, budget: Long): Boolean =
-    budget >= 0 && pairs <= math.min(budget / 16, maxDriverPairs)
+    graft.index.DriverGate.fits(pairs * 16, budget, maxDriverPairs * 16)
 
   /** The driver finish of [[components]]: collect the (filled) edges as
     * primitive arrays, sort the distinct ids into a `long[]` and run

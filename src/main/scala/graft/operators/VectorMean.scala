@@ -10,7 +10,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * semantics and is preserved here (ivfflat.rs:56-60).
   *
   * This is the one custom aggregate the engine needs (SURVEY §7); the
-  * production k-means build uses MLlib, but Lloyd's update step is
+  * production k-means build runs on the driver or in MLlib
+  * ([[graft.index.IVFFlat.build]]), but Lloyd's update step is
   * exposed via [[graft.index.IVFFlat.updateCentroids]] on top of this.
   */
 class VectorMean(dim: Int)

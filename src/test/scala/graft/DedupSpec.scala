@@ -202,21 +202,6 @@ class DedupSpec extends SparkSpec {
     assert(jac.isEmpty, "symmetric Jaccard must miss the partial copy")
   }
 
-  private val budgetKey = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** `body` under a scoped broadcast budget (`-1` forces the
-    * distributed loop of [[Dedup.components]]). */
-  private def withBudget[T](budget: String)(body: => T): T = {
-    val old = spark.conf.getOption(budgetKey)
-    spark.conf.set(budgetKey, budget)
-    try body finally old.fold(spark.conf.unset(budgetKey))(spark.conf.set(budgetKey, _))
-  }
-
-  /** `body` on the driver finish (the session's default budget) and on
-    * the distributed loop, labelled by path. */
-  private def onBothPaths[T](body: => T): Seq[(String, T)] =
-    Seq("driver" -> body, "loop" -> withBudget("-1")(body))
-
   /** The (id, comp) rows as a map, after checking that no id repeats
     * (a map alone would hide a duplicate row). */
   private def labels(df: DataFrame): Map[Long, Long] = {

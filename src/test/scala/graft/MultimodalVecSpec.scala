@@ -171,7 +171,8 @@ class MultimodalVecSpec extends SparkSpec {
     java.nio.file.Files.writeString(f, sb.toString)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    try {
+    try onBothPaths {
+      // the driver read of this small file, and the split read at -1
       val loaded = VecFile.read(spark, f.toString, holdoutWord = Some("w17"))
       val got = loaded.corpus.orderBy("id")
         .select("id", "word").collect()

@@ -18,6 +18,21 @@ trait SparkSpec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
       .exists(e => e.getMessage != null && e.getMessage.contains(needle))
 
+  private val budgetKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `body` under a scoped broadcast budget (`-1` turns off every
+    * driver finish of [[graft.index.DriverGate]]). */
+  def withBudget[T](budget: String)(body: => T): T = {
+    val old = spark.conf.getOption(budgetKey)
+    spark.conf.set(budgetKey, budget)
+    try body finally old.fold(spark.conf.unset(budgetKey))(spark.conf.set(budgetKey, _))
+  }
+
+  /** `body` on the driver finish (the session's default budget) and on
+    * the distributed loop, labelled by path. */
+  def onBothPaths[T](body: => T): Seq[(String, T)] =
+    Seq("driver" -> body, "loop" -> withBudget("-1")(body))
+
   /** Jobs `body` launches. */
   def jobsOf(body: => Unit): Int = launchedBy(body).jobs.size
 
