@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -24,6 +24,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Nulls: a null array → null result; null *elements* are not expected
   * (engine inputs are dense numeric vectors) and read as 0.0. Length
   * mismatch iterates the shorter prefix.
+  *
+  * The element loop lives in one compiled method per kernel
+  * ([[ArrayMath.sqDist]], [[ArrayMath.dot]]), which both the generated
+  * code and the interpreted `nullSafeEval` call. Spark compiles a new
+  * class for every plan it has not cached (and again after its codegen
+  * cache evicts one), and a new class starts out interpreted; with the
+  * loop inlined there, such a stage ran its per-pair distances several
+  * times slower until the JIT caught up. The shared method stays
+  * compiled from one query to the next.
   */
 abstract class FusedVecFold extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -42,49 +51,28 @@ abstract class FusedVecFold extends BinaryExpression {
           s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
 
-  protected def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  /** java accessor snippet for element i of `arr` widened to double */
-  protected def acc(e: Expression, arr: String, i: String): String =
-    elemType(e) match {
-      case FloatType  => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
+  /** Whether `e`'s elements are FLOAT (else DOUBLE). */
+  protected def floatElems(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType match {
+      case FloatType  => true
+      case DoubleType => false
       case t => throw new IllegalArgumentException(s"unsupported element type $t")
     }
 
-  protected def elemAt(e: Expression, a: ArrayData, i: Int): Double =
-    elemType(e) match {
-      case FloatType  => a.getFloat(i).toDouble
-      case DoubleType => a.getDouble(i)
-      case t => throw new IllegalArgumentException(s"unsupported element type $t")
-    }
+  /** Generated code: one call of the shared kernel `fn`. */
+  protected def callKernel(ctx: CodegenContext, ev: ExprCode, fn: String): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.ArrayMath.$fn($a, $b, ${floatElems(left)}, ${floatElems(right)});")
 }
 
 /** Σ (aᵢ−bᵢ)² in double — fused-loop twin of `VectorOps.sqDist`
   * (base.rs:119-126 semantics). */
 case class SqDistExpr(left: Expression, right: Expression) extends FusedVecFold {
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    while (i < n) { val d = elemAt(left, a, i) - elemAt(right, b, i); s += d * d; i += 1 }
-    s
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    ArrayMath.sqDist(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
+      floatElems(left), floatElems(right))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = ${acc(left, a, i)} - ${acc(right, b, i)};
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    callKernel(ctx, ev, "sqDist")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -92,32 +80,50 @@ case class SqDistExpr(left: Expression, right: Expression) extends FusedVecFold 
 /** Σ aᵢ·bᵢ in double — fused-loop twin of `VectorOps.dot`
   * (base.rs:91-93 semantics). */
 case class DotExpr(left: Expression, right: Expression) extends FusedVecFold {
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    while (i < n) { s += elemAt(left, a, i) * elemAt(right, b, i); i += 1 }
-    s
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    ArrayMath.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
+      floatElems(left), floatElems(right))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ${acc(left, a, i)} * ${acc(right, b, i)};
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    callKernel(ctx, ev, "dot")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
 
 object ArrayMath {
   import org.apache.spark.sql.GraftShims
+
+  /** Σ (aᵢ−bᵢ)² over the shared prefix, each element widened to double
+    * (FLOAT when its `*Float` flag is set, else DOUBLE), folded left to
+    * right from 0.0. */
+  def sqDist(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var s = 0.0; var i = 0
+    (a, b) match {
+      // the corpus' own layout: a direct, inlinable element read
+      case (x: UnsafeArrayData, y: UnsafeArrayData) if aFloat && bFloat =>
+        while (i < n) { val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble; s += d * d; i += 1 }
+      case _ =>
+        while (i < n) { val d = elem(a, i, aFloat) - elem(b, i, bFloat); s += d * d; i += 1 }
+    }
+    s
+  }
+
+  /** Σ aᵢ·bᵢ over the shared prefix, widened and folded as [[sqDist]]. */
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var s = 0.0; var i = 0
+    (a, b) match {
+      case (x: UnsafeArrayData, y: UnsafeArrayData) if aFloat && bFloat =>
+        while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+      case _ =>
+        while (i < n) { s += elem(a, i, aFloat) * elem(b, i, bFloat); i += 1 }
+    }
+    s
+  }
+
+  @inline private def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
   def sqDistFused(a: Column, b: Column): Column =
     GraftShims.column(SqDistExpr(GraftShims.expression(a), GraftShims.expression(b)))
   def dotFused(a: Column, b: Column): Column =

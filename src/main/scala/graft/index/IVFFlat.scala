@@ -2,9 +2,11 @@ package graft.index
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 import graft.functions.TopK
 import graft.functions.VectorOps._
@@ -207,14 +209,51 @@ object IVFFlat {
       * mining, SemDeDup feeds) use nprobe = 4: consumers inherit
       * whatever the graph missed, and 0.80 leaves a fifth of true
       * edges absent. The parameter default stays 2 (the cheap
-      * exploratory setting the pinned lanes gate). */
+      * exploratory setting the pinned lanes gate).
+      *
+      * A query side under the shared driver gate ([[DriverGate]], the
+      * rule [[build]] applies to its input) is routed on the driver
+      * instead: one job collects at most [[maxDriverRows]] queries,
+      * [[probeSet]]'s order picks each one's cells, and one job scans
+      * `indexed` once, scoring each row against the queries that probe
+      * its cell and shipping a top-k per query to the driver
+      * ([[Serve.topKMany]], the warm batch search's merge). Same rows
+      * as the plan above, no shuffle, and no generated code past the
+      * two scans, so a pass over many operators keeps fewer classes in
+      * Spark's codegen cache (100 classes; when one of its segments
+      * overflows, every pass recompiles that segment's classes). A
+      * batch with a null qid, a null or wrong-dimension vector, a
+      * repeated qid or k outside [[graft.functions.TopKAggExpr]]'s
+      * range takes the plan, which merges or refuses them as before. */
     def knnJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
                 k: Int, nprobe: Int = 2): DataFrame =
-      TopK.perQuery(
-        indexed.join(probes(queries, qIdCol, qVecCol, k, nprobe), Seq("cluster"))
-          .select(col("qid"), col("id"),
-            sqDist(col("vector"), col("qvec")).as("distance")),
-        k)
+      routedJoin(queries, qIdCol, qVecCol, k, nprobe).getOrElse(
+        TopK.perQuery(
+          indexed.join(probes(queries, qIdCol, qVecCol, k, nprobe), Seq("cluster"))
+            .select(col("qid"), col("id"),
+              sqDist(col("vector"), col("qvec")).as("distance")),
+          k))
+
+    /** [[knnJoin]]'s driver-routed finish; None takes the plan. */
+    private def routedJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
+                           k: Int, nprobe: Int): Option[DataFrame] = {
+      if (k < 1 || k > (1 << 20)) return None
+      val layout = IVFFlat.rowLayout(indexed).getOrElse(return None)
+      val batch = IVFFlat.driverCollect(queries.select(
+          col(qIdCol).cast("long"), col(qVecCol).cast("array<float>")))
+        .getOrElse(return None)
+      val dim = centroids(0).length
+      if (batch.exists { case (id, v) => id == null || v == null || v.length != dim })
+        return None
+      val qids = batch.map(_._1.longValue)
+      if (!Serve.distinct(qids)) return None
+      val qs = batch.map(_._2)
+      val rows = indexed.queryExecution.toRdd
+      Some(GraftShims.inSession(indexed.sparkSession) {
+        Serve.topKMany(rows, rows.partitions.indices, k, qids)(IVFFlat.scoreRows(
+          qs, qs.map(probeSet(_, k, nprobe)), centroids.length, layout))
+      })
+    }
 
     /** Incremental add: assign against frozen centroids, union. Caller ids
       * are honoured (fix of the ivfflat.rs:209 id-shadowing quirk).
@@ -517,9 +556,7 @@ object IVFFlat {
     * skips their null distance. */
   private def scoreCells(qs: Array[Array[Float]], probed: Array[Seq[Int]],
                          numCells: Int): Serve.Score[CellRows] = {
-    val byCell = Array.fill(numCells)(Array.newBuilder[Int])
-    for (q <- probed.indices; c <- probed(q)) byCell(c) += q
-    val queriesOf = byCell.map(_.result())
+    val queriesOf = queriesByCell(probed, numCells)
     (it, bufs) => it.foreach { p =>
       var i = 0
       while (i < p.ids.length) {
@@ -533,6 +570,13 @@ object IVFFlat {
         i += 1
       }
     }
+  }
+
+  /** For each cell, the queries (batch positions) that probe it. */
+  private def queriesByCell(probed: Array[Seq[Int]], numCells: Int): Array[Array[Int]] = {
+    val byCell = Array.fill(numCells)(Array.newBuilder[Int])
+    for (q <- probed.indices; c <- probed(q)) byCell(c) += q
+    byCell.map(_.result())
   }
 
   private[graft] def sqDistLocal(a: Array[Float], b: Array[Float]): Double = {
@@ -674,35 +718,80 @@ object IVFFlat {
     * 128-dim rows). */
   private[graft] val maxDriverBytes: Long = 32L << 20
 
-  /** (ids, vectors) sorted by id (ties by vector), when the estimate
-    * passes the gate and the rows fit [[maxDriverRows]]: one job, each
-    * task returning at most `maxDriverRows + 1` rows and the driver
-    * keeping none once the total passes the cap. */
-  private def driverRows(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] = {
+  /** (ids, vectors) sorted by id (ties by vector), when [[driverCollect]]
+    * takes the rows. */
+  private def driverRows(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] =
+    driverCollect(rows).map { got =>
+      val all = got.sortWith { (a, b) =>
+        val c = java.lang.Long.compare(a._1, b._1)
+        if (c != 0) c < 0 else java.util.Arrays.compare(a._2, b._2) < 0
+      }
+      (all.map(_._1.longValue), all.map(_._2))
+    }
+
+  /** The (id, vector) rows of a two-column (long, array<float>) frame,
+    * nulls kept, in partition order, when its plan's size estimate
+    * passes the gate and it holds at most [[maxDriverRows]] rows: one
+    * job, each task returning at most `maxDriverRows + 1` rows and the
+    * driver keeping none once the total passes the cap. */
+  private def driverCollect(rows: DataFrame): Option[Array[(java.lang.Long, Array[Float])]] = {
     val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
     val budget = DriverGate.budget(rows.sparkSession)
     if (!DriverGate.fits(if (est.isValidLong) est.toLong else Long.MaxValue,
         budget, maxDriverBytes)) return None
     val cap = maxDriverRows
-    val rdd = rows.rdd.map { r =>
+    // internal rows, copied out field by field: no conversion to Row
+    val rdd = rows.queryExecution.toRdd.map { r =>
       (if (r.isNullAt(0)) null else Long.box(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+        if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
     }
     val parts = new Array[Array[(java.lang.Long, Array[Float])]](rdd.partitions.length)
     var n = 0L
-    rows.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[(java.lang.Long, Array[Float])]) => it.take(cap + 1).toArray,
-      (i: Int, part: Array[(java.lang.Long, Array[Float])]) => {
-        n += part.length
-        if (n <= cap) parts(i) = part
-      })
-    if (n > cap) None
-    else {
-      val all = parts.flatten.sortWith { (a, b) =>
-        val c = java.lang.Long.compare(a._1, b._1)
-        if (c != 0) c < 0 else java.util.Arrays.compare(a._2, b._2) < 0
+    GraftShims.inSession(rows.sparkSession) {
+      rows.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[(java.lang.Long, Array[Float])]) => it.take(cap + 1).toArray,
+        (i: Int, part: Array[(java.lang.Long, Array[Float])]) => {
+          n += part.length
+          if (n <= cap) parts(i) = part
+        })
+    }
+    if (n > cap) None else Some(parts.flatten)
+  }
+
+  /** Ordinals of (id, vector, cluster) in `indexed`'s internal rows,
+    * when they are (long, array<float>, int) as [[assign]] writes them;
+    * None for any other layout. */
+  private def rowLayout(indexed: DataFrame): Option[(Int, Int, Int)] = {
+    val f = indexed.schema.fields
+    def at(name: String, t: DataType): Option[Int] =
+      Some(f.indexWhere(_.name == name)).filter(i => i >= 0 && f(i).dataType == t)
+    for (i <- at("id", LongType); v <- at("vector", ArrayType(FloatType, true))
+           .orElse(at("vector", ArrayType(FloatType, false)));
+         c <- at("cluster", IntegerType)) yield (i, v, c)
+  }
+
+  /** [[scoreCells]] over `indexed`'s internal rows in the [[rowLayout]]
+    * `layout`: each row with a vector and a cell is scored against every
+    * query that probes its cell. Rows with a null id, vector or cell
+    * are skipped, as the plan's join and top-k skip them. */
+  private def scoreRows(qs: Array[Array[Float]], probed: Array[Seq[Int]],
+                        numCells: Int, layout: (Int, Int, Int)): Serve.Score[InternalRow] = {
+    val queriesOf = queriesByCell(probed, numCells)
+    val (idAt, vecAt, cellAt) = layout
+    (it, bufs) => it.foreach { r =>
+      if (!r.isNullAt(idAt) && !r.isNullAt(vecAt) && !r.isNullAt(cellAt)) {
+        val c = r.getInt(cellAt)
+        val mine = if (c >= 0 && c < queriesOf.length) queriesOf(c) else Array.emptyIntArray
+        if (mine.length > 0) {
+          val v = r.getArray(vecAt).toFloatArray()
+          val id = r.getLong(idAt)
+          var j = 0
+          while (j < mine.length) {
+            bufs(mine(j)).insert(Serve.sqDist(v, qs(mine(j))), id)
+            j += 1
+          }
+        }
       }
-      Some((all.map(_._1.longValue), all.map(_._2)))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -99,17 +99,20 @@ object Dedup {
     * id and every root is its component's minimum. */
   private[graft] def componentsOnDriver(edges: DataFrame): DataFrame = {
     // per partition: both-present pairs flattened, and the lone
-    // non-null endpoint of every pair with a null side
-    val packed = edges.rdd.mapPartitions { rows =>
-      val both = new scala.collection.mutable.ArrayBuilder.ofLong
-      val lone = new scala.collection.mutable.ArrayBuilder.ofLong
-      rows.foreach { r =>
-        if (r.isNullAt(0)) { if (!r.isNullAt(1)) lone += r.getLong(1) }
-        else if (r.isNullAt(1)) lone += r.getLong(0)
-        else { both += r.getLong(0); both += r.getLong(1) }
-      }
-      Iterator.single((both.result(), lone.result()))
-    }.collect()
+    // non-null endpoint of every pair with a null side (read from the
+    // internal rows: no conversion to Row)
+    val packed = GraftShims.inSession(edges.sparkSession) {
+      edges.queryExecution.toRdd.mapPartitions { rows =>
+        val both = new scala.collection.mutable.ArrayBuilder.ofLong
+        val lone = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r =>
+          if (r.isNullAt(0)) { if (!r.isNullAt(1)) lone += r.getLong(1) }
+          else if (r.isNullAt(1)) lone += r.getLong(0)
+          else { both += r.getLong(0); both += r.getLong(1) }
+        }
+        Iterator.single((both.result(), lone.result()))
+      }.collect()
+    }
     val ends = packed.flatMap(_._1)
     val all = ends ++ packed.flatMap(_._2)
     java.util.Arrays.sort(all)
@@ -405,7 +408,7 @@ object Dedup {
     * AQE is a separate fill job and a shuffle job. */
   private def filledCounted(df: DataFrame): (DataFrame, Long) = {
     val p = df.persist()
-    (p, p.rdd.count())
+    (p, GraftShims.inSession(df.sparkSession)(p.rdd.count()))
   }
 
   /** Near-dup candidate pairs via MinHash banding: docs sharing at least

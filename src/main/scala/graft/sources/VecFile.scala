@@ -1,10 +1,14 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.VectorOps.normalizeF
 import graft.index.DriverGate
@@ -111,13 +115,22 @@ object VecFile {
 
   private def readOnDriver(spark: SparkSession, lines: Seq[String],
                            holdoutWord: Option[String]): Loaded = {
-    import spark.implicits._
-    val parsed = parse(lines.toDF("value"), holdoutWord)
-    // over a LocalRelation this collect evaluates the parse in the
-    // optimizer, once for both frames, and launches no job
+    val text = spark.createDataFrame(lines.map(Row(_)).asJava,
+      StructType(Seq(StructField("value", StringType))))
+    val parsed = parse(text, holdoutWord)
+    // over a LocalRelation the optimizer evaluates the parse, once for
+    // both frames: read its rows from the optimized plan, which launches
+    // no job and generates no projection class (collect would generate
+    // two, each a codegen-cache entry that every call keeps alive)
+    val rows = parsed.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(parsed.schema)
+        l.data.map(toRow(_).asInstanceOf[Row])
+      case _ => parsed.collect().toSeq
+    }
     val kept = new java.util.ArrayList[Row]()
     val held = new java.util.ArrayList[Row]()
-    parsed.collect().foreach { r =>
+    rows.foreach { r =>
       r(2) match {
         case true => held.add(Row(r(0), r(1)))
         case false => kept.add(Row(kept.size.toLong, r(0), r(1)))

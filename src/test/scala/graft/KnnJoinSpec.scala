@@ -34,6 +34,33 @@ class KnnJoinSpec extends SparkSpec {
     assert(got == exact)
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("qid", "id", "distance").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+
+  test("knnJoin: the driver-routed finish and the plan give the same rows and schema") {
+    for (nprobe <- Seq(2, model.params.k)) {
+      val Seq((_, routed), (_, plan)) = onBothPaths {
+        val df = model.knnJoin(emb, "vec_id", "embedding", k = 10, nprobe = nprobe)
+        (df.schema, sortedRows(df))
+      }
+      assert(routed._1 == plan._1, s"nprobe=$nprobe")
+      assert(routed._2 == plan._2, s"nprobe=$nprobe")
+      assert(routed._2.size == 10 * emb.count(), s"nprobe=$nprobe")
+    }
+  }
+
+  test("a routed knnJoin runs two jobs; repeated qids take the plan and merge") {
+    model.indexed.count()
+    assert(jobsOf(model.knnJoin(emb, "vec_id", "embedding", k = 5, nprobe = 2).collect()) <= 2)
+    val twice = emb.filter(col("vec_id") < 20)
+      .union(emb.filter(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 1))
+    val Seq((_, routed), (_, plan)) = onBothPaths(
+      sortedRows(model.knnJoin(twice, "vec_id", "embedding", k = 5, nprobe = 2)))
+    assert(routed == plan)
+    assert(routed.map(_._1).distinct.size == 21)
+  }
+
   test("knnJoin probed config: k rows per query, self always hit, recall floor") {
     val n = emb.count()
     val got = model.knnJoin(emb, "vec_id", "embedding", k = 10, nprobe = 2)
