@@ -180,8 +180,9 @@ object TopK {
         col("nn.distance").as("distance"))
   }
 
-  /** The single-query cut every tier's `search` ends in: (id, distance)
-    * candidates → the k nearest, ascending by (distance, id). Plans as
+  /** The single-query cut of [[graft.operators.Exhaustive.topK]] and of
+    * SQ8's and BQ's `search`: (id, distance) candidates → the k nearest,
+    * ascending by (distance, id). Plans as
     * `TakeOrderedAndProject` — a bounded heap per partition, merged on
     * the driver — so the search is one job with no exchange at any
     * scale. `idCol` names the id column when it is not `id`. */

@@ -6,7 +6,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.TopK
 import graft.functions.VectorOps.{normalizeF, normalizeLocal}
@@ -240,7 +239,7 @@ object HNSW {
       * local frame collects without one. */
     def search(query: Array[Float], k: Int): DataFrame = {
       val g = graphsOf(_ => true)
-      Serve.topK(g, g.partitions.indices, k, Scored)(
+      Serve.topK(g, g.partitions.indices, k)(
         scoreShards(Array(normalizeLocal(query)), None, removed, k))
     }
 
@@ -368,11 +367,6 @@ object HNSW {
       Residency.cool(shards)
     }
   }
-
-  /** The (id, distance) schema [[Model.search]] returns. */
-  private val Scored = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("distance", DoubleType, nullable = false)))
 
   /** One decoded shard: its graph and how many of the graph's ids are
     * tombstoned (`dead`, counted once when the shard is decoded). */

@@ -2,8 +2,8 @@ package graft.index
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
@@ -31,9 +31,9 @@ import graft.functions.VectorOps._
   *    Spark partition pruning reads only the probed clusters. This replaces
   *    the reference's in-memory inverted lists (ivfflat.rs:122-130) with a
   *    storage layout — the only structure that survives 100 TB. A warmed
-  *    model additionally keeps each partition's rows packed and resident
-  *    (cell, id, vector; [[Model.warm]]), which is the in-memory list
-  *    shape again, one record per partition and no shuffle at warm.
+  *    model additionally keeps the rows packed and resident (cell, id,
+  *    vector in chunks; [[Model.warm]]), which is the in-memory list
+  *    shape again, with no shuffle at warm.
   *  - Assignment: broadcast centroids + a narrow per-row argmin (no
   *    crossJoin blowup, no shuffle) — exactly the reference's rayon
   *    par_iter assignment (ivfflat.rs:29-46) in Spark's execution model.
@@ -43,10 +43,10 @@ import graft.functions.VectorOps._
   *    sizes), then exact re-rank within probed clusters only. Deviation
   *    (documented): we return the global top-k over the probed set, not
   *    the reference's per-cluster-precedence fill — strictly better
-  *    recall, same cost. A warm single `search` is one RDD job over the
-  *    packed rows plus a driver-side merge ([[Serve.topK]]), with no
-  *    per-call Catalyst planning; a cold one plans the partition-pruned
-  *    scan and ends in TakeOrderedAndProject. A warm batch search is
+  *    recall, same cost. A single `search` is one RDD job over packed
+  *    rows plus a driver-side merge ([[Serve.topK]]): the resident rows
+  *    of a warm model, or the probed cells' rows packed for the call
+  *    (partition-pruned on a loaded tier). A warm batch search is
   *    likewise one job over the packed rows with a per-query driver
   *    merge ([[Serve.topKMany]]); a cold one plans the pruned probe join.
   *  - `add`: assign new rows against frozen centroids (centroids never
@@ -93,31 +93,22 @@ object IVFFlat {
     @transient private[graft] lazy val serving =
       new Serve.Resident(() => IVFFlat.packCells(indexed))
 
-    /** The schema of the cold search plan, which the warm path returns
-      * too: analyzed once per model, never per call. */
-    @transient private lazy val scoredSchema =
-      coldTopK(Seq.empty, Array.emptyFloatArray, 1).schema
+    /** The records a search scores: the resident copy of a warm model,
+      * else `rows` packed for this call only. */
+    private def packed(rows: => DataFrame): RDD[CellRows] =
+      serving.get.getOrElse(IVFFlat.packCells(rows))
 
-    private def coldTopK(probed: Seq[Int], query: Array[Float], k: Int): DataFrame =
-      graft.operators.Exhaustive.topK(
-        indexed.filter(Cells.inCells(probed)),
-        "id", "vector", typedlit(query), k)
-
-    /** Single-query search over the probed cells. A warm model runs one
-      * RDD job over its resident packed rows, scoring only the rows of
-      * probed cells, and merges the per-task top-k on the driver
-      * ([[Serve.topK]]). A cold one plans a partition-pruned scan of the
-      * probed cells → exact distance → TakeOrderedAndProject, the only
-      * shape that prunes a loaded tier's parquet partitions without
-      * copying the tier. Both return the same rows and schema. */
+    /** Single-query search over the probed cells: one RDD job scores
+      * the rows of probed cells exactly and the driver merges the
+      * per-task top-k ([[Serve.topK]]), with no shuffle. A warm model
+      * scans its resident packed rows; a cold one packs the rows of
+      * `indexed` that pass the probed-cell filter ([[Cells.inCells]]),
+      * so a loaded tier reads only the probed parquet partitions. */
     def search(query: Array[Float], k: Int, minProbe: Int = 1): DataFrame = {
       val probed = probeSet(query, k, minProbe)
-      serving.get match {
-        case Some(rows) =>
-          Serve.topK(rows, rows.partitions.indices, k, scoredSchema)(
-            IVFFlat.scoreCells(Array(query), Array(probed), centroids.length))
-        case None => coldTopK(probed, query, k)
-      }
+      val rows = packed(indexed.filter(Cells.inCells(probed)))
+      Serve.topK(rows, rows.partitions.indices, k)(
+        IVFFlat.scoreCells(Array(query), Array(probed), centroids.length))
     }
 
     /** Batch search. A warm model ([[warm]]) collects the batch under
@@ -214,9 +205,10 @@ object IVFFlat {
       * A query side under the shared driver gate ([[DriverGate]], the
       * rule [[build]] applies to its input) is routed on the driver
       * instead: one job collects at most [[maxDriverRows]] queries,
-      * [[probeSet]]'s order picks each one's cells, and one job scans
-      * `indexed` once, scoring each row against the queries that probe
-      * its cell and shipping a top-k per query to the driver
+      * [[probeSet]]'s order picks each one's cells, and one job runs
+      * the searches' scan over `indexed` packed for the call (a warm
+      * model's resident copy), scoring each row against the queries
+      * that probe its cell and shipping a top-k per query to the driver
       * ([[Serve.topKMany]], the warm batch search's merge). Same rows
       * as the plan above, no shuffle, and no generated code past the
       * two scans, so a pass over many operators keeps fewer classes in
@@ -238,7 +230,6 @@ object IVFFlat {
     private def routedJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
                            k: Int, nprobe: Int): Option[DataFrame] = {
       if (k < 1 || k > (1 << 20)) return None
-      val layout = IVFFlat.rowLayout(indexed).getOrElse(return None)
       val batch = IVFFlat.driverCollect(queries.select(
           col(qIdCol).cast("long"), col(qVecCol).cast("array<float>")))
         .getOrElse(return None)
@@ -248,11 +239,9 @@ object IVFFlat {
       val qids = batch.map(_._1.longValue)
       if (!Serve.distinct(qids)) return None
       val qs = batch.map(_._2)
-      val rows = indexed.queryExecution.toRdd
-      Some(GraftShims.inSession(indexed.sparkSession) {
-        Serve.topKMany(rows, rows.partitions.indices, k, qids)(IVFFlat.scoreRows(
-          qs, qs.map(probeSet(_, k, nprobe)), centroids.length, layout))
-      })
+      val rows = packed(indexed)
+      Some(Serve.topKMany(rows, rows.partitions.indices, k, qids)(IVFFlat.scoreCells(
+        qs, qs.map(probeSet(_, k, nprobe)), centroids.length)))
     }
 
     /** Incremental add: assign against frozen centroids, union. Caller ids
@@ -531,40 +520,44 @@ object IVFFlat {
     out.result()
   }
 
-  /** One partition of the indexed frame, packed for warm serving: the
-    * cell, id and vector of each row, in row order. */
+  /** Up to [[Serve.Chunk]] rows of the indexed frame, packed for
+    * serving: the cell, id and vector of each row, in row order. */
   private[graft] final case class CellRows(cells: Array[Int], ids: Array[Long],
                                            vecs: Array[Array[Float]])
 
-  /** (cluster, id, vector) packed into one [[CellRows]] per partition of
-    * `indexed` — a narrow map, never a shuffle. */
-  private def packCells(indexed: DataFrame): org.apache.spark.rdd.RDD[CellRows] = {
-    import indexed.sparkSession.implicits._
-    indexed.select(col("cluster").cast("int"), col("id").cast("long"),
-        col("vector").cast("array<float>"))
-      .as[(Int, Long, Array[Float])].rdd
-      .mapPartitions { it =>
-        val rows = it.toArray
-        Iterator(CellRows(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
-      }
+  /** (cluster, id, vector) of `indexed`'s internal rows, read at the
+    * ordinals of [[rowLayout]], packed into [[CellRows]] chunks — a
+    * narrow map, never a shuffle. Rows with a null id, vector or cell
+    * are dropped, as the plans' join and top-k drop them. */
+  private def packCells(indexed: DataFrame): RDD[CellRows] = {
+    val (rows, (idAt, vecAt, cellAt)) = rowLayout(indexed) match {
+      case Some(at) => (indexed, at)
+      case None => (indexed.select(col("id").cast("long"), col("vector").cast("array<float>"),
+        col("cluster").cast("int")), (0, 1, 2))
+    }
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      it.collect { case r if !r.isNullAt(idAt) && !r.isNullAt(vecAt) && !r.isNullAt(cellAt) =>
+        (r.getInt(cellAt), r.getLong(idAt), r.getArray(vecAt).toFloatArray())
+      }.grouped(Serve.Chunk).map(g => CellRows(g.map(_._1).toArray, g.map(_._2).toArray,
+        g.map(_._3).toArray))
+    }
   }
 
-  /** The warm scan over packed rows, shared by single and batch
-    * search: each row is scored exactly ([[Serve.sqDist]]) against every
-    * query that probes its cell (`probed(q)` are query q's cells). Rows
-    * with a null vector are skipped, as the cold batch plan's top-k
-    * skips their null distance. */
+  /** The scan shared by single search, batch search and the routed
+    * [[Model.knnJoin]]: each packed row is scored exactly
+    * ([[Serve.sqDist]]) against every query that probes its cell
+    * (`probed(q)` are query q's cells). */
   private def scoreCells(qs: Array[Array[Float]], probed: Array[Seq[Int]],
                          numCells: Int): Serve.Score[CellRows] = {
     val queriesOf = queriesByCell(probed, numCells)
     (it, bufs) => it.foreach { p =>
       var i = 0
       while (i < p.ids.length) {
-        val v = p.vecs(i)
-        val mine = queriesOf(p.cells(i))
+        val c = p.cells(i)
+        val mine = if (c >= 0 && c < queriesOf.length) queriesOf(c) else Array.emptyIntArray
         var j = 0
-        while (v != null && j < mine.length) {
-          bufs(mine(j)).insert(Serve.sqDist(v, qs(mine(j))), p.ids(i))
+        while (j < mine.length) {
+          bufs(mine(j)).insert(Serve.sqDist(p.vecs(i), qs(mine(j))), p.ids(i))
           j += 1
         }
         i += 1
@@ -760,7 +753,7 @@ object IVFFlat {
 
   /** Ordinals of (id, vector, cluster) in `indexed`'s internal rows,
     * when they are (long, array<float>, int) as [[assign]] writes them;
-    * None for any other layout. */
+    * None for any other layout, which [[packCells]] casts to this one. */
   private def rowLayout(indexed: DataFrame): Option[(Int, Int, Int)] = {
     val f = indexed.schema.fields
     def at(name: String, t: DataType): Option[Int] =
@@ -768,31 +761,6 @@ object IVFFlat {
     for (i <- at("id", LongType); v <- at("vector", ArrayType(FloatType, true))
            .orElse(at("vector", ArrayType(FloatType, false)));
          c <- at("cluster", IntegerType)) yield (i, v, c)
-  }
-
-  /** [[scoreCells]] over `indexed`'s internal rows in the [[rowLayout]]
-    * `layout`: each row with a vector and a cell is scored against every
-    * query that probes its cell. Rows with a null id, vector or cell
-    * are skipped, as the plan's join and top-k skip them. */
-  private def scoreRows(qs: Array[Array[Float]], probed: Array[Seq[Int]],
-                        numCells: Int, layout: (Int, Int, Int)): Serve.Score[InternalRow] = {
-    val queriesOf = queriesByCell(probed, numCells)
-    val (idAt, vecAt, cellAt) = layout
-    (it, bufs) => it.foreach { r =>
-      if (!r.isNullAt(idAt) && !r.isNullAt(vecAt) && !r.isNullAt(cellAt)) {
-        val c = r.getInt(cellAt)
-        val mine = if (c >= 0 && c < queriesOf.length) queriesOf(c) else Array.emptyIntArray
-        if (mine.length > 0) {
-          val v = r.getArray(vecAt).toFloatArray()
-          val id = r.getLong(idAt)
-          var j = 0
-          while (j < mine.length) {
-            bufs(mine(j)).insert(Serve.sqDist(v, qs(mine(j))), id)
-            j += 1
-          }
-        }
-      }
-    }
   }
 
   /** The failure message for the lowest id (in `ids` order) whose

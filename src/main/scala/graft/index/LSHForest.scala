@@ -44,9 +44,10 @@ import graft.functions.VectorOps._
   * Batch candidates = ONE equi-join of the (tree, path)-exploded corpus
   * against the broadcast probe set, union across trees implicit, dedup
   * by id (lsh.rs:266-272), exact re-rank, top-k. A single query skips
-  * the join: one `paths` predicate keeps the union, then the exact
-  * re-rank and the one-query top-k cut. On a warmed model both are one
-  * RDD job over the resident packed rows and a driver-side merge.
+  * the join: one RDD job scores the rows of the union exactly and the
+  * driver merges the per-task top-k, over the resident packed rows of a
+  * warmed model or the corpus packed for the call. On a warmed model the
+  * batch search is one such job too.
   */
 object LSHForest {
 
@@ -127,7 +128,7 @@ object LSHForest {
     * executor closures must reference these through a broadcast Tree,
     * never through a captured Model — an instance method drags the whole
     * forest skeleton (tens of MB at 1M rows) into every task binary. */
-  private def leafPath(t: Tree, q: Array[Float]): String = {
+  private[graft] def leafPath(t: Tree, q: Array[Float]): String = {
     var path = ""
     while (t.planes.contains(path)) {
       val (coeffs, const) = t.planes(path)
@@ -259,36 +260,20 @@ object LSHForest {
     @transient private[graft] lazy val serving =
       new Serve.Resident(() => LSHForest.packPaths(indexed))
 
-    /** The schema of the cold search plan, which the warm path returns
-      * too: analyzed once per model, never per call. */
-    @transient private lazy val scoredSchema =
-      coldTopK(lit(false), Array.emptyFloatArray, 1).schema
-
-    private def coldTopK(probed: Column, query: Array[Float], k: Int): DataFrame =
-      graft.operators.Exhaustive.topK(indexed.filter(probed), "id", "vector",
-        typedlit(query), k)
-
     /** Single-query top-k in one job with no exchange: each tree's
       * probed leaves are computed on the driver (the same
       * [[probeLeaves]] as [[searchMany]]), and the rows whose leaf is
       * probed in ANY tree — the cross-tree union, each id once, so no
-      * dedup — are re-ranked exactly against the query. A warm model
-      * scores its resident packed rows in one RDD job and merges the
-      * per-task top-k on the driver ([[Serve.topK]]); a cold one plans
-      * one predicate over `paths` and
-      * [[graft.operators.Exhaustive.topK]]. Same candidates and
-      * distances as the one-row `searchMany`, so the same rows. */
+      * dedup — are re-ranked exactly against the query in one RDD job
+      * whose per-task top-k the driver merges ([[Serve.topK]]). A warm
+      * model scans its resident packed rows, a cold one `indexed`
+      * packed for this call. Same candidates and distances as the
+      * one-row `searchMany`, so the same rows. */
     def search(query: Array[Float], k: Int): DataFrame = {
       val leaves = trees.map(t => probeLeaves(t, query, k.toLong, params.probes))
-      serving.get match {
-        case Some(rows) =>
-          Serve.topK(rows, rows.partitions.indices, k, scoredSchema)(
-            LSHForest.scorePaths(Array(query), leaves.map(Array(_))))
-        case None =>
-          coldTopK(leaves.zipWithIndex.map { case (ls, ti) =>
-            col("paths").getItem(ti).isin(ls: _*)
-          }.reduce(_ || _), query, k)
-      }
+      val rows = serving.get.getOrElse(LSHForest.packPaths(indexed))
+      Serve.topK(rows, rows.partitions.indices, k)(
+        LSHForest.scorePaths(Array(query), leaves.map(Array(_))))
     }
 
     /** Incremental add: descend existing planes for each new row (planes
@@ -403,29 +388,32 @@ object LSHForest {
     def cool(): Unit = { serving.cool(); Residency.cool(indexed) }
   }
 
-  /** One partition of the path-indexed corpus, packed for warm serving:
-    * the id, vector and per-tree leaf paths of each row, in row order. */
+  /** Up to [[Serve.Chunk]] rows of the path-indexed corpus, packed for
+    * serving: the id, vector and per-tree leaf paths of each row, in
+    * row order. */
   private[graft] final case class PathRows(ids: Array[Long], vecs: Array[Array[Float]],
                                            paths: Array[Array[String]])
 
-  /** (id, vector, paths) packed into one [[PathRows]] per partition of
-    * `indexed` — a narrow map, never a shuffle. */
+  /** (id, vector, paths) of `indexed` packed into [[PathRows]] chunks —
+    * a narrow map, never a shuffle. */
   private def packPaths(indexed: DataFrame): org.apache.spark.rdd.RDD[PathRows] = {
     import indexed.sparkSession.implicits._
     indexed.select(col("id").cast("long"), col("vector").cast("array<float>"),
         col("paths").cast("array<string>"))
       .as[(Long, Array[Float], Array[String])].rdd
-      .mapPartitions { it =>
-        val rows = it.toArray
-        Iterator(PathRows(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
-      }
+      .mapPartitions(_.grouped(Serve.Chunk).map { rows =>
+        PathRows(rows.map(_._1).toArray, rows.map(_._2).toArray, rows.map(_._3).toArray)
+      })
   }
 
-  /** The warm scan over packed rows, shared by single and batch
-    * search: `probed(t)(q)` are query q's probed leaves in tree t, and
-    * each row is scored exactly ([[Serve.sqDist]]) once against every
-    * query that probes its leaf in some tree — the cross-tree union,
-    * each id once per query. Rows with a null vector are skipped. */
+  /** The scan over packed rows, shared by single and batch search:
+    * `probed(t)(q)` are query q's probed leaves in tree t, and each row
+    * is scored exactly ([[Serve.sqDist]]) once against every query that
+    * probes its leaf in some tree — the cross-tree union, each id once
+    * per query. Rows with a null vector are skipped. A row whose
+    * dimension differs from a query's fails the task, naming both: a
+    * forest with no planes never meets [[signBit]]'s guard, and the
+    * distance would fold over the shorter prefix. */
   private def scorePaths(qs: Array[Array[Float]],
                          probed: IndexedSeq[Array[Seq[String]]]): Serve.Score[PathRows] = {
     // per tree: leaf → the batch positions of the queries probing it
@@ -451,6 +439,8 @@ object LSHForest {
               val q = mine(j)
               if (seen(q) != row) {
                 seen(q) = row
+                require(v.length == qs(q).length,
+                  s"LSHForest query dim ${qs(q).length} != row dim ${v.length} (id ${p.ids(i)})")
                 bufs(q).insert(Serve.sqDist(v, qs(q)), p.ids(i))
               }
               j += 1

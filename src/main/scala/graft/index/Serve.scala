@@ -3,23 +3,25 @@ package graft.index
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TopKBuf
 
-/** Warm serving without per-call Catalyst planning. A warmed tier keeps
-  * its rows resident as a plain RDD ([[Resident]]); [[topK]] answers one
+/** Serving as one scan per tier. A warmed tier keeps its rows resident
+  * as a plain RDD of packed records ([[Resident]]); [[topK]] answers one
   * query and [[topKMany]] a collected batch with one `runJob` over it:
   * no Dataset is built, optimized or code-generated per call, and
-  * nothing shuffles. Paying the query-independent work once per
-  * session, at `warm()`, is the incremental top-k session idea (EDBT 2020,
-  * PAPERS.md); serving from worker-resident decoded state with a direct
-  * partition job is the in-memory design of the ICDE 2019 trajectory
-  * search (PAPERS.md), the Spark face of the reference's in-memory
-  * inverted lists (`vers/src/indexes/ivfflat.rs:122-130`). */
+  * nothing shuffles. A cold tier packs its records for the call and
+  * runs the same scan, so both return the same rows. Paying the
+  * query-independent work once per session, at `warm()`, is the
+  * incremental top-k session idea (EDBT 2020, PAPERS.md); serving
+  * from worker-resident decoded state with a direct partition job is
+  * the in-memory design of the ICDE 2019 trajectory search (PAPERS.md),
+  * the Spark face of the reference's in-memory inverted lists
+  * (`vers/src/indexes/ivfflat.rs:122-130`). */
 object Serve {
 
   /** The (qid, id, distance) schema of every batch `searchMany` plan
@@ -31,19 +33,25 @@ object Serve {
     StructField("id", LongType, nullable = false),
     StructField("distance", DoubleType, nullable = false)))
 
+  /** The (id, distance) schema of every single-query search [[topK]]
+    * answers (IVFFlat, HNSW, LSHForest). */
+  val Scored: StructType = StructType(Batch.fields.drop(1))
+
+  /** Most rows one packed serving record holds: a scan packed for one
+    * call streams through its partition a chunk at a time. */
+  val Chunk: Int = 4096
+
   /** A task's scan: it inserts each (distance, id) it scores for query
     * `q` (a position in the batch) into `bufs(q)`. It runs on the
     * executors, so it must capture locals only, never a model. */
   type Score[T] = (Iterator[T], Bufs) => Unit
 
   /** [[topKMany]] for one query (position 0) and no qid column: the ≤ k
-    * nearest, ascending by (distance, id), as a local (id, distance)
-    * frame with `schema` (the cold plan's, so callers cannot tell the
-    * paths apart). Collecting the result runs no job. */
-  def topK[T](rdd: RDD[T], partitions: Seq[Int], k: Int, schema: StructType)
-             (score: Score[T]): DataFrame = {
+    * nearest, ascending by (distance, id), as a local frame with schema
+    * [[Scored]]. Collecting the result runs no job. */
+  def topK[T](rdd: RDD[T], partitions: Seq[Int], k: Int)(score: Score[T]): DataFrame = {
     val b = merged(rdd, partitions, k, 1)(score)(0)
-    local(b.sortedIdx.toSeq.map(i => Row(b.ids(i), b.ds(i))), schema)
+    local(b.sortedIdx.toSeq.map(i => Row(b.ids(i), b.ds(i))), Scored)
   }
 
   /** One job over `partitions` of `rdd` for a collected query batch:
@@ -91,11 +99,15 @@ object Serve {
                        (score: Score[T]): Array[TopKBuf] = {
     require(k >= 0, s"k=$k must be >= 0")
     if (k == 0 || n == 0) return Array.fill(n)(new TopKBuf(k))
-    val parts = rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => {
-      val bufs = new Bufs(n, k)
-      score(it, bufs)
-      bufs.shipped
-    }, partitions)
+    // under the session's job-artifact state, as its SQL queries run: a
+    // scan packed for the call compiles the same classes they do
+    val parts = GraftShims.inSession(SparkSession.active) {
+      rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => {
+        val bufs = new Bufs(n, k)
+        score(it, bufs)
+        bufs.shipped
+      }, partitions)
+    }
     val all = Array.fill(n)(new TopKBuf(k))
     for (part <- parts; (q, ds, ids) <- part; i <- ds.indices) all(q).insert(ds(i), ids(i))
     all

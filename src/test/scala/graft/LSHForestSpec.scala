@@ -251,5 +251,25 @@ class LSHForestSpec extends SparkSpec {
       assert(hasMsg(many, s"LSH plane dim ${q.length} != vector dim ${bad.length}"),
         s"searchMany: $many")
     }
+    // a forest with no planes (the exact configuration, maxNodeSize =
+    // Int.MaxValue) routes without a sign test; the scan refuses the row
+    // instead of scoring the shared prefix, cold and warm
+    val flat = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue, dedupExact = false))
+    assert(flat.trees.forall(_.planes.isEmpty))
+    val bads = Seq(q.take(q.length - 1), q :+ 0.5f)
+    def want(bad: Array[Float]) = s"LSHForest query dim ${bad.length} != row dim ${q.length}"
+    for (bad <- bads) {
+      val cold = intercept[Throwable](flat.search(bad, 5).collect())
+      assert(hasMsg(cold, want(bad)), s"cold search: $cold")
+    }
+    flat.warm() // cooling ends the checkpointed corpus: warm checks last
+    try for (bad <- bads) {
+      val warm = intercept[Throwable](flat.search(bad, 5).collect())
+      assert(hasMsg(warm, want(bad)), s"warm search: $warm")
+      val many = intercept[Throwable](
+        flat.searchMany(Seq((0L, bad)).toDF("qid", "qvec"), "qid", "qvec", 5).collect())
+      assert(hasMsg(many, want(bad)), s"warm searchMany: $many")
+    } finally flat.cool()
   }
 }

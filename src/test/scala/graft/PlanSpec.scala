@@ -198,7 +198,7 @@ class PlanSpec extends SparkSpec {
         df.queryExecution.executedPlan.toString.take(1200))
   }
 
-  test("single-query search on every tier: TakeOrderedAndProject, no Exchange") {
+  test("single-query search on every tier: one-stage scan or TakeOrderedAndProject") {
     val emb = SearchOne.emb(spark, sf0001)
     val q = SearchOne.queries(emb, 1).head
     for ((name, search) <- SearchOne.tiers(emb)) {
@@ -206,13 +206,13 @@ class PlanSpec extends SparkSpec {
       val run = launchedBy { df = search(q); df.collect(): Unit }
       val plan = df.queryExecution.executedPlan
       val shown = plan.toString.take(1200)
-      if (name == "HNSW") {
-        // HNSW plans nothing: one RDD job inside `search` (index.Serve),
+      if (Set("IVFFlat", "HNSW", "LSHForest")(name)) {
+        // these plan nothing: one RDD job inside `search` (index.Serve),
         // one stage, and a local result that collects without a job
         assert(run.jobs.size == 1 && run.stagesRun.size == 1,
-          s"HNSW search: ${run.jobs.size} jobs, ${run.stagesRun.size} stages run")
+          s"$name search: ${run.jobs.size} jobs, ${run.stagesRun.size} stages run")
         assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
-          s"HNSW search result is not local:\n$shown")
+          s"$name search result is not local:\n$shown")
       } else {
         val nodes = flatten(plan)
         assert(nodes.exists(

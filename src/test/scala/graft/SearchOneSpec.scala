@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{BQ, HNSW, HNSWGraph, IVFFlat, LSHForest, SQ8}
+import graft.index.{BQ, HNSW, HNSWGraph, IVFFlat, LSHForest, SQ8, Serve}
 
 /** The five tiers with a single-query `search`, each as (name, search
   * at k = 10), over the sf0.001 embeddings. Shared by the plan-shape
@@ -150,38 +150,74 @@ class SearchOneSpec extends SparkSpec {
   }
 
   test("IVF-family search compiles the same code whatever cells it probes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.execution.debug.codegenStringSeq
     val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
     val (sq8, bq) = (SQ8.compress(ivf), BQ.compress(ivf))
-    val tiers = Seq[(String, Array[Float] => DataFrame)](
-      "IVFFlat" -> (q => ivf.search(q, K, 2)),
-      "SQ8" -> (q => sq8.search(q, K, 2)),
-      "BQ" -> (q => bq.search(q, K, 2)))
     val cands = SearchOne.queries(emb, 64)
     val a = cands.head
     val b = cands.find(q => ivf.probeSet(q, K, 2).toSet != ivf.probeSet(a, K, 2).toSet)
       .getOrElse(fail("no two queries with different probe sets"))
-    // generated source per whole-stage subtree, expression ids masked
+    // SQ8 and BQ plan their search: generated source per whole-stage
+    // subtree, expression ids masked
     def code(df: DataFrame): Seq[String] =
       codegenStringSeq(df.queryExecution.executedPlan)
         .map(_._2.replaceAll("#\\d+", "#"))
-    for ((name, search) <- tiers) {
+    for ((name, search) <- Seq[(String, Array[Float] => DataFrame)](
+        "SQ8" -> (q => sq8.search(q, K, 2)),
+        "BQ" -> (q => bq.search(q, K, 2)))) {
       val (ca, cb) = (code(search(a)), code(search(b)))
       assert(ca.nonEmpty, s"$name: no whole-stage codegen in the search plan")
       assert(ca == cb, s"$name: generated code depends on the probe set")
     }
+    // IVFFlat and LSHForest run no per-call plan to inspect; a cold
+    // search packs its rows through one compiled scan, so a second
+    // probe set compiles no class
+    val lsh = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 2, maxNodeSize = 64, probes = 3))
+    def leaves(q: Array[Float]): Seq[String] = lsh.trees.map(LSHForest.leafPath(_, q))
+    val c = cands.find(q => leaves(q).zip(leaves(a)).forall { case (x, y) => x != y })
+      .getOrElse(fail("no two queries in different leaves of every tree"))
+    for ((name, first, second) <- Seq[(String, () => DataFrame, () => DataFrame)](
+        ("IVFFlat", () => ivf.search(a, K, 2), () => ivf.search(b, K, 2)),
+        ("LSHForest", () => lsh.search(a, K), () => lsh.search(c, K)))) {
+      first().collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      second().collect()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$name: a search with another probe set compiled $compiled classes")
+    }
   }
 
-  test("a saved-then-loaded IVFFlat search prunes cells as parquet partition filters") {
-    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+  /** Σ input records read by the tasks `body` launches. */
+  private def recordsRead(body: => Unit): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // launchedBy returns once the bus has delivered every earlier event
+    try launchedBy(body) finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  test("a saved-then-loaded IVFFlat search reads only the probed cells") {
+    val cents = SparkEntry.fixedCentroids(emb)
+    val assigned = IVFFlat.assign(emb, "vec_id", "embedding", cents)
+    val ivf = IVFFlat.Model(IVFFlat.Params(cents.length), cents,
+      graft.index.Cells.sizes(assigned, cents.length), assigned)
     val dir = java.nio.file.Files.createTempDirectory("ivf_cells").toString
     ivf.save(dir)
     val loaded = IVFFlat.load(spark, dir)
+    val corpus = emb.count()
     for (q <- SearchOne.queries(emb, 3)) {
-      val df = loaded.search(q, K, 2)
-      val plan = df.queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*array_contains\\(".r.findFirstIn(plan).isDefined,
-        plan)
+      val probed = loaded.probeSet(q, K, 2)
+      var df: DataFrame = null
+      val read = recordsRead { df = loaded.search(q, K, 2) }
+      assert(read == probed.map(loaded.clusterSizes(_)).sum && read < corpus,
+        s"read $read rows for cells $probed of sizes ${loaded.clusterSizes.toSeq}")
       assert(df.collect().toSeq == ivf.search(q, K, 2).collect().toSeq)
     }
   }
@@ -223,11 +259,37 @@ class SearchOneSpec extends SparkSpec {
     val dead = plain.remove(emb.filter(col("vec_id") % 7 === 0), "vec_id")
     val routed = HNSW.buildRouted(emb, "vec_id", "embedding", params,
       numShards = 4, routerIterations = 3)
-    for ((what, m) <- Seq("plain" -> plain, "tombstoned" -> dead, "routed" -> routed)) {
+    for ((what, m) <- Seq("plain" -> plain, "tombstoned" -> dead, "routed" -> routed))
       warmEqualsCold(s"HNSW $what", qs, () => m.warm(), () => m.cool(), m.search(_, K))
-      // the schema of the plan the serving job replaced
-      import spark.implicits._
-      assert(m.search(qs.head, K).schema == Seq((0L, 0.0)).toDF("id", "distance").schema)
+  }
+
+  test("search returns Serve.Scored on IVFFlat, LSHForest, HNSW: cold, warm and loaded") {
+    val ivf = SparkEntry.pinnedIvf(emb, SparkEntry.fixedCentroids(emb))
+    val lsh = LSHForest.build(emb, "vec_id", "embedding",
+      LSHForest.Params(numTrees = 2, maxNodeSize = 64, probes = 3))
+    val hnsw = HNSW.build(emb, "vec_id", "embedding",
+      HNSWGraph.Params(efConstruction = 40, m = 8), numShards = 4)
+    def saved(save: String => Unit): String = {
+      val dir = java.nio.file.Files.createTempDirectory("scored").toString
+      save(dir)
+      dir
+    }
+    val (ivfDir, lshDir, hnswDir) = (saved(ivf.save), saved(lsh.save), saved(hnsw.save))
+    val q = qs.head
+    /** The result schema of `search` cold, then warmed. */
+    def scored(name: String, search: () => DataFrame, warm: () => Unit, cool: () => Unit): Unit = {
+      val cold = search()
+      assert(cold.schema == Serve.Scored, s"$name cold: ${cold.schema}")
+      assert(cold.collect().length == K, s"$name cold")
+      warm()
+      try assert(search().schema == Serve.Scored, s"$name warm: ${search().schema}")
+      finally cool()
+    }
+    for ((what, i, l, h) <- Seq(("", ivf, lsh, hnsw), (" loaded", IVFFlat.load(spark, ivfDir),
+        LSHForest.load(spark, lshDir), HNSW.load(spark, hnswDir)))) {
+      scored(s"IVFFlat$what", () => i.search(q, K, 2), () => i.warm(): Unit, () => i.cool())
+      scored(s"LSHForest$what", () => l.search(q, K), () => l.warm(): Unit, () => l.cool())
+      scored(s"HNSW$what", () => h.search(q, K), () => h.warm(): Unit, () => h.cool())
     }
   }
 

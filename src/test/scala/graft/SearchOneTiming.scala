@@ -4,17 +4,16 @@ import org.apache.spark.sql.DataFrame
 
 import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest}
 
-/** Times single-query `search` on the three tiers that serve warm
-  * (IVFFlat, HNSW, LSHForest), cold and then warm, on a seeded
-  * clustered corpus built with the ann_serve index parameters. Per tier
-  * and path it prints the p50 over the queries of one whole call and
-  * the median of each of its parts: `search` itself (Dataset
-  * construction and analysis on a cold plan, the whole job on a warm
-  * one), optimizing, physical planning, and `collect()` (the
-  * SQL-execution wrapper, codegen, the job and the result decode on a
-  * cold plan). It also counts queries whose warm rows differ from the
-  * cold ones (want 0). HNSW has no cold plan: both its paths run one
-  * RDD job, decoding the shard blobs per call when cold.
+/** Times single-query `search` on the three tiers that serve through
+  * one scan (IVFFlat, HNSW, LSHForest), cold and then warm, on a seeded
+  * clustered corpus built with the ann_serve index parameters. Both
+  * paths run the same scan in one RDD job inside `search`: a cold model
+  * packs its rows (HNSW: decodes its shard graphs) for the call, a warm
+  * one scans its resident copy. Per tier and path it prints the p50
+  * over the queries of one whole call and the median of its two parts:
+  * `search` itself (the job and the driver merge) and `collect()` of
+  * the local result. It also counts queries whose warm rows differ from
+  * the cold ones (want 0).
   *
   * A second line per tier times a 100-query `searchMany`, cold and then
   * warm: the p50 over 10 calls of one whole call (the call and its
@@ -30,18 +29,14 @@ object SearchOneTiming {
 
   private type Call = (Seq[Double], Seq[(Long, Double)])
 
-  /** (search, optimize, plan, collect) ms of one call, and its rows. */
+  /** (search, collect) ms of one call, and its rows. */
   private def split(search: => DataFrame): Call = {
     var t = System.nanoTime
     def lap(): Double = { val now = System.nanoTime; val d = (now - t) / 1e6; t = now; d }
     val df = search
     val tSearch = lap()
-    df.queryExecution.optimizedPlan
-    val tOpt = lap()
-    df.queryExecution.executedPlan
-    val tPlan = lap()
     val rows = df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("distance"))).toSeq
-    (Seq(tSearch, tOpt, tPlan, lap()), rows)
+    (Seq(tSearch, lap()), rows)
   }
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
@@ -102,7 +97,7 @@ object SearchOneTiming {
       val hotMany = batchPass()
       cool()
       def line(path: String, runs: Seq[Call]): String = {
-        val parts = Seq("search", "optimize", "plan", "collect").zipWithIndex.map {
+        val parts = Seq("search", "collect").zipWithIndex.map {
           case (p, i) => f"${path}_${p}_ms=${median(runs.map(_._1(i)))}%.1f"
         }
         f"${path}_p50_ms=${median(runs.map(_._1.sum))}%.1f " + parts.mkString(" ")
