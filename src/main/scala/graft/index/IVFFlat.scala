@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
@@ -23,7 +23,7 @@ import graft.functions.VectorOps._
   *    An input under the shared driver gate ([[DriverGate]]) trains in
   *    memory on the driver, as the reference does (k-means++ and Lloyd's
   *    in double, no job past the one that collects the rows); a larger
-  *    one, or one with no size estimate, trains with MLlib `KMeans`
+  *    one, or one of unknown size, trains with MLlib `KMeans`
   *    (k-means||). The two give different centroids for the same rows;
   *    [[build]] has the detail.
   *  - The indexed corpus gains a `cluster` column and is written
@@ -204,12 +204,13 @@ object IVFFlat {
       *
       * A query side under the shared driver gate ([[DriverGate]], the
       * rule [[build]] applies to its input) is routed on the driver
-      * instead: one job collects at most [[maxDriverRows]] queries,
-      * [[probeSet]]'s order picks each one's cells, and one job runs
-      * the searches' scan over `indexed` packed for the call (a warm
-      * model's resident copy), scoring each row against the queries
-      * that probe its cell and shipping a top-k per query to the driver
-      * ([[Serve.topKMany]], the warm batch search's merge). Same rows
+      * instead: one job collects at most [[DriverGate.maxRows]] queries
+      * ([[DriverGate.collect]]), [[probeSet]]'s order picks each one's
+      * cells, and one job runs the searches' scan over `indexed` packed
+      * for the call (a warm model's resident copy), scoring each row
+      * against the queries that probe its cell and shipping a top-k per
+      * query to the driver ([[Serve.topKMany]], the warm batch
+      * search's merge). Same rows
       * as the plan above, no shuffle, and no generated code past the
       * two scans, so a pass over many operators keeps fewer classes in
       * Spark's codegen cache (100 classes; when one of its segments
@@ -230,7 +231,7 @@ object IVFFlat {
     private def routedJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
                            k: Int, nprobe: Int): Option[DataFrame] = {
       if (k < 1 || k > (1 << 20)) return None
-      val batch = IVFFlat.driverCollect(queries.select(
+      val batch = DriverGate.collect(queries.select(
           col(qIdCol).cast("long"), col(qVecCol).cast("array<float>")))
         .getOrElse(return None)
       val dim = centroids(0).length
@@ -659,11 +660,12 @@ object IVFFlat {
     * the lowest-cost run kept), then the narrow [[assign]] as `indexed`,
     * cached. tol=0 ≈ the bitwise-convergence rule (ivfflat.rs:84-95).
     *
-    * Two paths, chosen by the input plan's size estimate (what Spark's
-    * broadcast planning reads; no job) through the shared gate
-    * ([[DriverGate]]: within `spark.sql.autoBroadcastJoinThreshold` and
-    * [[maxDriverBytes]]):
-    *  - DRIVER: one job collects at most [[maxDriverRows]] + 1 (id,
+    * Two paths, chosen by the input's size ([[DriverGate.bytesOf]]: the
+    * plan's size estimate, or the stored bytes of a checkpointed or
+    * filled RDD frame; no job) through the shared gate ([[DriverGate]]:
+    * within `spark.sql.autoBroadcastJoinThreshold` and
+    * [[DriverGate.maxBytes]]):
+    *  - DRIVER: one job collects at most [[DriverGate.maxRows]] + 1 (id,
     *    vector) rows (more falls back to MLlib), sorts them by id, and
     *    runs k-means++ seeding and Lloyd's in double on the driver
     *    ([[kMeansOnDriver]]); `clusterSizes` come from [[assign]]'s own
@@ -673,14 +675,16 @@ object IVFFlat {
     *    partitioning, and repeat bit for bit.
     *  - DISTRIBUTED: MLlib `KMeans` (k-means|| init) over a cached
     *    feature frame, then one count job for `clusterSizes`. An input
-    *    with no size estimate (a frame built from an RDD) always takes it.
+    *    of unknown size (a frame built from an RDD that is not stored,
+    *    or a lazy checkpoint) always takes it.
     * The two paths train different centroids from the same rows:
     * k-means++ is the sequential form of k-means||, and an empty cell
     * keeps its previous centre on both. Both keep fewer than `k`
     * centroids when the rows hold fewer distinct vectors, and both
     * refuse an empty input and a null, non-finite or wrong-dimension
     * vector with an IllegalArgumentException naming the lowest such id
-    * ([[invalidRow]]; the distributed path names it once MLlib fails). */
+    * ([[DriverGate.invalidRow]]; the distributed path names it once
+    * MLlib fails). */
   def build(emb: DataFrame, idCol: String, vecCol: String,
             params: Params): Model = {
     val rows = emb.select(
@@ -688,7 +692,8 @@ object IVFFlat {
       col(vecCol).cast("array<float>").as("vector"))
     driverRows(rows) match {
       case Some((ids, vecs)) =>
-        invalidRow(ids, vecs).foreach(m => throw new IllegalArgumentException(m))
+        DriverGate.invalidRow("IVFFlat.build", noRows, ids, vecs)
+          .foreach(m => throw new IllegalArgumentException(m))
         val centroids = kMeansOnDriver(vecs, params)
         val sizes = new Array[Long](params.k)
         vecs.foreach(v => sizes(nearest(centroids, v)) += 1)
@@ -701,55 +706,16 @@ object IVFFlat {
     }
   }
 
-  /** Largest training set [[build]] clusters on the driver: the job
-    * collects one more row than this at most, and Lloyd's costs rows ×
-    * k × dim per iteration on one core. */
-  private[graft] val maxDriverRows: Int = 65536
-
-  /** Cap on the input's size estimate for the driver build, whatever
-    * the broadcast budget (the float payload of [[maxDriverRows]]
-    * 128-dim rows). */
-  private[graft] val maxDriverBytes: Long = 32L << 20
-
-  /** (ids, vectors) sorted by id (ties by vector), when [[driverCollect]]
-    * takes the rows. */
+  /** (ids, vectors) sorted by id (ties by vector), when
+    * [[DriverGate.collect]] takes the rows. */
   private def driverRows(rows: DataFrame): Option[(Array[Long], Array[Array[Float]])] =
-    driverCollect(rows).map { got =>
+    DriverGate.collect(rows).map { got =>
       val all = got.sortWith { (a, b) =>
         val c = java.lang.Long.compare(a._1, b._1)
         if (c != 0) c < 0 else java.util.Arrays.compare(a._2, b._2) < 0
       }
       (all.map(_._1.longValue), all.map(_._2))
     }
-
-  /** The (id, vector) rows of a two-column (long, array<float>) frame,
-    * nulls kept, in partition order, when its plan's size estimate
-    * passes the gate and it holds at most [[maxDriverRows]] rows: one
-    * job, each task returning at most `maxDriverRows + 1` rows and the
-    * driver keeping none once the total passes the cap. */
-  private def driverCollect(rows: DataFrame): Option[Array[(java.lang.Long, Array[Float])]] = {
-    val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
-    val budget = DriverGate.budget(rows.sparkSession)
-    if (!DriverGate.fits(if (est.isValidLong) est.toLong else Long.MaxValue,
-        budget, maxDriverBytes)) return None
-    val cap = maxDriverRows
-    // internal rows, copied out field by field: no conversion to Row
-    val rdd = rows.queryExecution.toRdd.map { r =>
-      (if (r.isNullAt(0)) null else Long.box(r.getLong(0)),
-        if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())
-    }
-    val parts = new Array[Array[(java.lang.Long, Array[Float])]](rdd.partitions.length)
-    var n = 0L
-    GraftShims.inSession(rows.sparkSession) {
-      rows.sparkSession.sparkContext.runJob(rdd,
-        (it: Iterator[(java.lang.Long, Array[Float])]) => it.take(cap + 1).toArray,
-        (i: Int, part: Array[(java.lang.Long, Array[Float])]) => {
-          n += part.length
-          if (n <= cap) parts(i) = part
-        })
-    }
-    if (n > cap) None else Some(parts.flatten)
-  }
 
   /** Ordinals of (id, vector, cluster) in `indexed`'s internal rows,
     * when they are (long, array<float>, int) as [[assign]] writes them;
@@ -763,28 +729,12 @@ object IVFFlat {
          c <- at("cluster", IntegerType)) yield (i, v, c)
   }
 
-  /** The failure message for the lowest id (in `ids` order) whose
-    * vector is null, holds a NaN or infinity, or differs in dimension
-    * from the first row's; for no rows at all, the empty-input one. */
-  private def invalidRow(ids: Array[Long], vecs: Array[Array[Float]]): Option[String] =
-    if (ids.isEmpty) Some("IVFFlat.build has no rows to cluster")
-    else {
-      val dim = Option(vecs(0)).map(_.length).getOrElse(-1)
-      ids.indices.iterator.map { i =>
-        val v = vecs(i)
-        if (v == null) Some(s"IVFFlat.build row ${ids(i)} has a null vector")
-        else if (v.length != dim)
-          Some(s"IVFFlat.build row ${ids(i)} has dim ${v.length} != dim $dim of row ${ids(0)}")
-        else if (v.exists(x => x.isNaN || x.isInfinite))
-          Some(s"IVFFlat.build row ${ids(i)} has a NaN or infinite value")
-        else None
-      }.collectFirst { case Some(m) => m }
-    }
+  private val noRows = "IVFFlat.build has no rows to cluster"
 
   /** MLlib KMeans with the restart-keep-best loop. When the build fails,
-    * the input is checked for what [[invalidRow]] refuses (failure path
-    * only: two small jobs), so a bad row fails naming its id as it does
-    * on the driver path. */
+    * the input is checked for what [[DriverGate.invalidRow]] refuses
+    * (failure path only: two small jobs), so a bad row fails naming its
+    * id as it does on the driver path. */
   private def buildDistributed(rows: DataFrame, params: Params): Model = {
     val feats = rows
       .withColumn("features",
@@ -811,28 +761,11 @@ object IVFFlat {
     } catch {
       case e: Exception =>
         feats.unpersist() // the check must not read the failed cache
-        invalidRowOf(rows).foreach(m => throw new IllegalArgumentException(m, e))
+        DriverGate.invalidRowOf("IVFFlat.build", noRows, rows)
+          .foreach(m => throw new IllegalArgumentException(m, e))
         throw e
     } finally feats.unpersist()
   }
-
-  /** [[invalidRow]] over a distributed frame: the lowest id's row, then
-    * the lowest id among the rows it would refuse. */
-  private def invalidRowOf(rows: DataFrame): Option[String] =
-    rows.orderBy(col("id"), col("vector")).limit(1).collect().headOption match {
-      case None => invalidRow(Array.empty, Array.empty)
-      case Some(first) =>
-        val dim = if (first.isNullAt(1)) -1 else first.getSeq[Float](1).length
-        val bad = rows.filter(col("vector").isNull ||
-            size(col("vector")) =!= lit(dim) ||
-            exists(col("vector"), x => isnan(x) || x.isin(Float.PositiveInfinity, Float.NegativeInfinity)))
-          .orderBy(col("id"), col("vector")).limit(1).collect()
-        bad.headOption.flatMap { r =>
-          invalidRow(Array(first.getLong(0), r.getLong(0)),
-            Array(Option(first.getSeq[Float](1)).map(_.toArray).orNull,
-              Option(r.getSeq[Float](1)).map(_.toArray).orNull))
-        }
-    }
 
   /** k-means over `pts` on the driver, in double: per attempt, k-means++
     * seeding from `seed + attempt` ([[seedPlusPlus]]), then Lloyd's

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,6 +36,9 @@ import graft.functions.VectorOps._
   *    the whole build runs `levels + 1` jobs total.
   *  - a node whose split leaves one side empty (degenerate plane)
   *    re-samples next level with a level-salted hash; depth is capped.
+  * An input under the shared driver gate ([[DriverGate]]) runs the same
+  * loop on arrays on the driver instead, as the reference builds in
+  * memory, and gets the same trees in two jobs ([[build]]).
   *
   * Search (lsh.rs:163-216, 264-282): descend each tree driver-side to the
   * query's leaf; the reference backtracks into siblings until n candidates
@@ -244,9 +247,18 @@ object LSHForest {
         .toDF("qid", "qvec", "tree", "path")
       val exploded = indexed.select(col("id"), col("vector"),
         posexplode(col("paths")).as(Seq("tree", "path")))
+      // a forest with no planes runs no sign test, so a wrong-dimension
+      // query meets its first row here, where the fold would stop at
+      // the shorter array
+      val wrongDim = col("vector").isNotNull && size(col("vector")) =!= size(col("qvec"))
       exploded.join(broadcast(probes), Seq("tree", "path"))
         .select(col("qid"), col("id"),
-          sqDist(col("vector"), col("qvec")).as("distance"))
+          when(wrongDim, raise_error(concat(
+              lit("LSHForest query dim "), size(col("qvec")).cast("string"),
+              lit(" != row dim "), size(col("vector")).cast("string"),
+              lit(" (qid "), col("qid").cast("string"),
+              lit(", id "), col("id").cast("string"), lit(")"))))
+            .otherwise(sqDist(col("vector"), col("qvec"))).as("distance"))
         .as[(Long, Long, Double)]
         .groupByKey(_._1)
         .flatMapGroups { (qid, it) =>
@@ -356,7 +368,7 @@ object LSHForest {
         .as[(Long, Array[Float], Array[String])]
       val grown = trees.map(t =>
         scala.collection.mutable.Map.empty[String, (Array[Double], Double)] ++= t.planes)
-      val (finalDs, stats) = refine(ds, grown.toArray, params)
+      val (finalDs, stats) = refine(ds.localCheckpoint(true), grown.toArray, params)
       val newTrees = trees.indices.map { ti =>
         Tree(grown(ti).toMap,
           stats.collect { case ((t, p), (n, _)) if t == ti => p -> n }.toMap)
@@ -558,11 +570,13 @@ object LSHForest {
       .toMap
   }
 
-  /** The level-synchronous split loop shared by [[build]] and
-    * [[Model.rebuildLeaves]]: repeatedly split every overfull
+  /** The level-synchronous split loop of [[build]]'s distributed path
+    * and of [[Model.rebuildLeaves]]: repeatedly split every overfull
     * (tree, node) on its sampled bisector until none remains (or the
-    * per-run depth cap). `planes` is extended in place; returns the
-    * final dataset and its terminal per-leaf stats.
+    * per-run depth cap). `ds0` is the caller's filled checkpoint, which
+    * the loop releases once its first split is filled. `planes` is
+    * extended in place; returns the final dataset and its terminal
+    * per-leaf stats. [[splitOnDriver]] runs the same loop on arrays.
     *
     * Each level is materialized via `localCheckpoint`, NOT `cache`: a
     * cache chain keeps the whole per-level map lineage in the logical
@@ -581,7 +595,7 @@ object LSHForest {
      Map[(Int, String), NodeStat]) = {
     val spark = ds0.sparkSession
     import spark.implicits._
-    var ds = ds0.localCheckpoint(true)
+    var ds = ds0
 
     var level = 0
     var stats = Map.empty[(Int, String), NodeStat]
@@ -632,15 +646,146 @@ object LSHForest {
     (ds, stats)
   }
 
+  /** [[refine]]'s level loop on the driver, over rows sorted by id with
+    * unique ids: per level and tree, one [[MutStat]] per node (the same
+    * level-salted `mix64` sample hash and (hash, id) order the
+    * distributed partials merge by), a [[bisectorPlane]] for every node
+    * holding more than `maxNodeSize` rows, and one [[signBit]] per row
+    * of a split node, until no node is overfull or `maxDepth` levels
+    * ran; then, if the cap stopped the loop right after a split, one
+    * counts-only pass. The trees equal [[refine]]'s for the same rows,
+    * plane for plane and leaf for leaf. */
+  private def splitOnDriver(ids: Array[Long], vecs: Array[Array[Float]],
+                            params: Params): IndexedSeq[Tree] = {
+    val T = params.numTrees
+    val paths = Array.fill(T, ids.length)("")
+    val planes = Array.fill(T)(scala.collection.mutable.Map.empty[String, (Array[Double], Double)])
+    def levelStats(levelSeed: Long) = Array.tabulate(T) { ti =>
+      val m = scala.collection.mutable.HashMap.empty[String, MutStat]
+      var i = 0
+      while (i < ids.length) {
+        m.getOrElseUpdate(paths(ti)(i), new MutStat)
+          .insert(mix64(ids(i) ^ (ti * 0x9E3779B97F4A7C15L) ^ levelSeed), ids(i), vecs(i))
+        i += 1
+      }
+      m
+    }
+    var level = 0
+    var stats = Array.fill(T)(scala.collection.mutable.HashMap.empty[String, MutStat])
+    var splitLast = true
+    while (splitLast && level < params.maxDepth) {
+      stats = levelStats(params.seed + level * 131L)
+      splitLast = false
+      for (ti <- 0 until T) {
+        val split = stats(ti).collect {
+          case (p, st) if st.n > params.maxNodeSize => p -> bisectorPlane(st.v1, st.v2)
+        }
+        if (split.nonEmpty) {
+          splitLast = true
+          val at = paths(ti)
+          var i = 0
+          while (i < at.length) {
+            split.get(at(i)).foreach { case (coeffs, const) =>
+              at(i) += (if (signBit(coeffs, const, vecs(i))) "1" else "0")
+            }
+            i += 1
+          }
+          planes(ti) ++= split
+        }
+      }
+      level += 1
+    }
+    if (splitLast) stats = levelStats(params.seed)
+    (0 until T).map(ti => Tree(planes(ti).toMap, stats(ti).map { case (p, st) => p -> st.n }.toMap))
+  }
+
+  /** Positions of the rows exact-dup elimination keeps: the first of
+    * each vector in `vecs`' order, with the key equality Spark's window
+    * partitioning uses (−0.0 equals 0.0, every NaN equals every NaN). */
+  private def firstOfEachVector(vecs: Array[Array[Float]]): Array[Int] = {
+    final class Key(v: Array[Float]) {
+      // Arrays.equals/hashCode compare floatToIntBits: NaNs already equal
+      private val k = v.map(x => if (x == 0f) 0f else x)
+      override def hashCode: Int = java.util.Arrays.hashCode(k)
+      override def equals(o: Any): Boolean = o match {
+        case other: Key => java.util.Arrays.equals(k, other.k)
+        case _ => false
+      }
+    }
+    val seen = scala.collection.mutable.HashSet.empty[Key]
+    vecs.indices.filter(i => seen.add(new Key(vecs(i)))).toArray
+  }
+
+  private val noRows = "LSHForest.build has no rows to index"
+
+  /** Build (lsh.rs:58-161): exact-dup elimination when `dedupExact`
+    * (keep-first by id, lsh.rs:113-130), then the level-synchronous
+    * split loop per tree. Two paths, chosen by the shared driver gate
+    * ([[DriverGate]]: the input's [[DriverGate.bytesOf]] within
+    * `spark.sql.autoBroadcastJoinThreshold` and [[DriverGate.maxBytes]],
+    * at most [[DriverGate.maxRows]] rows, every id present and unique):
+    *  - DRIVER: one job collects (id, vector) ([[DriverGate.collect]]);
+    *    the driver drops exact dups ([[firstOfEachVector]]) and runs
+    *    the split loop on arrays ([[splitOnDriver]]); one narrow pass
+    *    over the input then broadcasts the trees, drops the rows dedup
+    *    removed and appends each row's [[leafPath]] per tree, under the
+    *    schema the distributed path returns, and one `localCheckpoint`
+    *    fills `indexed`. Two jobs.
+    *  - DISTRIBUTED: a window keep-first, a `localCheckpoint`, and
+    *    [[refine]]'s loop, `levels + 1` jobs and one checkpoint per
+    *    split level. An input of unknown size always takes it.
+    * Both paths give the same planes (bit for bit), leaf sizes and
+    * per-id paths, and both keep `indexed` as the build's one
+    * checkpoint (under a column rename), which [[Model.warm]] and
+    * [[Model.cool]] find. Both refuse an empty input and a null,
+    * non-finite or wrong-dimension vector with an
+    * IllegalArgumentException naming the lowest such id
+    * ([[DriverGate.invalidRow]]). */
   def build(emb: DataFrame, idCol: String, vecCol: String,
             params: Params): Model = {
-    import emb.sparkSession.implicits._
-    val T = params.numTrees
-
-    // exact-dup elimination, keep-first by id (lsh.rs:113-130)
     val base = emb
       .select(col(idCol).cast("long").as("id"),
               col(vecCol).cast("array<float>").as("vector"))
+    val onDriver = DriverGate.collect(base).filter(_.forall(_._1 != null))
+      .map(_.sortBy(_._1.longValue))
+      .filter(rows => rows.indices.drop(1).forall(i => rows(i)._1 != rows(i - 1)._1))
+    onDriver match {
+      case Some(rows) => buildOnDriver(base, rows.map(_._1.longValue), rows.map(_._2), params)
+      case None => buildDistributed(base, params)
+    }
+  }
+
+  private def buildOnDriver(base: DataFrame, ids: Array[Long], vecs: Array[Array[Float]],
+                            params: Params): Model = {
+    DriverGate.invalidRow("LSHForest.build", noRows, ids, vecs)
+      .foreach(m => throw new IllegalArgumentException(m))
+    val kept = if (params.dedupExact) firstOfEachVector(vecs) else vecs.indices.toArray
+    val trees = splitOnDriver(kept.map(ids), kept.map(vecs), params)
+    val dropped = if (kept.length == ids.length) Set.empty[Long] else ids.toSet -- kept.map(ids)
+    val spark = base.sparkSession
+    import spark.implicits._
+    val survivors = if (dropped.isEmpty) base else {
+      val bcDropped = spark.sparkContext.broadcast(dropped)
+      val keep: Row => Boolean = r => !bcDropped.value.contains(r.getLong(0))
+      base.filter(keep)
+    }
+    // the schema the distributed loop returns: the input's columns
+    // under constant paths when no tree splits, else its typed map's
+    val ds = if (trees.forall(_.planes.isEmpty))
+      survivors.withColumn("paths", array_repeat(lit(""), params.numTrees))
+        .as[(Long, Array[Float], Array[String])]
+    else {
+      val bcTrees = spark.sparkContext.broadcast(trees)
+      survivors.as[(Long, Array[Float])].map { case (id, v) =>
+        (id, v, bcTrees.value.map(t => leafPath(t, v)).toArray)
+      }
+    }
+    Model(params, trees, ds.localCheckpoint(true).toDF("id", "vector", "paths"))
+  }
+
+  private def buildDistributed(base: DataFrame, params: Params): Model = {
+    import base.sparkSession.implicits._
+    val T = params.numTrees
     val deduped = if (params.dedupExact) {
       val wDup = Window.partitionBy(col("vector")).orderBy(col("id").asc)
       base.withColumn("_rn", row_number().over(wDup))
@@ -649,6 +794,11 @@ object LSHForest {
     val ds0 = deduped
       .withColumn("paths", array_repeat(lit(""), T))
       .as[(Long, Array[Float], Array[String])]
+      .localCheckpoint(true)
+    // dedup keeps the lowest id of equal vectors, so the lowest bad id
+    // of the input survives it
+    DriverGate.invalidRowOf("LSHForest.build", noRows, ds0.toDF().select("id", "vector"))
+      .foreach { m => Residency.cool(ds0); throw new IllegalArgumentException(m) }
 
     val planes = Array.fill(T)(scala.collection.mutable.Map.empty[String, (Array[Double], Double)])
     val (ds, stats) = refine(ds0, planes, params)

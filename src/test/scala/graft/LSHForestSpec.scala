@@ -252,8 +252,8 @@ class LSHForestSpec extends SparkSpec {
         s"searchMany: $many")
     }
     // a forest with no planes (the exact configuration, maxNodeSize =
-    // Int.MaxValue) routes without a sign test; the scan refuses the row
-    // instead of scoring the shared prefix, cold and warm
+    // Int.MaxValue) routes without a sign test; the scan and the cold
+    // batch plan refuse the row instead of scoring the shared prefix
     val flat = LSHForest.build(emb, "vec_id", "embedding",
       LSHForest.Params(numTrees = 1, maxNodeSize = Int.MaxValue, dedupExact = false))
     assert(flat.trees.forall(_.planes.isEmpty))
@@ -262,6 +262,10 @@ class LSHForestSpec extends SparkSpec {
     for (bad <- bads) {
       val cold = intercept[Throwable](flat.search(bad, 5).collect())
       assert(hasMsg(cold, want(bad)), s"cold search: $cold")
+      val coldMany = intercept[Throwable](
+        flat.searchMany(Seq((7L, bad)).toDF("qid", "qvec"), "qid", "qvec", 5).collect())
+      assert(hasMsg(coldMany, want(bad)) && hasMsg(coldMany, "qid 7"),
+        s"cold searchMany: $coldMany")
     }
     flat.warm() // cooling ends the checkpointed corpus: warm checks last
     try for (bad <- bads) {

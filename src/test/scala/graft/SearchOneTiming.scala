@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest}
 
@@ -19,6 +19,14 @@ import graft.index.{HNSW, HNSWGraph, IVFFlat, LSHForest}
   * warm: the p50 over 10 calls of one whole call (the call and its
   * `collect()`), and the number of queries whose warm rows differ from
   * the cold ones (want 0).
+  *
+  * A last line per tier times `build` on the same corpus cut into a
+  * frame the way a caller that generates it on the driver does
+  * (`parallelize` into 4 partitions, `toDF`, eager `localCheckpoint`):
+  * the median seconds of 3 builds and the Spark jobs of one, under the
+  * session's broadcast budget (`default_*`, where a small input may
+  * finish on the driver) and under a budget of `-1` (`off_*`, every
+  * distributed path).
   *
   * {{{
   * sbt "Test/runMain graft.SearchOneTiming 6000 128 40"
@@ -50,6 +58,18 @@ object SearchOneTiming {
     })
   }
 
+  /** Seconds of one call of `body` and the Spark jobs it launched
+    * ([[SparkSpec.launchedBy]]). */
+  private def jobsAndSeconds(spark: SparkSession)(body: => Unit): (Double, Int) = {
+    var secs = 0.0
+    val jobs = SparkSpec.launchedBy(spark.sparkContext) {
+      val t = System.nanoTime
+      body
+      secs = (System.nanoTime - t) / 1e9
+    }.jobs.size
+    (secs, jobs)
+  }
+
   def main(args: Array[String]): Unit = {
     val Seq(n, dim, nq) = (args.map(_.toInt).toSeq ++ Seq(6000, 128, 40).drop(args.length)).take(3)
     val spark = Sessions.local()
@@ -60,20 +80,23 @@ object SearchOneTiming {
       val c = centers(rnd.nextInt(centers.length))
       c.map(x => x + 0.8f * rnd.nextGaussian().toFloat)
     }
-    val emb = (0 until n).map(i => (i.toLong, point())).toDF("id", "vector")
+    val corpus = (0 until n).map(i => (i.toLong, point()))
+    val emb = corpus.toDF("id", "vector")
       .repartition(4).cache()
     emb.count()
     val queries = Seq.fill(nq)(point())
     val batch = (0 until 100).map(i => (i.toLong, point())).toDF("qid", "qvec")
     val reps = 5 // untimed warm-up calls per path
     val calls = 10 // timed batch calls per path
+    val ivfParams = IVFFlat.Params(
+      k = math.max(16, (math.sqrt(n.toDouble) / 3).toInt), numAttempts = 1, maxIterations = 3)
+    val hnswParams = HNSWGraph.Params(efConstruction = 40, m = 8)
+    val lshParams = LSHForest.Params(numTrees = 2, maxNodeSize = 512, probes = 4)
     val tiers: Seq[(String, () => Unit, () => Unit, Array[Float] => DataFrame,
         DataFrame => DataFrame)] = {
-      val ivf = IVFFlat.build(emb, "id", "vector", IVFFlat.Params(
-        k = math.max(16, (math.sqrt(n.toDouble) / 3).toInt), numAttempts = 1, maxIterations = 3))
-      val hnsw = HNSW.build(emb, "id", "vector", HNSWGraph.Params(efConstruction = 40, m = 8))
-      val lsh = LSHForest.build(emb, "id", "vector",
-        LSHForest.Params(numTrees = 2, maxNodeSize = 512, probes = 4))
+      val ivf = IVFFlat.build(emb, "id", "vector", ivfParams)
+      val hnsw = HNSW.build(emb, "id", "vector", hnswParams)
+      val lsh = LSHForest.build(emb, "id", "vector", lshParams)
       Seq(("ivfflat", () => ivf.warm(): Unit, () => ivf.cool(), q => ivf.search(q, 10, 4),
           b => ivf.searchMany(b, "qid", "qvec", 10, 4)),
         ("hnsw", () => hnsw.warm(): Unit, () => hnsw.cool(), q => hnsw.search(q, 10),
@@ -110,6 +133,23 @@ object SearchOneTiming {
       println(f"search-many tier=$name n=$n dim=$dim batch=100 calls=$calls " +
         f"cold_p50_ms=${median(coldMany.map(_._1))}%.1f warm_p50_ms=${median(hotMany.map(_._1))}%.1f " +
         s"rows_differ=$manyDiffer")
+    }
+    val ckpt = spark.sparkContext.parallelize(corpus, 4).toDF("id", "vector").localCheckpoint(true)
+    val builds: Seq[(String, () => Unit)] = Seq(
+      "ivfflat" -> (() => IVFFlat.build(ckpt, "id", "vector", ivfParams).indexed.unpersist(): Unit),
+      "hnsw" -> (() => HNSW.build(ckpt, "id", "vector", hnswParams).cool()),
+      "lsh" -> (() => LSHForest.build(ckpt, "id", "vector", lshParams).cool()))
+    for ((name, build) <- builds) {
+      def timed(): (Double, Int) = {
+        val runs = (0 until 3).map(_ => jobsAndSeconds(spark)(build()))
+        (median(runs.map(_._1)), runs.last._2)
+      }
+      build() // untimed warm-up
+      val (dflt, dfltJobs) = timed()
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (off, offJobs) = try timed() finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      println(f"build tier=$name n=$n dim=$dim frame=checkpointed_rdd default_s=$dflt%.3f " +
+        f"default_jobs=$dfltJobs off_s=$off%.3f off_jobs=$offJobs")
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,14 +37,21 @@ trait SparkSpec extends AnyFunSuite {
   /** Jobs `body` launches. */
   def jobsOf(body: => Unit): Int = launchedBy(body).jobs.size
 
-  /** What `body` launches: the start events of its jobs, in order (each
-    * lists its stages, skipped ones included, and the RDDs they read),
-    * and the stages it actually ran. Its jobs carry their own job group;
-    * a marker job in a second group follows, and since the listener bus
-    * delivers in order, the marker's start means every earlier event
-    * was seen. */
-  def launchedBy(body: => Unit): SparkSpec.Launched = {
-    val sc = spark.sparkContext
+  /** What `body` launches ([[SparkSpec.launchedBy]]). */
+  def launchedBy(body: => Unit): SparkSpec.Launched =
+    SparkSpec.launchedBy(spark.sparkContext)(body)
+}
+
+object SparkSpec {
+  final case class Launched(jobs: Seq[SparkListenerJobStart], stagesRun: Seq[StageInfo])
+
+  /** What `body` launches on `sc`: the start events of its jobs, in
+    * order (each lists its stages, skipped ones included, and the RDDs
+    * they read), and the stages it actually ran. Its jobs carry their
+    * own job group; a marker job in a second group follows, and since
+    * the listener bus delivers in order, the marker's start means every
+    * earlier event was seen. */
+  def launchedBy(sc: SparkContext)(body: => Unit): Launched = {
     val group = s"jobs-of-${System.nanoTime}"
     val marker = s"$group-marker"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
@@ -66,17 +74,13 @@ trait SparkSpec extends AnyFunSuite {
       val deadline = System.nanoTime + 60L * 1000000000L
       while (!markerSeen && System.nanoTime < deadline) Thread.sleep(10)
       assert(markerSeen, "marker job never reached the listener")
-      SparkSpec.Launched(jobs.asScala.collect { case (`group`, e) => e }.toSeq,
+      Launched(jobs.asScala.collect { case (`group`, e) => e }.toSeq,
         ran.asScala.collect { case (`group`, s) => s }.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
-}
-
-object SparkSpec {
-  final case class Launched(jobs: Seq[SparkListenerJobStart], stagesRun: Seq[StageInfo])
 
   // local[8], not the entry points' core count: the plan shapes
   // PlanSpec pins depend on eight shuffle partitions
